@@ -55,9 +55,6 @@ object Tables {
     }
   }
 
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
-
   /** CSV bulk ingest (S3 — the Spark stand-in for the reference's COPY
     * surface, pgdedupe/run.py:234-245): header CSV with an EXPLICIT
     * schema. Schema inference would scan the data twice and guess types

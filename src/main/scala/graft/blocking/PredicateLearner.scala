@@ -1,9 +1,14 @@
 package graft.blocking
 
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.config.DedupeConfig
+import graft.pipeline.PhaseLog
 
 /** Blocking-predicate learning (ref: SURVEY.md D4 — the reference's
   * `deduper.train(recall=config['recall'])` at pgdedupe/run.py:175-178
@@ -13,19 +18,38 @@ import graft.config.DedupeConfig
   * weighted set cover — Bilenko et al., "Adaptive Blocking: Learning to
   * Scale Up Record Linkage").
   *
-  * Spark shape, two jobs total regardless of candidate count:
-  *  1. coverage — ONE pass over the labeled match pairs evaluating every
-  *     candidate predicate as `arrays_overlap(keys(l), keys(r))` columns
-  *     (reuses the exact predicate Column expressions the blocker runs,
-  *     so learned coverage can never drift from applied blocking);
-  *  2. cost — ONE pass over the records: every candidate's keys exploded
-  *     with a predicate tag, `groupBy(tag, key).count`, then
-  *     Σ c·(c−1)/2 per tag = the number of within-block comparisons the
-  *     predicate would admit.
-  * Greedy selection then runs on the driver over |candidates| bits per
-  * match pair — tiny.
+  * Like the reference, which learns from a 75,000-record sample held in
+  * a driver-side dict (pgdedupe/run.py:138-150), learning counts the
+  * records, reads one seeded sample of at most [[SampleSize]] of them
+  * and reads the labeled match pairs, one Spark job each; everything
+  * else runs on the driver over a per-(field, value) table:
+  *  - column-predicate keys are evaluated once per distinct value with
+  *    the exact `ColumnPredicate.keys` Column expressions the blocker
+  *    runs (over a local frame, which Spark evaluates without a job), so
+  *    learned coverage can never drift from applied blocking;
+  *  - canopy keys come from [[TfIdfCanopy.localSims]], the driver twin
+  *    of the blocker's distributed fit, over sample values ∪ match-pair
+  *    values (the reference indexes training records too);
+  *  - a candidate's cost is Σ c·(c−1)/2 over its blocks of c records,
+  *    its over-cap keys are the blocks larger than `max_block_size`, and
+  *    its coverage is which match pairs share a surviving key.
+  * Below [[SampleSize]] records the sample is the whole table and every
+  * count is exact; above it, block counts are scaled by N/n, and a key
+  * seen once in the sample counts as no pair and never over the cap.
+  *
+  * Known caveat: the canopy index is fitted over sample ∪ training-pair
+  * values (pairs need norms to be scorable at all), while apply-time
+  * blocking refits over the corpus alone. A training file referencing
+  * OUT-OF-CORPUS values can credit canopy coverage the apply-time index
+  * won't reproduce. Column predicates are immune by construction (keys
+  * are pure per-value functions).
   */
 object PredicateLearner {
+
+  /** Most records learning reads: the reference's sample size
+    * (pgdedupe/run.py:146), not a tuning knob. */
+  private val SampleSize = 75000
+  private val SampleSeed = 0
 
   /** Candidate pool per field type (legal shapes from the reference's
     * learner, SURVEY.md D5, including the TF-IDF canopy index shapes —
@@ -45,327 +69,215 @@ object PredicateLearner {
       }
     }.distinct
 
-  /** Every field's `(f, value)` rows in ONE exploded pass over `frame` —
-    * the per-field form scanned the source once PER canopy field. Raw
-    * rows (no distinct): callers that need set semantics distinct once
-    * over the union, callers that need multiplicities (value counts)
-    * aggregate directly.
+  /** One field's distinct non-null values, as strings (every candidate
+    * keys the string form: `WholeField` casts, the other shapes only
+    * apply to String fields; null keys to nothing under every predicate),
+    * each value's record count in the sample, and the value indices of
+    * every match pair's two sides (-1 for null).
     */
-  private def taggedValues(frame: DataFrame, fields: Seq[String],
-      colFor: String => org.apache.spark.sql.Column = col): DataFrame =
-    frame.select(explode(array(fields.map(f =>
-        struct(lit(f).as("f"), colFor(f).as("value"))): _*))
-        .as("fv"))
-      .select(col("fv.f").as("f"), col("fv.value").as("value"))
-      .where(col("value").isNotNull && col("value") =!= "")
+  private final case class FieldValues(
+      values: IndexedSeq[String], count: Array[Long], pairs: Array[(Int, Int)])
 
-  /** One fitted state for every index candidate: a single field-tagged
-    * TF-IDF sims cache per maxDfRatio (one group today — the ratio is
-    * fixed by id-canonicality) plus the candidate rows that parameterize
-    * it. All downstream consumers evaluate every candidate through one
-    * literal spec join against the cache, so the number of Spark
-    * jobs/stages is independent of the candidate count — per-candidate
-    * fits and joins each paid the pipeline's fixed stage overhead to
-    * compute identical intermediates, dominating trainOrLoad wall-clock
-    * (~70 s at sf0.001, where the data itself is microscopic).
+  /** The learning state, all on the driver: for candidate `i`,
+    * `keys(i)(v)` holds the key ids, in `[0, nKeys(i))`, of value `v` of
+    * the candidate's field. `n` of `total` records were sampled.
     */
-  private final case class FittedIndices(
-      spec: Seq[(TfIdfCanopy, Int)],
-      simsByRatio: Map[Double, DataFrame],
-      pinned: Seq[DataFrame] = Nil) {
-    def release(): Unit = {
-      simsByRatio.values.foreach(_.unpersist(false))
-      // The decorated token frontier outlives the sims materialization
-      // ON PURPOSE: unpersisting a frame another CACHED frame's plan
-      // references makes CacheManager recompile that cache entry, and
-      // every post-fit consumer then silently recomputes the whole fit
-      // (the measured r17 pathology on simsTagged's scaladoc). Released
-      // only here, after the sims cache itself is gone.
-      pinned.foreach(_.unpersist(false))
-    }
+  private final case class Table(
+      fields: Map[String, FieldValues],
+      keys: Array[Array[Array[Int]]],
+      nKeys: Array[Int],
+      nMatches: Int,
+      n: Int,
+      total: Long) {
+    def scale: Double = if (n == 0) 1.0 else total.toDouble / n
   }
 
-  /** Fit over corpus ∪ pair values (the reference indexes training
-    * records too), materialized with one job per ratio group. Caller
-    * must `release()`.
+  /** Reads the record count, the sample and the match pairs (three
+    * Spark jobs) and keys every value. The sample is the `sampleSize`
+    * rows with the lowest seeded hash of `orderCols` (the columns break
+    * hash ties), so it does not depend on partitioning. Above
+    * `sampleSize` = n records only rows whose hash lies in the lowest
+    * (n + 8√n)/N of its range reach the driver's top-n merge, which
+    * bounds what the driver receives at any N. The passing count has
+    * mean n + 8√n and a standard deviation near √n, so it falls short of
+    * n only some 8 deviations below its mean (the sample would then just
+    * be smaller).
     */
-  private def fitIndices(
+  private def table(
       records: DataFrame,
-      matchPairs: DataFrame,
-      cands: Seq[Predicate]): FittedIndices = {
-    import org.apache.spark.storage.StorageLevel
-    val spec = cands.zipWithIndex.collect {
-      case (p: TfIdfCanopy, i) => (p, i)
-    }
-    // One corpus scan and ONE distinct regardless of canopy field count
-    // (the distinct is load-bearing: simsTagged's tf counts rows per
-    // (f, value, tok), so duplicate value rows would inflate tf). The
-    // (f, value) set is identical to the old per-field union-of-
-    // distincts, so the sims cache — and therefore the learned
-    // predicates and model hash — cannot move.
-    //
-    // Known caveat: the index is fitted over corpus values UNION
-    // training-pair values (pairs need norms to be scorable at all),
-    // while apply-time blocking refits over the corpus alone. For
-    // training pairs whose values all exist in the corpus — the normal
-    // labeled-from-this-corpus case — the two indices agree; a
-    // training file referencing OUT-OF-CORPUS values can credit canopy
-    // coverage the apply-time index won't reproduce. The column-
-    // predicate path is immune by construction (keys are pure
-    // per-value functions).
-    val fitted = spec.map(_._1).groupBy(_.maxDfRatio).map {
-      case (ratio, ps) =>
-        val fields = ps.map(_.field).distinct
-        val tagged = taggedValues(records, fields)
-          .unionByName(taggedValues(matchPairs, fields,
-            f => col(s"l_$f")))
-          .unionByName(taggedValues(matchPairs, fields,
-            f => col(s"r_$f")))
-          .distinct()
-        // The decorated tf/df/norm frontier is read by all three sims
-        // consumers (l side, r side, diagonal); exchange reuse shares
-        // the shuffles below its windows, but the window sort + the
-        // decoration projection re-ran per consumer. Pinning it for the
-        // FIT'S lifetime (released in FittedIndices.release, after the
-        // sims cache — see the note there) evaluates it once.
-        val dec = TfIdfCanopy.decorate(tagged, ratio)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        ratio -> (TfIdfCanopy.simsFromDecorated(dec)
-          .persist(StorageLevel.MEMORY_AND_DISK), dec)
-    }
-    val simsByRatio = fitted.map { case (k, v) => k -> v._1 }
-    simsByRatio.values.foreach(_.count())
-    FittedIndices(spec, simsByRatio, fitted.values.map(_._2).toSeq)
+      matches: DataFrame,
+      cands: Seq[Predicate],
+      orderCols: Seq[String],
+      sampleSize: Int): Table = {
+    val spark = records.sparkSession
+    val fieldNames = cands.map(_.field).distinct
+    // One job: Dataset.count's aggregate exchange runs as a second job
+    // under adaptive execution.
+    val total = records.select().queryExecution.toRdd.count()
+    val hash = xxhash64(lit(SampleSeed) +: orderCols.map(col): _*)
+    val frac = (sampleSize + 8 * math.sqrt(sampleSize)) / total
+    val kept =
+      if (frac >= 1) records
+      else records.where(hash <=
+        (Long.MinValue.toDouble + frac * math.pow(2, 64)).toLong)
+    val order = (hash +: orderCols.map(col)).zipWithIndex
+      .map { case (c, i) => c.as(s"_o$i") }
+    val sample = kept
+      .select(fieldNames.map(f => col(f).cast("string")) ++ order: _*)
+      .orderBy(order.indices.map(i => col(s"_o$i")): _*)
+      .limit(sampleSize).collect()
+    val pairRows = matches.select(fieldNames.flatMap(f =>
+      Seq(col(s"l_$f"), col(s"r_$f")).map(_.cast("string"))): _*).collect()
+
+    val fields = fieldNames.zipWithIndex.map { case (f, j) =>
+      val index = mutable.HashMap.empty[String, Int]
+      val values = mutable.ArrayBuffer.empty[String]
+      val counts = mutable.ArrayBuffer.empty[Long]
+      def id(v: String): Int =
+        if (v == null) -1
+        else index.getOrElseUpdate(v,
+          { values += v; counts += 0L; values.length - 1 })
+      sample.foreach { r =>
+        val v = id(r.getString(j))
+        if (v >= 0) counts(v) += 1
+      }
+      val pairs =
+        pairRows.map(r => (id(r.getString(2 * j)), id(r.getString(2 * j + 1))))
+      f -> FieldValues(values.toIndexedSeq, counts.toArray, pairs)
+    }.toMap
+
+    val keys = new Array[Array[Array[Int]]](cands.length)
+    val nKeys = new Array[Int](cands.length)
+    // Column candidates: one local frame per field, every candidate on
+    // it a column of one projection; string keys interned to ids.
+    cands.zipWithIndex.collect { case (p: ColumnPredicate, i) => (p, i) }
+      .groupBy(_._1.field).foreach { case (f, ps) =>
+        val evaluated = spark.createDataFrame(
+            fields(f).values.map(Row(_)).asJava,
+            StructType(Seq(StructField("value", StringType))))
+          .select(ps.map { case (p, _) => p.keys(col("value")) }: _*)
+          .collect()
+        ps.zipWithIndex.foreach { case ((_, i), c) =>
+          val ids = mutable.HashMap.empty[String, Int]
+          keys(i) = evaluated.map(r =>
+            if (r.isNullAt(c)) Array.emptyIntArray
+            else r.getSeq[String](c)
+              .map(k => ids.getOrElseUpdate(k, ids.size)).toArray)
+          nKeys(i) = ids.size
+        }
+      }
+    // Canopy candidates: one fit per (field, ratio) over the field's
+    // non-empty values (the blocker's fit excludes ""); a key is the
+    // index of the canopy center.
+    cands.zipWithIndex.collect { case (p: TfIdfCanopy, i) => (p, i) }
+      .groupBy { case (p, _) => (p.field, p.maxDfRatio) }
+      .foreach { case ((f, ratio), ps) =>
+        val values = fields(f).values
+        val fit = values.indices.filter(v => values(v).nonEmpty)
+        val sims = TfIdfCanopy.localSims(fit.map(values), ratio,
+          ps.map(_._1.threshold).min)
+        ps.foreach { case (p, i) =>
+          val k = Array.fill(values.length)(Array.emptyIntArray)
+          fit.indices.foreach { a =>
+            val (bs, cs) = sims(a)
+            k(fit(a)) = bs.indices.collect {
+              case j if cs(j) >= p.threshold => fit(bs(j))
+            }.toArray
+          }
+          keys(i) = k
+          nKeys(i) = values.length
+        }
+      }
+    Table(fields, keys, nKeys, pairRows.length, sample.length, total)
   }
 
-  /** Literal (cand, f, pid, thr) spec rows — broadcast into the sims
-    * cache so one plan evaluates every candidate. */
-  private def candSpec(
-      spark: org.apache.spark.sql.SparkSession,
-      spec: Seq[(TfIdfCanopy, Int)]): DataFrame =
-    spark.createDataFrame(spec.map { case (p, i) =>
-      (i, p.field, p.id, p.threshold)
-    }).toDF("cand", "f", "pid", "thr")
-
-  /** Canopy key rows `(cand, value, key)` for the PAIR values only, all
-    * candidates in one plan per ratio group: the pair-value restriction
-    * joins BELOW the key derivation, so the agg never runs over the
-    * whole corpus index for the sake of a handful of training values.
-    */
-  private def pairKeyRows(
-      fi: FittedIndices, matchPairs: DataFrame): Seq[DataFrame] =
-    fi.simsByRatio.toSeq.map { case (ratio, sims) =>
-      val spec = fi.spec.filter(_._1.maxDfRatio == ratio)
-      val fields = spec.map(_._1.field).distinct
-      val pairVals = taggedValues(matchPairs, fields, f => col(s"l_$f"))
-        .unionByName(taggedValues(matchPairs, fields, f => col(s"r_$f")))
-        .distinct()
-        .select(col("f"), col("value").as("a_value"))
-      sims.join(broadcast(pairVals), Seq("f", "a_value"))
-        .join(broadcast(candSpec(matchPairs.sparkSession, spec)), "f")
-        .where(col("cos") >= col("thr"))
-        .select(col("cand"), col("a_value").as("value"),
-          concat_ws(":", col("pid"), md5(col("b_value"))).as("key"))
+  /** Per candidate, each key's block size in sample records. */
+  private def blockCounts(
+      t: Table, cands: Seq[Predicate]): Array[Array[Long]] =
+    Array.tabulate(cands.length) { i =>
+      val c = new Array[Long](t.nKeys(i))
+      val cnt = t.fields(cands(i).field).count
+      val ks = t.keys(i)
+      var v = 0
+      while (v < ks.length) {
+        ks(v).foreach(k => c(k) += cnt(v))
+        v += 1
+      }
+      c
     }
 
   /** Which candidates cover each labeled match pair: boolean matrix
-    * [match pair][candidate]. Column predicates evaluate as
-    * `arrays_overlap` expressions (the exact Column expressions the
-    * blocker runs, so learned coverage can never drift from applied
-    * blocking); index keys for the pair values are collected in one job
-    * and inlined as literal maps.
-    */
-  def coverage(
-      matchPairs: DataFrame, // l_<field>/r_<field> columns, label == 1.0
-      cands: Seq[Predicate],
-      records: DataFrame): Array[Array[Boolean]] = {
-    val fi = fitIndices(records, matchPairs, cands)
-    try coverage(matchPairs, cands, fi)
-    finally fi.release()
-  }
-
-  /** `overCap(i)` = keys of candidate i whose corpus block exceeds the
-    * block-size cap. Blocking DROPS those blocks (`pluralKeys`), so a
-    * match pair reachable only through one is NOT covered — crediting it
-    * made a degenerate predicate (one giant all-rows block: zero
-    * surviving cost, "full" coverage) the greedy pick, silently
-    * producing zero candidate pairs at apply time.
+    * [match pair][candidate]. `overCap(i)(k)` marks candidate i's keys
+    * whose block exceeds the block-size cap. Blocking DROPS those blocks
+    * (`pluralKeys`), so a match pair reachable only through one is NOT
+    * covered — crediting it made a degenerate predicate (one giant
+    * all-rows block: zero surviving cost, "full" coverage) the greedy
+    * pick, silently producing zero candidate pairs at apply time.
     */
   private def coverage(
+      t: Table,
+      cands: Seq[Predicate],
+      overCap: Array[Array[Boolean]]): Array[Array[Boolean]] =
+    Array.tabulate(t.nMatches, cands.length) { (m, i) =>
+      val (l, r) = t.fields(cands(i).field).pairs(m)
+      l >= 0 && r >= 0 && {
+        val rk = t.keys(i)(r)
+        t.keys(i)(l).exists(k => !overCap(i)(k) && rk.contains(k))
+      }
+    }
+
+  /** Coverage of `matchPairs` (l_<field>/r_<field> columns, all matches)
+    * by `cands`, keys fitted on `records`, no block-size cap. */
+  def coverage(
       matchPairs: DataFrame,
       cands: Seq[Predicate],
-      fi: FittedIndices,
-      overCap: Map[Int, Set[String]] = Map.empty.withDefaultValue(Set.empty))
-      : Array[Array[Boolean]] = {
-    val rows = pairKeyRows(fi, matchPairs)
-    val keyMaps: Map[Int, Map[String, Seq[String]]] =
-      (if (rows.isEmpty) Map.empty[Int, Map[String, Seq[String]]]
-       else rows.reduce(_ unionByName _).collect()
-         .groupBy(_.getInt(0))
-         .map { case (i, rs) =>
-           i -> rs.groupBy(_.getString(1)).map { case (v, ks) =>
-             v -> ks.map(_.getString(2)).distinct.sorted.toSeq
-           }
-         }).withDefaultValue(Map.empty)
-    val empty = array().cast("array<string>")
-    val overlapCols = cands.zipWithIndex.map {
-      case (p: ColumnPredicate, i) =>
-        val lk = p.keys(col(s"l_${p.field}"))
-        val rk = p.keys(col(s"r_${p.field}"))
-        val oc = overCap(i)
-        val (l, r) =
-          if (oc.isEmpty) (lk, rk)
-          else {
-            val drop = typedlit(oc.toSeq.sorted)
-            (array_except(lk, drop), array_except(rk, drop))
-          }
-        arrays_overlap(l, r).as(s"c$i")
-      case (p: IndexPredicate, i) =>
-        val oc = overCap(i)
-        val m = keyMaps(i).map { case (v, ks) =>
-          v -> ks.filterNot(oc)
-        }.filter(_._2.nonEmpty)
-        if (m.isEmpty) lit(false).as(s"c$i")
-        else {
-          val lookup = typedlit(m)
-          // try_element_at: under ANSI (the Spark 4 default) a plain
-          // element_at THROWS for a key absent from the map — and a
-          // labeled value CAN be absent (whitespace-only values pass
-          // the non-empty filter but tokenize to nothing; values whose
-          // every key was over-cap-filtered lose their entry) — the
-          // coalesce below only ever sees the null the try_ form
-          // returns.
-          arrays_overlap(
-            coalesce(try_element_at(lookup, col(s"l_${p.field}")), empty),
-            coalesce(try_element_at(lookup, col(s"r_${p.field}")), empty))
-            .as(s"c$i")
-        }
-    }
-    matchPairs.select(overlapCols: _*).collect().map { r =>
-      Array.tabulate(cands.length)(i => !r.isNullAt(i) && r.getBoolean(i))
-    }
+      records: DataFrame): Array[Array[Boolean]] = {
+    val t = table(records, matchPairs, cands, cands.map(_.field).distinct,
+      SampleSize)
+    coverage(t, cands, t.nKeys.map(new Array[Boolean](_)))
   }
 
-  /** Within-block comparison count each candidate would admit on the
-    * records, one Spark job: every candidate's keys exploded with a
-    * candidate tag, `groupBy(tag, key)`, then Σ c·(c−1)/2 per tag =
-    * the number of within-block comparisons the predicate would admit.
-    */
-  def costs(
-      records: DataFrame,
-      cands: Seq[Predicate],
-      maxBlockSize: Long): Array[Double] = {
-    // Fit over the records alone: an empty pair frame with the l_/r_
-    // columns every index field expects.
-    val idxFields = cands.collect { case p: IndexPredicate => p.field }
-      .distinct
-    val emptyPairs = records.limit(0).select(idxFields.flatMap(f =>
-      Seq(col(f).as(s"l_$f"), col(f).as(s"r_$f"))): _*)
-    val fi = fitIndices(records, emptyPairs, cands)
-    try costs(records, cands, maxBlockSize, fi)
-    finally fi.release()
+  private def timed[T](name: String)(f: => T): T = {
+    val t0 = System.nanoTime()
+    val r = f
+    PhaseLog.record(name, (System.nanoTime() - t0) / 1e9)
+    r
   }
 
-  /** Cost with a pre-fitted index state. Index candidates contribute
-    * per-key block sizes as Σ record-count over the key's values — one
-    * (f, value) record-count aggregate joined against the sims cache
-    * through the candidate spec (identical sums to a per-candidate
-    * records⋈keys join, which counted each record once per mapped key).
-    * Pair-only values in a shared fit contribute no cost rows — they
-    * never appear in the value counts — so sharing one fit with
-    * `coverage` keeps the estimate faithful.
+  /** The candidates, each one's estimated comparison cost, and which
+    * labeled match pairs it covers through blocks under the cap
+    * ([match pair][candidate]), from a sample of at most `sampleSize`
+    * of the unique `records` (keyed by `_unique_id`, as preprocessing
+    * leaves them).
     */
-  private def costs(
+  private[blocking] def scored(
       records: DataFrame,
-      cands: Seq[Predicate],
-      maxBlockSize: Long,
-      fi: FittedIndices): Array[Double] =
-    costsAndOverCap(records, cands, maxBlockSize, fi)._1
-
-  /** Costs plus the over-cap key sets (see `coverage`): one persisted
-    * per-(cand, key) count frame feeds both aggregates. The over-cap
-    * collect is bounded by construction — at most Σ n/cap keys exceed
-    * the cap — and guarded loudly anyway (no silent truncation).
-    */
-  private def costsAndOverCap(
-      records: DataFrame,
-      cands: Seq[Predicate],
-      maxBlockSize: Long,
-      fi: FittedIndices): (Array[Double], Map[Int, Set[String]]) = {
-    val idxBranch = fi.simsByRatio.toSeq.map { case (ratio, sims) =>
-      val spec = fi.spec.filter(_._1.maxDfRatio == ratio)
-      // One exploded pass for every field's value counts (multiplicities
-      // kept — no distinct — exactly as the per-field unions did).
-      val vCounts = taggedValues(records, spec.map(_._1.field).distinct)
-        .groupBy("f", "value").agg(count(lit(1)).as("cnt"))
-      sims.join(broadcast(candSpec(records.sparkSession, spec)), "f")
-        .where(col("cos") >= col("thr"))
-        .select(col("cand"), col("f"), col("a_value").as("value"),
-          concat_ws(":", col("pid"), md5(col("b_value"))).as("key"))
-        .join(vCounts, Seq("f", "value"))
-        .select(col("cand"), col("key"), col("cnt"))
+      matchPairs: DataFrame,
+      cfg: DedupeConfig,
+      sampleSize: Int)
+      : (Seq[Predicate], Array[Double], Array[Array[Boolean]]) = {
+    val cands = candidates(cfg)
+    val t = timed("learn_fit")(table(records,
+      matchPairs.where(col("label") === 1.0), cands, Seq("_unique_id"),
+      sampleSize))
+    PhaseLog.note("learn_sample",
+      if (t.total > t.n) s"${t.n} of ${t.total} (seed $SampleSeed)"
+      else s"all (${t.n} records)")
+    // Costs first: their block counts also yield the over-cap keys the
+    // coverage must NOT credit. A block's size is estimated as its sample
+    // count × N/n; a key seen once in the sample evidences no pair, so it
+    // adds no cost and is never over the cap.
+    val cap = cfg.maxBlockSize.toDouble
+    val (cost, overCap) = timed("learn_costs") {
+      val counts = timed("learn_costs_counts")(blockCounts(t, cands))
+      val cost = counts.map(_.foldLeft(0.0) { (acc, c) =>
+        val s = c * t.scale
+        if (c > 1 && s <= cap) acc + s * (s - 1) / 2 else acc
+      })
+      (cost, timed("learn_costs_overcap")(
+        counts.map(_.map(c => c > 1 && c * t.scale > cap))))
     }
-    // ONE records scan for every column predicate (the per-candidate
-    // branches each re-scanned records — ~16 union legs at two string
-    // fields; locally the cached scans are cheap, but at corpus scale
-    // one pass vs sixteen is the difference that matters): explode an
-    // array of (cand, keys) structs, then the keys. The outer explode
-    // keeps every candidate row (the array literal is never empty); the
-    // inner explode drops null/empty key arrays exactly as the
-    // per-branch explode did.
-    val colCands = cands.zipWithIndex.collect {
-      case (p: ColumnPredicate, i) => (p, i)
-    }
-    val colBranch =
-      if (colCands.isEmpty) Seq.empty[DataFrame]
-      else Seq(records
-        .select(explode(array(colCands.map { case (p, i) =>
-          struct(lit(i).as("cand"), p.keys(col(p.field)).as("keys"))
-        }: _*)).as("ck"))
-        .select(col("ck.cand").as("cand"),
-          explode(col("ck.keys")).as("key"), lit(1L).as("cnt")))
-    val tagged = (colBranch ++ idxBranch).reduce(_ unionByName _)
-    val counts = tagged.groupBy("cand", "key").agg(sum("cnt").as("count"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Sub-phase timers (surfaced in the bench JSON next to learn_costs):
-    // the counts materialization is the key-explosion groupBy over every
-    // candidate's keys; the overCap pass is a TakeOrdered on the cached
-    // counts and should stay near-zero.
-    def sub[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      graft.pipeline.PhaseLog.record(name, (System.nanoTime() - t0) / 1e9)
-      r
-    }
-    try {
-      val rows = sub("learn_costs_counts")(counts
-        .where(col("count") > 1 && col("count") <= maxBlockSize)
-        .groupBy("cand")
-        .agg(sum(col("count") * (col("count") - 1) / 2).as("pairs"))
-        .collect())
-      val out = Array.fill(cands.length)(0.0)
-      rows.foreach(r => out(r.getInt(0)) = r.getDouble(1))
-      val overCapLimit = 100000
-      // Ordered by count desc (largest dropped blocks matter most to the
-      // coverage correction), then (cand, key) to break ties — so a
-      // truncation past the limit retains a deterministic, maximally
-      // useful subset instead of an arbitrary unordered limit().
-      val overCapRows = sub("learn_costs_overcap")(
-        counts.where(col("count") > maxBlockSize)
-          .select(col("cand"), col("key"), col("count"))
-          .orderBy(col("count").desc, col("cand"), col("key"))
-          .limit(overCapLimit + 1).collect())
-      if (overCapRows.length > overCapLimit)
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"more than $overCapLimit over-cap blocking keys — coverage " +
-            "correction is partial; raise max_block_size or sample the " +
-            "records before learning")
-      val overCap = overCapRows.take(overCapLimit)
-        .groupBy(_.getInt(0))
-        .map { case (i, rs) => i -> rs.map(_.getString(1)).toSet }
-        .withDefaultValue(Set.empty[String])
-      (out, overCap)
-    } finally counts.unpersist(false)
+    (cands, cost, timed("learn_coverage")(coverage(t, cands, overCap)))
   }
 
   /** Greedy weighted set cover: repeatedly pick the candidate with the
@@ -376,34 +288,21 @@ object PredicateLearner {
   def learn(
       records: DataFrame,
       matchPairs: DataFrame,
-      cfg: DedupeConfig): Seq[Predicate] = {
-    def sub[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      graft.pipeline.PhaseLog.record(name,
-        (System.nanoTime() - t0) / 1e9)
-      r
-    }
-    val cands = candidates(cfg)
-    val matches = matchPairs.where(col("label") === 1.0)
-    // One shared index fit for both passes (see fitIndices). Costs run
-    // first: their per-key counts also yield the over-cap key sets that
-    // the coverage pass must NOT credit (those blocks are dropped at
-    // blocking time).
-    val fi = sub("learn_fit")(fitIndices(records, matches, cands))
-    val (cover, cost) =
-      try {
-        val (cost0, overCap) = sub("learn_costs")(
-          costsAndOverCap(records, cands, cfg.maxBlockSize.toLong, fi))
-        (sub("learn_coverage")(coverage(matches, cands, fi, overCap)),
-          cost0)
-      } finally fi.release()
+      cfg: DedupeConfig): Seq[Predicate] =
+    learn(records, matchPairs, cfg, SampleSize)
+
+  private[blocking] def learn(
+      records: DataFrame,
+      matchPairs: DataFrame,
+      cfg: DedupeConfig,
+      sampleSize: Int): Seq[Predicate] = {
+    val (cands, cost, cover) = scored(records, matchPairs, cfg, sampleSize)
     val nMatches = cover.length
     if (nMatches == 0) return Nil
     val target = math.ceil(cfg.recall * nMatches).toLong
 
     val covered = Array.fill(nMatches)(false)
-    val chosen = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val chosen = mutable.ArrayBuffer.empty[Int]
     var total = 0L
     var progress = true
     while (total < target && progress) {

@@ -1,5 +1,7 @@
 package graft.blocking
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -218,19 +220,7 @@ object TfIdfCanopy {
     * single sims materialization; both "optimizations" lost to it at
     * scale.
     */
-  def simsTagged(values: DataFrame, maxDfRatio: Double): DataFrame =
-    simsFromDecorated(decorate(values, maxDfRatio))
-
-  /** The shared tf/df/idf/norm decoration of the token rows — the
-    * frontier every sims consumer (l side, r side, diagonal) reads.
-    * Split out so callers that materialize sims more than once can PIN
-    * it for the fit's lifetime ([[graft.blocking.PredicateLearner]]'s
-    * fitIndices persists it and releases it with the sims cache),
-    * while the default [[simsTagged]] stays deliberately lazy (see the
-    * lifecycle scars documented on [[simsTagged]] itself).
-    */
-  private[blocking] def decorate(
-      values: DataFrame, maxDfRatio: Double): DataFrame = {
+  def simsTagged(values: DataFrame, maxDfRatio: Double): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val total = values.groupBy("f").agg(count(lit(1)).as("n_values"))
     val toks = values
@@ -240,7 +230,7 @@ object TfIdfCanopy {
       .groupBy("f", "value", "tok").agg(count(lit(1)).as("tf"))
     // toks is distinct per (f, value, tok), so the per-(f, tok) row
     // count IS the document frequency.
-    toks
+    val decorated = toks
       .withColumn("df", count(lit(1)).over(Window.partitionBy("f", "tok")))
       .join(broadcast(total), "f")
       .where(col("df").cast("double") <= col("n_values") * maxDfRatio)
@@ -250,10 +240,6 @@ object TfIdfCanopy {
       .withColumn("norm",
         sqrt(sum(col("w") * col("w")).over(Window.partitionBy("f", "value"))))
       .select("f", "value", "tok", "w", "df", "norm")
-  }
-
-  /** Cosine pairs from a decorated token frame (see [[decorate]]). */
-  private[blocking] def simsFromDecorated(decorated: DataFrame): DataFrame = {
     // A token with df = 1 lives in exactly one value, so it can only ever
     // pair a value with itself — and a value's self-cosine is 1 by
     // definition (dot(v,v) = ‖v‖²). Emitting the diagonal directly and
@@ -281,6 +267,74 @@ object TfIdfCanopy {
       .select(col("f"), col("value").as("a_value"),
         col("value").as("b_value"), lit(1.0).as("cos"))
     offDiag.unionByName(diag)
+  }
+
+  /** Driver twin of [[sims]] for values held in memory (the learner's
+    * sample): the same fit — tf per value, the `maxDfRatio` stop-word
+    * cut, w = tf·ln(n/df), off-diagonal cosines through df ≥ 2 tokens
+    * and a diagonal of exactly 1.0 for every value that keeps a token.
+    * `values` must be distinct and non-empty. Entry `a` of the result
+    * holds the indices of the values (`a` itself included) whose cosine
+    * with value `a` reaches `minCos`, and those cosines. Cost is
+    * Σ over tokens of df², like the distributed token self-join.
+    */
+  def localSims(values: IndexedSeq[String], maxDfRatio: Double,
+      minCos: Double): Array[(Array[Int], Array[Double])] = {
+    val n = values.length
+    val tokIds = mutable.HashMap.empty[String, Int]
+    val df = mutable.ArrayBuffer.empty[Int]
+    // Per value: (token id, tf), in first-seen token order.
+    val tfs = values.map { v =>
+      val tf = mutable.LinkedHashMap.empty[Int, Int]
+      v.split("\\s+").foreach { t =>
+        if (t.nonEmpty) {
+          val id = tokIds.getOrElseUpdate(t, { df += 0; df.length - 1 })
+          tf(id) = tf.getOrElse(id, 0) + 1
+        }
+      }
+      tf.keys.foreach(id => df(id) += 1)
+      tf.toArray
+    }
+    // Spark's `log` is StrictMath.log; the weights match bit for bit.
+    val weights = tfs.map(_.flatMap { case (t, tf) =>
+      val w = tf * StrictMath.log(n.toDouble / df(t))
+      if (df(t).toDouble <= n * maxDfRatio && w > 0) Some((t, w)) else None
+    })
+    val norm = weights.map(ws => math.sqrt(ws.map { case (_, w) => w * w }.sum))
+    val posting = Array.fill(df.length)(
+      (Array.newBuilder[Int], Array.newBuilder[Double]))
+    for (a <- 0 until n; (t, w) <- weights(a) if df(t) >= 2) {
+      posting(t)._1 += a
+      posting(t)._2 += w
+    }
+    val postIds = posting.map(_._1.result())
+    val postWs = posting.map(_._2.result())
+    val dot = new Array[Double](n)
+    val touched = Array.newBuilder[Int]
+    Array.tabulate(n) { a =>
+      touched.clear()
+      for ((t, wa) <- weights(a) if df(t) >= 2) {
+        val (ids, ws) = (postIds(t), postWs(t))
+        var j = 0
+        while (j < ids.length) {
+          val b = ids(j)
+          if (b != a) {
+            if (dot(b) == 0.0) touched += b
+            dot(b) += wa * ws(j)
+          }
+          j += 1
+        }
+      }
+      val bs = Array.newBuilder[Int]
+      val cs = Array.newBuilder[Double]
+      if (weights(a).nonEmpty) { bs += a; cs += 1.0 }
+      touched.result().foreach { b =>
+        val c = dot(b) / (norm(a) * norm(b))
+        if (c >= minCos) { bs += b; cs += c }
+        dot(b) = 0.0
+      }
+      (bs.result(), cs.result())
+    }
   }
 
   /** Canopy keys at one threshold from a (possibly cached) sims frame. */

@@ -25,19 +25,6 @@ final case class LogisticModel(
   require(featureNames.length == weights.length,
     s"${featureNames.length} names vs ${weights.length} weights")
 
-  /** P(duplicate) over a features array<double> column. Kept for
-    * array-shaped callers; prefer `scoreColumnNamed` in hot paths —
-    * higher-order functions are CodegenFallback and would drop the whole
-    * projection (UDF calls included) out of whole-stage codegen.
-    */
-  def scoreColumn(features: Column): Column = {
-    val z = aggregate(
-      zip_with(features, array(weights.map(lit): _*), (f, w) => f * w),
-      lit(bias),
-      (acc, x) => acc + x)
-    lit(1.0) / (lit(1.0) + exp(-z))
-  }
-
   /** P(duplicate) as a plain codegen'd expression over named feature
     * columns: sigmoid(b + Σ wᵢ·fᵢ) with the weights inlined as literals.
     */

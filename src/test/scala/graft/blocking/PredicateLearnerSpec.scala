@@ -121,6 +121,91 @@ class PredicateLearnerSpec extends SparkSpec {
     assert(a == b)
   }
 
+  test("learn fires at most 3 Spark jobs: the count, the sample, the match pairs") {
+    import spark.implicits._
+    // Both inputs persisted and materialized first, as the pipeline
+    // hands them over: only learn's own jobs are counted.
+    val records = Seq(
+      (1L, "alice anderson", "nyc"), (2L, "alice andersen", "nyc"),
+      (3L, "bob brown", "sf"), (4L, "bob browne", "sf"),
+      (5L, "carol clark", "la"), (6L, "carole clark", "la"))
+      .toDF("_unique_id", "name", "city").repartition(3).persist()
+    val labeled = Seq(
+      ("alice anderson", "nyc", "alice andersen", "nyc", 1.0),
+      ("bob brown", "sf", "bob browne", "sf", 1.0),
+      ("carol clark", "la", "carole clark", "nyc", 1.0))
+      .toDF("l_name", "l_city", "r_name", "r_city", "label")
+      .repartition(2).persist()
+    records.count()
+    labeled.count()
+    val group = "predicate-learner-jobs"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (j.properties != null &&
+            j.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.add(j.stageInfos.map(_.name).mkString("[", " | ", "]"))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup(group, "learn")
+      val learned =
+        try PredicateLearner.learn(records, labeled, cfg)
+        finally spark.sparkContext.clearJobGroup()
+      assert(learned.nonEmpty)
+      // Listener delivery is async; give it a quiet window.
+      Thread.sleep(1500)
+      assert(jobs.size <= 3,
+        s"learn ran ${jobs.size} jobs: ${jobs.toArray.mkString("; ")}")
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      records.unpersist(false)
+      labeled.unpersist(false)
+    }
+  }
+
+  test("a sampled learn is deterministic, partition-independent and " +
+      "still drops over-cap blocks") {
+    import spark.implicits._
+    // The cap scenario above, learned from 200 of its 300 records: the
+    // first2:name block scales back to 300 > 100 and must stay dropped.
+    val records = (0 until 150).flatMap { i =>
+      Seq((i.toLong, s"zz$i", "x"), (i.toLong + 1000, s"zz${i}q", "y"))
+    }.toDF("_unique_id", "name", "city")
+    val labeled = (0 until 20).map { i =>
+      (s"zz$i", "x", s"zz${i}q", "y", 1.0)
+    }.toDF("l_name", "l_city", "r_name", "r_city", "label")
+    val capped = cfg.copy(maxBlockSize = 100)
+    graft.pipeline.PhaseLog.drainNotes()
+    val a = PredicateLearner.learn(records, labeled, capped, 200).map(_.id)
+    assert(graft.pipeline.PhaseLog.drainNotes().get("learn_sample") ==
+      Some("200 of 300 (seed 0)"))
+    val b = PredicateLearner.learn(records, labeled, capped, 200).map(_.id)
+    val c = PredicateLearner.learn(records.repartition(7), labeled, capped,
+      200).map(_.id)
+    assert(a.nonEmpty, "sampled learner found no usable predicate")
+    assert(a == b && a == c, s"picks moved: $a / $b / $c")
+    assert(!a.contains("first2:name"),
+      s"picked the dropped-block predicate: $a")
+    // 2 of 300 records: N/n = 150 exceeds the cap, so any key seen twice
+    // in the sample is over it, but a key seen once evidences no pair and
+    // must keep its coverage. Every digits:name block is one match pair.
+    val allPairs = (0 until 150).map { i =>
+      (s"zz$i", "x", s"zz${i}q", "y", 1.0)
+    }.toDF("l_name", "l_city", "r_name", "r_city", "label")
+    val (cands, cost, cover) =
+      PredicateLearner.scored(records, allPairs, capped, 2)
+    assert(graft.pipeline.PhaseLog.drainNotes().get("learn_sample") ==
+      Some("2 of 300 (seed 0)"))
+    val digits = cands.indexWhere(_.id == "digits:name")
+    val first2 = cands.indexWhere(_.id == "first2:name")
+    assert(cover.count(_(digits)) == 150,
+      s"digits:name covers ${cover.count(_(digits))} of 150 pairs")
+    assert(cover.forall(!_(first2)), "credited first2:name's dropped block")
+    assert(cost(digits) == 0.0 && cost(first2) == 0.0)
+  }
+
   test("predicate ids round-trip through Predicate.fromId") {
     val all = Seq(WholeField("f"), TokenField("f"), FirstChars("f", 4),
       FirstToken("f"), NGrams("f", 3), DigitsOnly("f"), SortedTokens("f"),

@@ -1,5 +1,6 @@
 package graft.blocking
 
+import org.apache.commons.codec.digest.DigestUtils
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -20,7 +21,8 @@ class TfIdfCanopySpec extends SparkSpec {
     "bob smith", "robert smith", "the bob", "the cat", "the the cat",
     "unique")
 
-  private def bruteCos(maxDfRatio: Double): Map[(String, String), Double] = {
+  private def bruteCos(maxDfRatio: Double,
+      values: Seq[String] = values): Map[(String, String), Double] = {
     val n = values.size
     val tf: Map[String, Map[String, Int]] = values.map { v =>
       v -> v.split("\\s+").filter(_.nonEmpty)
@@ -86,5 +88,54 @@ class TfIdfCanopySpec extends SparkSpec {
       .as[Seq[String]].collect()
     assert(keys.length === 1 && keys.head.nonEmpty,
       "a value with only singleton tokens lost its self canopy key")
+  }
+
+  test("localSims matches Spark sims and brute force, thresholded keys too") {
+    import spark.implicits._
+    // The fixture plus a seeded corpus of 300 distinct values: 1-4
+    // tokens from a skewed 40-token vocabulary (repeats within a value
+    // occur), "the" in ~60% of values (cut as a stop word) and a
+    // singleton token in ~20%.
+    val rnd = new scala.util.Random(7)
+    def tok() = s"t${(rnd.nextDouble() * rnd.nextDouble() * 40).toInt}"
+    val random = Iterator.from(0).map { i =>
+      (Seq.fill(1 + rnd.nextInt(4))(tok()) ++
+        Option.when(rnd.nextDouble() < 0.6)("the") ++
+        Option.when(rnd.nextDouble() < 0.2)(s"u$i")).mkString(" ")
+    }.distinct.take(300).toSeq
+    Seq(values, random).foreach { vs =>
+      val local = TfIdfCanopy.localSims(vs.toIndexedSeq, 0.5, minCos = 0.0)
+      val got = vs.indices.flatMap { a =>
+        val (bs, cs) = local(a)
+        bs.indices.map(j => (vs(a), vs(bs(j))) -> cs(j))
+      }.toMap
+      val sparkSims = TfIdfCanopy.sims(vs.toDF("value"), 0.5).collect()
+        .map(r => (r.getString(0), r.getString(1)) -> r.getDouble(2)).toMap
+      Seq(sparkSims, bruteCos(0.5, vs)).foreach { want =>
+        val offDiag = want.keySet.filter { case (a, b) => a != b }
+        assert(got.keySet.filter { case (a, b) => a != b } === offDiag)
+        offDiag.foreach(k => assert(math.abs(got(k) - want(k)) < 1e-12,
+          s"cos($k): got ${got(k)}, want ${want(k)}"))
+        assert(got.keySet.filter { case (a, b) => a == b } ===
+          want.keySet.filter { case (a, b) => a == b })
+      }
+      got.foreach { case ((a, b), c) =>
+        if (a == b) assert(c === 1.0, s"diagonal cos($a) = $c")
+      }
+      // The canopy keys each side would block on, at both thresholds.
+      Seq(0.6, 0.8).foreach { thr =>
+        val p = TfIdfCanopy("f", thr)
+        val want = p.keysByValue(vs.toDF("value")).as[(String, Seq[String])]
+          .collect().toMap
+        val have = vs.indices.flatMap { a =>
+          val (bs, cs) = local(a)
+          val keys = bs.indices.collect { case j if cs(j) >= thr =>
+            s"${p.id}:${DigestUtils.md5Hex(vs(bs(j)))}"
+          }
+          if (keys.isEmpty) None else Some(vs(a) -> keys.sorted)
+        }.toMap
+        assert(have === want, s"key sets differ at $thr")
+      }
+    }
   }
 }
