@@ -1,18 +1,18 @@
 package graft.cluster
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-/** Distributed connected components over an edge DataFrame (ref: SURVEY.md
-  * D9 — the reference walks the edge list with a recursive DFS on the
-  * driver, pgdedupe/exact_matches.py:9-50; that caps at driver memory, so
-  * here it's an iterative min-label-propagation fixpoint, checkpointed per
-  * round to keep lineage flat (SURVEY.md §4).
-  *
-  * Converges in O(max component diameter) rounds; dedupe components are
-  * person-sized so this is a handful of rounds even at 100 TB. Each round
-  * is one shuffle join + one aggregation.
+/** Connected components over an edge DataFrame (ref: SURVEY.md D9 — the
+  * reference walks the edge list with a recursive DFS on the driver,
+  * pgdedupe/exact_matches.py:9-50). Two kernels, one label (component =
+  * min reachable id): [[components]], a union-find on the driver for
+  * graphs up to an explicit edge cap, and [[runStar]], the distributed
+  * large-star/small-star fixpoint above it. [[auto]] picks between them
+  * by edge count and logs the pick.
   */
 object ConnectedComponents {
 
@@ -22,11 +22,10 @@ object ConnectedComponents {
     * shuffle partitions — so a graph that fits comfortably on the driver
     * (≤ `smallEdgeCap` edges) is solved with a local min-union
     * union-find instead: one collect, zero rounds, identical labels
-    * (component = min reachable id, same as `run` and `runStar`).
-    * Driver heap at the default 1M-edge cap: the raw data is ~16 MB,
-    * but the JVM cost is the collected tuple array plus boxed
-    * TreeSet/HashMap nodes for up to 2M longs — budget a few hundred
-    * MB, and scale that estimate linearly before raising the cap.
+    * (component = min reachable id, same as `runStar`).
+    * Driver heap at the default 1M-edge cap: see `DedupeConfig.ccEdgeCap`
+    * (measured for the whole clustering step, a superset of this one);
+    * scale it linearly before raising the cap.
     * Beyond the cap it is `runStar`. The reference walks edges with a
     * driver DFS UNCONDITIONALLY (pgdedupe/exact_matches.py:9-50); this
     * keeps that fast path for reference-scale graphs without
@@ -96,31 +95,11 @@ object ConnectedComponents {
         // routinely see an empty edge set).
         val raw = if (n == 0L) Array.empty[(Long, Long)]
           else proj.as[(Long, Long)].collect()
-        val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.getOrElse(r, r) != r) r = parent(r)
-          var c = x
-          while (parent.getOrElse(c, c) != c) {
-            val nx = parent(c); parent(c) = r; c = nx
-          }
-          r
-        }
-        val ids = scala.collection.mutable.TreeSet.empty[Long]
-        raw.foreach { case (a, b) =>
-          ids += a; ids += b
-          if (a != b) {
-            val ra = find(a); val rb = find(b)
-            // Min-union keeps every root the minimum id of its component,
-            // matching the distributed kernels' labels exactly.
-            if (ra != rb) {
-              if (ra < rb) parent(rb) = ra else parent(ra) = rb
-            }
-          }
-        }
+        val comp = components(raw.iterator)
+        val ids = comp.keys.toArray.sorted
         // LocalRelation output: the optimizer can broadcast it into the
         // consuming join, which is exactly right at this size.
-        spark.createDataset(ids.toSeq.map(id => (id, find(id))))
+        spark.createDataset(ids.toSeq.map(id => (id, comp(id))))
           .toDF("id", "component")
       }
       // No null-sided edges (the common case): the output is `out`
@@ -137,84 +116,45 @@ object ConnectedComponents {
     }
   }
 
-  /** edges: two long columns (src, dst), undirected. Returns
-    * `(id, component)` where component = min reachable id.
+  /** Min-union union-find on the driver: maps every endpoint of `edges`
+    * to the smallest id of its connected component, the label `runStar`
+    * computes. A self-loop (x, x) keeps x as its own singleton. Every
+    * root stays the minimum of its tree, and path compression leaves
+    * each entry pointing straight at its root on return.
     */
-  def run(
-      edges: DataFrame,
-      srcCol: String = "l_id",
-      dstCol: String = "r_id",
-      maxIter: Int = 50): DataFrame = {
-    val sym = edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .union(edges.select(col(dstCol).cast("long").as("src"),
-        col(srcCol).cast("long").as("dst")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    // Vertex set (SO1, ref exact_matches.py:29: concat of both id columns).
-    var labels = sym.select(col("src").as("id")).distinct()
-      .withColumn("component", col("id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      // Min neighbor label per vertex, with the convergence flag computed
-      // inside the same label-update job: the eager localCheckpoint is the
-      // iteration's ONE distributed action; the change probe afterwards is
-      // a limit-1 scan of the already-materialized partitions (no join, no
-      // shuffle, no lineage recompute).
-      val neighborMin = sym
-        .join(labels.select("id", "component").withColumnRenamed("id", "src"),
-          "src")
-        .groupBy(col("dst").as("id"))
-        .agg(min("component").as("nbr_component"))
-      val next = labels.join(neighborMin, Seq("id"), "left_outer")
-        .select(col("id"),
-          least(col("component"), coalesce(col("nbr_component"),
-            col("component"))).as("component"),
-          (coalesce(col("nbr_component"), col("component")) <
-            col("component")).as("chg"))
-        .localCheckpoint(true)
-      val changed = next.where(col("chg")).limit(1).count()
-      labels.unpersist(false)
-      labels = next
-      converged = changed == 0
-      iter += 1
+  private[graft] def components(
+      edges: Iterator[(Long, Long)]): mutable.LongMap[Long] = {
+    val parent = mutable.LongMap.empty[Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var c = x
+      while (c != r) { val nx = parent(c); parent(c) = r; c = nx }
+      r
     }
-    sym.unpersist(false)
-    // Round count is the O(diameter) cost driver and varies with AQE
-    // partitioning — log it so bench variance can be attributed. A
-    // non-converged exit would return PARTIAL labels that look complete
-    // — the one failure mode this engine never allows silently — so it
-    // throws instead of warning; prefer runStar for high-diameter
-    // graphs (O(log² n) rounds regardless of diameter).
-    if (!converged) {
-      labels.unpersist(false)
-      throw new IllegalStateException(
-        s"min-label CC did not converge within maxIter=$maxIter rounds " +
-          "— labels would be partial; raise maxIter or use runStar for " +
-          "long-chain graphs")
+    edges.foreach { case (a, b) =>
+      if (!parent.contains(a)) parent(a) = a
+      if (!parent.contains(b)) parent(b) = b
+      val ra = find(a); val rb = find(b)
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
     }
-    org.slf4j.LoggerFactory.getLogger(getClass).info(
-      s"connected components converged in $iter rounds")
-    labels.select("id", "component")
+    parent.keys.toArray.foreach(find)
+    parent
   }
 
   /** Alternating large-star/small-star connected components (Kiveris et
     * al., "Connected Components in MapReduce and Beyond"): converges in
     * O(log² n) rounds regardless of component DIAMETER, where min-label
-    * propagation (`run`) needs O(diameter) rounds. Person-dedup
-    * components are shallow, so `run` wins there (benchmarked at sf0.1 —
-    * see the scaladoc numbers in the spec); this is the robust choice
-    * when the edge graph can contain long chains (e.g. transitive
-    * near-dup links over crawl snapshots).
+    * propagation needs O(diameter) rounds — robust when the edge graph
+    * can contain long chains (e.g. transitive near-dup links over crawl
+    * snapshots).
     *
     * Each round: large-star hangs every higher-id neighbor of u onto
     * u's minimum neighbor; small-star re-points u and its lower-id
     * neighbors at their minimum. Edges stay oriented (high, low); the
     * fixpoint is a forest of depth-1 stars whose roots are component
-    * minima. Same per-round localCheckpoint discipline as `run`.
+    * minima. Each round's output is eagerly localCheckpointed to keep
+    * the lineage flat (SURVEY.md §4).
     */
   def runStar(
       edges: DataFrame,
@@ -284,9 +224,9 @@ object ConnectedComponents {
       e = small
       iter += 1
     }
-    // Same fail-loud contract as `run`: a non-converged star forest can
-    // still contain depth-2 chains, i.e. labels that are not component
-    // minima — never return them behind a log line.
+    // Fail loud: a non-converged star forest can still contain depth-2
+    // chains, i.e. labels that are not component minima — never return
+    // them behind a log line.
     if (!converged)
       throw new IllegalStateException(
         s"star CC did not converge within maxIter=$maxIter rounds — " +

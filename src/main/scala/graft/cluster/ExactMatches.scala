@@ -51,14 +51,15 @@ object ExactMatches {
     * + join-update, exact_matches.py:85-101 — immutable rewrite, J7).
     */
   def merge(df: DataFrame, cols: Seq[String], clusterCol: String,
-      label: String = "exact-merge"): DataFrame = {
+      label: String = "exact-merge",
+      smallEdgeCap: Long = 1000000L): DataFrame = {
     val edges = mergeEdges(df, cols, clusterCol)
-    // runStar: faster on the real workload and diameter-robust (CcBench).
     // `label` keys the PhaseLog note: multi-set merge runs (the pipeline
     // folds one pass per mergeExact field set) must not overwrite each
-    // other's kernel-choice notes.
+    // other's kernel-choice notes. `smallEdgeCap` is the pipeline's
+    // `cc_edge_cap`.
     val comps = ConnectedComponents.auto(edges, "id1", "id2",
-      label = label)
+      smallEdgeCap = smallEdgeCap, label = label)
       .withColumnRenamed("id", clusterCol)
     df.join(comps, Seq(clusterCol), "left_outer")
       .withColumn(clusterCol, coalesce(col("component"), col(clusterCol)))

@@ -11,9 +11,10 @@ import org.apache.spark.sql.functions._
   * threshold; output consumed as (ids, scores) tuples at
   * pgdedupe/run.py:405-408).
   *
-  * Spark shape: scored edges → connected components (bounded groups) →
-  * `groupByKey(component).flatMapGroups(hacOnGroup)`. The in-group
-  * agglomeration is sparse: memory is O(V + E) in the component's
+  * Shape: scored edges → connected components → `hacOnGroup` per
+  * component; on the driver up to `ccEdgeCap` edges, as
+  * `groupByKey(component).flatMapGroups` above (see [[cluster]]). The
+  * in-group agglomeration is sparse: memory is O(V + E) in the component's
   * observed edges (never a dense n×n matrix), so a `maxComponentSize`
   * guard is only needed against giant components (a hot blocking key
   * chaining thousands of records). Oversized components are SPLIT on
@@ -320,18 +321,28 @@ object Hierarchical {
     * entity_map `(_unique_id, canon_id, cluster_score)`
     * (ref pgdedupe/run.py:397-399).
     *
-    * `maxEdgesPerComponent` bounds the per-task edge materialization
+    * At most `ccEdgeCap` above-threshold edges (the common case) are
+    * clustered on the driver, as the reference does (fastcluster per
+    * component, run.py:405-408): one job counts them, one collects them,
+    * [[ConnectedComponents.components]] labels the components and
+    * `hacOnGroup` runs per component; the entity map comes back as a
+    * local relation. Above the cap, or when an edge has a null id, the
+    * distributed path runs: [[ConnectedComponents.auto]], then
+    * `groupByKey(component).flatMapGroups(hacOnGroup)`. Both paths note
+    * `cc_kernel.hac-cluster` as `<kernel> (<n> edges, cap <cap>)`.
+    *
+    * `maxEdgesPerComponent` bounds one component's materialized edges
     * (see [[strongestEdges]]); at the 4M default the buffer is a few
     * hundred MB worst-case — sized for a 4 GB executor — and the
     * eviction only ever fires on components that were already headed
     * for splitOversized's weakest-edge cut.
     *
     * PERSIST `scoredPairs` before calling: its lineage is consumed
-    * twice — once by the component kernel's probe/materialization and
-    * again by the component join below — so an unpersisted ML-scoring
-    * lineage would recompute blocking + scoring end to end a second
-    * time. `DedupePipeline` persists it at the phase seam; direct
-    * callers own the same responsibility.
+    * at least twice (the count, then the collect or the component
+    * kernel and its join), so an unpersisted ML-scoring lineage would
+    * recompute blocking + scoring end to end again. `DedupePipeline`
+    * persists it at the phase seam; direct callers own the same
+    * responsibility.
     */
   def cluster(
       scoredPairs: DataFrame, // l_id, r_id, score
@@ -342,25 +353,45 @@ object Hierarchical {
     val spark = scoredPairs.sparkSession
     import spark.implicits._
     val above = scoredPairs.where(col("score") >= threshold)
-    // auto: driver union-find below the edge cap (zero shuffle rounds),
-    // else runStar — 1.8× faster than min-label on the sf0.1 person edge
-    // set (11.9 s vs 21.9 s, identical labels — CcBench) with O(log² n)
-    // rounds regardless of component diameter. The cap is caller-tunable
-    // (DedupeConfig.ccEdgeCap for the pipeline).
-    val comps = ConnectedComponents.auto(above, smallEdgeCap = ccEdgeCap,
-      label = "hac-cluster")
-    val withComp = above
-      .join(comps.withColumnRenamed("id", "l_id"), "l_id")
-      .select(col("component"), col("l_id").as("lId"),
-        col("r_id").as("rId"), col("score"))
-      .as[Edge]
-    withComp
-      .groupByKey(_.component)
-      .flatMapGroups { (_, it) =>
-        val (edges, orphans) = strongestEdges(it, maxEdgesPerComponent)
-        hacOnGroup(edges, threshold, maxComponentSize) ++
-          orphans.map(id => Assignment(id, id, 1.0))
-      }
-      .toDF("_unique_id", "canon_id", "cluster_score")
+    // A function value, not a local def: flatMapGroups ships it to the
+    // executors, and a local def would capture this (unserializable)
+    // object.
+    val hac = (it: Iterator[Edge]) => {
+      val (edges, orphans) = strongestEdges(it, maxEdgesPerComponent)
+      hacOnGroup(edges, threshold, maxComponentSize) ++
+        orphans.map(id => Assignment(id, id, 1.0))
+    }
+    // Edge count and null-id flag in one job with no exchange
+    // (Dataset.count's aggregate exchange is a second job under AQE).
+    val (n, nullIds) = above
+      .select((col("l_id").isNull || col("r_id").isNull).as("null_id"))
+      .queryExecution.toRdd
+      .aggregate((0L, false))(
+        (acc, row) => (acc._1 + 1, acc._2 || row.getBoolean(0)),
+        (a, b) => (a._1 + b._1, a._2 || b._2))
+    if (n <= ccEdgeCap && !nullIds) {
+      graft.pipeline.PhaseLog.note("cc_kernel.hac-cluster",
+        s"driver-union-find ($n edges, cap $ccEdgeCap)")
+      // `component` is not read by the per-component HAC: the
+      // union-find's labels group the edges instead.
+      val raw = above.select(lit(0L).as("component"), col("l_id").as("lId"),
+        col("r_id").as("rId"), col("score")).as[Edge].collect()
+      val comp = ConnectedComponents.components(
+        raw.iterator.map(e => (e.lId, e.rId)))
+      val assigned = raw.groupBy(e => comp(e.lId)).toSeq.sortBy(_._1)
+        .flatMap { case (_, es) => hac(es.iterator) }
+      spark.createDataset(assigned).toDF()
+    } else {
+      val comps = ConnectedComponents.auto(above, smallEdgeCap = ccEdgeCap,
+        label = "hac-cluster")
+      above
+        .join(comps.withColumnRenamed("id", "l_id"), "l_id")
+        .select(col("component"), col("l_id").as("lId"),
+          col("r_id").as("rId"), col("score"))
+        .as[Edge]
+        .groupByKey(_.component)
+        .flatMapGroups((_, it) => hac(it))
+        .toDF("_unique_id", "canon_id", "cluster_score")
+    }
   }
 }

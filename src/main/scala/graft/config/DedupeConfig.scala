@@ -34,11 +34,14 @@ final case class DedupeConfig(
     seed: Long = 0L,
     maxBlockSize: Int = 1000,
     maxComponentSize: Int = 1000,
-    // Edge count at or below which connected components runs as a driver
-    // union-find (one collect, zero shuffle rounds) instead of the
-    // distributed star kernel — see ConnectedComponents.auto. ~16 MB of
-    // driver heap at the default; raise on a fat driver, lower (or 0 to
-    // force the distributed kernel) when edges are wide of that.
+    // Edge count at or below which clustering and the unique-grain
+    // exact merges finish on the driver (one collect, union-find, HAC per
+    // component) instead of the distributed star kernel — see
+    // Hierarchical.cluster and ConnectedComponents.auto. At the default,
+    // 1M edges in 10-record components ran in a 600 MB driver JVM heap
+    // (Spark's 300 MB reserve included) but not in 480 MB, where the
+    // distributed path still ran (test-scoped HacHeapBench); raise on a fat
+    // driver, lower (or 0 to force the distributed paths) on a thin one.
     ccEdgeCap: Long = 1000000L,
     // Per-task ceiling on one HAC component's materialized edge list
     // (Hierarchical.strongestEdges): beyond it, only the strongest

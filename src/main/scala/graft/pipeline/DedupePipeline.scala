@@ -1,11 +1,14 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.blocking.{Blocker, FirstChars, Predicate, PredicateLearner, TokenField, WholeField}
-import graft.cluster.{ExactMatches, Hierarchical}
+import graft.cluster.{ConnectedComponents, ExactMatches, Hierarchical}
 import graft.config.DedupeConfig
 import graft.model.{LogisticModel, Settings, Training}
 import graft.ops.RelationalOps
@@ -170,22 +173,27 @@ object DedupePipeline {
       entriesUnique: DataFrame,
       entries: DataFrame,
       cfg: DedupeConfig): (DataFrame, DataFrame) = {
-    var mapped = RelationalOps.applyClusters(entityMap, entriesUnique)
     // merge_exact sets whose columns are all dedup fields run on unique
     // records (ref run.py:454-460).
     val (uniqueFieldSets, rawFieldSets) =
       cfg.mergeExact.partition(_.forall(cfg.columns.contains))
-    if (uniqueFieldSets.nonEmpty) {
-      val withFields = mapped.join(
-        entriesUnique.select((Seq(col("_unique_id")) ++
-          cfg.columns.map(col)): _*), "_unique_id")
-      val merged = uniqueFieldSets.zipWithIndex
-        .foldLeft(withFields) { case (d, (cols, i)) =>
-          ExactMatches.merge(d, cols, "dedupe_id",
-            label = s"exact-merge-u$i")
-        }
-      mapped = merged.select("dedupe_id", "_unique_id", "cluster_score",
-        "src_ids")
+    val merged =
+      if (uniqueFieldSets.isEmpty) Some(entityMap)
+      else mergeUnique(entityMap, entriesUnique, uniqueFieldSets,
+        cfg.ccEdgeCap)
+    val mapped = merged match {
+      case Some(em) => RelationalOps.applyClusters(em, entriesUnique)
+      case None =>
+        // Over the cap: one distributed merge pass per set.
+        val withFields = RelationalOps.applyClusters(entityMap, entriesUnique)
+          .join(entriesUnique.select((Seq(col("_unique_id")) ++
+            cfg.columns.map(col)): _*), "_unique_id")
+        uniqueFieldSets.zipWithIndex
+          .foldLeft(withFields) { case (d, (cols, i)) =>
+            ExactMatches.merge(d, cols, "dedupe_id",
+              label = s"exact-merge-u$i", smallEdgeCap = cfg.ccEdgeCap)
+          }
+          .select("dedupe_id", "_unique_id", "cluster_score", "src_ids")
     }
     var um = RelationalOps.uniqueMap(mapped, cfg.key)
     // Raw-table merges (ref run.py:477-483): attach the merge columns
@@ -197,22 +205,77 @@ object DedupePipeline {
       val withCols = um.join(
         entries.select((cfg.key +: cols).distinct.map(col): _*), cfg.key)
       um = ExactMatches.merge(withCols, cols, "dedupe_id",
-          label = s"exact-merge-r$i")
+          label = s"exact-merge-r$i", smallEdgeCap = cfg.ccEdgeCap)
         .select("dedupe_id", cfg.key, "cluster_score")
     }
     (mapped, um)
+  }
+
+  /** The unique-grain merge_exact passes on the driver, as the reference
+    * runs them (a driver DFS, ref exact_matches.py:9-50). Each set links
+    * every record whose set columns are all non-null to the smallest
+    * record id sharing its values: one window shuffle, no join. With
+    * d(u) = u's canon_id in `entityMap` (u itself when absent), every edge
+    * (a, b) unions d(a) with d(b) in one union-find over all sets, and a
+    * record's new canon_id is the smallest dedupe id of its component —
+    * what folding [[ExactMatches.merge]] over the sets yields, for any
+    * entity map. Returns that entity map as a local relation, or None
+    * when the edges or the entity map exceed `cap` rows (the caller
+    * then folds the distributed merge passes).
+    */
+  private def mergeUnique(
+      entityMap: DataFrame,
+      entriesUnique: DataFrame,
+      sets: Seq[Seq[String]],
+      cap: Long): Option[DataFrame] = {
+    val spark = entityMap.sparkSession
+    import spark.implicits._
+    // At most cap + 1 rows reach the driver, in one job: coalesce(1)
+    // keeps the limit from scanning partitions in growing rounds.
+    def atMost[T](ds: Dataset[T]): Option[Array[T]] = {
+      val rows = ds.coalesce(1)
+        .limit(math.min(cap, Int.MaxValue - 1L).toInt + 1).collect()
+      if (rows.length > cap) None else Some(rows)
+    }
+    val edges = sets.map { cols =>
+      entriesUnique.where(cols.map(col(_).isNotNull).reduce(_ && _))
+        .select(col("_unique_id").as("b"), min("_unique_id")
+          .over(Window.partitionBy(cols.map(col): _*)).as("a"))
+        .where(col("b") > col("a"))
+        .select("a", "b")
+    }.reduce(_ union _).as[(Long, Long)]
+    atMost(edges).flatMap { es =>
+      PhaseLog.note("cc_kernel.exact-merge-u",
+        s"driver-union-find (${es.length} edges, cap $cap)")
+      if (es.isEmpty) Some(entityMap)
+      else atMost(entityMap.select("_unique_id", "canon_id", "cluster_score")
+        .as[(Long, Long, Double)]).map { em =>
+        val canon = mutable.LongMap.empty[Long]
+        em.foreach { case (u, c, _) => canon(u) = c }
+        def d(u: Long): Long = canon.getOrElse(u, u)
+        val comp = ConnectedComponents.components(
+          es.iterator.map { case (a, b) => (d(a), d(b)) })
+        // A record absent from the map is its own dedupe id
+        // (applyClusters' default); one whose id moved gets a row here.
+        val moved = comp.iterator.collect {
+          case (id, c) if id != c && !canon.contains(id) => (id, c, 1.0)
+        }
+        (em.iterator.map { case (u, c, s) => (u, comp.getOrElse(c, c), s) }
+          ++ moved).toSeq.toDF("_unique_id", "canon_id", "cluster_score")
+      }
+    }
   }
 
   /** Full pipeline with a static (or defaulted) model.
     *
     * Persistence points: `entries` (read by preprocess AND the
     * apply-phase raw-table merge), `entriesUnique` (read by blocking,
-    * scoring, and apply), `scored` (read by the clustering threshold
-    * filter, the CC component join, and — transitively — every
-    * exact-match merge pass), and `entityMap` (read by applyClusters plus
-    * each merge pass). Without these every downstream action re-runs the
-    * whole block → pair → affine-gap lineage, which is what timed out the
-    * sf0.1 bench.
+    * scoring, and apply), `scored` (read by clustering's edge count and
+    * then its edge collect, or above `cc_edge_cap` its component kernel
+    * and join), and `entityMap` (read by the unique-grain merge's
+    * collect and by applyClusters, or by every distributed merge pass).
+    * Without these every downstream action re-runs the whole block →
+    * pair → affine-gap lineage, which is what timed out the sf0.1 bench.
     *
     * Each persisted frontier is materialized EAGERLY (a count) before its
     * consumers run: downstream fan-out then always reads the cache,

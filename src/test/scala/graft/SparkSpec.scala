@@ -23,6 +23,30 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       q +: planNodes(q.plan)
     case other => other +: other.children.flatMap(planNodes)
   }
+
+  /** Runs `f` in a job group of its own and returns its result with the
+    * Spark jobs it fired (each as its stage names), read after a quiet
+    * window, since listener delivery is asynchronous.
+    */
+  def withJobs[T](f: => T): (T, Seq[String]) = {
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (j.properties != null &&
+            j.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.add(j.stageInfos.map(_.name).mkString("[", " | ", "]"))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      val r = try f finally sc.clearJobGroup()
+      Thread.sleep(1500)
+      (r, jobs.toArray(Array.empty[String]).toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 object SparkSpec {

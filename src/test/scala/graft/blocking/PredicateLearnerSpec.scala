@@ -138,28 +138,13 @@ class PredicateLearnerSpec extends SparkSpec {
       .repartition(2).persist()
     records.count()
     labeled.count()
-    val group = "predicate-learner-jobs"
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (j.properties != null &&
-            j.properties.getProperty("spark.jobGroup.id") == group)
-          jobs.add(j.stageInfos.map(_.name).mkString("[", " | ", "]"))
-    }
-    spark.sparkContext.addSparkListener(listener)
     try {
-      spark.sparkContext.setJobGroup(group, "learn")
-      val learned =
-        try PredicateLearner.learn(records, labeled, cfg)
-        finally spark.sparkContext.clearJobGroup()
+      val (learned, jobs) =
+        withJobs(PredicateLearner.learn(records, labeled, cfg))
       assert(learned.nonEmpty)
-      // Listener delivery is async; give it a quiet window.
-      Thread.sleep(1500)
-      assert(jobs.size <= 3,
-        s"learn ran ${jobs.size} jobs: ${jobs.toArray.mkString("; ")}")
+      assert(jobs.size <= 3, s"learn ran ${jobs.size} jobs: " +
+        jobs.mkString("; "))
     } finally {
-      spark.sparkContext.removeSparkListener(listener)
       records.unpersist(false)
       labeled.unpersist(false)
     }

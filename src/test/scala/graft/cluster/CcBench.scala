@@ -7,14 +7,14 @@ import graft.queries.PipelineQueries
 import graft.pipeline.DedupePipeline
 import graft.model.LogisticModel
 
-/** One-off comparison of the two CC kernels on the real q50 edge
-  * workload at sf0.1 plus an adversarial long chain — decides which
-  * kernel is the pipeline default (test-scoped tool, not shipped API).
+/** One-off comparison of the two CC kernels — the driver union-find and
+  * `runStar` — on the real q50 edge workload at sf0.1 plus an
+  * adversarial long chain (test-scoped tool, not shipped API).
   * Run: sbt "Test/runMain graft.cluster.CcBench"
   *
   * Kernel selection in production goes through
   * `ConnectedComponents.auto`: a driver union-find below the edge cap
-  * (config knob `cc_edge_cap`, default 1M ≈ 16 MB of driver heap),
+  * (config knob `cc_edge_cap`, default 1M edges),
   * `runStar` above it; the pick is logged and surfaced in the bench
   * JSON's notes map as `cc_kernel`. Re-run this bench when changing
   * the cap default — the crossover sits where the union-find's single
@@ -58,12 +58,12 @@ object CcBench {
       .persist()
     println(s"[ccbench] person edges: ${above.count()}")
     Seq(bm, sc, pb).foreach(_.unpersist(false))
-    val a = time("person min-label")(
-      ConnectedComponents.run(above).collect().map(r =>
-        r.getLong(0) -> r.getLong(1)).toMap)
-    val b = time("person star")(
-      ConnectedComponents.runStar(above).collect().map(r =>
-        r.getLong(0) -> r.getLong(1)).toMap)
+    def labels(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val a = time("person union-find")(
+      labels(ConnectedComponents.auto(above, label = "bench-uf")))
+    val b = time("person star")(labels(
+      ConnectedComponents.auto(above, smallEdgeCap = 0, label = "bench-star")))
     println(s"[ccbench] person labels agree: ${a == b} (${a.size} nodes)")
 
     // Adversarial: one 20k-node path (diameter 20k).
@@ -71,11 +71,60 @@ object CcBench {
       .select(col("id").as("l_id"), (col("id") + 1).as("r_id"))
       .persist()
     chain.count()
-    val c = time("chain star")(
-      ConnectedComponents.runStar(chain, maxIter = 20).count())
-    val d = time("chain min-label (maxIter=50)")(
-      ConnectedComponents.run(chain, maxIter = 50).count())
-    println(s"[ccbench] chain nodes: star=$c minlabel=$d")
+    val c = time("chain union-find")(
+      labels(ConnectedComponents.auto(chain, label = "bench-uf")))
+    val d = time("chain star")(labels(ConnectedComponents.auto(chain,
+      smallEdgeCap = 0, label = "bench-star")))
+    println(s"[ccbench] chain labels agree: ${c == d} (${c.size} nodes)")
+    spark.stop()
+  }
+}
+
+/** Wall time and JVM heap of one `Hierarchical.cluster` call on a
+  * synthetic graph of 1M above-threshold edges: 100,000 rings of 10
+  * records. Pass the `ccEdgeCap` to measure, one JVM per cap so the peaks
+  * do not mix (default cap → driver path, 0 → distributed path):
+  * sbt "Test/runMain graft.cluster.HacHeapBench 1000000"
+  * In local mode the executors share the driver's JVM, so the peak is
+  * whole-JVM heap in use (live data plus uncollected garbage), sampled
+  * every 5 ms, above the heap left after a full GC before the call.
+  */
+object HacHeapBench {
+  def main(args: Array[String]): Unit = {
+    val cap = args.headOption.fold(1000000L)(_.toLong)
+    val spark = SparkSession.builder()
+      .master("local[4]")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    val id = col("id")
+    val scored = spark.range(1000000L)
+      .select(id.as("l_id"), (id - id % 10 + (id + 1) % 10).as("r_id"),
+        (lit(0.6) + (id * 7919 % 1000) / 2500.0).as("score"))
+      .persist()
+    scored.count()
+    val heap = java.lang.management.ManagementFactory.getMemoryMXBean
+    System.gc()
+    val base = heap.getHeapMemoryUsage.getUsed
+    @volatile var peak = base
+    @volatile var done = false
+    val sampler = new Thread(() =>
+      while (!done) {
+        peak = math.max(peak, heap.getHeapMemoryUsage.getUsed)
+        Thread.sleep(5)
+      })
+    sampler.start()
+    val t0 = System.nanoTime()
+    val em = Hierarchical.cluster(scored, 0.5, ccEdgeCap = cap).persist()
+    val rows = em.count()
+    val secs = (System.nanoTime() - t0) / 1e9
+    done = true
+    sampler.join()
+    println(f"[hacheap] cap=$cap rows=$rows wall_s=$secs%.2f " +
+      f"base_mb=${base / 1e6}%.0f peak_mb=${peak / 1e6}%.0f " +
+      f"peak_over_base_mb=${(peak - base) / 1e6}%.0f " +
+      s"xmx_mb=${Runtime.getRuntime.maxMemory / 1000000}")
     spark.stop()
   }
 }

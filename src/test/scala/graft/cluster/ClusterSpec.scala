@@ -6,53 +6,58 @@ import graft.SparkSpec
 
 class ClusterSpec extends SparkSpec {
 
+  private def labels(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
   test("connected components labels chains and keeps islands apart") {
     import spark.implicits._
     // 1-2-3 chained, 10-11, 20 alone (20 never appears in edges).
     val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("l_id", "r_id")
-    val comps = ConnectedComponents.run(edges).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(comps(1L) == 1L && comps(2L) == 1L && comps(3L) == 1L)
-    assert(comps(10L) == 10L && comps(11L) == 10L)
-    assert(!comps.contains(20L))
+    Seq(ConnectedComponents.runStar(edges),
+        ConnectedComponents.auto(edges, label = "t-islands"))
+      .map(labels).foreach { comps =>
+        assert(comps(1L) == 1L && comps(2L) == 1L && comps(3L) == 1L)
+        assert(comps(10L) == 10L && comps(11L) == 10L)
+        assert(!comps.contains(20L))
+      }
   }
 
   test("connected components converges on a long path") {
     import spark.implicits._
     val edges = (1L until 40L).map(i => (i, i + 1)).toDF("l_id", "r_id")
-    val comps = ConnectedComponents.run(edges).collect()
-    assert(comps.length == 40)
-    assert(comps.forall(_.getLong(1) == 1L))
+    Seq(ConnectedComponents.runStar(edges),
+        ConnectedComponents.auto(edges, label = "t-path"))
+      .map(labels).foreach { comps =>
+        assert(comps.size == 40)
+        assert(comps.values.forall(_ == 1L))
+      }
   }
 
   test("CC throws on non-convergence instead of returning partial labels") {
     import spark.implicits._
-    // A 40-chain needs ~39 min-label rounds; maxIter=1 cannot converge.
-    // Partial labels that look complete are the one silent failure this
-    // engine forbids — both kernels must throw, not warn.
+    // A 40-chain cannot collapse in one star round. Partial labels that
+    // look complete are the one silent failure this engine forbids —
+    // the kernel must throw, not warn.
     val edges = (1L until 40L).map(i => (i, i + 1)).toDF("l_id", "r_id")
-    val e1 = intercept[IllegalStateException] {
-      ConnectedComponents.run(edges, maxIter = 1).collect()
-    }
-    assert(e1.getMessage.contains("did not converge"))
-    val e2 = intercept[IllegalStateException] {
+    val e = intercept[IllegalStateException] {
       ConnectedComponents.runStar(edges, maxIter = 1).collect()
     }
-    assert(e2.getMessage.contains("did not converge"))
+    assert(e.getMessage.contains("did not converge"))
   }
 
-  test("star CC agrees with min-label propagation") {
+  test("star CC agrees with the driver union-find") {
     import spark.implicits._
     // Mixed shapes: a chain, a triangle sharing a node with the chain, a
     // separate pair, and an island (absent from edges → absent from both).
     val edges = Seq(
       (1L, 2L), (2L, 3L), (3L, 4L), (4L, 7L), (7L, 1L),
       (10L, 11L), (30L, 31L), (31L, 32L)).toDF("l_id", "r_id")
-    def toMap(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val a = toMap(ConnectedComponents.run(edges))
-    val b = toMap(ConnectedComponents.runStar(edges))
-    assert(a == b, s"min-label $a vs star $b")
+    val star = labels(ConnectedComponents.auto(edges, smallEdgeCap = 0,
+      label = "t-agree-star"))
+    val driver = labels(ConnectedComponents.auto(edges,
+      label = "t-agree-driver"))
+    assert(star == driver, s"star $star vs union-find $driver")
+    assert(star == labels(ConnectedComponents.runStar(edges)))
   }
 
   test("auto CC: driver union-find below the cap, runStar above — " +
@@ -63,11 +68,9 @@ class ClusterSpec extends SparkSpec {
       (10L, 11L), (11L, 10L), // duplicate + reversed edges
       (30L, 31L), (31L, 32L), (40L, 40L) // chain + self-loop island
     ).toDF("l_id", "r_id")
-    def toMap(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val star = toMap(ConnectedComponents.runStar(edges))
-    val driver = toMap(ConnectedComponents.auto(edges)) // under cap
-    val dist = toMap(ConnectedComponents.auto(edges, smallEdgeCap = 2L))
+    val star = labels(ConnectedComponents.runStar(edges))
+    val driver = labels(ConnectedComponents.auto(edges)) // under cap
+    val dist = labels(ConnectedComponents.auto(edges, smallEdgeCap = 2L))
     assert(driver.get(9L).contains(2L) && driver.get(7L).contains(2L))
     assert(dist == star, s"above-cap auto $dist vs runStar $star")
     // Pure self-loop islands (40) are singleton components on BOTH
@@ -225,6 +228,44 @@ class ClusterSpec extends SparkSpec {
     assert(assigns.get(3L).contains(1L))
     assert(assigns.get(10L).contains(10L))
     assert(!assigns.contains(20L))
+  }
+
+  test("cluster() below the edge cap fires at most 2 Spark jobs") {
+    import spark.implicits._
+    // Persisted and materialized first, as the pipeline hands it over:
+    // only the edge count and the edge collect may run as jobs.
+    val scored = Seq(
+      (1L, 2L, 0.9), (2L, 3L, 0.85), (10L, 11L, 0.7), (20L, 21L, 0.2))
+      .toDF("l_id", "r_id", "score").repartition(3).persist()
+    scored.count()
+    try {
+      val (em, jobs) = withJobs(Hierarchical.cluster(scored, 0.5))
+      assert(jobs.size <= 2, s"cluster ran ${jobs.size} jobs: " +
+        jobs.mkString("; "))
+      assert(labels(em) ==
+        Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
+      assert(graft.pipeline.PhaseLog.drainNotes()("cc_kernel.hac-cluster") ==
+        "driver-union-find (3 edges, cap 1000000)")
+    } finally scored.unpersist(false)
+  }
+
+  test("cluster() treats null-id edges as the distributed path does") {
+    import spark.implicits._
+    // A null l_id joins no component, so its edge drops out; a null
+    // r_id beside a real l_id fails the typed edge decode. Both caps
+    // take the distributed path for either, so they agree exactly.
+    val nullL = Seq((Option(1L), Option(2L), 0.9), (None, Option(3L), 0.9),
+      (Option(4L), Option(5L), 0.8)).toDF("l_id", "r_id", "score")
+    val nullR = Seq((Option(1L), Option(2L), 0.9), (Option(3L), None, 0.9))
+      .toDF("l_id", "r_id", "score")
+    Seq(1000000L, 0L).foreach { cap =>
+      assert(labels(Hierarchical.cluster(nullL, 0.5, ccEdgeCap = cap)) ==
+        Map(1L -> 1L, 2L -> 1L, 4L -> 4L, 5L -> 4L), s"cap $cap")
+      val e = intercept[Exception] {
+        Hierarchical.cluster(nullR, 0.5, ccEdgeCap = cap).collect()
+      }
+      assert(e.getMessage.contains("NOT_NULL_ASSERT_VIOLATION"), s"cap $cap")
+    }
   }
 
   test("exact-match merge links clusters transitively") {

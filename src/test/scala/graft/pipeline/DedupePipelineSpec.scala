@@ -64,6 +64,105 @@ class DedupePipelineSpec extends SparkSpec {
     assert(result.cached.forall(_.storageLevel == StorageLevel.NONE))
   }
 
+  private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  test("driver-side clustering and merges match the distributed paths " +
+      "row for row") {
+    // cc_edge_cap = 0 forces every distributed path (HAC's component
+    // kernel + groupByKey, the folded unique-grain merge passes, runStar
+    // in the raw-grain pass); the default takes every driver path.
+    val mcfg = cfg.copy(mergeExact =
+      Seq(Seq("ssn"), Seq("first_name", "last_name"), Seq("uuid", "dob")))
+    val entries = FakePersons.population(spark, 150, seed = 11L)
+    val results = Seq(0L, mcfg.ccEdgeCap).map { cap =>
+      graft.pipeline.PhaseLog.drainNotes()
+      val r = DedupePipeline.run(entries, mcfg.copy(ccEdgeCap = cap))
+      (r, graft.pipeline.PhaseLog.drainNotes())
+    }
+    try {
+      val Seq((dist, distNotes), (driver, driverNotes)) = results
+      assert(distNotes("cc_kernel.hac-cluster").startsWith("run-star"))
+      assert(distNotes("cc_kernel.exact-merge-u1").startsWith("run-star"))
+      assert(driverNotes("cc_kernel.hac-cluster")
+        .startsWith("driver-union-find"))
+      assert(driverNotes("cc_kernel.exact-merge-u")
+        .startsWith("driver-union-find"))
+      Seq[DedupePipeline.Result => org.apache.spark.sql.DataFrame](
+          _.entityMap, _.mapped, _.uniqueMap).foreach { f =>
+        assert(sortedRows(f(dist)) == sortedRows(f(driver)))
+      }
+      // The merge sets did link records beyond the entity map.
+      val clustered = driver.mapped.where(col("dedupe_id") =!=
+        col("_unique_id")).count()
+      assert(clustered > driver.entityMap.where(col("canon_id") =!=
+        col("_unique_id")).count())
+    } finally results.foreach(_._1.release())
+  }
+
+  // Unique records 1..8, record u from source row u + 100.
+  private val mergeCfg = DedupeConfig(
+    key = "entry_id",
+    fields = Seq(FieldSpec("ssn"), FieldSpec("name")),
+    mergeExact = Seq(Seq("ssn"), Seq("name")))
+
+  private def mergeFixture() = {
+    import spark.implicits._
+    val eu = Seq(
+      (1L, "s1", "ann"), (2L, "s1", "bob"), (3L, null, "bob"),
+      (4L, "s4", "cat"), (5L, "s5", null), (6L, "s6", "dan"),
+      (7L, "s6", null), (8L, null, null))
+      .map { case (u, ssn, name) => (u, Seq(u + 100), ssn, name) }
+      .toDF("_unique_id", "src_ids", "ssn", "name")
+    // canon_id is not the cluster minimum: {1, 5} is labeled 5, and two
+    // labels (6, 3) name records the map does not hold.
+    val em = Seq((1L, 5L, 0.8), (5L, 5L, 0.8), (2L, 6L, 0.7), (7L, 3L, 0.9))
+      .toDF("_unique_id", "canon_id", "cluster_score")
+    (eu, em)
+  }
+
+  test("apply's driver merge equals the folded merge passes for any " +
+      "entity map") {
+    import graft.cluster.ExactMatches
+    import graft.ops.RelationalOps
+    val (eu, em) = mergeFixture()
+    // The folded passes: ssn links dedupe ids 5~6 and 6~3, name 6~3.
+    val folded = mergeCfg.mergeExact.foldLeft(
+        RelationalOps.applyClusters(em, eu)
+          .join(eu.select("_unique_id", "ssn", "name"), "_unique_id")) {
+        (d, cols) => ExactMatches.merge(d, cols, "dedupe_id")
+      }
+      .select("dedupe_id", "_unique_id", "cluster_score", "src_ids")
+    val want = sortedRows(folded)
+    assert(sortedRows(folded.select("_unique_id", "dedupe_id")) ==
+      Seq("[1,3]", "[2,3]", "[3,3]", "[4,4]", "[5,3]", "[6,3]", "[7,3]",
+        "[8,8]"))
+    Seq(mergeCfg.ccEdgeCap, 0L).foreach { cap =>
+      val (mapped, um) =
+        DedupePipeline.apply(em, eu, eu, mergeCfg.copy(ccEdgeCap = cap))
+      assert(sortedRows(mapped) == want, s"cap $cap")
+      assert(um.count() == 8)
+    }
+  }
+
+  test("cc_edge_cap reaches the raw-grain merge passes") {
+    import spark.implicits._
+    val (eu, em) = mergeFixture()
+    // Source rows 101 and 102 (dedupe ids 5 and 6) share a city.
+    val entries = (1L to 8L).map(u => (u + 100, if (u <= 2) "x" else s"c$u"))
+      .toDF("entry_id", "city")
+    graft.pipeline.PhaseLog.drainNotes()
+    val (_, um) = DedupePipeline.apply(em, eu, entries,
+      mergeCfg.copy(mergeExact = Seq(Seq("city")), ccEdgeCap = 0L))
+    assert(graft.pipeline.PhaseLog.drainNotes()("cc_kernel.exact-merge-r0")
+      .startsWith("run-star"))
+    val ids = um.select("entry_id", "dedupe_id").as[(Long, Long)]
+      .collect().toMap
+    // Dedupe id 6 (records 2 and 6) merges into 5 wholesale.
+    assert(Seq(101L, 102L, 105L, 106L).map(ids) == Seq(5L, 5L, 5L, 5L))
+    assert(ids(107L) == 3L && ids(103L) == 3L)
+  }
+
   test("reproducibility: same seed, identical cluster assignment") {
     val e1 = FakePersons.population(spark, 150, seed = 7L)
     val e2 = FakePersons.population(spark, 150, seed = 7L)
