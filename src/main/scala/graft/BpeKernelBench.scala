@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Developer tool (not part of the driver contract): measure the BPE
   * merge-loop kernels against each other at a merge count big enough
@@ -16,17 +15,7 @@ object BpeKernelBench {
     val numMerges = args.headOption.map(_.toInt).getOrElse(64)
     val sfDir = if (args.length > 1) args(1)
       else sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", graft.functions.GraftExtensions.CONF)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     // A corpus with enough pair diversity to sustain `numMerges` merges:
     // the documents table's text column at minPairCount = 1.
     val docs = Tables.load(spark, sfDir, "documents")

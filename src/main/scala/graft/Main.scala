@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 import graft.config.DedupeConfig
 import graft.model.Settings
@@ -18,31 +17,38 @@ import graft.pipeline.DedupePipeline
   * wall-clock (ref cli.py:67).
   */
 object Main {
+  val Usage: String =
+    "usage: graft.Main --config <file> [--input <parquet>] [--output <dir>]"
+  private val Flags = Set("--config", "--input", "--output")
+
+  /** The flags as (name → value), `--` stripped. Anything but `--config`,
+    * `--input` and `--output`, each at most once and with a value, is
+    * refused with `Usage`, as is a missing `--config`.
+    */
+  def parseArgs(args: Seq[String]): Map[String, String] = {
+    def fail(why: String): Nothing =
+      throw new IllegalArgumentException(s"$why\n$Usage")
+    val pairs = args.grouped(2).map {
+      case Seq(k, v) if Flags(k) => k.stripPrefix("--") -> v
+      case Seq(k) if Flags(k) => fail(s"$k has no value")
+      case s => fail(s"unknown argument ${s.head}")
+    }.toSeq
+    val opts = pairs.toMap
+    if (opts.size != pairs.size) fail("a flag is given twice")
+    if (!opts.contains("config")) fail("missing --config")
+    opts
+  }
+
   def main(args: Array[String]): Unit = {
     val start = System.nanoTime()
-    val opts = args.sliding(2, 2).collect {
-      case Array(k, v) if k.startsWith("--") => k.stripPrefix("--") -> v
-    }.toMap
-    val configPath = opts.getOrElse("config",
-      sys.error("usage: graft.Main --config <file> [--input <parquet>] " +
-        "[--output <dir>]"))
-    val cfg = DedupeConfig.load(configPath)
+    val opts = parseArgs(args.toSeq)
+    val cfg = DedupeConfig.load(opts("config"))
     val input = opts.get("input").orElse(cfg.input)
       .getOrElse(sys.error("no --input flag and no `input` config key"))
     val output = opts.get("output").orElse(cfg.output)
       .getOrElse(sys.error("no --output flag and no `output` config key"))
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", graft.functions.GraftExtensions.CONF)
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
+    val spark = GraftSession()
     val entries = spark.read.parquet(input)
     val result = DedupePipeline.run(entries, cfg)
     println(s"model hash = ${Settings.modelHash(cfg, result.model)}")

@@ -168,17 +168,7 @@ object ScaleBench {
     // scaled.
     require(reps >= 1, s"SPARK_GRAFT_SCALE_REPS $reps must be >= 1")
     require(factor >= 2, s"SPARK_GRAFT_SCALE_FACTOR $factor must be >= 2")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", graft.functions.GraftExtensions.CONF)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     val loadAvg0 = Bench.readLoadAvg()
 
     // ---- synthesize the scaled corpus (idempotent per config) ----

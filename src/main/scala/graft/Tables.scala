@@ -14,7 +14,7 @@ object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val df = spark.read.parquet(s"$dir/$name.parquet")
     // events.ts is TIMESTAMP(NANOS) parquet, which Spark only reads via
-    // spark.sql.legacy.parquet.nanosAsLong (set in Verify/Bench); convert
+    // spark.sql.legacy.parquet.nanosAsLong (set by GraftSession); convert
     // the long nanos back to a micros timestamp. DuckDB truncates ns→µs
     // the same way, so oracle comparisons stay exact.
     val nanoFixed =

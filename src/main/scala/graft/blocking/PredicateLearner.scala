@@ -9,6 +9,7 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.config.DedupeConfig
 import graft.pipeline.PhaseLog
+import graft.pipeline.PhaseLog.timed
 
 /** Blocking-predicate learning (ref: SURVEY.md D4 — the reference's
   * `deduper.train(recall=config['recall'])` at pgdedupe/run.py:175-178
@@ -235,13 +236,6 @@ object PredicateLearner {
     val t = table(records, matchPairs, cands, cands.map(_.field).distinct,
       SampleSize)
     coverage(t, cands, t.nKeys.map(new Array[Boolean](_)))
-  }
-
-  private def timed[T](name: String)(f: => T): T = {
-    val t0 = System.nanoTime()
-    val r = f
-    PhaseLog.record(name, (System.nanoTime() - t0) / 1e9)
-    r
   }
 
   /** The candidates, each one's estimated comparison cost, and which

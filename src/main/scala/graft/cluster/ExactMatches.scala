@@ -10,10 +10,6 @@ import org.apache.spark.sql.functions._
   */
 object ExactMatches {
 
-  /** Edge list of cluster-id pairs to merge (ref exact_matches.py:76-83):
-    * for each exact-key group seen in >1 row, link every member's cluster
-    * to the group's minimum cluster id; `id1 > id2` orients edges.
-    */
   /** Working-column names staged into the caller's frame by
     * [[mergeEdges]]/[[merge]]; a real caller column with one of these
     * names (Spark resolves case-insensitively by default) would make
@@ -27,6 +23,10 @@ object ExactMatches {
           "ExactMatches' merge plan)")
     }
 
+  /** Edge list of cluster-id pairs to merge (ref exact_matches.py:76-83):
+    * for each exact-key group seen in >1 row, link every member's cluster
+    * to the group's minimum cluster id; `id1 > id2` orients edges.
+    */
   def mergeEdges(
       df: DataFrame,
       cols: Seq[String],

@@ -76,11 +76,12 @@ object DedupeConfig {
   }
 
   /** Port of `process_options` normalization (ref pgdedupe/run.py:13-59):
-    * required keys, defaults, merge_exact list-of-lists normalization.
+    * required keys, defaults (the case class's), merge_exact
+    * list-of-lists normalization.
     */
   def fromMap(m: Map[String, Object]): DedupeConfig = {
-    def str(k: String, dflt: => String): String =
-      m.get(k).map(_.toString).getOrElse(dflt)
+    def get[T](k: String, dflt: T)(parse: String => T): T =
+      m.get(k).fold(dflt)(v => parse(v.toString))
     def opt(k: String): Option[String] = m.get(k).map(_.toString)
     val required = Seq("key", "fields")
     val missing = required.filterNot(m.contains)
@@ -122,23 +123,23 @@ object DedupeConfig {
             .map(_.toString))
     }
 
-    DedupeConfig(
-      key = m("key").toString,
-      fields = fields,
+    val d = DedupeConfig(m("key").toString, fields)
+    d.copy(
       interactions = interactions,
-      filterCondition = str("filter_condition", "TRUE"),
+      filterCondition = get("filter_condition", d.filterCondition)(identity),
       mergeExact = mergeExact,
-      threshold = str("threshold", "0.5").toDouble,
-      recall = str("recall", "0.9").toDouble,
-      seed = str("seed", "0").toLong,
-      maxBlockSize = str("max_block_size", "1000").toInt,
-      maxComponentSize = str("max_component_size", "1000").toInt,
-      ccEdgeCap = str("cc_edge_cap", "1000000").toLong,
+      threshold = get("threshold", d.threshold)(_.toDouble),
+      recall = get("recall", d.recall)(_.toDouble),
+      seed = get("seed", d.seed)(_.toLong),
+      maxBlockSize = get("max_block_size", d.maxBlockSize)(_.toInt),
+      maxComponentSize =
+        get("max_component_size", d.maxComponentSize)(_.toInt),
+      ccEdgeCap = get("cc_edge_cap", d.ccEdgeCap)(_.toLong),
       maxEdgesPerComponent =
-        str("max_edges_per_component", "4000000").toInt,
+        get("max_edges_per_component", d.maxEdgesPerComponent)(_.toInt),
       settingsFile = opt("settings_file"),
       trainingFile = opt("training_file"),
-      useSavedModel = str("use_saved_model", "false").toBoolean,
+      useSavedModel = get("use_saved_model", d.useSavedModel)(_.toBoolean),
       input = opt("input"),
       output = opt("output")
     )

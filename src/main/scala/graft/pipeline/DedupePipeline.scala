@@ -80,17 +80,11 @@ object DedupePipeline {
         if (s.predicates.nonEmpty) s.predicates else defaultPredicates(cfg))
     } else exists(cfg.trainingFile) match {
       case Some(tf) =>
-        def sub[T](name: String)(f: => T): T = {
-          val t0 = System.nanoTime()
-          val r = f
-          PhaseLog.record(name, (System.nanoTime() - t0) / 1e9)
-          r
-        }
         val spark = entriesUnique.sparkSession
         val labeled = Training.readTrainingFile(spark, tf, cfg)
           .persist(StorageLevel.MEMORY_AND_DISK)
-        val model = sub("train_model")(Training.train(cfg, labeled))
-        val learned = sub("train_predicates")(
+        val model = PhaseLog.timed("train_model")(Training.train(cfg, labeled))
+        val learned = PhaseLog.timed("train_predicates")(
           PredicateLearner.learn(entriesUnique, labeled, cfg))
         val predicates =
           if (learned.nonEmpty) learned else defaultPredicates(cfg)
@@ -280,22 +274,16 @@ object DedupePipeline {
     * Each persisted frontier is materialized EAGERLY (a count) before its
     * consumers run: downstream fan-out then always reads the cache,
     * never races to recompute the same lineage — this was the q50
-    * run-to-run 2× variance. The phase wall-clocks go to `onPhase`
-    * (phase name, seconds); the `apply` phase stays lazy (the caller's
-    * action materializes it).
+    * run-to-run 2× variance. The phase wall-clocks go to `PhaseLog`
+    * (`preprocess`, `train`, `block_score`, `cluster`, `apply`); the
+    * `apply` phase stays lazy (the caller's action materializes it).
     */
   def run(
       entries: DataFrame,
       cfg: DedupeConfig,
       modelOpt: Option[LogisticModel] = None,
-      predicatesOpt: Option[Seq[Predicate]] = None,
-      onPhase: (String, Double) => Unit = (_, _) => ()): Result = {
-    def timed[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      onPhase(name, (System.nanoTime() - t0) / 1e9)
-      r
-    }
+      predicatesOpt: Option[Seq[Predicate]] = None): Result = {
+    import PhaseLog.timed
     val src = entries.persist(StorageLevel.MEMORY_AND_DISK)
     // Built INSIDE the timed block: preprocess's denseIds seam runs its
     // zipWithIndex jobs eagerly at DataFrame-build time, and timing only

@@ -215,11 +215,7 @@ object PipelineQueries {
       "q50_dedupe_pipeline",
       (s, dir) => {
         val cfg = trainedPersonConfig(s, dir)
-        val result = DedupePipeline.run(personEntries(s, dir), cfg,
-          onPhase = (name, secs) => {
-            graft.pipeline.PhaseLog.record(name, secs)
-            System.err.println(f"[q50-phase] $name%-12s $secs%8.2f s")
-          })
+        val result = DedupePipeline.run(personEntries(s, dir), cfg)
         // Surface the fitted model's reproducibility hash (ref
         // utils.py:20-28) in the bench notes — stable across reps.
         graft.pipeline.PhaseLog.note("q50_model_hash",

@@ -2,7 +2,7 @@ package graft
 
 /** Physical-plan assertions for the headline queries: the properties that
   * make these plans survive a 100× scale-up are checked here, not just
-  * eyeballed via PlanAudit — filter pushdown and column pruning at the
+  * eyeballed via PlanDump — filter pushdown and column pruning at the
   * parquet scan, broadcast joins for dimension tables, map-side partial
   * aggregation, whole-stage codegen on the hot paths, and NO cartesian
   * product anywhere except the two declared brute-force exactness oracles.

@@ -50,19 +50,5 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .config("spark.sql.extensions", graft.functions.GraftExtensions.CONF)
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.ts is TIMESTAMP(NANOS) parquet — same flag Verify/Bench
-      // set; Tables.load converts the long nanos back to a timestamp.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  lazy val session: SparkSession = GraftSession(cpus = 4, logLevel = "ERROR")
 }

@@ -1,6 +1,5 @@
 package graft.cluster
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.queries.PipelineQueries
@@ -24,14 +23,7 @@ import graft.model.LogisticModel
 object CcBench {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", graft.functions.GraftExtensions.CONF)
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     import spark.implicits._
 
     def time[T](name: String)(f: => T): T = {
@@ -88,16 +80,13 @@ object CcBench {
   * In local mode the executors share the driver's JVM, so the peak is
   * whole-JVM heap in use (live data plus uncollected garbage), sampled
   * every 5 ms, above the heap left after a full GC before the call.
+  * Runs on 4 cores, the setting `DedupeConfig.ccEdgeCap`'s heap figures
+  * were measured at.
   */
 object HacHeapBench {
   def main(args: Array[String]): Unit = {
     val cap = args.headOption.fold(1000000L)(_.toLong)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession(cpus = 4)
     val id = col("id")
     val scored = spark.range(1000000L)
       .select(id.as("l_id"), (id - id % 10 + (id + 1) % 10).as("r_id"),

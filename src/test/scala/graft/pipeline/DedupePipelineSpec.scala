@@ -64,6 +64,29 @@ class DedupePipelineSpec extends SparkSpec {
     assert(result.cached.forall(_.storageLevel == StorageLevel.NONE))
   }
 
+  test("run() records its five phase wall-clocks in PhaseLog") {
+    import graft.queries.PipelineQueries
+    PhaseLog.drain()
+    val result = DedupePipeline.run(
+      PipelineQueries.personEntries(spark, sf0001),
+      PipelineQueries.personConfig)
+    result.release()
+    assert(Set("preprocess", "train", "block_score", "cluster", "apply")
+      .subsetOf(PhaseLog.drain().keySet))
+  }
+
+  test("a config with only key and fields loads the case-class defaults") {
+    val loaded = DedupeConfig.fromYaml(
+      """key: entry_id
+        |fields:
+        |  - field: first_name
+        |  - field: ssn
+        |    type: Exact
+        |""".stripMargin)
+    assert(loaded == DedupeConfig("entry_id",
+      Seq(FieldSpec("first_name"), FieldSpec("ssn", "Exact"))))
+  }
+
   private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
 
