@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
@@ -70,7 +71,7 @@ object RelationalOps {
   /** Singleton-block elimination + dense block ids (A2, ref
     * pgdedupe/run.py:265-275): block keys covering ≥2 records get a dense
     * `block_id`; singleton blocks admit no comparisons. Ids via denseIds
-    * (partition-safe), ordered by block_key.
+    * (partition-safe), ordered by block_key. Pairs read [[kolbBlocks]].
     */
   def pluralKeys(blockingMap: DataFrame, maxBlockSize: Long = Long.MaxValue): DataFrame = {
     val counts = blockingMap.groupBy("block_key").count()
@@ -80,52 +81,37 @@ object RelationalOps {
       .select("block_key", "block_id")
   }
 
-  /** blocking_map ⋈ plural_key (J1, ref pgdedupe/run.py:282-285). */
-  def pluralBlocks(blockingMap: DataFrame, pluralKey: DataFrame): DataFrame =
-    blockingMap.join(pluralKey, "block_key").select("block_id", "_unique_id")
-
-  /** Sorted covered-block list per record (A3, ref pgdedupe/run.py:297-303,
-    * Kolb et al. redundant-free comparison scheme).
+  /** Kolb's redundant-free blocking frame (A2 + A3, ref
+    * pgdedupe/run.py:265-303) as `(block_id, _unique_id, block_ids)`: the
+    * rows of each non-null block key covering 2..`maxBlockSize` records,
+    * `block_id` being the key itself and `block_ids` the record's sorted
+    * plural keys. The reference numbers its blocks only to compare them;
+    * the keys compare in the same order, so building fires no Spark job.
     */
-  def coveredBlocks(pluralBlock: DataFrame): DataFrame =
-    pluralBlock.groupBy("_unique_id")
-      .agg(sort_array(collect_list("block_id")).as("sorted_ids"))
-
-  /** smaller_coverage (J2 + P5/P6, ref pgdedupe/run.py:314-319): per
-    * (record, covering block), the list of this record's block ids
-    * strictly smaller than the current block. `array_position` replaces
-    * the reference's custom `idx` SQL function (run.py:81-89).
-    */
-  def smallerCoverage(pluralBlock: DataFrame, covered: DataFrame): DataFrame =
-    pluralBlock.join(covered, "_unique_id")
-      .select(
-        col("_unique_id"),
-        col("block_id"),
-        slice(
-          col("sorted_ids"),
-          lit(1),
-          (array_position(col("sorted_ids"), col("block_id")) - 1).cast("int")
-        ).as("smaller_ids"))
+  def kolbBlocks(blockingMap: DataFrame, maxBlockSize: Long): DataFrame = {
+    val n = count(lit(1)).over(Window.partitionBy("block_key"))
+    blockingMap.where(col("block_key").isNotNull)
+      .select(col("block_key"), col("_unique_id"), n.as("n"))
+      .where(col("n") > 1 && col("n") <= maxBlockSize)
+      .select(col("block_key").as("block_id"), col("_unique_id"),
+        sort_array(collect_list("block_key")
+          .over(Window.partitionBy("_unique_id"))).as("block_ids"))
+  }
 
   /** Redundant-free within-block pair generation (J8 + D6, ref
-    * pgdedupe/run.py:293-319 + candidates_gen at :325-359): self-join on
-    * block_id, keep ordered pairs, and drop any pair whose smaller_ids
-    * intersect — that pair is already produced by a common smaller block.
-    * Faithful Kolb: no global distinct over the pair set needed, so the
-    * only shuffle is the block_id join.
+    * pgdedupe/run.py:293-319 + candidates_gen at :325-359) over
+    * [[kolbBlocks]]: self-join on block_id, keep ordered pairs, and emit
+    * each pair only in the smallest block key the two records share —
+    * every other common block would produce it again. No global
+    * distinct over the pair set, so the only shuffle is the join.
     */
-  def kolbPairs(smallerCoverage: DataFrame): DataFrame = {
-    val l = smallerCoverage.select(
-      col("block_id"),
-      col("_unique_id").as("l_id"),
-      col("smaller_ids").as("l_smaller"))
-    val r = smallerCoverage.select(
-      col("block_id"),
-      col("_unique_id").as("r_id"),
-      col("smaller_ids").as("r_smaller"))
-    l.join(r, "block_id")
+  def kolbPairs(kolbBlocks: DataFrame): DataFrame = {
+    def side(id: String, ids: String) = kolbBlocks.select(col("block_id"),
+      col("_unique_id").as(id), col("block_ids").as(ids))
+    side("l_id", "l_ids").join(side("r_id", "r_ids"), "block_id")
       .where(col("l_id") < col("r_id"))
-      .where(size(array_intersect(col("l_smaller"), col("r_smaller"))) === 0)
+      .where(array_min(array_intersect(col("l_ids"), col("r_ids"))) ===
+        col("block_id"))
       .select("l_id", "r_id")
   }
 

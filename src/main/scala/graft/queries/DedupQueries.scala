@@ -194,9 +194,7 @@ object DedupQueries {
           Tables.load(s, dir, "documents")
             .withColumnRenamed("doc_id", "_unique_id"),
           "text", MaxDf)
-        val pk = RelationalOps.pluralKeys(bm, MaxDf)
-        val pb = RelationalOps.pluralBlocks(bm, pk)
-        RelationalOps.distinctPairs(pb)
+        RelationalOps.distinctPairs(RelationalOps.kolbBlocks(bm, MaxDf))
       },
       Some(s"""WITH $keyedSql, $admissibleSql
         SELECT DISTINCT a._unique_id AS l_id, b._unique_id AS r_id
@@ -213,9 +211,8 @@ object DedupQueries {
           .withColumnRenamed("doc_id", "_unique_id")
         val bm = graft.blocking.Blocker.tokenBlockingWithDfCap(
           docs, "text", MaxDf)
-        val pk = RelationalOps.pluralKeys(bm, MaxDf)
-        val pairs = RelationalOps.distinctPairs(
-          RelationalOps.pluralBlocks(bm, pk))
+        val pairs =
+          RelationalOps.distinctPairs(RelationalOps.kolbBlocks(bm, MaxDf))
         val meta = docs.select(col("_unique_id"), col("n_chars"))
         val withF = pairs
           .join(meta.select(col("_unique_id").as("l_id"),

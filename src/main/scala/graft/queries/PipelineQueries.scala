@@ -161,11 +161,10 @@ object PipelineQueries {
 
   val defs: Seq[QueryDef] = Seq(
 
-    // The faithful Kolb redundant-free comparison chain (D6, ref
-    // pgdedupe/run.py:293-319): plural_key → plural_block →
-    // covered_blocks → smaller_coverage → intersection-filtered pairs.
-    // Produces each candidate pair exactly once, from its smallest
-    // common block — oracle-checked end to end.
+    // Kolb's redundant-free comparison scheme (D6, ref run.py:293-319):
+    // each candidate pair once, from its smallest common block key —
+    // checked end to end against the reference's plural_key →
+    // covered_blocks → smaller_coverage chain in the oracle.
     QueryDef(
       "q39_kolb_pairs",
       (s, dir) => {
@@ -173,11 +172,8 @@ object PipelineQueries {
           Tables.load(s, dir, "documents")
             .withColumnRenamed("doc_id", "_unique_id"),
           "text", DedupQueries.MaxDf)
-        val pk = RelationalOps.pluralKeys(bm, DedupQueries.MaxDf)
-        val pb = RelationalOps.pluralBlocks(bm, pk)
-        val cb = RelationalOps.coveredBlocks(pb)
-        val sc = RelationalOps.smallerCoverage(pb, cb)
-        RelationalOps.kolbPairs(sc)
+        RelationalOps.kolbPairs(
+          RelationalOps.kolbBlocks(bm, DedupQueries.MaxDf))
       },
       Some("""WITH keyed AS (
           SELECT DISTINCT 'token:text:' || tok AS block_key,

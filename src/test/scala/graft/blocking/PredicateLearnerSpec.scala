@@ -18,7 +18,7 @@ class PredicateLearnerSpec extends SparkSpec {
     import spark.implicits._
     // Every record shares the first 2 chars ("zz"), so first2:name
     // produces ONE 300-record block — far over max_block_size=100, which
-    // pluralKeys drops at blocking time. Its surviving cost is zero and
+    // kolbBlocks drops at blocking time. Its surviving cost is zero and
     // its raw key overlap covers every match, so an uncapped learner
     // picks it as a free full-coverage predicate and the pipeline then
     // generates ZERO candidate pairs (the sf0.01 flagship regression).

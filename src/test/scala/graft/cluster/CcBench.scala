@@ -38,18 +38,18 @@ object CcBench {
     val eu = DedupePipeline.preprocess(
       PipelineQueries.personEntries(spark, dir), cfg)
       .persist()
-    // block() persists bm/sc/pb — release them once `above` is
-    // materialized so the CC timings below don't run against pinned
-    // pipeline frontiers.
-    val (bm, sc, pb) = DedupePipeline.block(eu, cfg,
+    // block() persists the Kolb frame kb — release it once `above` is
+    // materialized so the CC timings below don't run against a pinned
+    // pipeline frontier.
+    val (_, kb, _) = DedupePipeline.block(eu, cfg,
       DedupePipeline.defaultPredicates(cfg))
-    val (_, scored0) = DedupePipeline.scorePairs(eu, sc, cfg,
+    val (_, scored0) = DedupePipeline.scorePairs(eu, kb, cfg,
       LogisticModel.default(cfg))
     val above = scored0.select("l_id", "r_id", "score")
       .where(col("score") >= cfg.threshold)
       .persist()
     println(s"[ccbench] person edges: ${above.count()}")
-    Seq(bm, sc, pb).foreach(_.unpersist(false))
+    kb.unpersist(false)
     def labels(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val a = time("person union-find")(

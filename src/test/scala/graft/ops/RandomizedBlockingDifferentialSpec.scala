@@ -14,16 +14,17 @@ import graft.SparkSpec
   * and huge ids) three INDEPENDENT derivations of the candidate-pair
   * set must agree exactly:
   *
-  *  1. `kolbPairs` over the full pluralKeys → pluralBlocks →
-  *     coveredBlocks → smallerCoverage chain (no global distinct — the
+  *  1. `kolbPairs` over `kolbBlocks` (each pair emitted only in the
+  *     smallest block key its records share; no global distinct — the
   *     scheme's point is each pair emitted by exactly ONE block);
-  *  2. `distinctPairs` (the simple all-pairs + distinct form the
-  *     scaladoc declares semantically equivalent);
+  *  2. `distinctPairs` (the simple all-pairs + distinct form) over
+  *     blocking map ⋈ `pluralKeys`, the reference's dense-id tables;
   *  3. a driver-side brute force from the definition (all a < b sharing
-  *     an admissible block).
+  *     an admissible, non-null block key).
   *
-  * The Kolb chain's redundant-free claim is asserted structurally too:
-  * the UN-deduplicated kolbPairs output must already be duplicate-free.
+  * The Kolb scheme's redundant-free claim is asserted structurally too:
+  * the UN-deduplicated kolbPairs output must already be duplicate-free,
+  * and must not move when the blocking map is repartitioned.
   */
 class RandomizedBlockingDifferentialSpec extends SparkSpec {
   import spark.implicits._
@@ -35,9 +36,11 @@ class RandomizedBlockingDifferentialSpec extends SparkSpec {
     * Key population: one hot key OVER the cap (must be dropped), one
     * exactly AT the cap, several mid-size, many exactly-2, many
     * singletons, unicode/empty/long keys; ids spread negative→huge,
-    * each record covered by several keys so smaller_ids are non-trivial.
+    * each record covered by several keys so the smallest common key is
+    * non-trivial. With `nullKeys`, null keys covering several records
+    * too (blocking drops them, as the reference's inner join did).
     */
-  private def blockingMap(seed: Long): DataFrame = {
+  private def blockingMap(seed: Long, nullKeys: Boolean = false): DataFrame = {
     val r = new scala.util.Random(seed)
     val ids = (0 until 400).map(i => i.toLong * 1000003L - 200000000L)
     val rows = scala.collection.mutable.LinkedHashSet.empty[(String, Long)]
@@ -58,6 +61,7 @@ class RandomizedBlockingDifferentialSpec extends SparkSpec {
     (0 until 50).foreach { i =>
       rows += ((s"single:$i", ids(r.nextInt(ids.size))))
     }
+    if (nullKeys) sample(6).foreach(id => rows += ((null, id)))
     rows.toSeq.toDF("block_key", "_unique_id")
   }
 
@@ -68,16 +72,17 @@ class RandomizedBlockingDifferentialSpec extends SparkSpec {
       "random blocking maps, and the Kolb output is already " +
       "duplicate-free (3 seeds)") {
     Seq(3L, 59L, 8080L).foreach { seed =>
-      val bm = blockingMap(seed)
-      val pk = RelationalOps.pluralKeys(bm, Cap)
-      val pb = RelationalOps.pluralBlocks(bm, pk)
-      val covered = RelationalOps.coveredBlocks(pb)
-      val sc = RelationalOps.smallerCoverage(pb, covered)
-      val kolbRaw = pairs(RelationalOps.kolbPairs(sc))
+      val bm = blockingMap(seed, nullKeys = true)
+      def kolb(m: DataFrame) =
+        pairs(RelationalOps.kolbPairs(RelationalOps.kolbBlocks(m, Cap)))
+      val kolbRaw = kolb(bm)
+      val pb = bm.join(RelationalOps.pluralKeys(bm, Cap), "block_key")
+        .select("block_id", "_unique_id")
       val simple = pairs(RelationalOps.distinctPairs(pb)).sorted
       // Driver brute force from the definition.
       val byKey = bm.collect()
         .map(r => (r.getString(0), r.getLong(1)))
+        .filter(_._1 != null)
         .groupBy(_._1).values
         .map(_.map(_._2).distinct.sorted)
         .filter(m => m.length >= 2 && m.length <= Cap)
@@ -95,6 +100,10 @@ class RandomizedBlockingDifferentialSpec extends SparkSpec {
         s"seed $seed: Spark pair set (${simple.size}) != driver brute " +
           s"force (${brute.size}) — the cap-drop of the over-cap hot " +
           "key must agree on both sides")
+      assert(kolb(bm.repartition(13)).sorted == kolbRaw.sorted,
+        s"seed $seed: Kolb pairs moved under repartition(13)")
+      assert(kolb(bm.coalesce(1)).sorted == kolbRaw.sorted,
+        s"seed $seed: Kolb pairs moved under coalesce(1)")
     }
   }
 

@@ -51,12 +51,11 @@ class RelationalOpsSpec extends SparkSpec {
     val eu = RelationalOps.exactDedup(entries, Seq("name", "city"), "id")
     val bm = Blocker.blockingMap(eu,
       Seq(WholeField("name"), FirstChars("name", 1)))
-    val pk = RelationalOps.pluralKeys(bm)
-    val pb = RelationalOps.pluralBlocks(bm, pk)
-    val cb = RelationalOps.coveredBlocks(pb)
-    val sc = RelationalOps.smallerCoverage(pb, cb)
-    val kolb = RelationalOps.kolbPairs(sc).collect()
+    val kolb = RelationalOps.kolbPairs(
+        RelationalOps.kolbBlocks(bm, Long.MaxValue)).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val pb = bm.join(RelationalOps.pluralKeys(bm), "block_key")
+      .select("block_id", "_unique_id")
     val dist = RelationalOps.distinctPairs(pb).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(kolb.toSet == dist)

@@ -48,10 +48,10 @@ class DedupePipelineSpec extends SparkSpec {
     import org.apache.spark.storage.StorageLevel
     val entries = FakePersons.population(spark, 100, seed = 31L)
     val result = DedupePipeline.run(entries, cfg)
-    // run() pins 8 frontiers (src, eu, bm, pb, sc, scored, em, um) and
-    // every handle must be tracked — a persist() outside Result.cached
-    // is a session-lifetime leak (the round-7 TextDedup defect class).
-    assert(result.cached.size == 8)
+    // run() pins 6 frontiers (src, eu, kb, scored, em, um) and every
+    // handle must be tracked — a persist() outside Result.cached is a
+    // session-lifetime leak (the round-7 TextDedup defect class).
+    assert(result.cached.size == 6)
     assert(result.cached.forall(_.storageLevel != StorageLevel.NONE),
       "run() should have pinned its frontiers")
     result.release(result.uniqueMap)
@@ -62,6 +62,15 @@ class DedupePipelineSpec extends SparkSpec {
       "release(keep) must not unpersist the kept frame")
     result.release()
     assert(result.cached.forall(_.storageLevel == StorageLevel.NONE))
+  }
+
+  test("building block()'s frames fires no Spark job") {
+    val eu = DedupePipeline.preprocess(
+      FakePersons.population(spark, 100, seed = 31L), cfg)
+    val ((_, kb, _), jobs) = withJobs(
+      DedupePipeline.block(eu, cfg, DedupePipeline.defaultPredicates(cfg)))
+    kb.unpersist(false)
+    assert(jobs.isEmpty, s"block() fired jobs while building: $jobs")
   }
 
   test("run() records its five phase wall-clocks in PhaseLog") {
