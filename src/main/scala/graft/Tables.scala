@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType,
+  TimestampType}
 
 /** Harness table loader (TESTDATA.md): one parquet file per table under a
   * scale-factor directory.
@@ -12,7 +13,8 @@ object Tables {
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    val df = spark.read.schema(footerSchema(spark, path)).parquet(path)
     // events.ts is TIMESTAMP(NANOS) parquet, which Spark only reads via
     // spark.sql.legacy.parquet.nanosAsLong (set by GraftSession); convert
     // the long nanos back to a micros timestamp. DuckDB truncates ns→µs
@@ -23,6 +25,29 @@ object Tables {
           timestamp_micros((col("ts") / 1000L).cast("long")))
       else df
     normalizeNtz(nanoFixed)
+  }
+
+  /** The schema `spark.read.parquet(path)` infers, read from the
+    * footer on the driver (of the first data file, for a Spark-written
+    * directory) instead of by inference's Spark job, so building a
+    * query's frame fires no job. Inference converts each footer with
+    * this same call, under the session's conf (`nanosAsLong` included).
+    */
+  private[graft] def footerSchema(spark: SparkSession,
+      path: String): StructType = {
+    import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+    import org.apache.parquet.hadoop.util.{HadoopInputFile, HiddenFileFilter}
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetToSparkSchemaConverter}
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new org.apache.hadoop.fs.Path(path)
+    // A file lists as itself; hidden names (_SUCCESS, .crc) are skipped.
+    val file = root.getFileSystem(conf)
+      .listStatus(root, HiddenFileFilter.INSTANCE).map(_.getPath).min
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    val footer = try new Footer(file, reader.getFooter) finally reader.close()
+    ParquetFileFormat.readSchemaFromFooter(footer,
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
   }
 
   /** The harness regenerates fixtures with whatever timestamp encoding
@@ -38,7 +63,7 @@ object Tables {
     * hashes are unchanged (both fixture eras are oracle-green).
     */
   private def normalizeNtz(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
+    import org.apache.spark.sql.types.{ArrayType, DataType, MapType}
     def rewrite(dt: DataType): DataType = dt match {
       case TimestampNTZType => TimestampType
       case s: StructType =>
@@ -55,13 +80,24 @@ object Tables {
     }
   }
 
+  /** The reader's default `nullValue`: a string NO real field can be
+    * (a lone U+0000) so a quoted `""` survives as an empty string
+    * instead of folding into null (see [[loadCsv]]'s fidelity notes). The
+    * one collision left: an EXTERNAL file whose field legitimately
+    * contains the single-NUL string reads as null — an external-ingest
+    * caller whose data could hold that (or whose producer writes a
+    * different null token, e.g. `\\N` or `NULL`) overrides
+    * [[loadCsv]]'s `nullValue` with the producer's actual token.
+    */
+  val CsvNullSentinel: String = "\u0000"
+
   /** CSV bulk ingest (S3 — the Spark stand-in for the reference's COPY
     * surface, pgdedupe/run.py:234-245): header CSV with an EXPLICIT
     * schema. Schema inference would scan the data twice and guess types
     * per-run — never acceptable at 100 TB, so there is deliberately no
     * inferring overload.
-    */
-  /** Fidelity options (both directions): Spark's CSV defaults silently
+    *
+    * Fidelity options (both directions): Spark's CSV defaults silently
     * lose two classes of string data, found by the randomized
     * source/sink differential —
     *
@@ -87,19 +123,8 @@ object Tables {
     * newline-bearing corpora must either opt in or arrive in a
     * structured format (parquet/ORC/JSON-lines) instead.
     */
-  /** The reader's default `nullValue`: a string NO real field can be
-    * (a lone U+0000) so a quoted `""` survives as an empty string
-    * instead of folding into null (see the fidelity notes above). The
-    * one collision left: an EXTERNAL file whose field legitimately
-    * contains the single-NUL string reads as null — an external-ingest
-    * caller whose data could hold that (or whose producer writes a
-    * different null token, e.g. `\\N` or `NULL`) overrides
-    * [[loadCsv]]'s `nullValue` with the producer's actual token.
-    */
-  val CsvNullSentinel: String = "\u0000"
-
   def loadCsv(spark: SparkSession, path: String,
-      schema: org.apache.spark.sql.types.StructType,
+      schema: StructType,
       multiLine: Boolean = false,
       nullValue: String = CsvNullSentinel): DataFrame =
     spark.read
@@ -129,7 +154,7 @@ object Tables {
     * instead of silently casting).
     */
   def loadOrc(spark: SparkSession, path: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame =
+      schema: StructType): DataFrame =
     spark.read.schema(schema).orc(path)
 
   /** ORC sink (S4 alternate): columnar, compressed, type-lossless —
@@ -146,7 +171,7 @@ object Tables {
     * sparse fields.
     */
   def loadJson(spark: SparkSession, path: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame =
+      schema: StructType): DataFrame =
     spark.read.schema(schema).json(path)
 
   /** JSON-lines sink (S4 alternate): one JSON object per line, splittable

@@ -238,35 +238,6 @@ object Knn {
     }
   }
 
-  /** LSH-bucketed top-k: signatures over `numPlanes` hyperplanes,
-    * `numTables` independent tables (banded planes); candidates = rows
-    * sharing a (table, signature) bucket; exact cosine re-rank within
-    * candidates.
-    *
-    * Cost bound: with `numPlanes = 0` (the default) the plane count is
-    * derived per-corpus as ceil(log₂(n / targetBucketSize)) — see
-    * [[derivePlanes]] — so expected bucket population stays ≈
-    * `targetBucketSize` and per-table candidate generation stays ≈
-    * n · targetBucketSize, linear in n. A FIXED plane count is only safe
-    * while n ≲ targetBucket · 2^planes; past that the bucket self-join
-    * tends toward (n / 2^planes)², which is why the default derives.
-    *
-    * Recall: per-plane sign agreement p = 1 − θ/π, per-table collision
-    * p^planes, overall 1 − (1 − p^planes)^tables. More planes (bigger
-    * corpus) therefore needs more tables for the same recall at a given
-    * similarity — recall-critical callers at a known scale should pin
-    * BOTH explicitly, as q45 does (4 planes × 16 tables on 500 vectors:
-    * per-table collision at cosine ≈ 0.3 is p⁴ ≈ 0.14, 16 tables → ≈
-    * 0.95 recall; measured 0.967 on the sf0.01 embeddings, gated ≥ 0.9
-    * in KnnSpec). Near-dup workloads (cosine ≥ 0.9) collide almost
-    * surely per table, so table count matters far less there.
-    *
-    * The bucket join carries (table, sig, id) only — 24 bytes per row —
-    * and the distinct runs on bare id pairs; full vectors are re-attached
-    * afterwards for the exact re-rank. At 100 TB that means the wide
-    * embedding payload crosses the wire once per surviving candidate,
-    * not once per bucket collision.
-    */
   /** All-table signatures in ONE primitive-loop UDF over the closure-
     * captured plane matrix: a literal expanded-sum expression tree
     * (numTables × numPlanes × dim ≈ 16k nodes) costs tens of seconds in
@@ -337,6 +308,35 @@ object Knn {
   private def cosineDefined(c: Column): Column =
     c.isNotNull && !isnan(c)
 
+  /** LSH-bucketed top-k: signatures over `numPlanes` hyperplanes,
+    * `numTables` independent tables (banded planes); candidates = rows
+    * sharing a (table, signature) bucket; exact cosine re-rank within
+    * candidates.
+    *
+    * Cost bound: with `numPlanes = 0` (the default) the plane count is
+    * derived per-corpus as ceil(log₂(n / targetBucketSize)) — see
+    * [[derivePlanes]] — so expected bucket population stays ≈
+    * `targetBucketSize` and per-table candidate generation stays ≈
+    * n · targetBucketSize, linear in n. A FIXED plane count is only safe
+    * while n ≲ targetBucket · 2^planes; past that the bucket self-join
+    * tends toward (n / 2^planes)², which is why the default derives.
+    *
+    * Recall: per-plane sign agreement p = 1 − θ/π, per-table collision
+    * p^planes, overall 1 − (1 − p^planes)^tables. More planes (bigger
+    * corpus) therefore needs more tables for the same recall at a given
+    * similarity — recall-critical callers at a known scale should pin
+    * BOTH explicitly, as q45 does (4 planes × 16 tables on 500 vectors:
+    * per-table collision at cosine ≈ 0.3 is p⁴ ≈ 0.14, 16 tables → ≈
+    * 0.95 recall; measured 0.967 on the sf0.01 embeddings, gated ≥ 0.9
+    * in KnnSpec). Near-dup workloads (cosine ≥ 0.9) collide almost
+    * surely per table, so table count matters far less there.
+    *
+    * The bucket join carries (table, sig, id) only — 24 bytes per row —
+    * and the distinct runs on bare id pairs; full vectors are re-attached
+    * afterwards for the exact re-rank. At 100 TB that means the wide
+    * embedding payload crosses the wire once per surviving candidate,
+    * not once per bucket collision.
+    */
   def lshTopK(
       corpus: DataFrame,
       queries: DataFrame,

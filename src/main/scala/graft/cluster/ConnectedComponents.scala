@@ -19,25 +19,20 @@ object ConnectedComponents {
   /** Size-adaptive kernel selection. The distributed kernels pay
     * O(log² n) rounds of shuffle + eager localCheckpoint as FIXED cost
     * regardless of graph size — ≈10 s on a 500-vertex graph at 32
-    * shuffle partitions — so a graph that fits comfortably on the driver
-    * (≤ `smallEdgeCap` edges) is solved with a local min-union
-    * union-find instead: one collect, zero rounds, identical labels
-    * (component = min reachable id, same as `runStar`).
-    * Driver heap at the default 1M-edge cap: see `DedupeConfig.ccEdgeCap`
-    * (measured for the whole clustering step, a superset of this one);
-    * scale it linearly before raising the cap.
-    * Beyond the cap it is `runStar`. The reference walks edges with a
-    * driver DFS UNCONDITIONALLY (pgdedupe/exact_matches.py:9-50); this
-    * keeps that fast path for reference-scale graphs without
-    * inheriting its memory ceiling — the cap is explicit, logged, and
-    * the fallback is the distributed kernel, never an error.
+    * shuffle partitions — so a graph of ≤ `smallEdgeCap` edges is solved
+    * with a min-union union-find on the driver instead: one bounded read
+    * ([[graft.ops.collectAtMost]]), zero rounds, identical labels
+    * (component = min reachable id, as in `runStar`). Driver heap at the
+    * default 1M-edge cap: see `DedupeConfig.ccEdgeCap`; scale it
+    * linearly before raising the cap. Beyond the cap it is
+    * `runStar`: the reference's unconditional driver DFS
+    * (pgdedupe/exact_matches.py:9-50) without its memory ceiling — the
+    * cap is explicit, logged, and the fallback is never an error.
     *
-    * Null endpoints: an edge with a null side cannot link anything —
-    * its NON-null endpoint is kept as a singleton vertex (unless some
-    * real edge links it). Both kernels see only the cleaned edges, so
-    * the labels are identical on either side of the cap (previously
-    * the driver kernel NPE'd on a null while runStar silently DROPPED
-    * the vertex — same input, different failure by edge count).
+    * Null endpoints: an edge with one null side links nothing; it becomes
+    * a self-loop on its other endpoint, a singleton vertex (unless a real
+    * edge links it) in both kernels, and counts toward the cap and the
+    * note. A fully null edge is dropped.
     */
   def auto(
       edges: DataFrame,
@@ -45,76 +40,46 @@ object ConnectedComponents {
       dstCol: String = "r_id",
       smallEdgeCap: Long = 1000000L,
       label: String = "cc"): DataFrame = {
-    // The null split, the size probe, and the consumer (collect or
-    // runStar's eager first checkpoint) are several actions over a
-    // possibly expensive lineage — pin it across the branch. All
-    // branches materialize eagerly, so the handle is released before
-    // returning (no storage leak).
-    val rawProj = edges
-      .select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      // ONE probe job for BOTH the size branch and the null-edge check
-      // (separate eager nullSideIds + count actions paid two full
-      // materializations' scheduling for one answer). The agg
-      // materializes the persist; everything after reads the cache.
-      val probe = rawProj.agg(
-        count(when(col("src").isNotNull && col("dst").isNotNull,
-          lit(1))).as("n"),
-        count(lit(1)).as("total")).head()
-      val n = probe.getLong(0)
-      val hasNullEdges = probe.getLong(1) > n
-      // Eager (tiny, typically ABSENT — computed only when a null-sided
-      // edge exists): the returned frame must not keep a live lineage
-      // on the caller's edges after rawProj unpersists.
-      val nullSideIds = if (!hasNullEdges) None else Some(rawProj
-        .where(col("src").isNull || col("dst").isNull)
-        .select(explode(array(col("src"), col("dst"))).as("id"))
-        .where(col("id").isNotNull)
-        .distinct()
-        .localCheckpoint(true))
-      val proj = rawProj
-        .where(col("src").isNotNull && col("dst").isNotNull)
-      // Keyed per call site: one pipeline run calls auto from several
-      // stages (HAC clustering, exact-match merges) and a single shared
-      // key would surface only the last — ambiguous in the bench notes.
-      graft.pipeline.PhaseLog.note(s"cc_kernel.$label",
-        (if (n > smallEdgeCap) "run-star" else "driver-union-find") +
-          s" ($n edges, cap $smallEdgeCap)")
-      val out = if (n > smallEdgeCap) runStar(proj, "src", "dst")
-      else {
-        org.slf4j.LoggerFactory.getLogger(getClass).info(
-          s"CC: $n edges <= $smallEdgeCap — driver union-find " +
-            "(zero shuffle rounds); distributed runStar above the cap")
-        val spark = edges.sparkSession
-        import spark.implicits._
-        // Typed collect: Tuple2[Long, Long] is @specialized, so the
-        // collected array holds primitives, not GenericRow objects.
-        // Zero edges → zero collect jobs (q50's exact-merge passes
-        // routinely see an empty edge set).
-        val raw = if (n == 0L) Array.empty[(Long, Long)]
-          else proj.as[(Long, Long)].collect()
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val (src, dst) = (col(srcCol).cast("long"), col(dstCol).cast("long"))
+    val proj = edges
+      .select(coalesce(src, dst).as("src"), coalesce(dst, src).as("dst"))
+      .where(col("src").isNotNull)
+    // Tuple2[Long, Long] is @specialized: the array holds primitives.
+    graft.ops.collectAtMost(proj.as[(Long, Long)], smallEdgeCap) match {
+      case Some(raw) =>
+        note(label, "driver-union-find", raw.length, smallEdgeCap)
         val comp = components(raw.iterator)
         val ids = comp.keys.toArray.sorted
         // LocalRelation output: the optimizer can broadcast it into the
         // consuming join, which is exactly right at this size.
         spark.createDataset(ids.toSeq.map(id => (id, comp(id))))
           .toDF("id", "component")
-      }
-      // No null-sided edges (the common case): the output is `out`
-      // itself — no union/anti-join cruft in every consumer's plan.
-      nullSideIds.fold(out)(ns =>
-        out.unionByName(
-          ns.join(out.select("id"), Seq("id"), "left_anti")
-            .select(col("id"), col("id").as("component"))))
-    } finally {
-      // Not conditional on success: runStar's non-convergence throw
-      // must not leave the projection pinned for the session lifetime.
-      rawProj.unpersist(false)
-      ()
+      case None =>
+        // The note's count and runStar's two eager checkpoints all read
+        // the edges; runStar's output reads only its checkpoints, so the
+        // pin is released before returning, on a throw too.
+        val pinned = proj.persist(StorageLevel.MEMORY_AND_DISK)
+        try {
+          note(label, "run-star", pinned.count(), smallEdgeCap)
+          runStar(pinned, "src", "dst")
+        } finally {
+          pinned.unpersist(false)
+          ()
+        }
     }
   }
+
+  /** The `cc_kernel.<label>` note, `<kernel> (<n> edges, cap <cap>)`.
+    * Keyed per call site: one pipeline run clusters in several stages
+    * (HAC, exact-match merges), and a shared key would keep only the
+    * last. linkbench parses `(<n> edges` out of `hac-cluster`.
+    */
+  private[graft] def note(label: String, kernel: String, n: Long,
+      cap: Long): Unit =
+    graft.pipeline.PhaseLog.note(s"cc_kernel.$label",
+      s"$kernel ($n edges, cap $cap)")
 
   /** Min-union union-find on the driver: maps every endpoint of `edges`
     * to the smallest id of its connected component, the label `runStar`
@@ -161,15 +126,11 @@ object ConnectedComponents {
       srcCol: String = "l_id",
       dstCol: String = "r_id",
       maxIter: Int = 50): DataFrame = {
-    // Vertices whose ONLY edges are self-loops still belong in the
-    // output as their own singleton component — the driver union-find
-    // kernel emits (x, x) for them, and `auto`'s contract is identical
-    // labels on either side of the size cap. Dropping the (x, x) edge
-    // below would silently delete the vertex. Typically empty/tiny.
-    // Eagerly checkpointed: the returned frame must not keep a live
-    // lineage on the caller's edge frame (`auto` unpersists it right
-    // after this returns — every downstream action would rescan the
-    // raw edge lineage otherwise).
+    // Vertices whose ONLY edges are self-loops (`auto` turns a null-
+    // sided edge into one) stay as singletons, as the driver union-find
+    // keeps them; the (x, x) edge itself is dropped below. Eagerly
+    // checkpointed: the returned frame must not keep a live lineage on
+    // the caller's edges, which `auto` unpersists right after this.
     val selfLoopIds = edges
       .where(col(srcCol).cast("long") === col(dstCol).cast("long"))
       .select(col(srcCol).cast("long").as("id"))

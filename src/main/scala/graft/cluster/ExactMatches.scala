@@ -54,10 +54,7 @@ object ExactMatches {
       label: String = "exact-merge",
       smallEdgeCap: Long = 1000000L): DataFrame = {
     val edges = mergeEdges(df, cols, clusterCol)
-    // `label` keys the PhaseLog note: multi-set merge runs (the pipeline
-    // folds one pass per mergeExact field set) must not overwrite each
-    // other's kernel-choice notes. `smallEdgeCap` is the pipeline's
-    // `cc_edge_cap`.
+    // `label` keys the kernel note: one per merge pass.
     val comps = ConnectedComponents.auto(edges, "id1", "id2",
       smallEdgeCap = smallEdgeCap, label = label)
       .withColumnRenamed("id", clusterCol)

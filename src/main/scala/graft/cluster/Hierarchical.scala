@@ -323,13 +323,14 @@ object Hierarchical {
     *
     * At most `ccEdgeCap` above-threshold edges (the common case) are
     * clustered on the driver, as the reference does (fastcluster per
-    * component, run.py:405-408): one job counts them, one collects them,
+    * component, run.py:405-408): one bounded read
+    * ([[graft.ops.collectAtMost]]) collects them,
     * [[ConnectedComponents.components]] labels the components and
     * `hacOnGroup` runs per component; the entity map comes back as a
     * local relation. Above the cap, or when an edge has a null id, the
     * distributed path runs: [[ConnectedComponents.auto]], then
     * `groupByKey(component).flatMapGroups(hacOnGroup)`. Both paths note
-    * `cc_kernel.hac-cluster` as `<kernel> (<n> edges, cap <cap>)`.
+    * `cc_kernel.hac-cluster` ([[ConnectedComponents.note]]).
     *
     * `maxEdgesPerComponent` bounds one component's materialized edges
     * (see [[strongestEdges]]); at the 4M default the buffer is a few
@@ -338,7 +339,7 @@ object Hierarchical {
     * for splitOversized's weakest-edge cut.
     *
     * PERSIST `scoredPairs` before calling: its lineage is consumed
-    * at least twice (the count, then the collect or the component
+    * more than once above the cap (the bounded read, then the component
     * kernel and its join), so an unpersisted ML-scoring lineage would
     * recompute blocking + scoring end to end again. `DedupePipeline`
     * persists it at the phase seam; direct callers own the same
@@ -361,37 +362,33 @@ object Hierarchical {
       hacOnGroup(edges, threshold, maxComponentSize) ++
         orphans.map(id => Assignment(id, id, 1.0))
     }
-    // Edge count and null-id flag in one job with no exchange
-    // (Dataset.count's aggregate exchange is a second job under AQE).
-    val (n, nullIds) = above
-      .select((col("l_id").isNull || col("r_id").isNull).as("null_id"))
-      .queryExecution.toRdd
-      .aggregate((0L, false))(
-        (acc, row) => (acc._1 + 1, acc._2 || row.getBoolean(0)),
-        (a, b) => (a._1 + b._1, a._2 || b._2))
-    if (n <= ccEdgeCap && !nullIds) {
-      graft.pipeline.PhaseLog.note("cc_kernel.hac-cluster",
-        s"driver-union-find ($n edges, cap $ccEdgeCap)")
-      // `component` is not read by the per-component HAC: the
-      // union-find's labels group the edges instead.
-      val raw = above.select(lit(0L).as("component"), col("l_id").as("lId"),
-        col("r_id").as("rId"), col("score")).as[Edge].collect()
-      val comp = ConnectedComponents.components(
-        raw.iterator.map(e => (e.lId, e.rId)))
-      val assigned = raw.groupBy(e => comp(e.lId)).toSeq.sortBy(_._1)
-        .flatMap { case (_, es) => hac(es.iterator) }
-      spark.createDataset(assigned).toDF()
-    } else {
-      val comps = ConnectedComponents.auto(above, smallEdgeCap = ccEdgeCap,
-        label = "hac-cluster")
-      above
-        .join(comps.withColumnRenamed("id", "l_id"), "l_id")
-        .select(col("component"), col("l_id").as("lId"),
-          col("r_id").as("rId"), col("score"))
-        .as[Edge]
-        .groupByKey(_.component)
-        .flatMapGroups((_, it) => hac(it))
-        .toDF("_unique_id", "canon_id", "cluster_score")
+    // Boxed ids, so a null id reaches the driver instead of failing the
+    // collect; any null takes the distributed path below.
+    graft.ops.collectAtMost(above.select("l_id", "r_id", "score")
+        .as[(java.lang.Long, java.lang.Long, Double)], ccEdgeCap)
+      .filter(_.forall { case (l, r, _) => l != null && r != null }) match {
+      case Some(rows) =>
+        ConnectedComponents.note("hac-cluster", "driver-union-find",
+          rows.length, ccEdgeCap)
+        // `component` is not read by the per-component HAC: the
+        // union-find's labels group the edges instead.
+        val raw = rows.map { case (l, r, sc) => Edge(0L, l, r, sc) }
+        val comp = ConnectedComponents.components(
+          raw.iterator.map(e => (e.lId, e.rId)))
+        val assigned = raw.groupBy(e => comp(e.lId)).toSeq.sortBy(_._1)
+          .flatMap { case (_, es) => hac(es.iterator) }
+        spark.createDataset(assigned).toDF()
+      case None =>
+        val comps = ConnectedComponents.auto(above,
+          smallEdgeCap = ccEdgeCap, label = "hac-cluster")
+        above
+          .join(comps.withColumnRenamed("id", "l_id"), "l_id")
+          .select(col("component"), col("l_id").as("lId"),
+            col("r_id").as("rId"), col("score"))
+          .as[Edge]
+          .groupByKey(_.component)
+          .flatMapGroups((_, it) => hac(it))
+          .toDF("_unique_id", "canon_id", "cluster_score")
     }
   }
 }

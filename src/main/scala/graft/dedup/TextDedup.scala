@@ -1,6 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -240,12 +240,6 @@ object TextDedup {
       .select(col(idCol), f(col(textCol)).as("sig"))
   }
 
-  /** MinHash-LSH candidate pairs: band the signature (bands × rowsPerBand
-    * = numHashes), bucket-join on (band, band-hash), emit distinct ordered
-    * id pairs. The classic shingle→minhash→band→bucket-join pipeline; the
-    * band join is the only shuffle that matters and it is an equi-join on
-    * a high-cardinality key, so it scales linearly with data.
-    */
   /** `(idCol, band, bucket)` rows for a signature frame: each band's
     * slice of the signature md5'd into a bucket key. Shared by the batch
     * candidate join below and the streaming candidate op
@@ -267,6 +261,12 @@ object TextDedup {
       }: _*)).as(Seq("band", "bucket")))
   }
 
+  /** MinHash-LSH candidate pairs: band the signature (bands × rowsPerBand
+    * = numHashes), bucket-join on (band, band-hash), emit distinct ordered
+    * id pairs. The classic shingle→minhash→band→bucket-join pipeline; the
+    * band join is the only shuffle that matters and it is an equi-join on
+    * a high-cardinality key, so it scales linearly with data.
+    */
   def minHashCandidates(docs: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", shingleK: Int = 3, numHashes: Int = 12,
       bands: Int = 4): DataFrame = {
@@ -297,10 +297,11 @@ object TextDedup {
       banded)
   }
 
-  /** n-gram Jaccard similarity for candidate pairs, computed by re-joining
-    * shingle sets (expressed as joins + aggregations so the oracle can run
-    * the identical SQL; |A∩B| via a shingle-level equi-join, |A∪B| =
-    * |A|+|B|−|A∩B|).
+  /** n-gram Jaccard similarity for candidate pairs over the two docs'
+    * shingle arrays: shingles are distinct per doc, so |A∩B| =
+    * `size(array_intersect(sa, sb))` and |A∪B| = |A|+|B|−|A∩B| are the
+    * counts the oracle's shingle-level join + group-by (DedupQueries)
+    * gives, without a shuffle at token grain.
     */
   def jaccardVerify(docs: DataFrame, candidates: DataFrame,
       textCol: String = "text", idCol: String = "doc_id",
@@ -312,34 +313,27 @@ object TextDedup {
     val refIds = candidates.select(col("a_id").as(idCol))
       .unionByName(candidates.select(col("b_id").as(idCol)))
       .distinct()
-    // Persisted: read three times (sizes once, token join twice).
-    // Released by sealResult before return.
+    // Persisted: read once per pair side; released by sealResult. Null
+    // text shingles to the empty set: size(null) is -1 or null by ANSI.
     val sh = docs.join(refIds, Seq(idCol), "left_semi")
-      .select(col(idCol), shingles(col(textCol), shingleK).as("sh"))
+      .select(col(idCol), coalesce(shingles(col(textCol), shingleK),
+        array().cast("array<string>")).as("sh"))
       .persist(Disk)
-    val sizes = sh.select(col(idCol), size(col("sh")).as("n"))
-    val toks = sh.select(col(idCol), explode(col("sh")).as("s"))
-    val interCount = candidates
-      .join(toks.select(col(idCol).as("a_id"), col("s")), "a_id")
-      .join(toks.select(col(idCol).as("b_id"), col("s")), Seq("b_id", "s"))
-      .groupBy("a_id", "b_id").agg(count(lit(1)).as("inter"))
+    val inter = size(array_intersect(col("sa"), col("sb")))
     sealResult(
       candidates
-        .join(interCount, Seq("a_id", "b_id"), "left_outer")
-        .na.fill(0L, Seq("inter"))
-        .join(sizes.select(col(idCol).as("a_id"), col("n").as("na")), "a_id")
-        .join(sizes.select(col(idCol).as("b_id"), col("n").as("nb")), "b_id")
-        // Guarded division: two shingle-less docs (short texts CAN
-        // reach here — identical two-token docs share a SimHash) give
-        // union = 0, and under ANSI (the Spark 4 default) a bare 0/0
-        // is a job-aborting DIVIDE_BY_ZERO, not a quiet NaN. Empty
-        // sets carry no similarity evidence: jaccard 0.
-        .withColumn("jaccard",
-          when(col("na") + col("nb") - col("inter") > 0,
-            col("inter") / (col("na") + col("nb") - col("inter")))
-          .otherwise(lit(0.0)))
-        .where(col("jaccard") >= minJaccard)
-        .select("a_id", "b_id", "jaccard"),
+        .join(sh.select(col(idCol).as("a_id"), col("sh").as("sa")), "a_id")
+        .join(sh.select(col(idCol).as("b_id"), col("sh").as("sb")), "b_id")
+        // |A∪B| is 0 only for two empty sets (short texts CAN reach here
+        // — identical two-token docs share a SimHash), where inter is 0
+        // too: greatest(…, 1) makes that 0/1 = 0, not an ANSI
+        // DIVIDE_BY_ZERO.
+        .select(col("a_id"), col("b_id"), (inter / greatest(
+          size(col("sa")) + size(col("sb")) - inter, lit(1))).as("jaccard"))
+        // A typed filter stays above the projection: a Column filter is
+        // pushed into the join condition with the intersection inlined,
+        // computed there and again in the projection.
+        .filter((r: Row) => r.getDouble(2) >= minJaccard),
       sh)
   }
 
@@ -404,15 +398,6 @@ object TextDedup {
       .select(col(idCol), f(col(textCol)).as("simhash"))
   }
 
-  /** SimHash near-dup candidates within Hamming distance `maxHamming`.
-    * Bucketing is the standard pigeonhole trick: split the 60-bit
-    * fingerprint into `maxHamming + 1` chunks — any pair within
-    * `maxHamming` differing bits must agree exactly on at least one
-    * chunk, so candidate generation is a chunk-value equi-join with
-    * guaranteed recall. More chunks (higher maxHamming) means narrower
-    * chunk keys and so more candidate collisions — the usual
-    * recall/cost trade, made explicit instead of silently capped.
-    */
   /** The 60-bit fingerprint's pigeonhole chunk keys as an ARRAY column
     * — the ONE definition of the banding arithmetic, shared by the
     * batch chunk join below and the streaming
@@ -443,6 +428,15 @@ object TextDedup {
     }: _*)
   }
 
+  /** SimHash near-dup candidates within Hamming distance `maxHamming`.
+    * Bucketing is the standard pigeonhole trick: split the 60-bit
+    * fingerprint into `maxHamming + 1` chunks — any pair within
+    * `maxHamming` differing bits must agree exactly on at least one
+    * chunk, so candidate generation is a chunk-value equi-join with
+    * guaranteed recall. More chunks (higher maxHamming) means narrower
+    * chunk keys and so more candidate collisions — the usual
+    * recall/cost trade, made explicit instead of silently capped.
+    */
   def simHashCandidates(fingerprints: DataFrame, idCol: String = "doc_id",
       maxHamming: Int = 3): DataFrame = {
     // maxHamming bounds checked BEFORE the persist below (a negative

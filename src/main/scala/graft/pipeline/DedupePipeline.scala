@@ -2,7 +2,7 @@ package graft.pipeline
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -11,7 +11,7 @@ import graft.blocking.{Blocker, FirstChars, Predicate, PredicateLearner, TokenFi
 import graft.cluster.{ConnectedComponents, ExactMatches, Hierarchical}
 import graft.config.DedupeConfig
 import graft.model.{LogisticModel, Settings, Training}
-import graft.ops.RelationalOps
+import graft.ops.{RelationalOps, collectAtMost}
 
 /** End-to-end dedupe dataflow, mirroring the reference's six CLI stages
   * (ref: pgdedupe/cli.py:46-62 — preprocess → train → block → cluster →
@@ -212,13 +212,6 @@ object DedupePipeline {
       cap: Long): Option[DataFrame] = {
     val spark = entityMap.sparkSession
     import spark.implicits._
-    // At most cap + 1 rows reach the driver, in one job: coalesce(1)
-    // keeps the limit from scanning partitions in growing rounds.
-    def atMost[T](ds: Dataset[T]): Option[Array[T]] = {
-      val rows = ds.coalesce(1)
-        .limit(math.min(cap, Int.MaxValue - 1L).toInt + 1).collect()
-      if (rows.length > cap) None else Some(rows)
-    }
     val edges = sets.map { cols =>
       entriesUnique.where(cols.map(col(_).isNotNull).reduce(_ && _))
         .select(col("_unique_id").as("b"), min("_unique_id")
@@ -226,12 +219,13 @@ object DedupePipeline {
         .where(col("b") > col("a"))
         .select("a", "b")
     }.reduce(_ union _).as[(Long, Long)]
-    atMost(edges).flatMap { es =>
-      PhaseLog.note("cc_kernel.exact-merge-u",
-        s"driver-union-find (${es.length} edges, cap $cap)")
+    collectAtMost(edges, cap).flatMap { es =>
+      ConnectedComponents.note("exact-merge-u", "driver-union-find",
+        es.length, cap)
       if (es.isEmpty) Some(entityMap)
-      else atMost(entityMap.select("_unique_id", "canon_id", "cluster_score")
-        .as[(Long, Long, Double)]).map { em =>
+      else collectAtMost(entityMap
+        .select("_unique_id", "canon_id", "cluster_score")
+        .as[(Long, Long, Double)], cap).map { em =>
         val canon = mutable.LongMap.empty[Long]
         em.foreach { case (u, c, _) => canon(u) = c }
         def d(u: Long): Long = canon.getOrElse(u, u)
@@ -253,10 +247,10 @@ object DedupePipeline {
     * Persistence points: `entries` (read by preprocess AND the
     * apply-phase raw-table merge), `entriesUnique` (read by blocking,
     * scoring, and apply), the Kolb blocking frame (read twice by the
-    * pair self-join), `scored` (read by clustering's edge count and
-    * then its edge collect, or above `cc_edge_cap` its component kernel
-    * and join), and `entityMap` (read by the unique-grain merge's
-    * collect and by applyClusters, or by every distributed merge pass).
+    * pair self-join), `scored` (read by clustering's bounded edge read,
+    * and above `cc_edge_cap` by its component kernel and join too), and
+    * `entityMap` (read by the unique-grain merge's bounded read and by
+    * applyClusters, or by every distributed merge pass).
     * Without these every downstream action re-runs the whole block →
     * pair → affine-gap lineage, which is what timed out the sf0.1 bench.
     *

@@ -77,18 +77,15 @@ object Bpe {
     * table that is ~64k sequential job launches over a megabytes-sized
     * table, hours of scheduling latency for seconds of compute. So when
     * the multi-symbol word table fits under `driverVocabCap` rows
-    * (probed with a limit-collect — ONE job), the loop runs in-process
-    * on the driver with incremental pair-count maintenance: collect
-    * once, merge at memory speed. Driver memory budget ≈ the word
-    * strings + one int per symbol position in the pair→words index —
-    * roughly 100 bytes per position; the 2M-row default caps that well
-    * under a gigabyte. Over the cap it falls back LOUDLY (log +
-    * PhaseLog note, the CC `auto` discipline) to the distributed loop,
-    * which now also releases each iteration's superseded
-    * localCheckpoint blocks EXPLICITLY instead of waiting for
-    * GC/ContextCleaner (the r17 `block_score` measurement shows
-    * GC-timed block accumulation is a real failure mode in long-lived
-    * JVMs).
+    * (one bounded read, [[graft.ops.collectAtMost]]), the loop runs
+    * in-process on the driver with incremental pair-count maintenance.
+    * Driver memory budget ≈ the word strings + one int per symbol
+    * position in the pair→words index — roughly 100 bytes per position;
+    * the 2M-row default caps that well under a gigabyte. Over the cap it
+    * falls back LOUDLY (log + PhaseLog note) to the distributed loop,
+    * which releases each iteration's superseded localCheckpoint blocks
+    * EXPLICITLY (GC-timed release lets blocks pile up in a long-lived
+    * JVM).
     */
   def learnBpe(docs: DataFrame, textCol: String, numMerges: Int,
       minPairCount: Long = 2L,
@@ -98,11 +95,8 @@ object Bpe {
     require(minPairCount >= 1L, s"minPairCount $minPairCount")
     // The corpus-sized pass: distinct words + counts, materialized as
     // ONE eager localCheckpoint so BOTH kernels pay exactly one pass
-    // over the text (a bare limit-collect probe + a separate first
-    // checkpoint re-ran the corpus aggregation twice on the fallback
-    // path). Single-symbol words can never merge — pruned here
-    // (length() counts codepoints, exactly the symbol grain) and per
-    // rewrite pass.
+    // over the text. Single-symbol words can never merge — pruned here
+    // (length() counts codepoints, the symbol grain) and per rewrite.
     val wordCounts = docs
       .where(col(textCol).isNotNull)
       .select(explode(split(col(textCol), " ")).as("_w"))
@@ -114,18 +108,14 @@ object Bpe {
     // last writer's kernel choice in the notes.
     def note(v: String): Unit =
       graft.pipeline.PhaseLog.note(s"bpe_learn_kernel.$noteLabel", v)
-    if (driverVocabCap > 0 && driverVocabCap < Int.MaxValue) {
-      // Bounded probe over the checkpoint (cheap — no corpus rescan);
-      // `limit` returns the FULL row set iff it is under the cap (the
-      // rows are a deterministic set either way — we only use a
-      // complete one).
-      val probe = wordCounts.select(col("_w"), col("_n"))
-        .limit(driverVocabCap.toInt + 1).collect()
-      if (probe.length <= driverVocabCap) {
-        note(s"driver-local (${probe.length} words, cap $driverVocabCap)")
-        releaseLocalCheckpoint(wordCounts)
-        return learnDriver(probe.map(r => (r.getString(0), r.getLong(1))),
-          numMerges, minPairCount)
+    if (driverVocabCap > 0) {
+      graft.ops.collectAtMost(wordCounts, driverVocabCap) match {
+        case Some(vocab) =>
+          note(s"driver-local (${vocab.length} words, cap $driverVocabCap)")
+          releaseLocalCheckpoint(wordCounts)
+          return learnDriver(vocab.map(r => (r.getString(0), r.getLong(1))),
+            numMerges, minPairCount)
+        case None =>
       }
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
         s"learnBpe: > $driverVocabCap multi-symbol words — falling " +

@@ -313,10 +313,7 @@ class PlanSpec extends SparkSpec {
       "kolbBlocks' unused block_ids window") {
     val (_, jobs) =
       withJobs(SparkEntry.queries("q39_kolb_pairs")(spark, sf0001))
-    // The parquet reader's schema inference is the source's one job;
-    // any other job was fired by building the plan.
-    val built = jobs.filterNot(_.startsWith("[parquet at "))
-    assert(built.isEmpty, s"building q39 fired jobs: $jobs")
+    assert(jobs.isEmpty, s"building q39 fired jobs: $jobs")
     Seq("q32_candidate_pairs", "q33_score_threshold").foreach { q =>
       val p = SparkEntry.queries(q)(spark, sf0001)
         .queryExecution.optimizedPlan.toString

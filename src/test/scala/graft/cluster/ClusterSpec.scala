@@ -230,17 +230,17 @@ class ClusterSpec extends SparkSpec {
     assert(!assigns.contains(20L))
   }
 
-  test("cluster() below the edge cap fires at most 2 Spark jobs") {
+  test("cluster() below the edge cap fires one Spark job") {
     import spark.implicits._
     // Persisted and materialized first, as the pipeline hands it over:
-    // only the edge count and the edge collect may run as jobs.
+    // only the bounded edge read may run as a job.
     val scored = Seq(
       (1L, 2L, 0.9), (2L, 3L, 0.85), (10L, 11L, 0.7), (20L, 21L, 0.2))
       .toDF("l_id", "r_id", "score").repartition(3).persist()
     scored.count()
     try {
       val (em, jobs) = withJobs(Hierarchical.cluster(scored, 0.5))
-      assert(jobs.size <= 2, s"cluster ran ${jobs.size} jobs: " +
+      assert(jobs.size == 1, s"cluster ran ${jobs.size} jobs: " +
         jobs.mkString("; "))
       assert(labels(em) ==
         Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))

@@ -104,13 +104,19 @@ class TextDedupSpec extends SparkSpec {
     // Two identical two-token docs: SimHash pairs them, but at
     // shingleK=3 both shingle sets are EMPTY — union 0 must not abort
     // the job under ANSI; empty sets carry no similarity evidence.
-    val docs = Seq((1L, "foo bar"), (2L, "foo bar"),
-      (3L, "alpha beta gamma delta")).toDF("doc_id", "text")
-    val cand = Seq((1L, 2L)).toDF("a_id", "b_id")
+    // A null text shingles to the empty set too, a short text pairs
+    // with a long one at 0, and a pair naming an id absent from docs
+    // drops out.
+    val docs = Seq((1L, Some("foo bar")), (2L, Some("foo bar")),
+      (3L, Some("alpha beta gamma delta")), (4L, None))
+      .toDF("doc_id", "text")
+    val cand = Seq((1L, 2L), (1L, 3L), (3L, 4L), (3L, 99L))
+      .toDF("a_id", "b_id")
     val verified = TextDedup.jaccardVerify(docs, cand, shingleK = 3,
       minJaccard = 0.0)
-    val j = verified.select("jaccard").as[Double].collect()
-    assert(j.toSeq == Seq(0.0), s"zero-union pair must score 0: ${j.toSeq}")
+    val j = verified.as[(Long, Long, Double)].collect().sorted.toSeq
+    assert(j == Seq((1L, 2L, 0.0), (1L, 3L, 0.0), (3L, 4L, 0.0)),
+      s"empty-set pairs must score 0, absent ids drop: $j")
     // Null ids: min/collect_list skip them while count counts them —
     // the group's dup_count would disagree with member_ids. Dropped.
     val withNullId = Seq((Some(1L), "same text"), (None, "same text"))

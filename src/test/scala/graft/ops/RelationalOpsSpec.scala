@@ -74,4 +74,41 @@ class RelationalOpsSpec extends SparkSpec {
     val um = RelationalOps.uniqueMap(mapped, "id")
     assert(um.count() == 6) // back to source-record grain
   }
+
+  test("collectAtMost: all rows in one job below the cap, one extra job " +
+      "over just a skewed partition, None above the cap") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val small = sc.parallelize(1L to 10L, 4).toDS()
+    val (rows, jobs) = withJobs(collectAtMost(small, 10L))
+    assert(rows.map(_.toSeq).contains(small.collect().toSeq))
+    assert(jobs.size == 1, s"below the cap: ${jobs.mkString("; ")}")
+
+    // Partition 0 holds 10 rows, more than its share ⌈21 / 4⌉ = 6 of a
+    // cap of 20, so only its count comes back; the 13 rows fit, and the
+    // second job re-reads partition 0 alone.
+    val computed = sc.collectionAccumulator[Int]("partitions")
+    val skewed = sc.parallelize(Seq(0L until 10L, Seq(10L), Seq(11L),
+        Seq(12L)), 4)
+      .mapPartitionsWithIndex { (i, it) => computed.add(i); it.flatten }
+      .toDS()
+    val expected = skewed.collect().toSeq
+    computed.reset()
+    val (all, skewJobs) = withJobs(collectAtMost(skewed, 20L))
+    assert(all.map(_.toSeq).contains(expected))
+    assert(skewJobs.size == 2, s"skewed: ${skewJobs.mkString("; ")}")
+    assert(computed.value.asScala.toSeq.sorted == Seq(0, 0, 1, 2, 3))
+
+    val (over, overJobs) = withJobs(collectAtMost(skewed, 12L))
+    assert(over.isEmpty)
+    assert(overJobs.size == 1, s"above the cap: ${overJobs.mkString("; ")}")
+
+    val (empty, emptyJobs) =
+      withJobs(collectAtMost(small.where($"value" < 0L), 0L))
+    assert(empty.map(_.toSeq).contains(Seq.empty[Long]))
+    assert(emptyJobs.size == 1)
+    val (none, noneJobs) = withJobs(collectAtMost(small, 0L))
+    assert(none.isEmpty)
+    assert(noneJobs.size == 1)
+  }
 }

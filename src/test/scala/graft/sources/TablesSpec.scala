@@ -51,4 +51,16 @@ class TablesSpec extends SparkSpec {
     val row = df.orderBy("id").select("payload.at").head()
     assert(row.getTimestamp(0) != null)
   }
+
+  test("load reads each fixture's schema from its footer: the schema " +
+      "inference gives, and no Spark job") {
+    val (_, jobs) = withJobs(Tables.names.map(Tables.load(spark, sf0001, _)))
+    assert(jobs.isEmpty, s"loading the tables fired jobs: $jobs")
+    Tables.names.foreach { name =>
+      val path = s"$sf0001/$name.parquet"
+      val inferred = spark.read.parquet(path).schema
+      val footer = Tables.footerSchema(spark, path)
+      assert(footer == inferred, s"$name: $footer vs $inferred")
+    }
+  }
 }
