@@ -1,6 +1,6 @@
 package graft.ann
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -79,13 +79,13 @@ object Knn {
       col(vecCol).as("q_vec"))
     val c = corpus.select(col(idCol).as("neighbor_id"),
       col(vecCol).as("c_vec"))
-    val scored = q.crossJoin(c)
+    // Null vectors → null cosine; zero-norm vectors → NaN, which
+    // Spark orders ABOVE every real similarity — either would displace
+    // true neighbors from the top-k (see keepDefinedCosine).
+    val scored = keepDefinedCosine(q.crossJoin(c)
       .where(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", cosineSim(col("q_vec"), col("c_vec")))
-      // Null vectors → null cosine; zero-norm vectors → NaN, which
-      // Spark orders ABOVE every real similarity — either would
-      // displace true neighbors from the top-k (see cosineDefined).
-      .where(cosineDefined(col("cosine")))
+      .select(col("query_id"), col("neighbor_id"),
+        cosineSim(col("q_vec"), col("c_vec")).as("cosine")))
     val w = Window.partitionBy("query_id")
       .orderBy(col("cosine").desc, col("neighbor_id").asc)
     scored
@@ -303,10 +303,19 @@ object Knn {
     * and Spark orders NaN ABOVE every real value, so an unguarded NaN
     * would outrank every true neighbor (and pass any `>=` threshold).
     * A vector with no direction has no defined similarity: excluded,
-    * like null.
+    * like null. Rows below `threshold` go too (NaN >= x is false on the
+    * JVM, so the default keeps every defined cosine).
+    *
+    * A typed filter, so it stays above the projection that computes
+    * `cosine`: a Column filter is pushed into the join condition with
+    * `cosine_sim` inlined, computed there twice and once more in the
+    * projection for every candidate pair.
     */
-  private def cosineDefined(c: Column): Column =
-    c.isNotNull && !isnan(c)
+  private def keepDefinedCosine(scored: DataFrame,
+      threshold: Double = Double.NegativeInfinity): DataFrame = {
+    val i = scored.schema.fieldIndex("cosine")
+    scored.filter((r: Row) => !r.isNullAt(i) && r.getDouble(i) >= threshold)
+  }
 
   /** LSH-bucketed top-k: signatures over `numPlanes` hyperplanes,
     * `numTables` independent tables (banded planes); candidates = rows
@@ -381,9 +390,8 @@ object Knn {
         col(vecCol).as("neighbor_vec")), "neighbor_id")
     val w = Window.partitionBy("query_id")
       .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    withVecs
-      .withColumn("cosine", cosineSim(col("query_vec"), col("neighbor_vec")))
-      .where(cosineDefined(col("cosine"))) // zero-norm NaN outranks all
+    keepDefinedCosine(withVecs.select(col("query_id"), col("neighbor_id"),
+        cosineSim(col("query_vec"), col("neighbor_vec")).as("cosine")))
       .withColumn("rank", row_number().over(w))
       .where(col("rank") <= k)
       .select("query_id", "neighbor_id", "rank", "cosine")
@@ -466,18 +474,18 @@ object Knn {
       .where(col("a_id") < col("b_id"))
       .select("a_id", "b_id")
       .distinct()
-    cand
+    val withVecs = cand
       .join(vectors.select(col(idCol).as("a_id"), col(vecCol).as("va")),
         "a_id")
       .join(vectors.select(col(idCol).as("b_id"), col(vecCol).as("vb")),
         "b_id")
-      .withColumn("cosine", cosineSim(col("va"), col("vb")))
-      // NaN >= threshold is TRUE under Spark's NaN-is-greatest
-      // ordering, so two zero-norm vectors (which share EVERY bucket —
-      // all sign bits fire on projection 0) would verify as a
-      // "similar pair" and merge in downstream canonicalization.
-      .where(cosineDefined(col("cosine")) && col("cosine") >= threshold)
-      .select("a_id", "b_id", "cosine")
+    // Two zero-norm vectors share EVERY bucket (all sign bits fire on
+    // projection 0); their NaN cosine passes `>= threshold` under
+    // Spark's NaN-is-greatest ordering, so without the guard they would
+    // verify as a "similar pair" and merge in downstream
+    // canonicalization.
+    keepDefinedCosine(withVecs.select(col("a_id"), col("b_id"),
+      cosineSim(col("va"), col("vb")).as("cosine")), threshold)
   }
 
   /** IVF-style partitioned search: cluster the corpus with MLlib KMeans
@@ -538,10 +546,10 @@ object Knn {
       .select("query_id", "q_vec", "cell")
     val w = Window.partitionBy("query_id")
       .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    probed.join(assigned, "cell")
-      .where(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", cosineSim(col("q_vec"), col("c_vec")))
-      .where(cosineDefined(col("cosine"))) // zero-norm NaN outranks all
+    keepDefinedCosine(probed.join(assigned, "cell")
+        .where(col("query_id") =!= col("neighbor_id"))
+        .select(col("query_id"), col("neighbor_id"),
+          cosineSim(col("q_vec"), col("c_vec")).as("cosine")))
       .withColumn("rank", row_number().over(w))
       .where(col("rank") <= k)
       .select("query_id", "neighbor_id", "rank", "cosine")

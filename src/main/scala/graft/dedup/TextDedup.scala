@@ -27,18 +27,85 @@ object TextDedup {
 
   private val Disk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
-  /** The ONE tokenizer shared by every fused UDF in this file —
-    * bit-identical to the codegen'd `TextAnalysis.tokens` (trim on
-    * `^\s+|\s+$`, split on `\s+`). A single definition, because the
-    * batch/streaming/oracle parity of the whole signature family hangs
-    * on these regexes: three hand-synchronized copies were one edit
-    * away from silent LSH drift. Patterns are compiled once per JVM
-    * (object fields), not once per row as `String.replaceAll`/`split`
-    * would.
+  /** The ONE tokenizer shared by every fused UDF in this file, with the
+    * same output as the codegen'd `TextAnalysis.tokens` (trim on
+    * `^\s+|\s+$`, split on `\s+`) — batch/streaming/oracle parity of
+    * the whole signature family hangs on that equality.
+    *
+    * It is a char scan, not the regexes: the tokens are the maximal runs
+    * of characters outside Java's default `\s` (`[ \t\n\x0B\f\r]`),
+    * cut with `substring`. That IS what the regexes give, since the trim
+    * strips the leading and trailing `\s` runs and the split then cuts
+    * at every inner one — with one exception: without MULTILINE, `$` also
+    * matches before a final U+0085, U+2028 or U+2029, three line
+    * terminators that are not `\s`, so `"a <U+0085>"` trims to the one
+    * token `"a<U+0085>"`. A text holding any of the three takes the
+    * regexes ([[regexTokens]]); every other text takes the scan, which
+    * costs one pass and the token strings where the regexes cost a
+    * matcher, a trimmed copy and a split.
+    */
+  private[dedup] def tokenize(t: String): Array[String] = {
+    val toks = new java.util.ArrayList[String]
+    var start = -1 // the current token's first char, -1 between tokens
+    var i = 0
+    while (i < t.length) {
+      val c = t.charAt(i)
+      if (isRegexOnlyTerminator(c)) return regexTokens(t)
+      if (isWs(c)) {
+        if (start >= 0) { toks.add(t.substring(start, i)); start = -1 }
+      } else if (start < 0) start = i
+      i += 1
+    }
+    if (start >= 0) toks.add(t.substring(start))
+    toks.toArray(new Array[String](toks.size))
+  }
+
+  /** Whether `t` has at least `k` [[tokenize]] tokens: the same scan,
+    * stopping at the k-th token start. Stopping early is exact even when
+    * a regex-only terminator follows: the regexes differ from the scan
+    * only by merging a FINAL terminator into the token before it, so k
+    * tokens that start before any terminator stay k tokens.
+    */
+  private def hasAtLeastTokens(t: String, k: Int): Boolean = {
+    var n = 0
+    var inToken = false
+    var i = 0
+    while (i < t.length) {
+      val c = t.charAt(i)
+      if (isRegexOnlyTerminator(c)) return regexTokens(t).length >= k
+      if (isWs(c)) inToken = false
+      else if (!inToken) {
+        inToken = true
+        n += 1
+        if (n >= k) return true
+      }
+      i += 1
+    }
+    n >= k
+  }
+
+  /** Input-side precondition column: non-null `text` with at least `k`
+    * tokens — `coalesce(size(TextAnalysis.tokens(text)) >= k, false)`
+    * without the regex trim and split. Named, so a plan shows it apart
+    * from the signature UDF it guards.
+    */
+  private[dedup] def atLeastTokens(text: Column, k: Int): Column =
+    udf((t: String) => t != null && hasAtLeastTokens(t, k))
+      .withName("atLeastTokens")(text)
+
+  /** Java's default `\s`: space, or a char in `\t`..`\r`. */
+  private def isWs(c: Char): Boolean = c == ' ' || (c >= '\t' && c <= '\r')
+
+  private def isRegexOnlyTerminator(c: Char): Boolean =
+    c == '\u0085' || c == '\u2028' || c == '\u2029'
+
+  /** The regex tokenizer, kept for texts with a regex-only terminator.
+    * Patterns are compiled once per JVM (object fields), not once per
+    * row as `String.replaceAll`/`split` would.
     */
   private val TrimRe = java.util.regex.Pattern.compile("^\\s+|\\s+$")
   private val WsRe = java.util.regex.Pattern.compile("\\s+")
-  private def tokenize(t: String): Array[String] = {
+  private def regexTokens(t: String): Array[String] = {
     val trimmed = TrimRe.matcher(t).replaceAll("")
     if (trimmed.isEmpty) Array.empty else WsRe.split(trimmed)
   }
@@ -124,10 +191,12 @@ object TextDedup {
     * inlined into the lambda, not bound): one re-tokenization per
     * shingle, measured 8.8 s to shingle 5,000 sf0.1 docs vs ~0.3 s
     * fused. A projection boundary doesn't help — CollapseProject
-    * re-inlines it. Output is bit-identical to the old expression: same
-    * trim/split regexes as TextAnalysis.tokens ([[tokenize]]),
-    * space-joined k-grams, first-occurrence dedup (array_distinct),
-    * null text → null, fewer than k tokens → empty.
+    * re-inlines it. Output is bit-identical to the old expression: the
+    * tokens of TextAnalysis.tokens (by the char scan of [[tokenize]],
+    * which falls back to the same trim/split regexes for the one case
+    * where a scan would differ), space-joined k-grams, first-occurrence
+    * dedup (array_distinct), null text → null, fewer than k tokens →
+    * empty.
     */
   def shingles(text: Column, k: Int): Column = {
     val f = udf { (t: String) =>
@@ -195,7 +264,14 @@ object TextDedup {
     * earlier all-expression `array_min(transform(...))` form was worse
     * still — interpreted HOFs re-evaluate the shingle subtree per hash,
     * measured 50× slower at sf0.1. Values are bit-identical to both:
-    * same trim/split, same 60-bit md5 prefix, same (a·u+b) mod M fold.
+    * the same tokens (the [[tokenize]] scan equals the trim/split
+    * regexes, and falls back to them where it would not), same 60-bit
+    * md5 prefix, same (a·u+b) mod M fold.
+    *
+    * The fewer-than-k drop is [[atLeastTokens]], a scan that stops at
+    * the k-th token, in place of `size(TextAnalysis.tokens(text)) >= k`:
+    * that regex trim + split over every document cost about as much
+    * task CPU as the signatures themselves.
     */
   def minHashSignature(docs: DataFrame, textCol: String, idCol: String,
       shingleK: Int, numHashes: Int): DataFrame = {
@@ -235,8 +311,7 @@ object TextDedup {
     // merge every null-id doc's shingles into ONE bogus signature,
     // since groupBy treats null as an ordinary key.
     docs
-      .where(col(idCol).isNotNull && col(textCol).isNotNull &&
-        size(graft.text.TextAnalysis.tokens(col(textCol))) >= shingleK)
+      .where(col(idCol).isNotNull && atLeastTokens(col(textCol), shingleK))
       .select(col(idCol), f(col(textCol)).as("sig"))
   }
 
@@ -347,10 +422,12 @@ object TextDedup {
     * distinct tokens, md5 each, 21 packed-lane aggregate sums per doc —
     * paid a token row-blowup plus a partial-agg shuffle for what a
     * per-row loop computes with neither (same transformation as the
-    * shingle fusion, 8.8 s → 0.3 s). Values are bit-identical: same
-    * trim/split tokenization as TextAnalysis.tokens, same 60-bit md5
-    * prefix, bit j set iff 2·ones_j > n over n distinct tokens. Docs
-    * with null/empty text are absent, as the exploded form dropped them.
+    * shingle fusion, 8.8 s → 0.3 s). Values are bit-identical: the
+    * tokens of TextAnalysis.tokens (the [[tokenize]] scan, with its regex
+    * fallback), same 60-bit md5 prefix, bit j set iff 2·ones_j > n over
+    * n distinct tokens. Docs with null/empty text are absent, as the
+    * exploded form dropped them; the drop is the scan-based
+    * [[atLeastTokens]] with k = 1, not a regex split of every document.
     */
   def simHash(docs: DataFrame, textCol: String = "text",
       idCol: String = "doc_id"): DataFrame = {
@@ -393,8 +470,7 @@ object TextDedup {
     // null ids drop for the same reasons as minHashSignature (module
     // policy + the exploded bit-vote restatement would merge them).
     docs
-      .where(col(idCol).isNotNull && col(textCol).isNotNull &&
-        size(graft.text.TextAnalysis.tokens(col(textCol))) >= 1)
+      .where(col(idCol).isNotNull && atLeastTokens(col(textCol), 1))
       .select(col(idCol), f(col(textCol)).as("simhash"))
   }
 

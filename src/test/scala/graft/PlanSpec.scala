@@ -93,6 +93,37 @@ class PlanSpec extends SparkSpec {
       s"UDF evaluated inside a Filter (double-eval):\n$p2")
   }
 
+  test("q34/q37 signatures tokenize without regex and run their UDF " +
+      "once per row; q44/q45 compute each pair's cosine once") {
+    // The signature UDFs tokenize by a char scan and the fewer-than-k
+    // drop is the scan-based atLeastTokens: a regex trim + split left
+    // in the plan is a second tokenization of every document. q37's
+    // frame is its cached result, so its fingerprint stage is checked
+    // as q37 builds it.
+    val sigs = Seq(
+      "q34" -> SparkEntry.queries("q34_minhash_signature")(spark, sf0001),
+      "q37 simHash" -> graft.dedup.TextDedup.simHash(
+        graft.ops.Parallelism.widen(
+          graft.Tables.load(spark, sf0001, "documents"))))
+    sigs.foreach { case (q, df) =>
+      val p = df.queryExecution.optimizedPlan.toString
+      assert(!p.contains("regexp_replace") && !p.contains("split("),
+        s"$q tokenizes by regex:\n$p")
+      assert("""UDF\(""".r.findAllIn(p).size == 1,
+        s"$q's signature UDF is not evaluated once per row:\n$p")
+      assert(p.contains("atLeastTokens("), s"$q lost its precondition:\n$p")
+    }
+    // The defined-cosine guard is a typed filter above the projection;
+    // as a Column filter it was pushed into the join condition with
+    // cosine_sim inlined twice more.
+    Seq("q44_knn_bruteforce", "q45_knn_lsh").foreach { q =>
+      val p = SparkEntry.queries(q)(spark, sf0001)
+        .queryExecution.optimizedPlan.toString
+      assert("""cosine_sim\(""".r.findAllIn(p).size == 1,
+        s"$q computes cosine_sim more than once per pair:\n$p")
+    }
+  }
+
   test("candidate generation is equi-join bucketed — never cartesian") {
     // The dedup/ANN family's scale story is bucketed equi-joins; a
     // CartesianProduct appearing in any of these means a join key was

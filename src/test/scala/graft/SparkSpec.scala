@@ -25,8 +25,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   /** Runs `f` in a job group of its own and returns its result with the
-    * Spark jobs it fired (each as its stage names), read after a quiet
-    * window, since listener delivery is asynchronous.
+    * Spark jobs it fired (each as its stage names), read once the
+    * listener bus has drained, since listener delivery is asynchronous.
     */
   def withJobs[T](f: => T): (T, Seq[String]) = {
     val group = s"jobs-${java.util.UUID.randomUUID()}"
@@ -43,7 +43,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     try {
       sc.setJobGroup(group, group)
       val r = try f finally sc.clearJobGroup()
-      Thread.sleep(1500)
+      org.apache.spark.ListenerBusDrain(sc)
       (r, jobs.toArray(Array.empty[String]).toSeq)
     } finally sc.removeSparkListener(listener)
   }
