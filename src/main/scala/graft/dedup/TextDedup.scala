@@ -269,9 +269,9 @@ object TextDedup {
     * md5 prefix, same (a·u+b) mod M fold.
     *
     * The fewer-than-k drop is [[atLeastTokens]], a scan that stops at
-    * the k-th token, in place of `size(TextAnalysis.tokens(text)) >= k`:
-    * that regex trim + split over every document cost about as much
-    * task CPU as the signatures themselves.
+    * the k-th token, in place of `size(TextAnalysis.tokens(text)) >= k`,
+    * which split every document by regex before the UDF tokenized it
+    * again.
     */
   def minHashSignature(docs: DataFrame, textCol: String, idCol: String,
       shingleK: Int, numHashes: Int): DataFrame = {
