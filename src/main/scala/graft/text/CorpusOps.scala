@@ -1322,59 +1322,6 @@ object CorpusOps {
     }
   }
 
-  /** [[dedupAgainst]] past the driver-Bloom ceiling: the sharded design
-    * the driver-merged mode's scaladoc records, IMPLEMENTED. The filter
-    * is built per history BUCKET — `pmod(xxhash64(text), nBuckets)`,
-    * the bucketed history index's own key — by [[bloomShards]]:
-    * repartition the 8-byte hash projection on the bucket id, then
-    * build exactly ONE filter per bucket inside its partition, with NO
-    * partial-filter merge (see [[bloomShards]] for why a
-    * `groupBy(bucket).agg(udaf)` build is a scale-killer), landing a
-    * `(bucket, filter)` side frame of
-    * `nBuckets × ~1.2 B × expectedItemsPerBucket` total; the DRIVER
-    * never merges the filters, so history size stops being bounded by
-    * driver memory. Each incoming row is tagged with its bucket id and
-    * meets exactly its own shard through an equi-join — broadcast while
-    * the side frame fits the threshold, else one shuffle of the batch
-    * by an 8-byte key — and the membership test is the codegen'd
-    * [[graft.functions.ShardedBloomMightContain]] with an
-    * executor-local cache of deserialized shards. Bloom-NEGATIVE rows
-    * (including rows whose bucket holds no history at all — the probe
-    * join finds no bucket row and the null coalesces to "definitely
-    * new") bypass the confirm anti-join exactly as in the driver-Bloom
-    * mode; the confirm is the same exact left-anti, Exchange-free on
-    * the history side against the bucketed index.
-    *
-    * Same semantics as [[dedupAgainst]] in every mode: null-text rows
-    * always survive, within-batch duplicates all survive together,
-    * `confirm = false` is the Bloom-only CCNet trade (~fpp of new rows
-    * falsely dropped, never a surviving duplicate, and the only mode a
-    * streaming `incoming` could run — though the stream-static probe
-    * join makes the batch [[dedupAgainst]] the better streaming choice
-    * today, so streaming input is refused here).
-    *
-    * Sizing: `expectedItemsPerBucket` ≈ historyCount / nBuckets. Same
-    * no-silent-caps contract as the driver mode: with
-    * `saturationCheck = true` (the default) the build is eagerly
-    * materialized at call time (one job, exactly like the driver
-    * mode's Bloom build action), then one O(nBuckets) typed pass
-    * computes each shard's realized `expectedFpp()` ON THE EXECUTORS
-    * and collects only `(bucket, fpp)` doubles to the driver — the
-    * filters themselves never leave the cluster — warning at the same
-    * 2× threshold and NAMING the worst bucket. The build is persisted
-    * only for the SCOPE of that check and unpersisted before
-    * returning: retaining it would save the main query's rebuild, but
-    * with no owner to release it every call would leak a CacheManager
-    * entry (loop callers would accumulate one side frame per
-    * invocation for the life of the session). The checked call
-    * therefore pays the build aggregation twice — once for the check,
-    * once lazily in the returned plan; a caller who cannot afford the
-    * extra history scan passes `saturationCheck = false` and sizes
-    * shards from the history count it already tracks. Undersized
-    * shards then degrade toward pass-through exactly like the
-    * pre-warning driver mode, and the confirm join still guarantees
-    * exactness when `confirm = true`.
-    */
   /** The sharded-Bloom BUILD: one filter per live history bucket,
     * with NO partial-filter merge anywhere in the plan.
     *
@@ -1428,10 +1375,52 @@ object CorpusOps {
       .toDF(bucketColName, filterColName)
   }
 
+  /** [[dedupAgainst]] past the driver-Bloom ceiling: the sharded design
+    * the driver-merged mode's scaladoc records, IMPLEMENTED. The filter
+    * is built per history BUCKET — `pmod(xxhash64(text), nBuckets)`,
+    * the bucketed history index's own key — by [[bloomShards]]:
+    * repartition the 8-byte hash projection on the bucket id, then
+    * build exactly ONE filter per bucket inside its partition, with NO
+    * partial-filter merge (see [[bloomShards]] for why a
+    * `groupBy(bucket).agg(udaf)` build is a scale-killer), landing a
+    * `(bucket, filter)` side frame of
+    * `nBuckets × ~1.2 B × expectedItemsPerBucket` total; the DRIVER
+    * never merges the filters, so history size stops being bounded by
+    * driver memory. Each incoming row is tagged with its bucket id and
+    * meets exactly its own shard through an equi-join — broadcast while
+    * the side frame fits the threshold, else one shuffle of the batch
+    * by an 8-byte key — and the membership test is the codegen'd
+    * [[graft.functions.ShardedBloomMightContain]] with an
+    * executor-local cache of deserialized shards. Bloom-NEGATIVE rows
+    * (including rows whose bucket holds no history at all — the probe
+    * join finds no bucket row and the null coalesces to "definitely
+    * new") bypass the confirm anti-join exactly as in the driver-Bloom
+    * mode; the confirm is the same exact left-anti, Exchange-free on
+    * the history side against the bucketed index.
+    *
+    * Same semantics as [[dedupAgainst]] in every mode: null-text rows
+    * always survive, within-batch duplicates all survive together,
+    * `confirm = false` is the Bloom-only CCNet trade (~fpp of new rows
+    * falsely dropped, never a surviving duplicate, and the only mode a
+    * streaming `incoming` could run — though the stream-static probe
+    * join makes the batch [[dedupAgainst]] the better streaming choice
+    * today, so streaming input is refused here).
+    *
+    * Sizing: `expectedItemsPerBucket` ≈ historyCount / nBuckets. Same
+    * no-silent-caps contract as the driver mode, always on: the build is
+    * materialized at call time (one job), one typed pass computes each
+    * shard's realized `expectedFpp()` on the executors and brings only
+    * `(bucket, fpp)` doubles to the driver, and shards past 2× the
+    * request are counted in a warning that names the worst bucket.
+    * Undersized shards degrade toward pass-through; `confirm = true`
+    * stays exact. The build is cached for that check only: kept, it
+    * would save the returned plan's rebuild but leak one CacheManager
+    * entry per call, so every call pays the build twice.
+    */
   def dedupAgainstPartitioned(
       incoming: DataFrame, historical: DataFrame, textCol: String,
       nBuckets: Int, expectedItemsPerBucket: Long, fpp: Double = 0.01,
-      confirm: Boolean = true, saturationCheck: Boolean = true): DataFrame = {
+      confirm: Boolean = true): DataFrame = {
     require(nBuckets >= 1, s"nBuckets $nBuckets")
     require(expectedItemsPerBucket > 0,
       s"expectedItemsPerBucket $expectedItemsPerBucket")
@@ -1451,50 +1440,33 @@ object CorpusOps {
     def antiJoin(left: DataFrame): DataFrame = left.join(
       historical.select(col(textCol).as(ht)),
       col(textCol) === col(ht), "left_anti")
-    val rawShards = bloomShards(historical, textCol, nBuckets,
+    val shards = bloomShards(historical, textCol, nBuckets,
       expectedItemsPerBucket, fpp, sb, sf)
-    if (saturationCheck) {
-      // The check materializes the build once, scoped to THIS action:
-      // persist for the fpp pass, unpersist immediately after. Leaving
-      // the side frame cached would save the main query's rebuild, but
-      // every call would then retain a CacheManager entry with no
-      // owner to release it — loop callers (benches, the ANSI battery,
-      // any per-batch accretion loop) would accumulate entries for the
-      // life of the session. One extra nBuckets-way aggregation job is
-      // the honest price of the default-on check; at 100 TB the caller
-      // who cannot afford a second history scan passes
-      // `saturationCheck = false` and sizes shards from the history
-      // count they already track.
-      val persisted = rawShards.persist()
-      val checkStart = System.nanoTime()
-      try {
-        val session = historical.sparkSession
-        import session.implicits._
-        // Typed map, not a UDF: expectedFpp() needs the deserialized
-        // filter, which stays on the executor that holds the shard —
-        // only (bucket, fpp) pairs come back.
-        val realized = persisted.select(col(sb), col(sf))
-          .as[(Long, Array[Byte])]
-          .map { case (b, bytes) =>
-            (b, org.apache.spark.util.sketch.BloomFilter
-              .readFrom(bytes).expectedFpp())
-          }
-          .collect().toSeq
-        shardSaturationWarning(realized, fpp, expectedItemsPerBucket)
-          .foreach(Console.err.println)
-      } finally {
-        persisted.unpersist(blocking = false)
-        // The check is an extra history scan the returned plan pays
-        // again — log its cost so loop callers NOTICE the double
-        // build instead of discovering it in a profile (the scaladoc's
-        // `saturationCheck = false` opt-out skips it entirely).
-        Console.err.println(
-          f"INFO dedupAgainstPartitioned: shard fpp check took ${
-            (System.nanoTime() - checkStart) / 1e9}%.2f s (one extra " +
-            "history scan; saturationCheck = false skips it)")
-      }
+    // Saturation check: the build is cached for this pass only (see
+    // the scaladoc for why it is not kept for the returned plan).
+    shards.persist()
+    val checkStart = System.nanoTime()
+    try {
+      val session = historical.sparkSession
+      import session.implicits._
+      // Typed map, not a UDF: expectedFpp() needs the deserialized
+      // filter, which stays on the executor that holds the shard —
+      // only (bucket, fpp) pairs come back.
+      val realized = shards.select(col(sb), col(sf))
+        .as[(Long, Array[Byte])]
+        .map { case (b, bytes) =>
+          (b, org.apache.spark.util.sketch.BloomFilter
+            .readFrom(bytes).expectedFpp())
+        }
+        .collect().toSeq
+      shardSaturationWarning(realized, fpp, expectedItemsPerBucket)
+        .foreach(Console.err.println)
+    } finally {
+      shards.unpersist(blocking = false)
+      Console.err.println(f"INFO dedupAgainstPartitioned: shard fpp " +
+        f"check took ${(System.nanoTime() - checkStart) / 1e9}%.2f s " +
+        "(one extra history scan)")
     }
-    val shards = rawShards
     val hashed = incoming
       .withColumn(bh, xxhash64(col(textCol)))
       .withColumn(bb, pmod(col(bh), lit(nBuckets.toLong)))

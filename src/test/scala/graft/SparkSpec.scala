@@ -4,6 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.metrics.JobLog
+
 /** Shared local SparkSession for specs. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
@@ -24,28 +26,11 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     case other => other +: other.children.flatMap(planNodes)
   }
 
-  /** Runs `f` in a job group of its own and returns its result with the
-    * Spark jobs it fired (each as its stage names), read once the
-    * listener bus has drained, since listener delivery is asynchronous.
-    */
+  /** Runs `f` and returns its result with the Spark jobs it fired,
+    * each as its stage names, read from a drained [[JobLog]] scope. */
   def withJobs[T](f: => T): (T, Seq[String]) = {
-    val group = s"jobs-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (j.properties != null &&
-            j.properties.getProperty("spark.jobGroup.id") == group)
-          jobs.add(j.stageInfos.map(_.name).mkString("[", " | ", "]"))
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, group)
-      val r = try f finally sc.clearJobGroup()
-      org.apache.spark.ListenerBusDrain(sc)
-      (r, jobs.toArray(Array.empty[String]).toSeq)
-    } finally sc.removeSparkListener(listener)
+    val scope = JobLog.scoped(spark.sparkContext)(f)
+    (scope.result, scope.jobs.map(_.stageNames.mkString("[", " | ", "]")))
   }
 }
 

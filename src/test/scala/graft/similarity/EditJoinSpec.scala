@@ -182,33 +182,14 @@ class EditJoinSpec extends SparkSpec {
       "identically to the eager path") {
     val df = Seq((1L, "smith"), (2L, "smyth"), (3L, "jones"),
       (4L, "jone"), (5L, "unrelated value")).toDF("id", "s")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet()
-        sites.add(j.stageInfos.map(_.name).mkString("[", " | ", "]"))
-        ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val lazyResult = EditJoin.editDistancePairs(df, "id", "s",
-        maxDist = 1, eager = false)
-      // Listener delivery is async; a job the call had started would
-      // surface within the quiet window (a marker job is no anchor —
-      // AQE splits even a trivial count() into several jobs).
-      Thread.sleep(1500)
-      assert(jobs.get() == 0,
-        s"lazy call ran ${jobs.get()} job(s) at call time: " +
-          sites.toArray.mkString("; "))
-      // The lazy frame is a plan, not a materialized handle.
-      assert(lazyResult.storageLevel ==
-        org.apache.spark.storage.StorageLevel.NONE)
-      val got = lazyResult.as[(Long, Long, Long)].collect().toSet
-      assert(got == Set((1L, 2L, 1L), (3L, 4L, 1L)), got.toString)
-      assert(got == pairs(df, 1))
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (lazyResult, jobs) = withJobs(
+      EditJoin.editDistancePairs(df, "id", "s", maxDist = 1, eager = false))
+    assert(jobs.isEmpty, s"lazy call ran jobs at call time: $jobs")
+    // The lazy frame is a plan, not a materialized handle.
+    assert(lazyResult.storageLevel ==
+      org.apache.spark.storage.StorageLevel.NONE)
+    val got = lazyResult.as[(Long, Long, Long)].collect().toSet
+    assert(got == Set((1L, 2L, 1L), (3L, 4L, 1L)), got.toString)
+    assert(got == pairs(df, 1))
   }
 }

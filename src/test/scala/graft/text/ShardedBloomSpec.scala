@@ -390,7 +390,6 @@ class ShardedBloomSpec extends SparkSpec {
   test("bloomShards shuffles HASHES, not partial filters: build " +
       "shuffle-write bytes are rows-sized, stay flat as history map " +
       "tasks grow 4x, and never reach even one serialized filter") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
     val nBuckets = 4
     val perBucket = 1000000L
     val filterBytes = {
@@ -408,50 +407,20 @@ class ShardedBloomSpec extends SparkSpec {
     val hist4 = rows.repartition(4).persist()
     val hist32 = rows.repartition(32).persist()
     hist4.count(); hist32.count()
-    def shuffleWriteOf(body: => Unit): Long = {
-      val bytes = new java.util.concurrent.atomic.AtomicLong(0L)
-      val l = new SparkListener {
-        override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null) {
-            bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-            ()
-          }
-        }
-      }
-      spark.sparkContext.addSparkListener(l)
-      try {
-        body
-        // The listener bus is async: poll until the counter is stable.
-        var prev = -1L
-        var stable = 0
-        var spins = 0
-        while (stable < 3 && spins < 100) {
-          Thread.sleep(50)
-          val cur = bytes.get()
-          if (cur == prev) stable += 1 else { stable = 0; prev = cur }
-          spins += 1
-        }
-      } finally spark.sparkContext.removeSparkListener(l)
-      bytes.get()
-    }
+    def buildShuffleWrite(hist: org.apache.spark.sql.DataFrame): Long =
+      graft.metrics.JobLog.scoped(spark.sparkContext) {
+        CorpusOps.bloomShards(hist, "text", nBuckets, perBucket, 0.01,
+          "b", "f").count()
+      }.stages.map(_.shuffleWrite).sum
     try {
-      val b4 = shuffleWriteOf {
-        CorpusOps.bloomShards(hist4, "text", nBuckets, perBucket, 0.01,
-          "b", "f").count()
-        ()
-      }
-      val b32 = shuffleWriteOf {
-        CorpusOps.bloomShards(hist32, "text", nBuckets, perBucket, 0.01,
-          "b", "f").count()
-        ()
-      }
+      val b4 = buildShuffleWrite(hist4)
+      val b32 = buildShuffleWrite(hist32)
       // The old groupBy+udaf build would ship ≥ mapTasks × filterBytes
       // (4 tasks ≈ 4.8 MB, 32 tasks ≈ 38 MB, growing 8x). The
       // repartition-first build ships 4000 16-byte hash rows (+ row
       // overhead + count partials): under ONE filter's size, and FLAT
       // in the map-task count.
-      assert(b32 > 0, "listener saw no shuffle write at all")
+      assert(b32 > 0, "the scope saw no shuffle write at all")
       assert(b32 < filterBytes,
         s"build shuffled $b32 B >= one serialized filter " +
           s"($filterBytes B) — partial filters are crossing the wire")
