@@ -338,7 +338,8 @@ object ScaleBench {
     // Here 3 of 5 docs carry the same 3-token footer at ANY n, body
     // tokens are unique per doc, and the threshold is n/2 — detection
     // volume, per-doc sets, and rewritten rows all scale exactly
-    // linearly, in the operator's cluster mode (xxhash64 line keys).
+    // linearly. It calls the operator with its default (literal) line
+    // keys; the SCALE_r19/r20 boiler_lines numbers used hashed keys.
     def boilerKernelAt(n: Int): (Double, Long) = {
       val docs = spark.range(n.toLong).select(col("id"),
         concat(
@@ -348,8 +349,7 @@ object ScaleBench {
         .repartition(32).persist()
       docs.count()
       val r = time(reps)(() => graft.text.CorpusOps.dropBoilerplateLines(
-        docs, "id", "text", maxDocs = n.toLong / 2, delimiter = " ",
-        lineHash = "xxhash64"))
+        docs, "id", "text", maxDocs = n.toLong / 2, delimiter = " "))
       docs.unpersist()
       r
     }

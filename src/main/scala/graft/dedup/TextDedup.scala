@@ -354,14 +354,10 @@ object TextDedup {
     // Persisted: the self-join consumes this frontier twice, and Spark
     // does not share common subplans across join inputs — without the
     // persist the whole shingle→md5→signature pipeline runs twice.
-    // Released by sealResult before return. Widened BEFORE the persist
-    // (see graft.ops.Parallelism): on a narrow fixture scan the bucket
-    // self-join otherwise runs its probe + distinct partial aggregation
-    // as ONE task; at scale widen is a no-op and the join's own
-    // exchanges (with AQE skew split) are untouched.
-    val banded = graft.ops.Parallelism.widen(
-        bandBuckets(sigs, idCol, numHashes, bands))
-      .persist(Disk)
+    // Released by sealResult before return. Already as wide as the
+    // source: banding is a project over `sigs`, so the persist fill and
+    // the self-join's probe side keep the widened partition count.
+    val banded = bandBuckets(sigs, idCol, numHashes, bands).persist(Disk)
     val l = banded.select(col("band"), col("bucket"), col(idCol).as("a_id"))
     val r = banded.select(col("band"), col("bucket"), col(idCol).as("b_id"))
     sealResult(

@@ -412,20 +412,17 @@ object Multimodal {
     * happen here; the JDK ships no video codec, so those derive a
     * deterministic 8-dim fake feature from the payload's md5 — keeping
     * the distributed plumbing (partition-level batching, fixed-size
-    * output schema, skew-neutral repartition) real and testable. The
+    * output schema) real and testable. The
     * MP4 CONTAINER (duration, track count, display dimensions) is
     * parsed for real in [[mp4Header]]/[[mediaInfo]].
     */
   def featurize(
       df: DataFrame,
       binCol: String,
-      idCol: String,
-      batchPartitions: Int = 0): Dataset[MediaFeature] = {
+      idCol: String): Dataset[MediaFeature] = {
     val spark = df.sparkSession
     import spark.implicits._
-    val sized = if (batchPartitions > 0) df.repartition(batchPartitions) else df
-    sized
-      .select(col(idCol).cast("long"), col(binCol))
+    df.select(col(idCol).cast("long"), col(binCol))
       .where(col(idCol).isNotNull) // null id would kill the stage (see mediaInfo)
       .as[(Long, Array[Byte])]
       .mapPartitions { batch =>

@@ -75,6 +75,10 @@ object SkewJoin {
       case _ => false
     }
 
+  /** Most hot keys [[saltedInner]] salts; past it, the most frequent
+    * are kept and the rest join unsalted (with a warning). */
+  private val MaxHotKeys = 100000
+
   /** Inner equi-join of `fact` with `dim` on `key`, salt-spread over the
     * fact side's hot keys. Output columns = fact ⋈ dim as a plain inner
     * join on `key` (one shared `key` column, then fact payload, then dim
@@ -85,8 +89,7 @@ object SkewJoin {
       dim: DataFrame,
       key: String,
       saltFactor: Int = 16,
-      hotKeyThreshold: Long = 1000000L,
-      maxHotKeys: Int = 100000): DataFrame = {
+      hotKeyThreshold: Long = 1000000L): DataFrame = {
     require(saltFactor > 1, "saltFactor must be > 1")
     val spark = fact.sparkSession
 
@@ -103,10 +106,10 @@ object SkewJoin {
       .where(col(cntCol) > hotKeyThreshold)
       .orderBy(col(cntCol).desc, qcol(key))
       .select(qcol(key))
-      .limit(maxHotKeys + 1)
+      .limit(MaxHotKeys + 1)
       .collect()
-    if (hotRows.length > maxHotKeys)
-      log.warn(s"more than $maxHotKeys hot keys above $hotKeyThreshold — " +
+    if (hotRows.length > MaxHotKeys)
+      log.warn(s"more than $MaxHotKeys hot keys above $hotKeyThreshold — " +
         "salting only the first; raise hotKeyThreshold")
 
     if (hotRows.isEmpty) return fact.join(dim, key)
@@ -119,7 +122,7 @@ object SkewJoin {
     // nodes, so analysis/codegen cost doesn't grow with |hot| and the
     // per-row membership probe is the broadcast hash join's O(1) lookup.
     val hotDf = broadcast(spark.createDataFrame(
-        java.util.Arrays.asList(hotRows.take(maxHotKeys): _*),
+        java.util.Arrays.asList(hotRows.take(MaxHotKeys): _*),
         fact.select(qcol(key)).schema)
       .withColumn(hotCol, lit(true)))
 

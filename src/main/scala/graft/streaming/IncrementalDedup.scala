@@ -397,31 +397,26 @@ object IncrementalDedup {
     * overshoot it) — the EMITTED KEY SET equals the batch detection's
     * flagged set for any batch partitioning of the input (gated in
     * IncrementalDedupSpec with redeliveries), which is the operator's
-    * contract; counts past the threshold stop accumulating by design. Null-id/null-text docs
-    * are dropped exactly as the batch twin drops them; `lineHash` and
-    * `delimiter` match [[graft.text.CorpusOps.dropBoilerplateLines]].
+    * contract; counts past the threshold stop accumulating by design.
+    * Null-id/null-text docs are dropped exactly as the batch twin drops
+    * them; `delimiter` matches
+    * [[graft.text.CorpusOps.dropBoilerplateLines]].
     */
   def boilerplateLineStream(
       docs: DataFrame, maxDocs: Int,
       idCol: String = "doc_id", textCol: String = "text",
-      delimiter: String = "\n", lineHash: String = "literal",
+      delimiter: String = "\n",
       stateTtl: Option[String] = None)(
       implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
     requireIntegralId(docs, idCol)
     require(maxDocs >= 1, s"maxDocs $maxDocs")
     require(delimiter.nonEmpty, "delimiter must be non-empty")
-    require(graft.text.CorpusOps.GramKeys.contains(lineHash),
-      s"lineHash $lineHash not in ${graft.text.CorpusOps.GramKeys}")
     val delim = java.util.regex.Pattern.quote(delimiter)
-    val lineCol =
-      if (lineHash == "xxhash64") xxhash64(col("_l")).cast("string")
-      else col("_l")
     val keyed = docs
       .where(col(idCol).isNotNull && col(textCol).isNotNull)
-      .select(col(idCol).cast("long").as("doc_id"),
-        explode(split(col(textCol), delim)).as("_l"))
-      .select(lineCol.as("line_key"), col("doc_id"))
+      .select(explode(split(col(textCol), delim)).as("line_key"),
+        col(idCol).cast("long").as("doc_id"))
     val timeoutConf =
       if (stateTtl.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
       else GroupStateTimeout.NoTimeout()

@@ -20,11 +20,8 @@ import org.apache.spark.sql.types.LongType
   * explicitly sized and documented at their definitions).
   *
   * 100 TB notes:
-  *  - n-gram keys default to the literal strings so the DuckDB oracle
-  *    can replay them; at cluster scale pass `gramHash = "xxhash64"`
-  *    ([[GramKeys]]) to group/join on the 64-bit gram hash instead,
-  *    cutting shuffle width ~10× — decisions are unchanged (up to
-  *    negligible collisions), only the key representation shrinks.
+  *  - n-gram and line keys are the literal strings, so the DuckDB
+  *    oracle replays every decision exactly.
   *  - [[decontaminate]] broadcasts the eval-set n-grams by default:
   *    eval suites are MBs while training corpora are TBs, so the
   *    contaminated-doc scan is one broadcast semi-join with no shuffle
@@ -54,32 +51,6 @@ object CorpusOps {
 
   private def tokens(textCol: String): Column = split(col(textCol), " ")
 
-  /** Join/group key representations for the corpus-wide n-gram steps
-    * ([[decontaminate]] / [[decontaminateStream]] / [[duplicateSpans]]).
-    *
-    *  - `"literal"` (default): the space-joined n-gram string itself —
-    *    the DuckDB-replayable mode every oracle query uses.
-    *  - `"xxhash64"`: `xxhash64(gram)` as the key — one codegen'd long
-    *    instead of an ~`n`-word string, cutting shuffle/broadcast key
-    *    width ~10× at corpus scale (SURVEY §9). Match/count decisions
-    *    are identical up to 64-bit hash collisions: a cross-document
-    *    collision needs two distinct grams sharing a hash among the
-    *    ~2³² grams where birthday odds reach 50%, and its worst case is
-    *    one spurious gram match — negligible against these operators'
-    *    statistical thresholds (gated answer-equal on real fixture text
-    *    in CorpusOpsSpec).
-    */
-  val GramKeys: Set[String] = Set("literal", "xxhash64")
-
-  private def gramKey(gram: Column, gramHash: String): Column = {
-    require(GramKeys.contains(gramHash),
-      s"gramHash $gramHash not in $GramKeys")
-    gramHash match {
-      case "literal" => gram
-      case "xxhash64" => xxhash64(gram)
-    }
-  }
-
   /** Benchmark decontamination (GPT-3 appendix C shape): flag every
     * training document that shares at least one word `n`-gram with the
     * held-out eval slice. Returns one row per TRAINING doc:
@@ -91,15 +62,10 @@ object CorpusOps {
     * default, broadcast. `broadcastEval = false` drops the hint so the
     * match plans as a shuffle hash join — the overflow path for an
     * eval side too big to broadcast, a flag rather than a rewrite.
-    * `gramHash = "xxhash64"` swaps the literal gram strings for their
-    * 64-bit hashes as the match/count key (see [[GramKeys]]) — the
-    * 100 TB mode; `n_matched` then counts distinct overlapping HASHES,
-    * identical up to negligible collisions.
     */
   def decontaminate(
       docs: DataFrame, isEval: Column, idCol: String, textCol: String,
-      n: Int, broadcastEval: Boolean = true,
-      gramHash: String = "literal"): DataFrame = {
+      n: Int, broadcastEval: Boolean = true): DataFrame = {
     // Tokenize ONCE per row behind a projection boundary (the
     // interpreted-HOF re-evaluation trap, see chunkTokens): ngrams'
     // lambda slices its tokens argument per ELEMENT, so an inlined
@@ -109,14 +75,12 @@ object CorpusOps {
     val g = ngrams(col("_graft_toks"), n)
     val evalGrams = docs.where(isEval)
       .select(tokens(textCol).as("_graft_toks"))
-      .select(explode(g).as("_g"))
-      .select(gramKey(col("_g"), gramHash).as("gram")).distinct()
+      .select(explode(g).as("gram")).distinct()
     val train = docs.where(!isEval)
     val evalSide = if (broadcastEval) broadcast(evalGrams) else evalGrams
     val matched = train
       .select(col(idCol), tokens(textCol).as("_graft_toks"))
-      .select(col(idCol), explode(g).as("_g"))
-      .select(col(idCol), gramKey(col("_g"), gramHash).as("gram"))
+      .select(col(idCol), explode(g).as("gram"))
       .join(evalSide, "gram")
       .groupBy(idCol).agg(countDistinct("gram").as("n_matched"))
     train.select(col(idCol)).join(matched, Seq(idCol), "left")
@@ -155,22 +119,17 @@ object CorpusOps {
     * the retention decision here is the doc-grain version of the same
     * signal). Returns `(idCol, n_spans, n_dup_spans BIGINT,
     * keep BOOLEAN)`; span-less short docs keep trivially.
-    * `gramHash = "xxhash64"` shuffles 64-bit span hashes instead of the
-    * literal span strings (see [[GramKeys]]) — this operator is the one
-    * corpus×corpus n-gram shuffle, so the ~10× key-width cut lands on
-    * the biggest shuffle in the curation family.
     */
   def duplicateSpans(
       docs: DataFrame, idCol: String, textCol: String, n: Int,
-      minDocs: Int, gramHash: String = "literal"): DataFrame = {
+      minDocs: Int): DataFrame = {
     require(minDocs >= 2, s"minDocs $minDocs")
     // Tokenize once per row behind projection boundaries (see
     // decontaminate's note — per-element re-tokenization otherwise).
     val grams = docs
       .select(col(idCol), tokens(textCol).as("_graft_toks"))
       .select(col(idCol),
-        explode(ngrams(col("_graft_toks"), n)).as("_g"))
-      .select(col(idCol), gramKey(col("_g"), gramHash).as("gram"))
+        explode(ngrams(col("_graft_toks"), n)).as("gram"))
     val dup = grams.groupBy("gram")
       .agg(countDistinct(idCol).as("nd"))
       .where(col("nd") >= minDocs).select("gram")
@@ -203,10 +162,7 @@ object CorpusOps {
     * 100 TB shape — the document TEXT is never shuffled:
     *  1. detection runs on a NARROW (id, lineKey) explode — one
     *     groupBy on the line key counting distinct docs (partial aggs
-    *     shrink it map-side; `lineHash = "xxhash64"` swaps literal
-    *     line strings for 64-bit hashes as the key, the [[GramKeys]]
-    *     trade: ~10× narrower shuffle, decisions unchanged up to
-    *     negligible collisions);
+    *     shrink it map-side);
     *  2. each doc's OWN boilerplate keys come back as one small
     *     `collect_set` row per affected doc (bounded by the doc's own
     *     distinct boilerplate lines, never by corpus-wide counts) via
@@ -235,8 +191,7 @@ object CorpusOps {
     */
   def dropBoilerplateLines(
       docs: DataFrame, idCol: String, textCol: String, maxDocs: Long,
-      delimiter: String = "\n",
-      lineHash: String = "literal"): DataFrame = {
+      delimiter: String = "\n"): DataFrame = {
     require(maxDocs >= 1, s"maxDocs $maxDocs (every line occurs in at " +
       "least its own doc; 0 would drop every line)")
     require(delimiter.nonEmpty, "delimiter must be non-empty")
@@ -251,8 +206,7 @@ object CorpusOps {
     val delim = java.util.regex.Pattern.quote(delimiter)
     val lines = docs
       .where(col(idCol).isNotNull && col(textCol).isNotNull)
-      .select(col(idCol), explode(split(col(textCol), delim)).as("_l"))
-      .select(col(idCol), gramKey(col("_l"), lineHash).as(lk))
+      .select(col(idCol), explode(split(col(textCol), delim)).as(lk))
     val flagged = lines.groupBy(lk)
       .agg(countDistinct(col(idCol)).as("_nd"))
       .where(col("_nd") > maxDocs)
@@ -264,7 +218,7 @@ object CorpusOps {
         when(col(textCol).isNull || col(bs).isNull, col(textCol))
           .otherwise(concat_ws(delimiter,
             filter(split(col(textCol), delim),
-              l => !array_contains(col(bs), gramKey(l, lineHash))))))
+              l => !array_contains(col(bs), l)))))
       .drop(bs)
   }
 
@@ -296,14 +250,13 @@ object CorpusOps {
   def decontaminateStream(
       train: DataFrame, evalDocs: DataFrame, idCol: String,
       textCol: String, n: Int,
-      watermark: Option[(String, String)] = None,
-      gramHash: String = "literal"): DataFrame = {
+      watermark: Option[(String, String)] = None): DataFrame = {
     // Tokenize once per row behind projection boundaries (see
     // decontaminate's note — per-element re-tokenization otherwise).
     val evalGrams = evalDocs
       .select(tokens(textCol).as("_graft_toks"))
-      .select(explode(ngrams(col("_graft_toks"), n)).as("_g"))
-      .select(gramKey(col("_g"), gramHash).as("gram")).distinct()
+      .select(explode(ngrams(col("_graft_toks"), n)).as("gram"))
+      .distinct()
     val arrivals = watermark.fold(train) { case (timeCol, delay) =>
       train.withWatermark(timeCol, delay)
     }
@@ -311,8 +264,7 @@ object CorpusOps {
       col(idCol) +: watermark.map(w => col(w._1)).toSeq
     val flagged = arrivals
       .select(keep :+ tokens(textCol).as("_graft_toks"): _*)
-      .select(keep :+ explode(ngrams(col("_graft_toks"), n)).as("_g"): _*)
-      .select(keep :+ gramKey(col("_g"), gramHash).as("gram"): _*)
+      .select(keep :+ explode(ngrams(col("_graft_toks"), n)).as("gram"): _*)
       .join(broadcast(evalGrams), Seq("gram"), "left_semi")
     watermark match {
       case Some(_) =>
@@ -329,16 +281,14 @@ object CorpusOps {
     * never reassigns an existing document (the property that keeps
     * eval sets uncontaminated as the corpus accretes; changing the
     * salt is the ONLY way to reshuffle, and that is the point).
-    * `hashFn` picks md5 (oracle-replayable, default) or xxhash64 (the
-    * cheaper 100 TB mode) — see [[HashFns]].
     * Returns `(idCol, bucket BIGINT, split STRING)`.
     */
   def splitAssign(
       docs: DataFrame, idCol: String, salt: String, trainPct: Int = 80,
-      valPct: Int = 10, hashFn: String = "md5"): DataFrame = {
+      valPct: Int = 10): DataFrame = {
     require(trainPct > 0 && valPct >= 0 && trainPct + valPct < 100,
       s"splits $trainPct/$valPct")
-    val bucket = hashKey(idCol, salt, 8, hashFn) % 100
+    val bucket = hashKey(idCol, salt, 8) % 100
     docs.select(col(idCol), bucket.as("bucket"))
       .select(col(idCol), col("bucket"),
         when(col("bucket") < trainPct, "train")
@@ -711,17 +661,16 @@ object CorpusOps {
     * range-repartitions on the hash, sorts within partitions, and
     * assigns global offsets via `zipWithIndex` with O(#partitions)
     * driver work; the hash is uniform by construction, so the range
-    * partitions are balanced no matter how skewed the ids. `hashFn`
-    * follows [[HashFns]]: `"md5"` replays in any engine (the oracle
-    * mode), `"xxhash64"` is the one-codegen-hash 100 TB mode.
+    * partitions are balanced no matter how skewed the ids. The hash is
+    * [[hashKey]]'s salted md5, which replays in any engine.
     */
-  def epochShuffle(docs: DataFrame, idCol: String, salt: String,
-      hashFn: String = "md5"): DataFrame = {
+  def epochShuffle(docs: DataFrame, idCol: String,
+      salt: String): DataFrame = {
     require(!docs.columns.exists(_.equalsIgnoreCase("_h")),
       "docs already has a _h column")
     val withH = docs
       .where(col(idCol).isNotNull)
-      .withColumn("_h", hashKey(idCol, salt, hexLen = 15, hashFn))
+      .withColumn("_h", hashKey(idCol, salt, hexLen = 15))
     graft.ops.RelationalOps
       .denseIds(withH, Seq(col("_h"), col(idCol)), "shuffle_pos")
       .drop("_h")
@@ -798,44 +747,21 @@ object CorpusOps {
           .as("lm_score"))
   }
 
-  /** Hash functions accepted by the deterministic sampling family
-    * ([[splitAssign]] / [[stratifiedSample]] / [[domainCap]] /
-    * [[mixtureExpand]]).
-    *
-    *  - `"md5"` (default): the first `hexLen` hex chars of the salted
-    *    MD5 as a non-negative long. Identical arithmetic is stated in
-    *    each oracle's SQL, so engines agree bit-for-bit — the
-    *    replayability mode.
-    *  - `"xxhash64"`: the top `4·hexLen` bits of the salted xxhash64,
-    *    via unsigned shift — same `[0, 16^hexLen)` range, so every
-    *    threshold/modulus downstream is unchanged. One codegen'd
-    *    64-bit hash instead of a full MD5 over an intermediate string:
-    *    the 100 TB mode (SURVEY §9 — ~10× narrower hash work per row;
-    *    no DuckDB twin, so oracle queries keep md5).
-    *
-    * Both are salted the same way, uniform, and pure per-row; the salt
-    * remains the only reshuffle lever in either mode.
+  /** Salted uniform hash of the doc key in `[0, 16^hexLen)`, shared by
+    * the deterministic sampling family ([[splitAssign]] /
+    * [[stratifiedSample]] / [[domainCap]] / [[mixtureExpand]] /
+    * [[epochShuffle]]): the first `hexLen` hex chars of the salted MD5
+    * as a non-negative long. Identical arithmetic is stated in each
+    * oracle's SQL, so engines agree bit-for-bit; the salt is the only
+    * reshuffle lever.
     */
-  val HashFns: Set[String] = Set("md5", "xxhash64")
-
-  /** Salted uniform hash of the doc key in `[0, 16^hexLen)`
-    * (`hexLen` ≤ 15 so the value fits a long). See [[HashFns]].
-    */
-  private def hashKey(idCol: String, salt: String, hexLen: Int,
-      hashFn: String): Column = {
-    require(HashFns.contains(hashFn), s"hashFn $hashFn not in $HashFns")
-    // hexLen = 16 would make the xxhash64 branch a shift-by-0 (signed,
-    // possibly negative — silently breaking every downstream threshold
-    // and modulus) and overflow the md5 branch's long conv; enforce the
-    // documented bound instead of assuming it.
+  private def hashKey(idCol: String, salt: String, hexLen: Int): Column = {
+    // hexLen = 16 would overflow the long conv (signed, possibly
+    // negative — silently breaking every downstream threshold and
+    // modulus); enforce the documented bound instead of assuming it.
     require(hexLen >= 1 && hexLen <= 15, s"hexLen $hexLen not in [1,15]")
     val salted = concat(lit(salt + ":"), col(idCol).cast("string"))
-    hashFn match {
-      case "md5" =>
-        conv(substring(md5(salted), 1, hexLen), 16, 10).cast("long")
-      case "xxhash64" =>
-        shiftrightunsigned(xxhash64(salted), 64 - 4 * hexLen)
-    }
+    conv(substring(md5(salted), 1, hexLen), 16, 10).cast("long")
   }
 
   /** Deterministic per-stratum Bernoulli sampling (corpus mixture
@@ -853,7 +779,7 @@ object CorpusOps {
   def stratifiedSample(
       docs: DataFrame, idCol: String, stratumCol: String,
       rates: Map[String, Double], defaultRate: Double,
-      salt: String, hashFn: String = "md5"): DataFrame = {
+      salt: String): DataFrame = {
     require((rates.values ++ Seq(defaultRate)).forall(r =>
       r >= 0.0 && r <= 1.0), s"rates must be in [0,1]: $rates")
     def thr(r: Double): Long = (r * 4294967296.0).toLong
@@ -862,7 +788,7 @@ object CorpusOps {
         when(col(stratumCol) === s, lit(thr(r))).otherwise(acc)
       }
     docs.select(col(idCol), col(stratumCol),
-      (hashKey(idCol, salt, 8, hashFn) < threshold).as("sampled"))
+      (hashKey(idCol, salt, 8) < threshold).as("sampled"))
   }
 
   /** Per-domain quota cap: keep at most `cap` documents per domain,
@@ -901,11 +827,11 @@ object CorpusOps {
     */
   def domainCap(
       docs: DataFrame, idCol: String, domainCol: String, cap: Int,
-      salt: String, hashFn: String = "md5"): DataFrame = {
+      salt: String): DataFrame = {
     require(cap > 0, s"cap $cap")
     import org.apache.spark.sql.types.{ByteType, IntegerType, ShortType}
     val idType = docs.schema(idCol).dataType
-    val k = hashKey(idCol, salt, 15, hashFn).as("_k")
+    val k = hashKey(idCol, salt, 15).as("_k")
     idType match {
       case LongType | IntegerType | ShortType | ByteType =>
         docs
@@ -957,7 +883,7 @@ object CorpusOps {
   def mixtureExpand(
       docs: DataFrame, idCol: String, stratumCol: String,
       weights: Map[String, Double], defaultWeight: Double,
-      salt: String, hashFn: String = "md5"): DataFrame = {
+      salt: String): DataFrame = {
     require((weights.values ++ Seq(defaultWeight)).forall(w =>
       w >= 0.0 && w <= 100.0), s"weights must be in [0,100]: $weights")
     def whole(w: Double): Int = math.floor(w).toInt
@@ -973,7 +899,7 @@ object CorpusOps {
         when(col(stratumCol) === s, lit(fracThr(w))).otherwise(acc)
     }
     val copies = (base +
-      (hashKey(idCol, salt, 8, hashFn) < thr).cast("int")).as("_copies")
+      (hashKey(idCol, salt, 8) < thr).cast("int")).as("_copies")
     docs.select(col(idCol), col(stratumCol), copies)
       .select(col(idCol), col(stratumCol),
         explode(when(col("_copies") >= 1,
@@ -1094,6 +1020,52 @@ object CorpusOps {
         col("col.chunk_text"), col("col.n_tokens"))
   }
 
+  /** Saturation check for [[dedupAgainst]]'s Bloom (pure, so the spec
+    * can pin the threshold without capturing stderr): Some(warning)
+    * when the realized fpp — `expectedFpp()` computed from the built
+    * filter's bit density — materially (2×: far past sizing noise)
+    * exceeds the requested one, i.e. `expectedItems` undersized the
+    * actual history and the prefilter is degrading toward
+    * pass-through.
+    */
+  private[text] def bloomSaturationWarning(
+      realizedFpp: Double, requestedFpp: Double,
+      expectedItems: Long): Option[String] =
+    if (realizedFpp > requestedFpp * 2.0)
+      Some(f"WARN dedupAgainst: Bloom saturated — realized fpp " +
+        f"$realizedFpp%.4f vs requested $requestedFpp%.4f; " +
+        s"expectedItems $expectedItems undersizes the history " +
+        "(prefilter degrades toward pass-through; raise expectedItems)")
+    else None
+
+  /** [[bloomSaturationWarning]]'s sharded twin (pure, spec-pinnable):
+    * Some(warning) when any shard's realized fpp exceeds 2× the
+    * request, naming the WORST bucket and counting how many shards are
+    * past the threshold — undersized `expectedItemsPerBucket` rarely
+    * saturates just one shard, and the count says whether the sizing
+    * or the hash spread is at fault.
+    */
+  private[text] def shardSaturationWarning(
+      perBucket: Seq[(Long, Double)], requestedFpp: Double,
+      expectedItemsPerBucket: Long): Option[String] = {
+    val over = perBucket.filter(_._2 > requestedFpp * 2.0)
+    if (over.isEmpty) None
+    else {
+      val (worstBucket, worstFpp) = over.maxBy(_._2)
+      Some(f"WARN dedupAgainstPartitioned: ${over.size} of " +
+        f"${perBucket.size} Bloom shards saturated — worst bucket " +
+        f"$worstBucket realized fpp $worstFpp%.4f vs requested " +
+        f"$requestedFpp%.4f; expectedItemsPerBucket " +
+        s"$expectedItemsPerBucket undersizes the history (prefilter " +
+        "degrades toward pass-through; raise expectedItemsPerBucket " +
+        "or nBuckets)")
+    }
+  }
+
+  /** Upper bound on [[dedupAgainst]]'s Bloom build partitions, and so
+    * on the full-size partial filters `treeAggregate` ships. */
+  private val MaxBloomBuildTasks = 64
+
   /** Incremental exact dedup of a new batch against the historical
     * corpus — the accretion step of a production training-data
     * pipeline: every crawl round re-fetches mostly already-ingested
@@ -1109,16 +1081,16 @@ object CorpusOps {
     *     `xxhash64(textCol)` (a distributed `treeAggregate`; the
     *     driver holds the merged bits — `expectedItems`/`fpp` size
     *     them, ~1.2 GB per 10⁹ docs at 1% — and broadcasts them
-    *     ONCE). The hash projection is `coalesce`d to at most
-    *     `maxBuildTasks` partitions first: `treeAggregate` ships one
-    *     FULL-SIZE partial filter per input partition, so an
+    *     ONCE). The hash projection is `coalesce`d to at most 64
+    *     partitions first (`MaxBloomBuildTasks`): `treeAggregate`
+    *     ships one FULL-SIZE partial filter per input partition, so an
     *     unbounded build over a 2,400-task history scan would shuffle
     *     `numMapTasks × filterBytes` — hundreds of GB of partials for
     *     a filter the driver merges down to one. Coalesce is a narrow
     *     dependency (no shuffle of the rows), so bounding the build
-    *     caps partial traffic at `maxBuildTasks × filterBytes` at the
-    *     price of wider build tasks; the 8-byte hash projection keeps
-    *     even a 10⁹-row build task cheap;
+    *     caps partial traffic at `64 × filterBytes` at the price of
+    *     wider build tasks; the 8-byte hash projection keeps even a
+    *     10⁹-row build task cheap;
     *  2. Bloom-NEGATIVE incoming rows are DEFINITELY new (Bloom
     *     filters have no false negatives): they bypass the join
     *     entirely as a pure map-side filter — zero shuffle for
@@ -1169,18 +1141,11 @@ object CorpusOps {
     * trade bits for confirm-join traffic). An undersized
     * `expectedItems` saturates the filter and quietly degrades the
     * prefilter toward pass-through, so the build WARNS when the
-    * realized `expectedFpp()` exceeds 2× the request. Past the
-    * ceiling, pass `prefilter = false`: no Bloom is built at all and
-    * the operator IS the plain left-anti join — still the exact
-    * answer, and still Exchange-free on the history side when
-    * `historical` is the bucketed index (the BucketedJoinSpec-gated
-    * path); you give up only the map-side bypass of the incoming
-    * batch.
+    * realized `expectedFpp()` exceeds 2× the request.
     *
-    * BEYOND the driver ceiling — partitioned-Bloom design
-    * (IMPLEMENTED: [[dedupAgainstPartitioned]]): keep the map-side
-    * bypass at ANY history size by sharding the filter on the SAME
-    * key the bucketed history index already uses,
+    * BEYOND the driver ceiling — [[dedupAgainstPartitioned]]: keep
+    * the map-side bypass at ANY history size by sharding the filter
+    * on the SAME key the bucketed history index already uses,
     * `xxhash64(text) pmod nBuckets`. Build pass: [[bloomShards]] —
     * repartition the 8-byte hash projection on the bucket id and
     * build exactly ONE filter per bucket inside its partition (no
@@ -1199,58 +1164,12 @@ object CorpusOps {
     * the bucketed index's own key, so the confirm join that follows
     * stays Exchange-free on the history side.
     */
-  /** Saturation check for [[dedupAgainst]]'s Bloom (pure, so the spec
-    * can pin the threshold without capturing stderr): Some(warning)
-    * when the realized fpp — `expectedFpp()` computed from the built
-    * filter's bit density — materially (2×: far past sizing noise)
-    * exceeds the requested one, i.e. `expectedItems` undersized the
-    * actual history and the prefilter is degrading toward
-    * pass-through.
-    */
-  private[text] def bloomSaturationWarning(
-      realizedFpp: Double, requestedFpp: Double,
-      expectedItems: Long): Option[String] =
-    if (realizedFpp > requestedFpp * 2.0)
-      Some(f"WARN dedupAgainst: Bloom saturated — realized fpp " +
-        f"$realizedFpp%.4f vs requested $requestedFpp%.4f; " +
-        s"expectedItems $expectedItems undersizes the history " +
-        "(prefilter degrades toward pass-through; raise expectedItems)")
-    else None
-
-  /** [[bloomSaturationWarning]]'s sharded twin (pure, spec-pinnable):
-    * Some(warning) when any shard's realized fpp exceeds 2× the
-    * request, naming the WORST bucket and counting how many shards are
-    * past the threshold — undersized `expectedItemsPerBucket` rarely
-    * saturates just one shard, and the count says whether the sizing
-    * or the hash spread is at fault.
-    */
-  private[text] def shardSaturationWarning(
-      perBucket: Seq[(Long, Double)], requestedFpp: Double,
-      expectedItemsPerBucket: Long): Option[String] = {
-    val over = perBucket.filter(_._2 > requestedFpp * 2.0)
-    if (over.isEmpty) None
-    else {
-      val (worstBucket, worstFpp) = over.maxBy(_._2)
-      Some(f"WARN dedupAgainstPartitioned: ${over.size} of " +
-        f"${perBucket.size} Bloom shards saturated — worst bucket " +
-        f"$worstBucket realized fpp $worstFpp%.4f vs requested " +
-        f"$requestedFpp%.4f; expectedItemsPerBucket " +
-        s"$expectedItemsPerBucket undersizes the history (prefilter " +
-        "degrades toward pass-through; raise expectedItemsPerBucket " +
-        "or nBuckets)")
-    }
-  }
-
   def dedupAgainst(
       incoming: DataFrame, historical: DataFrame, textCol: String,
       expectedItems: Long, fpp: Double = 0.01,
-      confirm: Boolean = true, prefilter: Boolean = true,
-      maxBuildTasks: Int = 64): DataFrame = {
+      confirm: Boolean = true): DataFrame = {
     require(expectedItems > 0, s"expectedItems $expectedItems")
-    require(maxBuildTasks > 0, s"maxBuildTasks $maxBuildTasks")
     require(fpp > 0.0 && fpp < 1.0, s"fpp $fpp not in (0,1)")
-    require(prefilter || confirm,
-      "prefilter=false with confirm=false would keep every duplicate")
     require(!historical.isStreaming,
       "historical must be a batch snapshot (the Bloom side is built " +
         "by an action at plan time)")
@@ -1271,23 +1190,15 @@ object CorpusOps {
       require(!incoming.columns.exists(_.equalsIgnoreCase(n)),
         s"incoming already has a $n column")
     }
-    // The right side carries ONLY the renamed text key, so the join
-    // key is unambiguous even when incoming and historical share
-    // lineage (the q62 re-crawl demo splits one table).
-    def antiJoin(left: DataFrame): DataFrame = left.join(
-      historical.select(col(textCol).as(ht)),
-      col(textCol) === col(ht), "left_anti")
-    if (!prefilter) return antiJoin(incoming)
     // Bounded-partials build (see the scaladoc's step 1): coalesce the
     // narrow hash projection so treeAggregate's per-partition partial
-    // filters number at most `maxBuildTasks`, whatever the history
-    // scan's task count — partial traffic is maxBuildTasks × filterBytes
-    // instead of numMapTasks × filterBytes. A no-op (and plan-free)
-    // when the scan already has fewer partitions.
+    // filters number at most MaxBloomBuildTasks, whatever the history
+    // scan's task count. A no-op (and plan-free) when the scan already
+    // has fewer partitions.
     val bloom = historical
       .where(col(textCol).isNotNull)
       .select(xxhash64(col(textCol)).as("_h"))
-      .coalesce(maxBuildTasks)
+      .coalesce(MaxBloomBuildTasks)
       .stat.bloomFilter("_h", expectedItems, fpp)
     // No silent caps: an `expectedItems` far below the real history
     // count saturates the filter, the prefilter degrades toward
@@ -1318,7 +1229,12 @@ object CorpusOps {
       val suspects = hashed
         .where(col(textCol).isNotNull && mightContain(col(bh)))
         .drop(bh)
-      definitelyNew.unionByName(antiJoin(suspects))
+      // The right side carries ONLY the renamed text key, so the join
+      // key is unambiguous even when incoming and historical share
+      // lineage (the q62 re-crawl demo splits one table).
+      definitelyNew.unionByName(suspects.join(
+        historical.select(col(textCol).as(ht)),
+        col(textCol) === col(ht), "left_anti"))
     }
   }
 

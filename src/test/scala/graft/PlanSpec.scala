@@ -254,39 +254,6 @@ class PlanSpec extends SparkSpec {
     }
   }
 
-  test("gramHash=xxhash64 keeps the broadcast match shape and narrows " +
-      "every gram join key to a long") {
-    // The 100 TB key mode exists to shrink shuffle/broadcast width: the
-    // plan must still broadcast the eval-gram side (decontaminate) and
-    // every join keyed on the gram column — in both operators — must
-    // carry LongType keys, not the literal n-gram strings.
-    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
-    import org.apache.spark.sql.functions.col
-    import org.apache.spark.sql.types.LongType
-    import graft.text.CorpusOps
-    val docs = Tables.load(spark, sf0001, "documents")
-    val decon = CorpusOps.decontaminate(docs, col("doc_id") % 97 === 0,
-      "doc_id", "text", n = 5, gramHash = "xxhash64")
-    val dj = gramJoins(decon)
-    assert(dj.nonEmpty, "hashed decontaminate plans no gram join")
-    assert(dj.forall(_.isInstanceOf[BroadcastHashJoinExec]),
-      s"hashed decontaminate lost the broadcast shape:\n${dj.mkString("\n")}")
-    val spans = CorpusOps.duplicateSpans(docs, "doc_id", "text", n = 5,
-      minDocs = 2, gramHash = "xxhash64")
-    val sj = gramJoins(spans)
-    assert(sj.nonEmpty, "hashed duplicateSpans plans no gram join")
-    (dj ++ sj).foreach { j =>
-      val bad = (j.asInstanceOf[org.apache.spark.sql.execution.joins
-          .BaseJoinExec].leftKeys ++
-        j.asInstanceOf[org.apache.spark.sql.execution.joins
-          .BaseJoinExec].rightKeys)
-        .filter(k => k.references.exists(_.name == "gram"))
-        .filterNot(_.dataType == LongType)
-      assert(bad.isEmpty,
-        s"gram join key still string-typed in hashed mode: $bad\n$j")
-    }
-  }
-
   test("per-row curation passes (repetition, PII scrub, split assign) " +
       "plan zero exchanges") {
     // These are the 100 TB scrub-pass shape: scan → project → write,

@@ -2,6 +2,7 @@ package graft.metrics
 
 import java.util.concurrent.CountDownLatch
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd}
 import org.apache.spark.sql.functions.broadcast
 
 import graft.SparkSpec
@@ -67,5 +68,27 @@ class JobLogSpec extends SparkSpec {
         scope.jobs.toString)
       assert(scope.stages.exists(_.shuffleWrite > 0), scope.stages.toString)
     }
+  }
+
+  test("the scope waits for job ends that a slow listener ahead of it " +
+      "on the shared bus queue holds back") {
+    // One thread calls the shared queue's listeners in order, so the
+    // recorder sees each job end only after this listener returns.
+    val slow = new SparkListener {
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        Thread.sleep(200)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(slow)
+    try {
+      val scope = JobLog.scoped(sc) {
+        spark.range(0, 5000, 1, 4).selectExpr("id % 5 AS k")
+          .groupBy("k").count().collect()
+      }
+      assert(scope.result.length == 5)
+      assert(scope.jobs.size >= 2, scope.jobs.toString)
+      assert(scope.jobs.forall(j => j.end > 0 && j.end >= j.start),
+        scope.jobs.toString)
+    } finally sc.removeSparkListener(slow)
   }
 }

@@ -52,44 +52,6 @@ class CorpusStreamSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("decontaminateStream gramHash=xxhash64 flags exactly the " +
-      "literal-mode docs (and keeps the watermark-mode schema)") {
-    // The 100 TB key mode must not change a single streaming decision —
-    // the stream twin of CorpusOpsSpec's batch answer-equality gate,
-    // closing the untested-flag gap for the streaming consumer.
-    import java.sql.Timestamp
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val evalDocs = Seq((0L, evalText)).toDF("doc_id", "text")
-    val input = MemoryStream[(Long, String)]
-    val out = CorpusOps.decontaminateStream(
-      input.toDF().toDF("doc_id", "text"), evalDocs, "doc_id", "text", 5,
-      gramHash = "xxhash64")
-    val q = out.writeStream.format("memory").queryName("decon_hash_out")
-      .outputMode("append").start()
-    try {
-      input.addData(
-        (1L, "quick brown fox jumps over a sleeping cat"),
-        (2L, "totally different words in this one here now"),
-        (3L, evalText),
-        (4L, "nothing shared here either in any window"))
-      q.processAllAvailable()
-      input.addData((1L, "quick brown fox jumps over a sleeping cat"))
-      q.processAllAvailable() // re-delivery still suppressed
-      val flagged = spark.table("decon_hash_out")
-        .as[Long].collect().sorted.toSeq
-      assert(flagged == Seq(1L, 3L), s"hashed stream flagged $flagged")
-    } finally q.stop()
-    // Watermark mode composes with the hashed key: the emitted frame
-    // still carries (idCol, event-time) in that order.
-    val wmInput = MemoryStream[(Timestamp, Long, String)]
-    val wmOut = CorpusOps.decontaminateStream(
-      wmInput.toDF().toDF("ts", "doc_id", "text"), evalDocs,
-      "doc_id", "text", 5, watermark = Some(("ts", "10 minutes")),
-      gramHash = "xxhash64")
-    assert(wmOut.schema.fieldNames.toSeq == Seq("doc_id", "ts"))
-  }
-
   test("decontaminateStream with a watermark suppresses re-deliveries " +
       "inside the delay, expires state past it, and emits event time") {
     import java.sql.Timestamp

@@ -313,8 +313,8 @@ class IncrementalDedupSpec extends SparkSpec {
   }
 
   test("boilerplateLineStream emits exactly the batch-flagged line " +
-      "keys, each exactly once, across micro-batches, redeliveries, " +
-      "and both key modes") {
+      "keys, each exactly once, across micro-batches and " +
+      "redeliveries") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     implicit val s = spark
@@ -328,52 +328,37 @@ class IncrementalDedupSpec extends SparkSpec {
         vocab(rnd.nextInt(vocab.length))).mkString(" "))
     }
     val maxDocs = 30
-    def batchFlagged(mode: String): Set[String] = {
-      val docs = rows.toDF("doc_id", "text")
-      val keyed = docs
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("_l"))
-        .select(
-          (if (mode == "xxhash64") xxhash64(col("_l")).cast("string")
-           else col("_l")).as("k"), col("doc_id"))
-      keyed.groupBy("k").agg(countDistinct("doc_id").as("nd"))
-        .where(col("nd") > maxDocs)
-        .select("k").as[String].collect().toSet
-    }
-    Seq("literal", "xxhash64").foreach { mode =>
-      val input = MemoryStream[(Long, String)]
-      val out = IncrementalDedup.boilerplateLineStream(
-        input.toDF().toDF("doc_id", "text"), maxDocs,
-        delimiter = " ", lineHash = mode)
-      val q = out.writeStream.format("memory")
-        .queryName(s"boiler_out_$mode").outputMode("append").start()
-      try {
-        rows.grouped(40).foreach { chunk =>
-          input.addData(chunk)
-          q.processAllAvailable()
-        }
-        input.addData(rows.take(25)) // redelivery: no re-count, no re-emit
-        q.processAllAvailable()
-        val emitted = spark.table(s"boiler_out_$mode")
-          .select("line_key", "n_docs")
-          .as[(String, Long)].collect().toSeq
-        assert(emitted.map(_._1).distinct.size == emitted.size,
-          s"$mode: a key was emitted more than once: $emitted")
-        assert(emitted.map(_._1).toSet == batchFlagged(mode),
-          s"$mode: stream flagged ${emitted.map(_._1).toSet} vs batch " +
-            batchFlagged(mode))
-        assert(emitted.forall(_._2 == maxDocs + 1L),
-          s"$mode: n_docs must be the crossing count: $emitted")
-      } finally q.stop()
-    }
-    // Guards: bad threshold, bad key mode, non-integral id.
+    val batchFlagged = rows.toDF("doc_id", "text")
+      .select(col("doc_id"), explode(split(col("text"), " ")).as("k"))
+      .groupBy("k").agg(countDistinct("doc_id").as("nd"))
+      .where(col("nd") > maxDocs)
+      .select("k").as[String].collect().toSet
     val input = MemoryStream[(Long, String)]
+    val out = IncrementalDedup.boilerplateLineStream(
+      input.toDF().toDF("doc_id", "text"), maxDocs, delimiter = " ")
+    val q = out.writeStream.format("memory")
+      .queryName("boiler_out").outputMode("append").start()
+    try {
+      rows.grouped(40).foreach { chunk =>
+        input.addData(chunk)
+        q.processAllAvailable()
+      }
+      input.addData(rows.take(25)) // redelivery: no re-count, no re-emit
+      q.processAllAvailable()
+      val emitted = spark.table("boiler_out")
+        .select("line_key", "n_docs")
+        .as[(String, Long)].collect().toSeq
+      assert(emitted.map(_._1).distinct.size == emitted.size,
+        s"a key was emitted more than once: $emitted")
+      assert(emitted.map(_._1).toSet == batchFlagged,
+        s"stream flagged ${emitted.map(_._1).toSet} vs batch $batchFlagged")
+      assert(emitted.forall(_._2 == maxDocs + 1L),
+        s"n_docs must be the crossing count: $emitted")
+    } finally q.stop()
+    // Guards: bad threshold, non-integral id.
     intercept[IllegalArgumentException] {
       IncrementalDedup.boilerplateLineStream(
         input.toDF().toDF("doc_id", "text"), 0, delimiter = " ")
-    }
-    intercept[IllegalArgumentException] {
-      IncrementalDedup.boilerplateLineStream(
-        input.toDF().toDF("doc_id", "text"), 2, lineHash = "md5")
     }
     val strInput = MemoryStream[(String, String)]
     intercept[IllegalArgumentException] {

@@ -117,33 +117,6 @@ class CorpusOpsSpec extends SparkSpec {
     assert(!strOut.exists(_._1 == "cold"))
   }
 
-  test("gramHash=xxhash64 reproduces every literal-mode decision on " +
-      "real fixture text (decontaminate and duplicateSpans)") {
-    // The 100 TB key mode shuffles 64-bit gram hashes instead of the
-    // literal span strings; on the sf0.001 documents table every flag,
-    // count, and keep decision must be identical — 64-bit collisions
-    // among thousands of grams are vanishingly unlikely, and THIS gate
-    // is what lets the mode claim answer-equality.
-    val docs = graft.Tables.load(spark, sf0001, "documents")
-    val isEval = col("doc_id") % 97 === 0
-    def decon(mode: String) =
-      CorpusOps.decontaminate(docs, isEval, "doc_id", "text", n = 5,
-          gramHash = mode)
-        .select("doc_id", "n_matched", "contaminated")
-        .as[(Long, Long, Boolean)].collect().toSet
-    assert(decon("xxhash64") === decon("literal"))
-    def spans(mode: String) =
-      CorpusOps.duplicateSpans(docs, "doc_id", "text", n = 5,
-          minDocs = 2, gramHash = mode)
-        .select("doc_id", "n_spans", "n_dup_spans", "keep")
-        .as[(Long, Long, Long, Boolean)].collect().toSet
-    assert(spans("xxhash64") === spans("literal"))
-    intercept[IllegalArgumentException] {
-      CorpusOps.decontaminate(docs, isEval, "doc_id", "text", n = 5,
-        gramHash = "md5")
-    }
-  }
-
   test("splitAssign is a stable salted partition honoring the cut points") {
     val docs = (0L until 2000L).toDF("doc_id")
     val out = CorpusOps.splitAssign(docs, "doc_id", "s1", 80, 10)
@@ -285,59 +258,6 @@ class CorpusOpsSpec extends SparkSpec {
         "source", cap = 7, salt = "c2")
       .select("source", "doc_id").as[(String, String)].collect().toSet
     assert(again === out)
-  }
-
-  test("hashFn=xxhash64 keeps every salted-hash property (rates, " +
-      "splits, caps, mixtures) without the md5 string hop") {
-    // The 100 TB mode: same [0, 16^hexLen) range from the top bits of
-    // xxhash64, so thresholds and moduli are unchanged — only the hash
-    // draw differs. No DuckDB twin, so properties (not oracle hashes)
-    // are what binds it.
-    val docs = (0L until 3000L).map(i =>
-      (i, if (i % 3 == 0) "en" else if (i % 3 == 1) "zh" else "xx"))
-      .toDF("doc_id", "lang")
-    val sampled = CorpusOps.stratifiedSample(docs, "doc_id", "lang",
-      Map("en" -> 0.5, "zh" -> 0.0), defaultRate = 1.0, salt = "s1",
-      hashFn = "xxhash64")
-      .select("doc_id", "lang", "sampled")
-      .as[(Long, String, Boolean)].collect()
-    val byLang = sampled.groupBy(_._2)
-    assert(byLang("zh").forall(!_._3) && byLang("xx").forall(_._3))
-    val frac = byLang("en").count(_._3).toDouble / byLang("en").length
-    assert(math.abs(frac - 0.5) < 0.06, s"en fraction $frac")
-    val split = CorpusOps.splitAssign(docs, "doc_id", "s1", 80, 10,
-        hashFn = "xxhash64")
-      .select("doc_id", "bucket", "split")
-      .as[(Long, Long, String)].collect()
-    assert(split.forall { case (_, b, s) =>
-      b >= 0 && b < 100 &&
-        s == (if (b < 80) "train" else if (b < 90) "val" else "test")
-    })
-    val trainFrac = split.count(_._3 == "train").toDouble / split.length
-    assert(math.abs(trainFrac - 0.8) < 0.05, s"train fraction $trainFrac")
-    // Different draw than md5, same distribution — and deterministic.
-    val md5Split = CorpusOps.splitAssign(docs, "doc_id", "s1", 80, 10)
-      .select("doc_id", "split").as[(Long, String)].collect().toMap
-    assert(split.exists { case (id, _, s) => md5Split(id) != s })
-    val againSplit = CorpusOps.splitAssign(docs, "doc_id", "s1", 80, 10,
-        hashFn = "xxhash64")
-      .select("doc_id", "split").as[(Long, String)].collect().toMap
-    assert(split.forall { case (id, _, s) => againSplit(id) == s })
-    val copies = CorpusOps.mixtureExpand(docs, "doc_id", "lang",
-        Map("en" -> 2.5), defaultWeight = 1.0, salt = "m1",
-        hashFn = "xxhash64")
-      .select("doc_id", "lang", "copy").as[(Long, String, Int)].collect()
-    val en = copies.filter(_._2 == "en").groupBy(_._1).values.map(_.size)
-    assert(en.forall(c => c == 2 || c == 3))
-    val enMean = en.sum.toDouble / en.size
-    assert(math.abs(enMean - 2.5) < 0.1, s"en mean $enMean")
-    val cap = CorpusOps.domainCap(docs, "doc_id", "lang", cap = 9,
-        salt = "c1", hashFn = "xxhash64")
-      .select("lang", "doc_id").as[(String, Long)].collect().toSet
-    assert(cap.groupBy(_._1).forall(_._2.size == 9))
-    intercept[IllegalArgumentException] {
-      CorpusOps.splitAssign(docs, "doc_id", "s1", hashFn = "crc32")
-    }
   }
 
   test("packShards handles empty range partitions (duplicate-heavy " +
@@ -550,31 +470,9 @@ class CorpusOpsSpec extends SparkSpec {
       s"realized fpp ${bloom.expectedFpp()} should exceed 2x requested")
   }
 
-  test("dedupAgainst prefilter=false is the bare anti-join (the " +
-      "beyond-Bloom-ceiling mode): same answer, no Bloom in the plan") {
-    val docs = graft.Tables.load(spark, sf0001, "documents")
-    val incoming = docs.where(col("doc_id") % 10 >= 4)
-    val historical = docs.where(col("doc_id") % 10 < 6)
-    val bare = CorpusOps.dedupAgainst(incoming, historical, "text",
-      expectedItems = 200000L, prefilter = false)
-    assert(!bare.queryExecution.executedPlan.toString
-        .contains("bloom_might_contain"),
-      "prefilter=false must not build or apply a Bloom filter")
-    val withBloom = CorpusOps.dedupAgainst(incoming, historical, "text",
-      expectedItems = 200000L)
-    assert(bare.select("doc_id").as[Long].collect().toSet ==
-      withBloom.select("doc_id").as[Long].collect().toSet,
-      "prefilter=false diverged from the Bloom-prefiltered answer")
-    // Skipping the Bloom AND the confirm would keep every duplicate.
-    intercept[IllegalArgumentException] {
-      CorpusOps.dedupAgainst(incoming, historical, "text", 200000L,
-        confirm = false, prefilter = false)
-    }
-  }
-
   test("dropBoilerplateLines removes exactly the >maxDocs lines, " +
       "preserves order/multiplicity, passes null id/text through, " +
-      "empties all-boilerplate docs, and hashes keys identically") {
+      "and empties all-boilerplate docs") {
     // "nav" is in 3 docs, "foot" in 3, "body"/"uniq" in fewer; with
     // maxDocs = 2 exactly nav and foot are boilerplate.
     val docs = Seq(
@@ -598,17 +496,14 @@ class CorpusOpsSpec extends SparkSpec {
       Some(5L) -> None,               // null text passes through
       None -> Some("nav\nfoot\nkeep me") // null id passes through
     ), got.toString)
-    // Token grain + hashed keys: same answer as literal keys.
+    // Token grain.
     val tok = Seq((1L, "a b a c"), (2L, "a d"), (3L, "a e"))
       .toDF("doc_id", "text")
-    def ids(lineHash: String) = CorpusOps.dropBoilerplateLines(
-        tok, "doc_id", "text", maxDocs = 2, delimiter = " ",
-        lineHash = lineHash)
+    val tokOut = CorpusOps.dropBoilerplateLines(
+        tok, "doc_id", "text", maxDocs = 2, delimiter = " ")
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    val litKeys = ids("literal")
-    assert(litKeys == Map(1L -> "b c", 2L -> "d", 3L -> "e"),
-      litKeys.toString)
-    assert(ids("xxhash64") == litKeys)
+    assert(tokOut == Map(1L -> "b c", 2L -> "d", 3L -> "e"),
+      tokOut.toString)
     // Guards.
     intercept[IllegalArgumentException] {
       CorpusOps.dropBoilerplateLines(docs, "doc_id", "text", maxDocs = 0)

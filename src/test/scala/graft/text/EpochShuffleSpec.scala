@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** q71 `epochShuffle`: bijective dense positions, replay determinism,
-  * salt independence, both hash modes vs the window-ranked twin, null
+  * salt independence, equality with the window-ranked twin, null
   * handling, and the no-window plan shape.
   */
 class EpochShuffleSpec extends SparkSpec {
@@ -17,8 +17,8 @@ class EpochShuffleSpec extends SparkSpec {
     import spark.implicits._
     val docs = graft.Tables.load(spark, sf0001, "documents")
     val n = docs.count()
-    def posOf(salt: String, hashFn: String = "md5"): Seq[(Long, Long)] =
-      CorpusOps.epochShuffle(docs, "doc_id", salt, hashFn)
+    def posOf(salt: String): Seq[(Long, Long)] =
+      CorpusOps.epochShuffle(docs, "doc_id", salt)
         .select(col("doc_id"), col("shuffle_pos"))
         .as[(Long, Long)].collect().toSeq.sortBy(_._1)
     val e1 = posOf("epoch-1")
@@ -28,10 +28,6 @@ class EpochShuffleSpec extends SparkSpec {
     val e2 = posOf("epoch-2")
     assert(e2.map(_._2).sorted == (1L to n).toSeq)
     assert(e2 != e1, "a new salt must give a new permutation")
-    val x1 = posOf("epoch-1", "xxhash64")
-    assert(x1.map(_._2).sorted == (1L to n).toSeq,
-      "xxhash64 mode must also be a bijection")
-    assert(x1 != e1, "the two hash modes are different permutations")
     // Null ids carry no identity: excluded, everything else ranked.
     val withNull = Seq[(Option[Long], String)](
       (Some(1L), "a"), (None, "b"), (Some(2L), "c"))
@@ -45,32 +41,25 @@ class EpochShuffleSpec extends SparkSpec {
       CorpusOps.epochShuffle(withNull.withColumn("_h", lit(1)),
         "doc_id", "s")
     }
-    intercept[IllegalArgumentException] {
-      CorpusOps.epochShuffle(withNull, "doc_id", "s", hashFn = "sha1")
-    }
     ()
   }
 
-  test("epochShuffle equals the row_number-window twin in BOTH hash " +
-      "modes on the fixture") {
+  test("epochShuffle equals the row_number-window twin on the " +
+      "fixture") {
     import spark.implicits._
     val docs = graft.Tables.load(spark, sf0001, "documents")
-    def twin(h: org.apache.spark.sql.Column): Seq[(Long, Long)] =
-      docs.where(col("doc_id").isNotNull)
-        .select(col("doc_id"), h.as("hk"))
-        .withColumn("shuffle_pos", row_number()
-          .over(Window.orderBy(col("hk"), col("doc_id"))).cast("long"))
-        .select(col("doc_id"), col("shuffle_pos"))
-        .as[(Long, Long)].collect().toSeq.sorted
-    def ours(hashFn: String): Seq[(Long, Long)] =
-      CorpusOps.epochShuffle(docs, "doc_id", "ez", hashFn)
-        .select(col("doc_id"), col("shuffle_pos"))
-        .as[(Long, Long)].collect().toSeq.sorted
     val salted = concat(lit("ez:"), col("doc_id").cast("string"))
-    assert(ours("md5") ==
-      twin(conv(substring(md5(salted), 1, 15), 16, 10).cast("long")))
-    assert(ours("xxhash64") ==
-      twin(shiftrightunsigned(xxhash64(salted), 4)))
+    val twin = docs.where(col("doc_id").isNotNull)
+      .select(col("doc_id"),
+        conv(substring(md5(salted), 1, 15), 16, 10).cast("long").as("hk"))
+      .withColumn("shuffle_pos", row_number()
+        .over(Window.orderBy(col("hk"), col("doc_id"))).cast("long"))
+      .select(col("doc_id"), col("shuffle_pos"))
+      .as[(Long, Long)].collect().toSeq.sorted
+    val ours = CorpusOps.epochShuffle(docs, "doc_id", "ez")
+      .select(col("doc_id"), col("shuffle_pos"))
+      .as[(Long, Long)].collect().toSeq.sorted
+    assert(ours == twin)
   }
 
   test("epochShuffle plan: no single-task window anywhere") {

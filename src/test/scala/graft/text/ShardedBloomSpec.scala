@@ -21,8 +21,8 @@ class ShardedBloomSpec extends SparkSpec {
       df.select("doc_id").as[Long].collect().toSet
     val driver = ids(CorpusOps.dedupAgainst(incoming, historical, "text",
       expectedItems = 1000L))
-    val bare = ids(CorpusOps.dedupAgainst(incoming, historical, "text",
-      expectedItems = 1000L, prefilter = false))
+    val bare = ids(incoming.join(historical.select(col("text").as("_t")),
+      col("text") === col("_t"), "left_anti"))
     Seq(1, 7, 64).foreach { nBuckets =>
       val sharded = ids(CorpusOps.dedupAgainstPartitioned(
         incoming, historical, "text", nBuckets,
