@@ -412,9 +412,9 @@ object Multimodal {
     * happen here; the JDK ships no video codec, so those derive a
     * deterministic 8-dim fake feature from the payload's md5 — keeping
     * the distributed plumbing (partition-level batching, fixed-size
-    * output schema) real and testable. The
-    * MP4 CONTAINER (duration, track count, display dimensions) is
-    * parsed for real in [[mp4Header]]/[[mediaInfo]].
+    * output schema) real and testable. The MP4 CONTAINER (duration,
+    * track count, display dimensions) is parsed for real in
+    * [[mp4Header]]/[[mediaInfo]].
     */
   def featurize(
       df: DataFrame,
