@@ -329,16 +329,15 @@ object TextAnnQueries {
       },
       Some(nearDupOracleSql)),
 
-    // Multimodal plumbing: opaque binary column + typed metadata
-    // (decode stubbed per harness instructions; the byte-level plumbing
-    // is real and oracle-checked).
+    // Binary-column plumbing: the document text as an opaque binary
+    // payload, its byte length and leading bytes as pure column
+    // expressions (no decode).
     QueryDef(
       "q47_binary_meta",
       (s, dir) => graft.multimodal.Multimodal.withByteStats(
         Tables.load(s, dir, "documents")
           .select(col("doc_id"), col("text").cast("binary").as("payload")),
-        "payload", "doc_id")
-        .select("doc_id", "n_bytes", "header_hex"),
+        "payload", "doc_id"),
       Some("""SELECT doc_id,
           octet_length(CAST(text AS BLOB)) AS n_bytes,
           lower(to_hex(CAST(substring(text, 1, 4) AS BLOB))) AS header_hex

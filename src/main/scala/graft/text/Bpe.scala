@@ -307,63 +307,14 @@ object Bpe {
     out.toSeq
   }
 
-  /** The learned merge table as a (driver-local, K-row) DataFrame —
-    * the artifact a trainer ships alongside the encoded corpus:
-    * `(merge_rank INT, lhs, rhs, pair_count BIGINT)` in application
-    * order.
+  /** The learned merge table as a (driver-local, K-row) DataFrame,
+    * q73's output: `(merge_rank INT, lhs, rhs, pair_count BIGINT)` in
+    * application order.
     */
   def mergesToDf(spark: SparkSession, merges: Seq[Merge]): DataFrame = {
     import spark.implicits._
     merges.map(m => (m.rank, m.l, m.r, m.pairCount))
       .toDF("merge_rank", "lhs", "rhs", "pair_count")
-  }
-
-  /** Persist a learned merge table as a parquet artifact — the
-    * tokenizer a trainer ships alongside its data (the
-    * [[graft.model.Settings]] discipline at the tokenizer grain).
-    * Written via [[mergesToDf]]'s schema; rank order is the contract.
-    */
-  def saveMerges(spark: SparkSession, path: String,
-      merges: Seq[Merge]): Unit =
-    mergesToDf(spark, merges).repartition(1)
-      .write.mode("overwrite").parquet(path)
-
-  /** Load a [[saveMerges]] artifact back, in rank order. Fails loudly
-    * on a rank sequence with gaps or duplicates — a corrupt artifact
-    * must not silently re-rank the tokenizer.
-    */
-  def loadMerges(spark: SparkSession, path: String): Seq[Merge] = {
-    val rows = spark.read.parquet(path)
-      .select(col("merge_rank"), col("lhs"), col("rhs"),
-        col("pair_count"))
-      .orderBy("merge_rank")
-      .collect()
-      .map(r => Merge(r.getInt(0), r.getString(1), r.getString(2),
-        r.getLong(3)))
-      .toSeq
-    require(rows.map(_.rank) == (1 to rows.size),
-      s"merge artifact at $path has a corrupt rank sequence: " +
-        rows.map(_.rank).mkString(","))
-    rows
-  }
-
-  /** Deterministic MD5 of a merge table's semantic content (ranked
-    * pairs — counts excluded: two corpora learning the same merges in
-    * the same order ARE the same tokenizer). The tokenizer twin of the
-    * model-definition hash (P9): encode artifacts stamped with it are
-    * mutually compatible iff the hashes match. The canonical form
-    * LENGTH-PREFIXES each symbol, so it is injective for ANY symbol
-    * content — learnBpe splits only on single spaces, so symbols can
-    * legitimately contain newlines/tabs, and a separator-based form
-    * would let two distinct tables collide.
-    */
-  def mergesHash(merges: Seq[Merge]): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val canonical = merges
-      .map(m => s"${m.rank}|${m.l.length}:${m.l}|${m.r.length}:${m.r}")
-      .mkString("\n")
-    md.digest(canonical.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
   }
 
   /** Encode documents into BPE pieces with a fixed merge table:

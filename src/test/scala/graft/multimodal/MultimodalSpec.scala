@@ -1,13 +1,12 @@
 package graft.multimodal
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkSpec
 
-/** Byte-exact synthetic BMP/WAV payloads through the REAL decoders —
-  * dimensions, grayscale stats, sample rate, duration, RMS, and
-  * zero-crossing rate are asserted against hand-computed values, and
-  * featurize's routing (real decode vs stub fallback) is verified.
+/** The image near-dup path q75 and the streaming image family run:
+  * [[Multimodal.dHash60]] against a driver-side integer reference
+  * (BMP, PNG and malformed payloads), its perceptual robustness under
+  * a lossy JPEG re-encode, and [[Multimodal.imageNearDups]]' exact
+  * recall of the planted fixture pairs.
   */
 class MultimodalSpec extends SparkSpec {
   import spark.implicits._
@@ -18,40 +17,6 @@ class MultimodalSpec extends SparkSpec {
   }
   private def putLe16(b: Array[Byte], i: Int, v: Int): Unit = {
     b(i) = (v & 0xff).toByte; b(i + 1) = ((v >> 8) & 0xff).toByte
-  }
-
-  /** Uncompressed bottom-up 24bpp BMP with per-pixel (r,g,b). */
-  private def makeBmp(w: Int, h: Int)(
-      pixel: (Int, Int) => (Int, Int, Int)): Array[Byte] = {
-    val stride = ((w * 3 + 3) / 4) * 4
-    val b = new Array[Byte](54 + stride * h)
-    b(0) = 'B'; b(1) = 'M'
-    putLe32(b, 2, b.length); putLe32(b, 10, 54); putLe32(b, 14, 40)
-    putLe32(b, 18, w); putLe32(b, 22, h)
-    putLe16(b, 26, 1); putLe16(b, 28, 24)
-    putLe32(b, 30, 0); putLe32(b, 34, stride * h)
-    for (y <- 0 until h; x <- 0 until w) {
-      val (r, g, bl) = pixel(x, y)
-      val p = 54 + (h - 1 - y) * stride + x * 3 // rows bottom-up, BGR
-      b(p) = bl.toByte; b(p + 1) = g.toByte; b(p + 2) = r.toByte
-    }
-    b
-  }
-
-  /** 16-bit PCM mono/stereo WAV. */
-  private def makeWav(rate: Int, channels: Int,
-      samples: Array[Short]): Array[Byte] = {
-    val dataSize = samples.length * 2
-    val b = new Array[Byte](44 + dataSize)
-    "RIFF".getBytes.copyToArray(b, 0); putLe32(b, 4, b.length - 8)
-    "WAVE".getBytes.copyToArray(b, 8)
-    "fmt ".getBytes.copyToArray(b, 12); putLe32(b, 16, 16)
-    putLe16(b, 20, 1); putLe16(b, 22, channels); putLe32(b, 24, rate)
-    putLe32(b, 28, rate * channels * 2); putLe16(b, 32, channels * 2)
-    putLe16(b, 34, 16)
-    "data".getBytes.copyToArray(b, 36); putLe32(b, 40, dataSize)
-    samples.zipWithIndex.foreach { case (s, i) => putLe16(b, 44 + 2 * i, s) }
-    b
   }
 
   /** Real JPEG/PNG bytes, encoded by the same stock-JDK ImageIO the
@@ -69,173 +34,6 @@ class MultimodalSpec extends SparkSpec {
     assert(javax.imageio.ImageIO.write(img, fmt, bos),
       s"JDK has no $fmt writer")
     bos.toByteArray
-  }
-
-  private def putBe32(b: Array[Byte], i: Int, v: Long): Unit = {
-    b(i) = (v >>> 24).toByte; b(i + 1) = (v >>> 16).toByte
-    b(i + 2) = (v >>> 8).toByte; b(i + 3) = v.toByte
-  }
-
-  /** One ISO BMFF box: 32-bit big-endian size + type + body. */
-  private def beBox(tpe: String, body: Array[Byte]): Array[Byte] = {
-    val out = new Array[Byte](8 + body.length)
-    putBe32(out, 0, out.length.toLong)
-    tpe.getBytes("ISO-8859-1").copyToArray(out, 4)
-    body.copyToArray(out, 8)
-    out
-  }
-
-  test("MP4 container parse: real duration, track count, and video " +
-      "dimensions; strict on malformed sizes") {
-    import spark.implicits._
-    // v0 mvhd: timescale 600 at +12, duration 3000 at +16 => 5 s; video
-    // tkhd carries 640x360 as 16.16 fixed at +76/+80, audio tkhd zeros.
-    val mvhd = new Array[Byte](100)
-    putBe32(mvhd, 12, 600); putBe32(mvhd, 16, 3000)
-    val tkhdVideo = new Array[Byte](84)
-    putBe32(tkhdVideo, 76, 640L << 16); putBe32(tkhdVideo, 80, 360L << 16)
-    val tkhdAudio = new Array[Byte](84)
-    val mp4 = beBox("ftyp", "isomiso2".getBytes) ++ beBox("moov",
-      beBox("mvhd", mvhd) ++
-        beBox("trak", beBox("tkhd", tkhdVideo)) ++
-        beBox("trak", beBox("tkhd", tkhdAudio)))
-    val m = Multimodal.mp4Header(mp4).get
-    assert(math.abs(m.duration_s - 5.0) < 1e-9 && m.n_tracks == 2 &&
-      m.width == 640 && m.height == 360, s"parsed $m")
-    // v1 mvhd: 64-bit times — timescale at +20, 64-bit duration at +24.
-    val mvhd1 = new Array[Byte](112)
-    mvhd1(0) = 1
-    putBe32(mvhd1, 20, 1000); putBe32(mvhd1, 24 + 4, 2500)
-    val mp4v1 = beBox("ftyp", "isomiso2".getBytes) ++
-      beBox("moov", beBox("mvhd", mvhd1))
-    val m1 = Multimodal.mp4Header(mp4v1).get
-    assert(math.abs(m1.duration_s - 2.5) < 1e-9 && m1.n_tracks == 0)
-    // A box whose declared size runs past the buffer must abort to
-    // None, not read out of bounds (same contract as bmp/wav headers).
-    val bad = beBox("ftyp", "isomiso2".getBytes) ++
-      Array[Byte](0, 0, 1, 0) ++ "moov".getBytes
-    assert(Multimodal.mp4Header(bad).isEmpty)
-    assert(Multimodal.mp4Header("not an mp4 at all".getBytes).isEmpty)
-    // A 64-bit largesize near Long.MaxValue must not wrap `pos + size`
-    // negative and slip past the bounds check (overflow-free compare).
-    val huge = beBox("ftyp", "isomiso2".getBytes) ++
-      Array[Byte](0, 0, 0, 1) ++ "moov".getBytes ++
-      new Array[Byte](8) ++ new Array[Byte](16)
-    putBe32(huge, huge.length - 24 + 0, (Long.MaxValue >> 32) & 0xffffffffL)
-    putBe32(huge, huge.length - 24 + 4, Long.MaxValue & 0xffffffffL)
-    assert(Multimodal.mp4Header(huge).isEmpty)
-    // mediaInfo routes the container metadata; withByteStats sniffs it.
-    val df = Seq((9L, mp4)).toDF("id", "payload")
-    val info = Multimodal.mediaInfo(df, "payload", "id").collect().head
-    assert(info.kind == "mp4" && info.width == 640 && info.height == 360 &&
-      math.abs(info.duration_s - 5.0) < 1e-9)
-    assert(Multimodal.withByteStats(df, "payload", "id")
-      .select("kind").head().getString(0) == "mp4")
-  }
-
-  test("PNG decode (lossless) matches the equivalent BMP feature exactly") {
-    val pattern = (x: Int, _: Int) =>
-      if (x < 2) (0, 0, 0) else (255, 255, 255)
-    val png = Multimodal.decodeImageFeatures(makeImage("png", 4, 2)(pattern))
-    assert(png.isDefined, "PNG must take the real ImageIO path")
-    val bmp = Multimodal.decodeBmpFeatures(makeBmp(4, 2)(pattern)).get
-    png.get.zip(bmp).zipWithIndex.foreach { case ((p, b), i) =>
-      assert(math.abs(p - b) < 1e-6f, s"feature $i: png $p vs bmp $b")
-    }
-  }
-
-  test("JPEG decode: real dimensions and near-exact stats on uniform gray") {
-    // Uniform mid-gray: JPEG is lossy but DC-only content survives
-    // almost exactly; the mean must land within a quantization step.
-    val jpg = makeImage("jpg", 16, 8)((_, _) => (128, 128, 128))
-    val f = Multimodal.decodeImageFeatures(jpg).get
-    assert(math.abs(f(0) - 128 / 255.0f) < 0.02f, s"mean ${f(0)}")
-    assert(f(1) < 0.02f, s"std ${f(1)}")
-    assert(f(6) == 2.0f, s"aspect ${f(6)}")
-    assert(f(7) == 1.0f, "image-family marker")
-  }
-
-  test("BMP decode: exact grayscale stats and quadrant downsample") {
-    // 4x2, left half black, right half white.
-    val bmp = makeBmp(4, 2)((x, _) =>
-      if (x < 2) (0, 0, 0) else (255, 255, 255))
-    val f = Multimodal.decodeBmpFeatures(bmp).get
-    assert(math.abs(f(0) - 0.5f) < 1e-6, s"mean ${f(0)}")
-    assert(math.abs(f(1) - 0.5f) < 1e-6, s"std ${f(1)}")
-    assert(f(2) == 0.0f && f(4) == 0.0f, "left quads black")
-    assert(f(3) == 1.0f && f(5) == 1.0f, "right quads white")
-    assert(f(6) == 2.0f, s"aspect ${f(6)}")
-  }
-
-  test("WAV decode: exact duration, RMS, and zero-crossing rate") {
-    // 1 s of 8 kHz mono square wave at half amplitude.
-    val square = Array.tabulate(8000)(i =>
-      (if (i % 2 == 0) 16384 else -16384).toShort)
-    val f = Multimodal.decodeWavFeatures(makeWav(8000, 1, square)).get
-    assert(math.abs(f(0) - 0.5f) < 1e-3, s"rms ${f(0)}")
-    assert(math.abs(f(1) - 1.0f) < 1e-3, s"zcr ${f(1)}")
-    assert(math.abs(f(2) - 1.0f) < 1e-6, s"duration ${f(2)}")
-    // Silence: zero RMS, zero crossings.
-    val s = Multimodal.decodeWavFeatures(
-      makeWav(8000, 1, new Array[Short](8000))).get
-    assert(s(0) == 0.0f && s(1) == 0.0f)
-  }
-
-  test("mediaInfo extracts typed metadata per format") {
-    import spark.implicits._
-    val rows = Seq(
-      (Some(1L), makeBmp(6, 3)((_, _) => (10, 20, 30))),
-      (Some(2L), makeWav(16000, 2, new Array[Short](16000 * 2))), // 1 s
-      (Some(3L), "not media".getBytes),
-      (Some(4L), makeImage("png", 5, 7)((_, _) => (1, 2, 3))),
-      (Some(5L), makeImage("jpg", 9, 4)((_, _) => (200, 100, 50))),
-      // A null id must be DROPPED, not deserialize into the primitive
-      // tuple and kill the stage.
-      (None, makeBmp(2, 2)((_, _) => (0, 0, 0))))
-      .toDF("id", "payload")
-    val info = Multimodal.mediaInfo(rows, "payload", "id")
-      .collect().map(i => i.id -> i).toMap
-    assert(info.size == 5, s"null-id row must vanish: ${info.keys}")
-    assert(info(1L).kind == "bmp" && info(1L).width == 6 &&
-      info(1L).height == 3)
-    assert(info(2L).kind == "wav" && info(2L).sample_rate == 16000 &&
-      info(2L).channels == 2 && math.abs(info(2L).duration_s - 1.0) < 1e-9)
-    assert(info(3L).kind == "unknown")
-    assert(info(4L).kind == "png" && info(4L).width == 5 &&
-      info(4L).height == 7)
-    assert(info(5L).kind == "jpeg" && info(5L).width == 9 &&
-      info(5L).height == 4)
-  }
-
-  test("header-only tkhd box ending at the buffer parses without " +
-      "reading out of bounds") {
-    // The tkhd version byte is PAYLOAD: a size-8 box (header only) at
-    // the very end of the buffer has s3 == e3 == b.length, and an
-    // unguarded u8 read threw ArrayIndexOutOfBoundsException — one
-    // hostile row killing the task, against the strict-on-malformed
-    // contract.
-    val mp4 = beBox("ftyp", "isomiso2".getBytes) ++
-      beBox("moov", beBox("trak", beBox("tkhd", Array.empty[Byte])))
-    val m = Multimodal.mp4Header(mp4)
-    assert(m.isDefined && m.get.n_tracks == 1 &&
-      m.get.width == 0 && m.get.height == 0, s"parsed $m")
-  }
-
-  test("RIFF payloads without a WAVE form type are not sniffed as wav") {
-    import spark.implicits._
-    // RIFF is a container family — WebP and AVI share the magic. The
-    // sniff must require WAVE at offset 8 like wavHeader does, or the
-    // two surfaces disagree and image/video payloads route down the
-    // audio path.
-    val webp = "RIFF".getBytes ++ Array[Byte](0, 0, 0, 20) ++
-      "WEBPVP8 ".getBytes ++ new Array[Byte](12)
-    val wav = makeWav(8000, 1, new Array[Short](80))
-    val kinds = Multimodal.withByteStats(
-        Seq((1L, webp), (2L, wav)).toDF("id", "payload"), "payload", "id")
-      .select("id", "kind").collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(kinds(1L) == "unknown", s"WebP sniffed as ${kinds(1L)}")
-    assert(kinds(2L) == "wav")
   }
 
   test("dHash60: integer-space reference equality on random pixel " +
@@ -283,6 +81,22 @@ class MultimodalSpec extends SparkSpec {
     assert(Multimodal.dHash60(null) == null)
     assert(Multimodal.dHash60(Array[Byte](1, 2, 3)) == null)
     assert(Multimodal.dHash60("RIFFxxxxWAVE".getBytes) == null)
+    // Crafted BMP headers: each must be refused (null), never read out
+    // of bounds. Width 2^30 overflows an Int `w * 3` stride to a
+    // negative number that would pass the size check.
+    def crafted(edit: Array[Byte] => Unit): Array[Byte] = {
+      val b = Multimodal.synthBmp(4, 2, (_, _) => 7)
+      edit(b); b
+    }
+    Seq(
+      "width 0x40000000" -> crafted(putLe32(_, 18, 0x40000000)),
+      "bpp 32" -> crafted(putLe16(_, 28, 32)),
+      "compression 1" -> crafted(putLe32(_, 30, 1)),
+      "pixel offset 40" -> crafted(putLe32(_, 10, 40)),
+      "truncated pixels" -> crafted(_ => ()).dropRight(1)
+    ).foreach { case (what, b) =>
+      assert(Multimodal.dHash60(b) == null, s"crafted BMP ($what)")
+    }
     // Negative ids fail LOUDLY: DuckDB's truncating // and % would
     // silently disagree with floorDiv/floorMod below zero.
     intercept[IllegalArgumentException] {
@@ -380,34 +194,4 @@ class MultimodalSpec extends SparkSpec {
       pairs.queryExecution.analyzed.toString.contains("image_dhash"), ps)
   }
 
-  test("featurize routes real decoders and falls back to the stub") {
-    import spark.implicits._
-    // ftyp box at offset 4 = the MP4 magic; no JDK video codec, so this
-    // is the one payload class that must still hit the stub.
-    val mp4ish = Array[Byte](0, 0, 0, 24) ++ "ftypisom".getBytes ++
-      new Array[Byte](12)
-    val rows = Seq(
-      (1L, makeBmp(4, 4)((_, _) => (255, 255, 255))),
-      (2L, makeWav(8000, 1, new Array[Short](800))),
-      (3L, Array[Byte](1, 2, 3, 4)),
-      (4L, makeImage("png", 4, 4)((_, _) => (255, 255, 255))),
-      (5L, mp4ish))
-      .toDF("id", "payload")
-    val feats = Multimodal.featurize(rows, "payload", "id")
-      .collect().map(f => f.id -> f.feature).toMap
-    // Format markers: BMP features end 1.0, WAV end 2.0 (see layouts).
-    assert(feats(1L)(7) == 1.0f && feats(1L)(0) == 1.0f,
-      s"bmp feature ${feats(1L).toSeq}")
-    assert(feats(2L)(7) == 2.0f, s"wav feature ${feats(2L).toSeq}")
-    assert(feats(3L).length == 8 && feats(3L)(7) != 1.0f &&
-      feats(3L)(7) != 2.0f, "unknown payload must take the stub path")
-    assert(feats(4L)(7) == 1.0f && feats(4L)(0) == 1.0f,
-      s"white PNG must take the real ImageIO path: ${feats(4L).toSeq}")
-    assert(feats(5L)(7) != 1.0f && feats(5L)(7) != 2.0f,
-      "MP4 must take the stub path (no JDK video codec)")
-    // Stub is deterministic.
-    val again = Multimodal.featurize(rows, "payload", "id")
-      .collect().map(f => f.id -> f.feature).toMap
-    assert(again(3L).toSeq == feats(3L).toSeq)
-  }
 }

@@ -167,34 +167,6 @@ class BpeSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("merge-table artifact: parquet round-trip preserves ranks and " +
-      "counts, loud on corrupt rank sequences, mergesHash is a pure " +
-      "function of the ranked pairs") {
-    val merges = Bpe.learnBpe(lowCorpus, "text", numMerges = 4,
-      minPairCount = 1L)
-    val dir = java.nio.file.Files
-      .createTempDirectory("bpe_merges").toString + "/m.parquet"
-    Bpe.saveMerges(spark, dir, merges)
-    val loaded = Bpe.loadMerges(spark, dir)
-    assert(loaded == merges, loaded.toString)
-    assert(Bpe.mergesHash(loaded) == Bpe.mergesHash(merges))
-    // Counts excluded from the hash: same ranked pairs learned from a
-    // different corpus = the same tokenizer.
-    assert(Bpe.mergesHash(merges) ==
-      Bpe.mergesHash(merges.map(m => m.copy(pairCount = 999L))))
-    // Different order/pairs = different tokenizer.
-    assert(Bpe.mergesHash(merges) !=
-      Bpe.mergesHash(merges.reverse.zipWithIndex.map {
-        case (m, i) => m.copy(rank = i + 1)
-      }))
-    // A corrupt artifact (gap in ranks) fails loudly.
-    Bpe.saveMerges(spark, dir, merges.filter(_.rank != 2))
-    intercept[IllegalArgumentException] {
-      Bpe.loadMerges(spark, dir)
-    }
-    ()
-  }
-
   test("randomized learn differential: distributed learnBpe == " +
       "driver-side reference learn on hostile corpora, and the result " +
       "is partitioning-invariant (3 seeds)") {
