@@ -4,12 +4,16 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.execution.ExplainMode
 
 import graft.metrics.JobLog
+import graft.pipeline.PhaseLog
 
 /** Developer tool (not part of the driver contract): for each headline
   * query, or each query named by a prefix, write `.explain("formatted")`
   * to `plans/<tag>/<query>_<suffix>.txt` and print load-independent
   * structural metrics — job count, stage count, shuffle write bytes,
-  * output rows — then each Spark job and the slowest stages, so the
+  * output rows, and the classes Spark compiled for the query (its
+  * generated-code cache misses: the queries of one launch share that
+  * 100-class cache, so a later query can recompile an earlier one's) —
+  * then each Spark job and the slowest stages, so the
   * expensive jobs inside a multi-action query are attributable.
   * Wall-clock on this host swings 3-20x with ambient hypervisor steal,
   * so plan shape + shuffle volume are the signals optimization
@@ -39,6 +43,7 @@ object PlanDump {
       // Built INSIDE the timed scope: q50 and q73/q74 (BPE learn) run
       // Spark jobs eagerly while building the returned frame.
       val t0 = System.nanoTime()
+      val c0 = PhaseLog.compiles
       val JobLog.Scope((rows, secs), jobs, stages) =
         JobLog.scoped(spark.sparkContext) {
           val df = qs(name)(spark, sfDir)
@@ -54,7 +59,8 @@ object PlanDump {
       println(f"[plandump] $name%-28s rows=$rows%7d jobs=${jobs.size}%3d " +
         f"stages=${stages.size}%3d " +
         f"shuffleMB=${stages.map(_.shuffleWrite).sum / 1e6}%9.2f " +
-        f"inputMB=${stages.map(_.inputBytes).sum / 1e6}%8.2f secs=$secs%7.2f")
+        f"inputMB=${stages.map(_.inputBytes).sum / 1e6}%8.2f secs=$secs%7.2f " +
+        f"compiles=${PhaseLog.compiles - c0}%4d")
       jobs.foreach { j =>
         println(f"[job] ${j.id}%4d ${(j.end - j.start) / 1e3}%8.3f s " +
           f"stages=${j.stageNames.size}%2d tasks=${j.tasks}%4d  " +

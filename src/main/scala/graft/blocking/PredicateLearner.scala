@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.config.DedupeConfig
+import graft.ops.{collectRows, countRows}
 import graft.pipeline.PhaseLog
 import graft.pipeline.PhaseLog.timed
 
@@ -93,16 +94,17 @@ object PredicateLearner {
     def scale: Double = if (n == 0) 1.0 else total.toDouble / n
   }
 
-  /** Reads the record count, the sample and the match pairs (three
-    * Spark jobs) and keys every value. The sample is the `sampleSize`
-    * rows with the lowest seeded hash of `orderCols` (the columns break
-    * hash ties), so it does not depend on partitioning. Above
+  /** Reads the record count, the sample and the match pairs (a Spark
+    * job each, none for pairs held on the driver) and keys every value.
+    * The sample is the `sampleSize` rows with the lowest seeded hash of
+    * `orderCols` (a second seeded hash breaks ties, so two rows tie only
+    * if both 64-bit hashes collide), so it does not depend on
+    * partitioning. The driver sorts and cuts the rows it receives. Above
     * `sampleSize` = n records only rows whose hash lies in the lowest
-    * (n + 8√n)/N of its range reach the driver's top-n merge, which
-    * bounds what the driver receives at any N. The passing count has
-    * mean n + 8√n and a standard deviation near √n, so it falls short of
-    * n only some 8 deviations below its mean (the sample would then just
-    * be smaller).
+    * (n + 8√n)/N of its range reach the driver, which bounds what it
+    * receives at any N. The passing count has mean n + 8√n and a
+    * standard deviation near √n, so it falls short of n only some 8
+    * deviations below its mean (the sample would then just be smaller).
     */
   private def table(
       records: DataFrame,
@@ -112,23 +114,20 @@ object PredicateLearner {
       sampleSize: Int): Table = {
     val spark = records.sparkSession
     val fieldNames = cands.map(_.field).distinct
-    // One job: Dataset.count's aggregate exchange runs as a second job
-    // under adaptive execution.
-    val total = records.select().queryExecution.toRdd.count()
-    val hash = xxhash64(lit(SampleSeed) +: orderCols.map(col): _*)
+    val total = countRows(records)
+    def hash(seed: Int) = xxhash64(lit(seed) +: orderCols.map(col): _*)
     val frac = (sampleSize + 8 * math.sqrt(sampleSize)) / total
     val kept =
       if (frac >= 1) records
-      else records.where(hash <=
+      else records.where(hash(SampleSeed) <=
         (Long.MinValue.toDouble + frac * math.pow(2, 64)).toLong)
-    val order = (hash +: orderCols.map(col)).zipWithIndex
-      .map { case (c, i) => c.as(s"_o$i") }
-    val sample = kept
-      .select(fieldNames.map(f => col(f).cast("string")) ++ order: _*)
-      .orderBy(order.indices.map(i => col(s"_o$i")): _*)
-      .limit(sampleSize).collect()
-    val pairRows = matches.select(fieldNames.flatMap(f =>
-      Seq(col(s"l_$f"), col(s"r_$f")).map(_.cast("string"))): _*).collect()
+    val nf = fieldNames.length
+    val sample = collectRows(kept.select(fieldNames.map(f =>
+        col(f).cast("string")) :+ hash(SampleSeed) :+ hash(SampleSeed + 1)
+        : _*))
+      .sortBy(r => (r.getLong(nf), r.getLong(nf + 1))).take(sampleSize)
+    val pairRows = collectRows(matches.select(fieldNames.flatMap(f =>
+      Seq(col(s"l_$f"), col(s"r_$f")).map(_.cast("string"))): _*))
 
     val fields = fieldNames.zipWithIndex.map { case (f, j) =>
       val index = mutable.HashMap.empty[String, Int]
@@ -149,24 +148,34 @@ object PredicateLearner {
 
     val keys = new Array[Array[Array[Int]]](cands.length)
     val nKeys = new Array[Int](cands.length)
-    // Column candidates: one local frame per field, every candidate on
-    // it a column of one projection; string keys interned to ids.
-    cands.zipWithIndex.collect { case (p: ColumnPredicate, i) => (p, i) }
-      .groupBy(_._1.field).foreach { case (f, ps) =>
-        val evaluated = spark.createDataFrame(
-            fields(f).values.map(Row(_)).asJava,
-            StructType(Seq(StructField("value", StringType))))
-          .select(ps.map { case (p, _) => p.keys(col("value")) }: _*)
-          .collect()
-        ps.zipWithIndex.foreach { case ((_, i), c) =>
-          val ids = mutable.HashMap.empty[String, Int]
-          keys(i) = evaluated.map(r =>
+    // Column candidates: one local frame, row v holding value v of every
+    // field (null past a field's last value), every candidate a column
+    // of one projection over its field. Spark folds the projection over
+    // the local rows while optimizing, so no job runs and no class is
+    // compiled. String keys are interned to ids.
+    val colCands = cands.zipWithIndex.collect {
+      case (p: ColumnPredicate, i) => (p, i)
+    }
+    if (colCands.nonEmpty) {
+      val colFields = colCands.map(_._1.field).distinct
+      val depth = colFields.map(fields(_).values.length).max
+      val evaluated = collectRows(spark.createDataFrame(
+          (0 until depth).map(v => Row.fromSeq(colFields.map { f =>
+            fields(f).values.lift(v).orNull
+          })).asJava,
+          StructType(colFields.map(StructField(_, StringType))))
+        .select(colCands.map { case (p, _) => p.keys(col(p.field)) }: _*))
+      colCands.zipWithIndex.foreach { case ((p, i), c) =>
+        val ids = mutable.HashMap.empty[String, Int]
+        keys(i) = evaluated.iterator.take(fields(p.field).values.length)
+          .map(r =>
             if (r.isNullAt(c)) Array.emptyIntArray
             else r.getSeq[String](c)
               .map(k => ids.getOrElseUpdate(k, ids.size)).toArray)
-          nKeys(i) = ids.size
-        }
+          .toArray
+        nKeys(i) = ids.size
       }
+    }
     // Canopy candidates: one fit per (field, ratio) over the field's
     // non-empty values (the blocker's fit excludes ""); a key is the
     // index of the canopy center.

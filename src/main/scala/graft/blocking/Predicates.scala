@@ -35,15 +35,10 @@ sealed trait ColumnPredicate extends Predicate {
 /** Predicates whose keys depend on a fitted corpus index (dedupe's
   * "index predicates", built from `SELECT DISTINCT field` at
   * pgdedupe/run.py:213-222). Keys come from a join against the fitted
-  * value→keys table rather than a column expression.
+  * value→keys table rather than a column expression; `Blocker` fits one
+  * shared index per kind.
   */
-sealed trait IndexPredicate extends Predicate {
-  /** Fit the index over the distinct field values (single non-null
-    * string column named `value`) and return `(value, keys)` where
-    * `keys` is the array of namespaced block keys for that value.
-    */
-  def keysByValue(values: DataFrame): DataFrame
-}
+sealed trait IndexPredicate extends Predicate
 
 object Predicate {
 
@@ -174,10 +169,6 @@ final case class TfIdfCanopy(field: String, threshold: Double)
   /** Fraction of values a token may appear in before it is dropped from
     * the index (stop-word bound; fixed so the id stays canonical). */
   def maxDfRatio: Double = 0.5
-
-  def keysByValue(values: DataFrame): DataFrame =
-    TfIdfCanopy.keysFromSims(TfIdfCanopy.sims(values, maxDfRatio), id,
-      threshold)
 }
 
 object TfIdfCanopy {
@@ -336,14 +327,6 @@ object TfIdfCanopy {
       (bs.result(), cs.result())
     }
   }
-
-  /** Canopy keys at one threshold from a (possibly cached) sims frame. */
-  def keysFromSims(
-      sims: DataFrame, id: String, threshold: Double): DataFrame =
-    sims.where(col("cos") >= threshold)
-      .groupBy(col("a_value").as("value"))
-      .agg(sort_array(collect_set(
-        concat_ws(":", lit(id), md5(col("b_value"))))).as("keys"))
 }
 
 object Blocker {
@@ -368,7 +351,8 @@ object Blocker {
         .select(explode(array_distinct(allKeys)).as("block_key"), col(idCol))
     }
     // Canopy predicates share ONE threshold-independent sims fit per
-    // (maxDfRatio) group — per-predicate `keysByValue` re-ran the
+    // (maxDfRatio) group — a per-predicate fit (the specs keep it as
+    // their reference, `TfIdfCanopySpec.keysByValue`) re-ran the
     // identical tokenize → df-count → idf → token self-join pipeline
     // once per THRESHOLD (the learner's candidate pool pairs 0.8 and
     // 0.6 on each field), the exact double-fit `TfIdfCanopy.sims`'s

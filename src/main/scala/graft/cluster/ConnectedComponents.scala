@@ -1,9 +1,11 @@
 package graft.cluster
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** Connected components over an edge DataFrame (ref: SURVEY.md D9 — the
@@ -41,21 +43,21 @@ object ConnectedComponents {
       smallEdgeCap: Long = 1000000L,
       label: String = "cc"): DataFrame = {
     val spark = edges.sparkSession
-    import spark.implicits._
     val (src, dst) = (col(srcCol).cast("long"), col(dstCol).cast("long"))
     val proj = edges
       .select(coalesce(src, dst).as("src"), coalesce(dst, src).as("dst"))
       .where(col("src").isNotNull)
-    // Tuple2[Long, Long] is @specialized: the array holds primitives.
-    graft.ops.collectAtMost(proj.as[(Long, Long)], smallEdgeCap) match {
+    graft.ops.collectAtMost(proj, smallEdgeCap) match {
       case Some(raw) =>
         note(label, "driver-union-find", raw.length, smallEdgeCap)
-        val comp = components(raw.iterator)
+        val comp = components(raw.iterator.map(r => (r.getLong(0),
+          r.getLong(1))))
         val ids = comp.keys.toArray.sorted
         // LocalRelation output: the optimizer can broadcast it into the
         // consuming join, which is exactly right at this size.
-        spark.createDataset(ids.toSeq.map(id => (id, comp(id))))
-          .toDF("id", "component")
+        spark.createDataFrame(ids.toSeq.map(id => Row(id, comp(id))).asJava,
+          StructType(Seq(StructField("id", LongType, nullable = false),
+            StructField("component", LongType, nullable = false))))
       case None =>
         // The note's count and runStar's two eager checkpoints all read
         // the edges; runStar's output reads only its checkpoints, so the

@@ -1,9 +1,12 @@
 package graft.cluster
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField,
+  StructType}
 
 /** Per-component hierarchical agglomerative clustering (ref: SURVEY.md D8 —
   * the reference delegates to fastcluster's centroid-linkage HAC over
@@ -362,22 +365,22 @@ object Hierarchical {
       hacOnGroup(edges, threshold, maxComponentSize) ++
         orphans.map(id => Assignment(id, id, 1.0))
     }
-    // Boxed ids, so a null id reaches the driver instead of failing the
-    // collect; any null takes the distributed path below.
-    graft.ops.collectAtMost(above.select("l_id", "r_id", "score")
-        .as[(java.lang.Long, java.lang.Long, Double)], ccEdgeCap)
-      .filter(_.forall { case (l, r, _) => l != null && r != null }) match {
+    // Any null id takes the distributed path below.
+    graft.ops.collectAtMost(above.select("l_id", "r_id", "score"), ccEdgeCap)
+      .filter(_.forall(r => !r.isNullAt(0) && !r.isNullAt(1))) match {
       case Some(rows) =>
         ConnectedComponents.note("hac-cluster", "driver-union-find",
           rows.length, ccEdgeCap)
         // `component` is not read by the per-component HAC: the
         // union-find's labels group the edges instead.
-        val raw = rows.map { case (l, r, sc) => Edge(0L, l, r, sc) }
+        val raw = rows.map(r => Edge(0L, r.getLong(0), r.getLong(1),
+          r.getDouble(2)))
         val comp = ConnectedComponents.components(
           raw.iterator.map(e => (e.lId, e.rId)))
         val assigned = raw.groupBy(e => comp(e.lId)).toSeq.sortBy(_._1)
           .flatMap { case (_, es) => hac(es.iterator) }
-        spark.createDataset(assigned).toDF()
+        entityMap(spark, assigned.map(a =>
+          (a._unique_id, a.canon_id, a.cluster_score)))
       case None =>
         val comps = ConnectedComponents.auto(above,
           smallEdgeCap = ccEdgeCap, label = "hac-cluster")
@@ -391,4 +394,15 @@ object Hierarchical {
           .toDF("_unique_id", "canon_id", "cluster_score")
     }
   }
+
+  /** An entity map `(_unique_id, canon_id, cluster_score)` from driver
+    * rows, as a local relation: built without generated code, and read
+    * back by [[graft.ops.collectAtMost]] without a job. */
+  private[graft] def entityMap(spark: SparkSession,
+      rows: Seq[(Long, Long, Double)]): DataFrame =
+    spark.createDataFrame(
+      rows.map { case (u, c, s) => Row(u, c, s) }.asJava,
+      StructType(Seq(StructField("_unique_id", LongType, nullable = false),
+        StructField("canon_id", LongType, nullable = false),
+        StructField("cluster_score", DoubleType, nullable = false))))
 }

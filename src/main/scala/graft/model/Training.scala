@@ -60,9 +60,7 @@ object Training {
         cfg.columns.map(c => StructField(s"r_$c", StringType)) :+
         StructField("label", DoubleType, nullable = false))
     spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        pairs("match", 1.0) ++ pairs("distinct", 0.0), 1),
-      schema)
+      (pairs("match", 1.0) ++ pairs("distinct", 0.0)).asJava, schema)
   }
 
   /** Non-interactive active-learning sampler (ref: the console loop at
@@ -111,6 +109,8 @@ object Training {
     s"""{"match": ${bucket(1.0)}, "distinct": ${bucket(0.0)}}"""
   }
 
+  private val MaxLabeledPairs = 100000L
+
   /** Fit an L2-regularized logistic regression on the labeled pairs'
     * comparator features (IRLS/Newton — deterministic: zero init, fixed
     * iteration cap, no sampling). `alpha` is the L2 strength on the
@@ -125,15 +125,16 @@ object Training {
     // Labeled pairs are human-labeled, so hundreds at most; the feature
     // matrix is collected to the driver for the IRLS solve. Guard loudly
     // against a programmatic caller feeding millions of pairs — that
-    // would OOM the driver silently otherwise.
-    val pairCount = labeledPairs.count()
-    require(pairCount <= 100000L,
-      s"Training.train collects the feature matrix on the driver; got " +
-        s"$pairCount labeled pairs (cap 100000). Downsample first — " +
-        "labeled training data at this size is not human-labeled.")
-    val rows = Comparators.withFeatures(cfg, labeledPairs)
-      .select((names.map(col) :+ col("label")): _*)
-      .collect()
+    // would OOM the driver silently otherwise. The bounded read is the
+    // guard: above the cap only counts reach the driver.
+    val rows = graft.ops.collectAtMost(
+      Comparators.withFeatures(cfg, labeledPairs)
+        .select((names.map(col) :+ col("label")): _*),
+      MaxLabeledPairs)
+      .getOrElse(throw new IllegalArgumentException(
+        "Training.train collects the feature matrix on the driver; got " +
+          s"more than $MaxLabeledPairs labeled pairs. Downsample first — " +
+          "labeled training data at this size is not human-labeled."))
     val d = names.length
     val n = rows.length
     require(n > 0, "empty training set")

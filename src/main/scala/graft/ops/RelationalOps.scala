@@ -1,6 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, InternalFrames}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -24,25 +26,35 @@ object RelationalOps {
     * partitions — the assigned ids are a pure function of the sort order,
     * so runs are deterministic (reproducibility gate, SURVEY §7.4).
     */
-  def denseIds(df: DataFrame, order: Seq[Column], idName: String): DataFrame = {
-    val spark = df.sparkSession
-    // The `.rdd` seam below deliberately ends Catalyst's view of the plan:
-    // AQE + whole-stage codegen cover the upstream exchange and sort, and
-    // the numbering needs a FIXED partitioning underneath zipWithIndex
-    // (AQE re-planning between the count job and a consumer would shift
-    // ids). The seam is materialized ONCE — zipWithIndex's eager
-    // per-partition count job computes the exchange, and every downstream
-    // action reuses its shuffle files (Spark keeps shuffle output of a
-    // live RDD), so no persist handle is needed here. An earlier revision
-    // pinned the sorted frame MEMORY_AND_DISK and never released it — a
-    // session-lifetime storage leak; the only repeated work without the
-    // cache is the in-partition sort above the reused shuffle files.
-    val sorted = df.repartitionByRange(order: _*).sortWithinPartitions(order: _*)
-    val schema = sorted.schema.add(idName, LongType, nullable = false)
-    val numbered = sorted.rdd.zipWithIndex().map { case (r, i) =>
-      Row.fromSeq(r.toSeq :+ (i + 1L))
+  def denseIds(df: DataFrame, order: Seq[Column], idName: String): DataFrame =
+    numberRanged(df.repartitionByRange(order: _*), order, idName)
+
+  /** [[denseIds]] over a frame already range-partitioned by `order`.
+    *
+    * The RDD seam below deliberately ends Catalyst's view of the plan:
+    * AQE + whole-stage codegen cover the upstream exchange and sort, and
+    * the numbering needs a FIXED partitioning underneath zipWithIndex
+    * (AQE re-planning between the count job and a consumer would shift
+    * ids). The seam is materialized ONCE — zipWithIndex's eager
+    * per-partition count job computes the exchange, and every downstream
+    * action reuses its shuffle files (Spark keeps shuffle output of a
+    * live RDD), so no persist handle is needed here. It carries Catalyst
+    * rows both ways, so no Row encoder is generated for either side.
+    */
+  private def numberRanged(
+      ranged: DataFrame, order: Seq[Column], idName: String): DataFrame = {
+    val sorted = ranged.sortWithinPartitions(order: _*)
+    val schema = sorted.schema // the closure must not capture the frame
+    // zipWithIndex runs its count job here, as an action would.
+    val numbered = asAction(sorted, "denseIds")(_.zipWithIndex()).map {
+      case (r, i) =>
+        val out = new GenericInternalRow(schema.length + 1)
+        r.copy().toSeq(schema).copyToArray(out.values)
+        out.setLong(schema.length, i + 1L)
+        out: InternalRow
     }
-    spark.createDataFrame(numbered, schema)
+    InternalFrames(sorted.sparkSession, numbered,
+      schema.add(idName, LongType, nullable = false))
   }
 
   /** Exact-duplicate pre-merge (A1 + P8, ref pgdedupe/run.py:91-99):
@@ -52,8 +64,10 @@ object RelationalOps {
     * The reference's SERIAL id is nondeterministic insert order; for the
     * determinism gate (ref tests/test_reproducibility.py:75) we number by
     * the sorted field tuple, which is stable across runs and partitionings
-    * — via denseIds, so the sort is range-partitioned across executors
-    * rather than a single-task global window.
+    * — via [[denseIds]]' numbering. The rows are range-partitioned by the
+    * fields BEFORE grouping: that partitioning already clusters each
+    * group, so the aggregate runs without a shuffle of its own and the
+    * numbering sorts its output in place.
     */
   def exactDedup(
       entries: DataFrame,
@@ -61,11 +75,13 @@ object RelationalOps {
       keyCol: String,
       filterCondition: String = "TRUE"): DataFrame = {
     val cols = columns.map(col)
+    val order = columns.map(c => col(c).asc_nulls_first)
     val grouped = entries
       .where(expr(filterCondition))
+      .repartitionByRange(order: _*)
       .groupBy(cols: _*)
       .agg(sort_array(collect_list(col(keyCol))).as("src_ids"))
-    denseIds(grouped, columns.map(c => col(c).asc_nulls_first), "_unique_id")
+    numberRanged(grouped, order, "_unique_id")
   }
 
   /** Singleton-block elimination + dense block ids (A2, ref
@@ -80,6 +96,32 @@ object RelationalOps {
     denseIds(counts, Seq(col("block_key").asc), "block_id")
       .select("block_key", "block_id")
   }
+
+  /** The blocks of a blocking map `(block_key, _unique_id)` as
+    * `(block_id, ids)`: every non-null block key covering
+    * 2..`maxBlockSize` records (singleton blocks admit no comparison,
+    * larger ones are dropped, A2, ref pgdedupe/run.py:265-275), with its
+    * records' ids. `block_id` is the key itself: the reference numbers
+    * its blocks only to compare them, and the keys compare in the same
+    * order. One aggregate; building fires no Spark job.
+    */
+  def blockLists(blockingMap: DataFrame, maxBlockSize: Long): DataFrame =
+    blockingMap.where(col("block_key").isNotNull)
+      .groupBy(col("block_key").as("block_id"))
+      .agg(collect_list("_unique_id").as("ids"))
+      .where(size(col("ids")) > 1 && size(col("ids")) <= maxBlockSize)
+
+  /** Every pair of records that shares a block of [[blockLists]], once,
+    * as `(l_id, r_id)` with `l_id < r_id` (J8 + D6, ref
+    * pgdedupe/run.py:293-319): each block lists its ordered pairs, and
+    * one aggregate drops the repeats of a pair that shares several
+    * blocks. No join.
+    */
+  def listPairs(blocks: DataFrame): DataFrame =
+    blocks.select(explode(col("ids")).as("l_id"), col("ids"))
+      .select(col("l_id"),
+        explode(filter(col("ids"), _ > col("l_id"))).as("r_id"))
+      .distinct()
 
   /** Kolb's redundant-free blocking frame (A2 + A3, ref
     * pgdedupe/run.py:265-303) as `(block_id, _unique_id, block_ids)`: the

@@ -3,7 +3,6 @@ package graft.pipeline
 import scala.collection.mutable
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -11,7 +10,7 @@ import graft.blocking.{Blocker, FirstChars, Predicate, PredicateLearner, TokenFi
 import graft.cluster.{ConnectedComponents, ExactMatches, Hierarchical}
 import graft.config.DedupeConfig
 import graft.model.{LogisticModel, Settings, Training}
-import graft.ops.{RelationalOps, collectAtMost}
+import graft.ops.{RelationalOps, collectAtMost, countRows}
 
 /** End-to-end dedupe dataflow, mirroring the reference's six CLI stages
   * (ref: pgdedupe/cli.py:46-62 — preprocess → train → block → cluster →
@@ -80,15 +79,14 @@ object DedupePipeline {
         if (s.predicates.nonEmpty) s.predicates else defaultPredicates(cfg))
     } else exists(cfg.trainingFile) match {
       case Some(tf) =>
-        val spark = entriesUnique.sparkSession
-        val labeled = Training.readTrainingFile(spark, tf, cfg)
-          .persist(StorageLevel.MEMORY_AND_DISK)
+        // A local relation: both readers take its rows on the driver.
+        val labeled = Training.readTrainingFile(
+          entriesUnique.sparkSession, tf, cfg)
         val model = PhaseLog.timed("train_model")(Training.train(cfg, labeled))
         val learned = PhaseLog.timed("train_predicates")(
           PredicateLearner.learn(entriesUnique, labeled, cfg))
         val predicates =
           if (learned.nonEmpty) learned else defaultPredicates(cfg)
-        labeled.unpersist(false)
         cfg.settingsFile.foreach(sf => Settings(model, predicates).save(sf))
         (model, predicates)
       case None =>
@@ -96,32 +94,32 @@ object DedupePipeline {
     }
   }
 
-  /** create_blocking (ref run.py:187-321): the blocking map and its Kolb
-    * frame ([[RelationalOps.kolbBlocks]]). The Kolb frame is the one
-    * persisted blocking frame ([[scorePairs]]' self-join reads it twice);
-    * the blocking map is read once, by its lineage. Building fires no
-    * Spark job. Returned as `(bm, kb, kb)`: the benchmark's traced run
-    * destructures three frames and sizes blocks by the third's `block_id`.
+  /** create_blocking (ref run.py:187-321): the blocking map, its blocks
+    * ([[RelationalOps.blockLists]], the one persisted blocking frame) and
+    * the blocks' record rows `(block_id, _unique_id)`, which nothing in
+    * the pipeline reads (the benchmark's traced run sizes blocks by
+    * them). Building fires no Spark job.
     */
   def block(
       entriesUnique: DataFrame,
       cfg: DedupeConfig,
       predicates: Seq[Predicate]): (DataFrame, DataFrame, DataFrame) = {
     val bm = Blocker.blockingMap(entriesUnique, predicates)
-    val kb = RelationalOps.kolbBlocks(bm, cfg.maxBlockSize.toLong)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    (bm, kb, kb)
+    val blocks = RelationalOps.blockLists(bm, cfg.maxBlockSize.toLong)
+    (bm, blocks,
+      blocks.select(col("block_id"), explode(col("ids")).as("_unique_id")))
   }
 
-  /** cluster phase part 1 (ref run.py:362-379): redundant-free pairs with
-    * record payloads re-attached (J3) and model scores (D1+D2+D7).
+  /** cluster phase part 1 (ref run.py:362-379): the candidate pairs of
+    * [[block]]'s blocks ([[RelationalOps.listPairs]]) with record
+    * payloads re-attached (J3) and model scores (D1+D2+D7).
     */
   def scorePairs(
       entriesUnique: DataFrame,
-      kolbBlocks: DataFrame,
+      blocks: DataFrame,
       cfg: DedupeConfig,
       model: LogisticModel): (DataFrame, DataFrame) = {
-    val pairs = RelationalOps.kolbPairs(kolbBlocks)
+    val pairs = RelationalOps.listPairs(blocks)
     val lrec = entriesUnique.select(col("_unique_id").as("l_id"),
       struct(cfg.columns.map(col): _*).as("l_rec"))
     val rrec = entriesUnique.select(col("_unique_id").as("r_id"),
@@ -196,70 +194,78 @@ object DedupePipeline {
   /** The unique-grain merge_exact passes on the driver, as the reference
     * runs them (a driver DFS, ref exact_matches.py:9-50). Each set links
     * every record whose set columns are all non-null to the smallest
-    * record id sharing its values: one window shuffle, no join. With
-    * d(u) = u's canon_id in `entityMap` (u itself when absent), every edge
-    * (a, b) unions d(a) with d(b) in one union-find over all sets, and a
-    * record's new canon_id is the smallest dedupe id of its component —
-    * what folding [[ExactMatches.merge]] over the sets yields, for any
-    * entity map. Returns that entity map as a local relation, or None
-    * when the edges or the entity map exceed `cap` rows (the caller
-    * then folds the distributed merge passes).
+    * record id sharing its values: one aggregate (the group's id list),
+    * no join. With d(u) = u's canon_id in `entityMap` (u itself when
+    * absent), every edge (a, b) unions d(a) with d(b) in one union-find
+    * over all sets, and a record's new canon_id is the smallest dedupe
+    * id of its component — what folding [[ExactMatches.merge]] over the
+    * sets yields, for any entity map. Returns that entity map as a
+    * local relation, or None when the edges or the entity map exceed
+    * `cap` rows (the caller then folds the distributed merge passes). A
+    * local entity map, as clustering builds below the cap, is read
+    * without a job.
     */
   private def mergeUnique(
       entityMap: DataFrame,
       entriesUnique: DataFrame,
       sets: Seq[Seq[String]],
       cap: Long): Option[DataFrame] = {
-    val spark = entityMap.sparkSession
-    import spark.implicits._
     val edges = sets.map { cols =>
       entriesUnique.where(cols.map(col(_).isNotNull).reduce(_ && _))
-        .select(col("_unique_id").as("b"), min("_unique_id")
-          .over(Window.partitionBy(cols.map(col): _*)).as("a"))
+        .groupBy(cols.map(col): _*)
+        .agg(collect_list("_unique_id").as("ids"))
+        .where(size(col("ids")) > 1)
+        .select(array_min(col("ids")).as("a"), explode(col("ids")).as("b"))
         .where(col("b") > col("a"))
-        .select("a", "b")
-    }.reduce(_ union _).as[(Long, Long)]
+    }.reduce(_ union _)
     collectAtMost(edges, cap).flatMap { es =>
       ConnectedComponents.note("exact-merge-u", "driver-union-find",
         es.length, cap)
       if (es.isEmpty) Some(entityMap)
       else collectAtMost(entityMap
-        .select("_unique_id", "canon_id", "cluster_score")
-        .as[(Long, Long, Double)], cap).map { em =>
+        .select("_unique_id", "canon_id", "cluster_score"), cap).map { em =>
         val canon = mutable.LongMap.empty[Long]
-        em.foreach { case (u, c, _) => canon(u) = c }
+        em.foreach(r => canon(r.getLong(0)) = r.getLong(1))
         def d(u: Long): Long = canon.getOrElse(u, u)
         val comp = ConnectedComponents.components(
-          es.iterator.map { case (a, b) => (d(a), d(b)) })
+          es.iterator.map(r => (d(r.getLong(0)), d(r.getLong(1)))))
         // A record absent from the map is its own dedupe id
         // (applyClusters' default); one whose id moved gets a row here.
         val moved = comp.iterator.collect {
           case (id, c) if id != c && !canon.contains(id) => (id, c, 1.0)
         }
-        (em.iterator.map { case (u, c, s) => (u, comp.getOrElse(c, c), s) }
-          ++ moved).toSeq.toDF("_unique_id", "canon_id", "cluster_score")
+        Hierarchical.entityMap(entityMap.sparkSession, (em.iterator.map { r =>
+          val c = r.getLong(1)
+          (r.getLong(0), comp.getOrElse(c, c), r.getDouble(2))
+        } ++ moved).toSeq)
       }
     }
   }
 
   /** Full pipeline with a static (or defaulted) model.
     *
-    * Persistence points: `entries` (read by preprocess AND the
-    * apply-phase raw-table merge), `entriesUnique` (read by blocking,
-    * scoring, and apply), the Kolb blocking frame (read twice by the
-    * pair self-join), `scored` (read by clustering's bounded edge read,
-    * and above `cc_edge_cap` by its component kernel and join too), and
-    * `entityMap` (read by the unique-grain merge's bounded read and by
-    * applyClusters, or by every distributed merge pass).
-    * Without these every downstream action re-runs the whole block →
-    * pair → affine-gap lineage, which is what timed out the sf0.1 bench.
+    * Persistence points, each a frame read more than once:
+    * `entriesUnique` (read by learning, blocking, scoring and apply),
+    * `scored` (read by clustering's bounded edge read, and above
+    * `cc_edge_cap` by its component kernel and join too) and the unique
+    * map (counted here, then written by the caller). `entries` is pinned
+    * only when a raw-grain merge_exact set re-reads it in apply;
+    * otherwise preprocess is its one reader. The entity map is pinned
+    * only above `cc_edge_cap`: below it, clustering builds the map on
+    * the driver as a local relation, which the unique-grain merge reads
+    * back without a job. The blocks are read once, by the scoring query.
+    * Without these pins every downstream action re-runs the whole block
+    * → pair → affine-gap lineage, which is what timed out the sf0.1
+    * bench. Every pin is one more cache reader for Spark to generate:
+    * see the README's code-cache budget.
     *
-    * Each persisted frontier is materialized EAGERLY (a count) before its
+    * Each pinned frontier is materialized EAGERLY (a count) before its
     * consumers run: downstream fan-out then always reads the cache,
     * never races to recompute the same lineage — this was the q50
-    * run-to-run 2× variance. The phase wall-clocks go to `PhaseLog`
-    * (`preprocess`, `train`, `block_score`, `cluster`, `apply`); the
-    * `apply` phase stays lazy (the caller's action materializes it).
+    * run-to-run 2× variance. The phase wall-clocks and compile counts go
+    * to `PhaseLog` (`preprocess`, `train`, `block_score`, `cluster`,
+    * `apply`); of `apply` only the unique map is materialized (the
+    * caller's action materializes `mapped`).
     */
   def run(
       entries: DataFrame,
@@ -267,13 +273,20 @@ object DedupePipeline {
       modelOpt: Option[LogisticModel] = None,
       predicatesOpt: Option[Seq[Predicate]] = None): Result = {
     import PhaseLog.timed
-    val src = entries.persist(StorageLevel.MEMORY_AND_DISK)
+    val pinned = Seq.newBuilder[DataFrame]
+    def pin(df: DataFrame): DataFrame = {
+      pinned += df
+      df.persist(StorageLevel.MEMORY_AND_DISK)
+    }
+    val src =
+      if (cfg.mergeExact.exists(!uniqueGrain(cfg, _))) pin(entries)
+      else entries
     // Built INSIDE the timed block: preprocess's denseIds seam runs its
     // zipWithIndex jobs eagerly at DataFrame-build time, and timing only
-    // the count() under-reported the phase by those jobs' wall-clock.
+    // the count under-reported the phase by those jobs' wall-clock.
     val eu = timed("preprocess") {
-      val e = preprocess(src, cfg).persist(StorageLevel.MEMORY_AND_DISK)
-      e.count()
+      val e = pin(preprocess(src, cfg))
+      countRows(e)
       e
     }
     lazy val trained = trainOrLoad(eu, cfg)
@@ -283,23 +296,30 @@ object DedupePipeline {
     // whole training wall-clock to no phase.
     val (model, predicates) = timed("train")(
       (modelOpt.getOrElse(trained._1), predicatesOpt.getOrElse(trained._2)))
-    val (bm, kb, _) = block(eu, cfg, predicates)
-    val (pairs, scored0) = scorePairs(eu, kb, cfg, model)
+    val (bm, blocks, _) = block(eu, cfg, predicates)
+    val (pairs, scored0) = scorePairs(eu, blocks, cfg, model)
     // Persist only the (l_id, r_id, score) projection the clustering and
     // merge passes actually read — caching the wide pair rows (all l_/r_
     // field payloads) costs more than the scoring pass itself.
-    val scored = scored0.select("l_id", "r_id", "score")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    timed("block_score")(scored.count())
+    val scored = pin(scored0.select("l_id", "r_id", "score"))
+    timed("block_score")(countRows(scored))
     val em = timed("cluster") {
-      val m = cluster(scored, cfg).persist(StorageLevel.MEMORY_AND_DISK)
-      m.count()
+      val m = cluster(scored, cfg)
+      if (!m.isLocal) countRows(pin(m))
       m
     }
-    val (mapped, um0) = apply(em, eu, src, cfg)
-    val um = um0.persist(StorageLevel.MEMORY_AND_DISK)
-    timed("apply")(um.count())
+    // Built inside the timed block too: below the cap, apply's
+    // unique-grain merge reads its edges eagerly.
+    val (mapped, um) = timed("apply") {
+      val (m, u) = apply(em, eu, src, cfg)
+      countRows(pin(u))
+      (m, u)
+    }
     Result(eu, bm, pairs, scored, em, mapped, um, model, predicates,
-      cached = Seq(src, eu, kb, scored, em, um))
+      cached = pinned.result())
   }
+
+  /** A merge_exact set of dedup columns only, merged on unique records. */
+  private def uniqueGrain(cfg: DedupeConfig, set: Seq[String]): Boolean =
+    set.forall(cfg.columns.contains)
 }

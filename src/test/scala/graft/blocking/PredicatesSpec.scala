@@ -31,8 +31,8 @@ class PredicatesSpec extends SparkSpec {
     import spark.implicits._
     // Two thresholds on one field share one sims fit inside
     // blockingMap; the combined collect_set must explode to exactly
-    // the (block_key, id) multiset the per-predicate keysByValue path
-    // produces.
+    // the (block_key, id) multiset the per-predicate fit
+    // (TfIdfCanopySpec.keysByValue) produces.
     val records = Seq(
       (1L, "bob smith"), (2L, "robert smith"), (3L, "the cat"),
       (4L, "the the cat"), (5L, "unique"), (6L, "bob smith"))
@@ -44,7 +44,7 @@ class PredicatesSpec extends SparkSpec {
       val vals = records.select(col(p.field).as("value"))
         .where(col("value").isNotNull && col("value") =!= "").distinct()
       records.select(col(p.field).as("value"), col("_unique_id"))
-        .join(p.keysByValue(vals), "value")
+        .join(TfIdfCanopySpec.keysByValue(p, vals), "value")
         .select(explode(col("keys")).as("block_key"), col("_unique_id"))
         .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     }

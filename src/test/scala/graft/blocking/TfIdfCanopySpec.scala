@@ -1,6 +1,7 @@
 package graft.blocking
 
 import org.apache.commons.codec.digest.DigestUtils
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -81,8 +82,8 @@ class TfIdfCanopySpec extends SparkSpec {
 
   test("singleton-only values still canopy-block with themselves") {
     import spark.implicits._
-    val keys = TfIdfCanopy("f", 0.8)
-      .keysByValue(values.toDF("value"))
+    val keys = TfIdfCanopySpec.keysByValue(TfIdfCanopy("f", 0.8),
+        values.toDF("value"))
       .where(col("value") === "unique")
       .select(col("keys"))
       .as[Seq[String]].collect()
@@ -125,7 +126,8 @@ class TfIdfCanopySpec extends SparkSpec {
       // The canopy keys each side would block on, at both thresholds.
       Seq(0.6, 0.8).foreach { thr =>
         val p = TfIdfCanopy("f", thr)
-        val want = p.keysByValue(vs.toDF("value")).as[(String, Seq[String])]
+        val want = TfIdfCanopySpec.keysByValue(p, vs.toDF("value"))
+          .as[(String, Seq[String])]
           .collect().toMap
         val have = vs.indices.flatMap { a =>
           val (bs, cs) = local(a)
@@ -138,4 +140,19 @@ class TfIdfCanopySpec extends SparkSpec {
       }
     }
   }
+}
+
+object TfIdfCanopySpec {
+
+  /** The per-predicate canopy fit `Blocker.blockingMap`'s shared fit
+    * replaced, kept as the specs' reference: fit the index over the
+    * distinct field values (single non-null string column named
+    * `value`) and return `(value, keys)`, `keys` being the sorted
+    * namespaced block keys of that value at `p`'s threshold.
+    */
+  def keysByValue(p: TfIdfCanopy, values: DataFrame): DataFrame =
+    TfIdfCanopy.sims(values, p.maxDfRatio).where(col("cos") >= p.threshold)
+      .groupBy(col("a_value").as("value"))
+      .agg(sort_array(collect_set(
+        concat_ws(":", lit(p.id), md5(col("b_value"))))).as("keys"))
 }

@@ -60,6 +60,18 @@ class RelationalOpsSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(kolb.toSet == dist)
     assert(kolb.length == kolb.toSet.size, "kolb emitted a pair twice")
+    val listed = RelationalOps.listPairs(
+        RelationalOps.blockLists(bm, Long.MaxValue)).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(listed.sorted == kolb.sorted)
+    // The block cap drops the same blocks in both.
+    Seq(1L, 2L).foreach { cap =>
+      def pairs(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(pairs(RelationalOps.listPairs(RelationalOps.blockLists(bm, cap)))
+        == pairs(RelationalOps.kolbPairs(RelationalOps.kolbBlocks(bm, cap))),
+        s"cap $cap")
+    }
   }
 
   test("applyClusters defaults singletons to self with score 1.0") {
@@ -79,9 +91,11 @@ class RelationalOpsSpec extends SparkSpec {
       "over just a skewed partition, None above the cap") {
     import spark.implicits._
     val sc = spark.sparkContext
-    val small = sc.parallelize(1L to 10L, 4).toDS()
+    def longs(rows: Option[Array[org.apache.spark.sql.Row]]) =
+      rows.map(_.map(_.getLong(0)).toSeq)
+    val small = sc.parallelize(1L to 10L, 4).toDF()
     val (rows, jobs) = withJobs(collectAtMost(small, 10L))
-    assert(rows.map(_.toSeq).contains(small.collect().toSeq))
+    assert(longs(rows).contains(1L to 10L))
     assert(jobs.size == 1, s"below the cap: ${jobs.mkString("; ")}")
 
     // Partition 0 holds 10 rows, more than its share ⌈21 / 4⌉ = 6 of a
@@ -91,11 +105,10 @@ class RelationalOpsSpec extends SparkSpec {
     val skewed = sc.parallelize(Seq(0L until 10L, Seq(10L), Seq(11L),
         Seq(12L)), 4)
       .mapPartitionsWithIndex { (i, it) => computed.add(i); it.flatten }
-      .toDS()
-    val expected = skewed.collect().toSeq
+      .toDF()
     computed.reset()
     val (all, skewJobs) = withJobs(collectAtMost(skewed, 20L))
-    assert(all.map(_.toSeq).contains(expected))
+    assert(longs(all).contains(0L to 12L))
     assert(skewJobs.size == 2, s"skewed: ${skewJobs.mkString("; ")}")
     assert(computed.value.asScala.toSeq.sorted == Seq(0, 0, 1, 2, 3))
 
@@ -105,10 +118,18 @@ class RelationalOpsSpec extends SparkSpec {
 
     val (empty, emptyJobs) =
       withJobs(collectAtMost(small.where($"value" < 0L), 0L))
-    assert(empty.map(_.toSeq).contains(Seq.empty[Long]))
+    assert(longs(empty).contains(Seq.empty[Long]))
     assert(emptyJobs.size == 1)
     val (none, noneJobs) = withJobs(collectAtMost(small, 0L))
     assert(none.isEmpty)
     assert(noneJobs.size == 1)
+
+    // A local frame hands its rows over without a job, projections too.
+    val local = (1L to 5L).toDF("value")
+    val (fromDriver, localJobs) =
+      withJobs(collectAtMost(local.select($"value" * 2), 5L))
+    assert(longs(fromDriver).contains(Seq(2L, 4L, 6L, 8L, 10L)))
+    assert(localJobs.isEmpty, s"local: ${localJobs.mkString("; ")}")
+    assert(collectAtMost(local, 4L).isEmpty)
   }
 }

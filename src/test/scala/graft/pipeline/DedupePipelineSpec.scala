@@ -47,41 +47,113 @@ class DedupePipelineSpec extends SparkSpec {
   test("release() frees every pinned frontier — no storage growth per run") {
     import org.apache.spark.storage.StorageLevel
     val entries = FakePersons.population(spark, 100, seed = 31L)
-    val result = DedupePipeline.run(entries, cfg)
-    // run() pins 6 frontiers (src, eu, kb, scored, em, um) and every
+    // run() pins eu, scored and um; src only when a raw-grain merge set
+    // re-reads it, and the entity map only above cc_edge_cap. Every
     // handle must be tracked — a persist() outside Result.cached is a
     // session-lifetime leak (the round-7 TextDedup defect class).
-    assert(result.cached.size == 6)
-    assert(result.cached.forall(_.storageLevel != StorageLevel.NONE),
-      "run() should have pinned its frontiers")
-    result.release(result.uniqueMap)
-    assert(result.cached.filter(_ ne result.uniqueMap)
-        .forall(_.storageLevel == StorageLevel.NONE),
-      "release() left a frontier pinned")
-    assert(result.uniqueMap.storageLevel != StorageLevel.NONE,
-      "release(keep) must not unpersist the kept frame")
-    result.release()
-    assert(result.cached.forall(_.storageLevel == StorageLevel.NONE))
+    val rawCfg = cfg.copy(mergeExact = Seq(Seq("ssn"), Seq("uuid")),
+      ccEdgeCap = 0L)
+    Seq((cfg, Seq("eu", "scored", "um")),
+        (rawCfg, Seq("src", "eu", "scored", "em", "um"))).foreach {
+      case (c, frames) =>
+        val result = DedupePipeline.run(entries, c)
+        val named = Map("src" -> entries, "eu" -> result.entriesUnique,
+          "scored" -> result.scoredPairs, "em" -> result.entityMap,
+          "um" -> result.uniqueMap)
+        assert(result.cached.size == frames.size)
+        assert(frames.forall(f => result.cached.exists(_ eq named(f))),
+          s"run() should have pinned ${frames.mkString(", ")}")
+        assert(result.cached.forall(_.storageLevel != StorageLevel.NONE),
+          "run() should have pinned its frontiers")
+        result.release(result.uniqueMap)
+        assert(result.cached.filter(_ ne result.uniqueMap)
+            .forall(_.storageLevel == StorageLevel.NONE),
+          "release() left a frontier pinned")
+        assert(result.uniqueMap.storageLevel != StorageLevel.NONE,
+          "release(keep) must not unpersist the kept frame")
+        result.release()
+        assert(result.cached.forall(_.storageLevel == StorageLevel.NONE))
+    }
   }
 
   test("building block()'s frames fires no Spark job") {
     val eu = DedupePipeline.preprocess(
       FakePersons.population(spark, 100, seed = 31L), cfg)
-    val ((_, kb, _), jobs) = withJobs(
+    val (_, jobs) = withJobs(
       DedupePipeline.block(eu, cfg, DedupePipeline.defaultPredicates(cfg)))
-    kb.unpersist(false)
     assert(jobs.isEmpty, s"block() fired jobs while building: $jobs")
   }
 
   test("run() records its five phase wall-clocks in PhaseLog") {
     import graft.queries.PipelineQueries
     PhaseLog.drain()
+    PhaseLog.drainNotes()
+    val c0 = PhaseLog.compiles
     val result = DedupePipeline.run(
       PipelineQueries.personEntries(spark, sf0001),
       PipelineQueries.personConfig)
+    val compiled = PhaseLog.compiles - c0
     result.release()
-    assert(Set("preprocess", "train", "block_score", "cluster", "apply")
-      .subsetOf(PhaseLog.drain().keySet))
+    val phases = Seq("preprocess", "train", "block_score", "cluster", "apply")
+    assert(phases.toSet.subsetOf(PhaseLog.drain().keySet))
+    // Each phase notes the classes Spark compiled while it ran: counts
+    // that add up to no more than the run's own.
+    val notes = PhaseLog.drainNotes()
+    val counts = phases.map(p => notes.get(s"codegen.$p").map(_.toLong))
+    assert(counts.forall(_.exists(_ >= 0L)), s"codegen notes: $notes")
+    assert(counts.flatten.sum <= compiled)
+  }
+
+  test("a repeated trained run compiles no class: its generated code " +
+      "fits Spark's code cache") {
+    // The shape of linkbench's link-train: a labels file from the ground
+    // truth, interactions, merge_exact [["ssn"]] and recall 0.8. Spark
+    // keeps at most 100 compiled classes per JVM (a 4-segment LRU); a
+    // run generating more recompiles most of them on every repeat. The
+    // suites share one forked JVM but run one at a time (sbt's
+    // testForkedParallel is off), so only threads an earlier suite left
+    // running add to the JVM-global counter.
+    val entries = FakePersons.population(spark, 400, seed = 5L)
+    val rows = entries.orderBy("entry_id").collect()
+    val people = rows.groupBy(_.getAs[String]("uuid")).values.toSeq
+      .sortBy(_.head.getAs[Long]("entry_id"))
+    def rec(r: org.apache.spark.sql.Row): String =
+      cfg.columns.map { c =>
+        val v = r.getAs[String](c)
+        "\"" + c + "\": " + (if (v == null) "null" else "\"" + v + "\"")
+      }.mkString("{", ", ", "}")
+    def tup(a: org.apache.spark.sql.Row, b: org.apache.spark.sql.Row) =
+      s"""{"__class__": "tuple", "__value__": [${rec(a)}, ${rec(b)}]}"""
+    val matches = people.filter(_.length >= 2).take(40)
+      .map(g => tup(g(0), g(1)))
+    val distincts = people.sliding(2).take(60)
+      .map(g => tup(g(0).head, g(1).head)).toSeq
+    val dir = java.nio.file.Files.createTempDirectory("graft-codegen")
+    val tf = dir.resolve("training.json")
+    java.nio.file.Files.writeString(tf,
+      s"""{"match": [${matches.mkString(",")}],
+        "distinct": [${distincts.mkString(",")}]}""")
+    val trainedCfg = cfg.copy(recall = 0.8, trainingFile = Some(tf.toString),
+      settingsFile = Some(dir.resolve("settings.json").toString))
+    def compiled(): (Long, Seq[(Long, Long)]) = {
+      val c0 = PhaseLog.compiles
+      val result = DedupePipeline.run(entries, trainedCfg)
+      val assigned = result.uniqueMap.select("entry_id", "dedupe_id")
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1).toSeq
+      result.release()
+      (PhaseLog.compiles - c0, assigned)
+    }
+    val (first, a1) = compiled()
+    val (second, a2) = compiled()
+    // A working set that fits the cache reaches 0 on a repeat; one that
+    // does not recompiles on every one, so a third run tells a stray
+    // thread's compiles from a thrashing cache.
+    val third = if (second == 0L) 0L else compiled()._1
+    info(s"first run compiled $first classes, the repeats $second, $third")
+    assert(a1 == a2)
+    assert(first > 0L)
+    assert(second == 0L || third == 0L, s"the repeated runs compiled " +
+      s"$second and $third of the $first classes the first one did")
   }
 
   test("a config with only key and fields loads the case-class defaults") {
