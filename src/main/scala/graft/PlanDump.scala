@@ -13,8 +13,10 @@ import graft.pipeline.PhaseLog
   * output rows, and the classes Spark compiled for the query (its
   * generated-code cache misses: the queries of one launch share that
   * 100-class cache, so a later query can recompile an earlier one's) —
-  * then each Spark job and the slowest stages, so the
-  * expensive jobs inside a multi-action query are attributable.
+  * then each Spark job (labelled by its SQL execution's description,
+  * the action and graft source line that started it) and the slowest
+  * stages, so the expensive jobs inside a multi-action query are
+  * attributable.
   * Wall-clock on this host swings 3-20x with ambient hypervisor steal,
   * so plan shape + shuffle volume are the signals optimization
   * decisions are made on; seconds are corroborated separately with
@@ -64,7 +66,7 @@ object PlanDump {
       jobs.foreach { j =>
         println(f"[job] ${j.id}%4d ${(j.end - j.start) / 1e3}%8.3f s " +
           f"stages=${j.stageNames.size}%2d tasks=${j.tasks}%4d  " +
-          j.stageNames.last.take(90))
+          j.label.take(90))
       }
       println(f"[job] TOTAL ${jobs.map(j => j.end - j.start).sum / 1e3}%.3f" +
         s" s across ${jobs.size} jobs")

@@ -128,36 +128,6 @@ object Knn {
     }
   }
 
-  /** Sign bit of v·plane as a codegen'd expanded sum over literal plane
-    * weights — no per-row hashing, no higher-order functions (HOFs are
-    * CodegenFallback and would drop the projection out of codegen).
-    */
-  private def signBit(v: Column, plane: Array[Double], bit: Int): Column = {
-    // `get`, not `getItem`: under ANSI (the Spark 4 default) getItem
-    // THROWS on an out-of-range index, so a vector shorter than the
-    // pinned dim would crash the job. get() returns null instead, the
-    // null poisons the projection sum, and the sign test falls to the
-    // 0 branch — bit 0 for every plane, exactly what the DuckDB oracle
-    // (out-of-range list index → NULL) and the fused UDF produce.
-    val proj = plane.zipWithIndex.map { case (w, d) =>
-      get(v, lit(d)).cast("double") * lit(w)
-    }.reduce(_ + _)
-    when(proj >= 0, shiftleft(lit(1L), bit)).otherwise(lit(0L))
-  }
-
-  /** Random-hyperplane LSH signature: `numPlanes` sign bits packed into a
-    * long. Vectors with equal signatures are near-collinear candidates.
-    * `dim` = embedding dimensionality (plane weights are literals).
-    */
-  def hyperplaneSignature(v: Column, numPlanes: Int, dim: Int): Column = {
-    require(numPlanes >= 1 && numPlanes <= 63,
-      s"numPlanes $numPlanes not in [1, 63] (packed-long sig)")
-    require(dim >= 1, s"dim $dim")
-    (0 until numPlanes).map { p =>
-      signBit(v, Array.tabulate(dim)(planeComponent(p, _)), p)
-    }.reduce((a, b) => a.bitwiseOR(b))
-  }
-
   /** Planes needed so the EXPECTED bucket population n / 2^planes stays
     * at or under `targetBucket`: ceil(log₂(n / targetBucket)), floored at
     * 4 (the recall-tuned small-corpus setting) and capped at 24 (16M
@@ -257,10 +227,9 @@ object Knn {
     val planes = planeMatrix(nt * np, dim)
     udf { (v: Seq[Float]) =>
       // A vector SHORTER than the pinned dim signs to 0 on every plane
-      // — matching the expression form ([[hyperplaneSignature]]) and
-      // the DuckDB oracle, where the out-of-range element is NULL, the
-      // whole projection sum goes NULL, and the sign test falls to the
-      // 0 branch. Signing the prefix instead would bucket the engine
+      // — matching the DuckDB oracle (and KnnSpec's expression form),
+      // where the out-of-range element is NULL, the whole projection
+      // sum goes NULL, and the sign test falls to the 0 branch. Signing the prefix instead would bucket the engine
       // differently from the 'bit-exact by construction' oracle forms.
       if (v.length < dim) new Array[Long](nt)
       else {

@@ -14,14 +14,15 @@ import org.apache.spark.sql.functions._
   * MinHash, SimHash) are fused primitive-loop UDFs — each op's scaladoc
   * records why that beats the expression form it replaced.
   *
-  * Persist lifecycle: the candidate-generation operators below
-  * (`minHashCandidates`, `jaccardVerify`, `simHashCandidates`) each cache
-  * an expensive internal frontier that their plan reads more than once.
-  * That frontier is materialized, consumed, and UNPERSISTED before the
-  * function returns — no internal block outlives the call. What the
-  * caller receives is the (small) result frame, persisted MEMORY_AND_DISK
-  * so downstream actions don't recompute the whole pipeline; call
-  * `.unpersist()` on it when done (one handle releases everything).
+  * Persist lifecycle: `jaccardVerify` and `simHashCandidates` each cache
+  * an internal frontier that their plan reads twice (the shingle sets,
+  * the fingerprints); `minHashCandidates` reads its signatures once, into
+  * the bucket lists, and caches none. A frontier is materialized,
+  * consumed, and UNPERSISTED before the function returns — no internal
+  * block outlives the call. What the caller of any of the three receives
+  * is the (small) result frame, persisted MEMORY_AND_DISK so downstream
+  * actions don't recompute the whole pipeline; call `.unpersist()` on it
+  * when done (one handle releases everything).
   */
 object TextDedup {
 
@@ -110,10 +111,9 @@ object TextDedup {
     if (trimmed.isEmpty) Array.empty else WsRe.split(trimmed)
   }
 
-  /** Distinct space-joined k-grams in first-occurrence order — the one
-    * shingle builder behind both [[shingles]] and [[minHashSignature]]
-    * (order only matters to the former; the min-fold is
-    * order-independent).
+  /** Distinct space-joined k-grams in first-occurrence order, the
+    * String shingles of [[shingles]]; the byte kernels cut the same
+    * k-grams from [[Tokens]].
     */
   private def distinctShingles(toks: Array[String], k: Int)
       : java.util.LinkedHashSet[String] = {
@@ -142,6 +142,161 @@ object TextDedup {
   private val Md5Local = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =
       java.security.MessageDigest.getInstance("MD5")
+  }
+
+  /** A text's [[tokenize]] tokens as UTF-8 bytes, for the byte kernels of
+    * [[minHashSignature]] and [[jaccardVerify]]: the text is encoded once
+    * and its tokens are compacted in place, one `' '` apart, so shingle
+    * `i` of `k` tokens is the slice `bytes(start(i) until shingleEnd(i, k))`
+    * — byte for byte the UTF-8 of the String shingle `distinctShingles`
+    * builds. Scanning bytes for the ASCII `\s` gives the same tokens as
+    * scanning chars: those bytes never occur inside a multi-byte UTF-8
+    * sequence, and a surrogate pair never straddles a separator. A text
+    * holding a regex-only terminator is first re-joined from
+    * [[regexTokens]] (whose tokens hold no ASCII `\s`), so the scan cuts
+    * it there. One instance per task thread ([[TokensLocal]]); `load`
+    * reuses its arrays.
+    */
+  private final class Tokens {
+    var bytes: Array[Byte] = Array.emptyByteArray
+    var len = 0 // compacted length of `bytes`
+    var n = 0 // token count
+    private var starts = new Array[Int](64)
+    val digest = new Array[Byte](16)
+    private var order = new Array[Int](64)
+    private var tmp = new Array[Int](64)
+
+    def load(t: String): this.type = {
+      val src =
+        if (t.indexOf('\u0085') >= 0 || t.indexOf('\u2028') >= 0 ||
+            t.indexOf('\u2029') >= 0) regexTokens(t).mkString(" ")
+        else t
+      bytes = src.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      n = 0
+      len = 0
+      var inToken = false
+      var i = 0
+      while (i < bytes.length) {
+        val c = bytes(i)
+        if (c == ' ' || (c >= '\t' && c <= '\r')) inToken = false
+        else {
+          if (!inToken) {
+            inToken = true
+            if (n > 0) { bytes(len) = ' '; len += 1 }
+            if (n == starts.length)
+              starts = java.util.Arrays.copyOf(starts, 2 * n)
+            starts(n) = len
+            n += 1
+          }
+          bytes(len) = c
+          len += 1
+        }
+        i += 1
+      }
+      this
+    }
+
+    def start(i: Int): Int = starts(i)
+    def end(i: Int): Int = if (i + 1 < n) starts(i + 1) - 1 else len
+    /** The end of the shingle of `k` tokens that starts at token `i`. */
+    def shingleEnd(i: Int, k: Int): Int = end(i + k - 1)
+
+    /** The distinct shingles of `k` tokens, sorted unsigned-
+      * lexicographically and joined by `'\n'` (which no token holds);
+      * empty for fewer than `k` tokens.
+      */
+    def shingleSet(k: Int): Array[Byte] = {
+      val m = n - k + 1
+      if (m <= 0) return Array.emptyByteArray
+      if (order.length < m) { order = new Array[Int](m); tmp = new Array[Int](m) }
+      var i = 0
+      while (i < m) { order(i) = i; i += 1 }
+      sortShingles(k, 0, m)
+      // Keep the first of each run of equal shingles, and size the output.
+      var u = 0
+      var size = -1 // u shingles take u - 1 separators
+      i = 0
+      while (i < m) {
+        val s = order(i)
+        if (u == 0 || compare(order(u - 1), s, k) != 0) {
+          order(u) = s
+          u += 1
+          size += shingleEnd(s, k) - start(s) + 1
+        }
+        i += 1
+      }
+      val out = new Array[Byte](size)
+      var o = 0
+      i = 0
+      while (i < u) {
+        if (i > 0) { out(o) = '\n'; o += 1 }
+        val s = order(i)
+        val l = shingleEnd(s, k) - start(s)
+        System.arraycopy(bytes, start(s), out, o, l)
+        o += l
+        i += 1
+      }
+      out
+    }
+
+    private def compare(a: Int, b: Int, k: Int): Int =
+      java.util.Arrays.compareUnsigned(bytes, start(a), shingleEnd(a, k),
+        bytes, start(b), shingleEnd(b, k))
+
+    /** Merge sort of `order(lo until hi)` by shingle bytes. */
+    private def sortShingles(k: Int, lo: Int, hi: Int): Unit =
+      if (hi - lo > 1) {
+        val mid = (lo + hi) >>> 1
+        sortShingles(k, lo, mid)
+        sortShingles(k, mid, hi)
+        System.arraycopy(order, lo, tmp, lo, hi - lo)
+        var i = lo
+        var j = mid
+        var o = lo
+        while (o < hi) {
+          if (j >= hi || (i < mid && compare(tmp(i), tmp(j), k) <= 0)) {
+            order(o) = tmp(i); i += 1
+          } else { order(o) = tmp(j); j += 1 }
+          o += 1
+        }
+      }
+  }
+
+  private val TokensLocal = new ThreadLocal[Tokens] {
+    override def initialValue(): Tokens = new Tokens
+  }
+
+  /** [[Tokens.shingleSet]] of `t` (null → empty): the per-document side
+    * of [[jaccardVerify]].
+    */
+  private[dedup] def shingleSet(t: String, k: Int): Array[Byte] =
+    if (t == null) Array.emptyByteArray else TokensLocal.get().load(t).shingleSet(k)
+
+  /** |A∩B| / max(|A∪B|, 1) of two [[shingleSet]]s, by one merge over
+    * the two sorted byte strings: the set sizes are their shingle
+    * counts, and |A∪B| = |A| + |B| − |A∩B|. |A∪B| is 0 only for two
+    * empty sets (short texts CAN be candidates — identical two-token
+    * docs share a SimHash), where |A∩B| is 0 too, so that pair scores 0.
+    */
+  private[dedup] def jaccard(a: Array[Byte], b: Array[Byte]): Double = {
+    def next(x: Array[Byte], from: Int): Int = {
+      var e = from
+      while (e < x.length && x(e) != '\n') e += 1
+      e
+    }
+    var na, nb, inter = 0
+    var i, j = 0
+    var ea = next(a, 0)
+    var eb = next(b, 0)
+    while (i < a.length && j < b.length) {
+      val c = java.util.Arrays.compareUnsigned(a, i, ea, b, j, eb)
+      if (c == 0) inter += 1
+      if (c <= 0) { na += 1; i = ea + 1; ea = next(a, i) }
+      if (c >= 0) { nb += 1; j = eb + 1; eb = next(b, j) }
+    }
+    while (i < a.length) { na += 1; i = ea + 1; ea = next(a, i) }
+    while (j < b.length) { nb += 1; j = eb + 1; eb = next(b, j) }
+    inter.toDouble / math.max(na + nb - inter, 1)
   }
 
   /** Materialize `result` (persisted) while `frontiers` are still cached,
@@ -243,11 +398,45 @@ object TextDedup {
     */
   private def md5Hash60(md: java.security.MessageDigest, s: String): Long = {
     md.reset()
-    val b = md.digest(s.getBytes("UTF-8"))
+    hash60(md.digest(s.getBytes("UTF-8")))
+  }
+
+  private def hash60(digest: Array[Byte]): Long = {
     var v = 0L
     var i = 0
-    while (i < 8) { v = (v << 8) | (b(i) & 0xffL); i += 1 }
+    while (i < 8) { v = (v << 8) | (digest(i) & 0xffL); i += 1 }
     v >>> 4
+  }
+
+  /** One text's MinHash signature (null below `k` tokens): each shingle
+    * is md5'd straight from the [[Tokens]] bytes into a reused digest
+    * buffer, with no String, set or digest array per shingle. Shingles
+    * are not de-duplicated first: a min over a multiset is the min over
+    * its set.
+    */
+  private[dedup] def signature(t: String, k: Int, as: Array[Long],
+      bs: Array[Long]): Array[Long] = {
+    if (t == null) return null
+    val tk = TokensLocal.get().load(t)
+    if (tk.n < k) return null
+    val md = Md5Local.get()
+    md.reset()
+    val mins = Array.fill(as.length)(Long.MaxValue)
+    var i = 0
+    while (i <= tk.n - k) {
+      val s = tk.start(i)
+      md.update(tk.bytes, s, tk.shingleEnd(i, k) - s)
+      md.digest(tk.digest, 0, 16)
+      val u = hash60(tk.digest) % MinHashMod
+      var h = 0
+      while (h < as.length) {
+        val v = (u * as(h) + bs(h)) % MinHashMod
+        if (v < mins(h)) mins(h) = v
+        h += 1
+      }
+      i += 1
+    }
+    mins
   }
 
   /** MinHash signatures via the affine family above. Returns
@@ -255,8 +444,8 @@ object TextDedup {
     * text or fewer than k tokens) are absent, as they were when the
     * exploded form dropped their empty shingle arrays.
     *
-    * Shape: ONE primitive-loop UDF per row — tokenize, shingle, md5
-    * each distinct shingle once, fold the k affine mins in place. The
+    * Shape: ONE primitive-loop UDF per row ([[signature]]) — tokenize,
+    * md5 each shingle, fold the k affine mins in place. The
     * signature is a pure per-document function, so the previous
     * explode + groupBy(id).agg(min...) paid a row-blowup plus an
     * aggregation shuffle for what a per-row loop computes with neither
@@ -264,9 +453,8 @@ object TextDedup {
     * earlier all-expression `array_min(transform(...))` form was worse
     * still — interpreted HOFs re-evaluate the shingle subtree per hash,
     * measured 50× slower at sf0.1. Values are bit-identical to both:
-    * the same tokens (the [[tokenize]] scan equals the trim/split
-    * regexes, and falls back to them where it would not), same 60-bit
-    * md5 prefix, same (a·u+b) mod M fold.
+    * the same tokens (the [[tokenize]] tokens, as [[Tokens]] bytes), same
+    * 60-bit md5 prefix, same (a·u+b) mod M fold.
     *
     * The fewer-than-k drop is [[atLeastTokens]], a scan that stops at
     * the k-th token, in place of `size(TextAnalysis.tokens(text)) >= k`,
@@ -277,28 +465,7 @@ object TextDedup {
       shingleK: Int, numHashes: Int): DataFrame = {
     val as = (0 until numHashes).map(mixA).toArray
     val bs = (0 until numHashes).map(mixB).toArray
-    val f = udf { (t: String) =>
-      if (t == null) null
-      else {
-        val toks = tokenize(t)
-        if (toks.length < shingleK) null
-        else {
-          val md = Md5Local.get()
-          val mins = Array.fill(numHashes)(Long.MaxValue)
-          val it = distinctShingles(toks, shingleK).iterator()
-          while (it.hasNext) {
-            val u = md5Hash60(md, it.next()) % MinHashMod
-            var h = 0
-            while (h < numHashes) {
-              val v = (u * as(h) + bs(h)) % MinHashMod
-              if (v < mins(h)) mins(h) = v
-              h += 1
-            }
-          }
-          mins
-        }
-      }
-    }
+    val f = udf((t: String) => signature(t, shingleK, as, bs))
     // Null-drop via the cheap INPUT-side precondition (null text / fewer
     // than k tokens), not `isNotNull` on the UDF output: Catalyst pushes
     // an output-side filter below the projection by substituting the
@@ -337,10 +504,15 @@ object TextDedup {
   }
 
   /** MinHash-LSH candidate pairs: band the signature (bands × rowsPerBand
-    * = numHashes), bucket-join on (band, band-hash), emit distinct ordered
-    * id pairs. The classic shingle→minhash→band→bucket-join pipeline; the
-    * band join is the only shuffle that matters and it is an equi-join on
-    * a high-cardinality key, so it scales linearly with data.
+    * = numHashes), list the ids of each (band, bucket) that holds two or
+    * more, emit every ordered id pair of a list once
+    * ([[graft.ops.RelationalOps.listPairs]]: one shuffle for the lists,
+    * one distinct for the pairs, no join, no cached frontier). The
+    * classic shingle→minhash→band→bucket pipeline; the bucket aggregate
+    * is on a high-cardinality key, so it scales linearly with data. A
+    * bucket's whole fan-out — C(n, 2) pairs for n docs in it — lands in
+    * the one task that holds its list, as it did in the bucket self-join
+    * this replaced.
     */
   def minHashCandidates(docs: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", shingleK: Int = 3, numHashes: Int = 12,
@@ -351,28 +523,25 @@ object TextDedup {
     // single-task; no-op at scale.
     val sigs = minHashSignature(graft.ops.Parallelism.widen(docs),
       textCol, idCol, shingleK, numHashes)
-    // Persisted: the self-join consumes this frontier twice, and Spark
-    // does not share common subplans across join inputs — without the
-    // persist the whole shingle→md5→signature pipeline runs twice.
-    // Released by sealResult before return. Already as wide as the
-    // source: banding is a project over `sigs`, so the persist fill and
-    // the self-join's probe side keep the widened partition count.
-    val banded = bandBuckets(sigs, idCol, numHashes, bands).persist(Disk)
-    val l = banded.select(col("band"), col("bucket"), col(idCol).as("a_id"))
-    val r = banded.select(col("band"), col("bucket"), col(idCol).as("b_id"))
-    sealResult(
-      l.join(r, Seq("band", "bucket"))
-        .where(col("a_id") < col("b_id"))
-        .select("a_id", "b_id")
-        .distinct(),
-      banded)
+    // Most buckets hold one doc. A window count drops them before
+    // collect_list, whose per-bucket buffers cost more task CPU than the
+    // window's sort when every bucket reaches them; the aggregate then
+    // reuses the window's partitioning, so both share one shuffle.
+    val sized = bandBuckets(sigs, idCol, numHashes, bands).select(col("*"),
+      count(lit(1)).over(Window.partitionBy("band", "bucket")).as("n"))
+    val buckets = sized.where(col("n") > 1)
+      .groupBy("band", "bucket").agg(collect_list(idCol).as("ids"))
+    sealResult(graft.ops.RelationalOps.listPairs(buckets)
+      .select(col("l_id").as("a_id"), col("r_id").as("b_id")))
   }
 
   /** n-gram Jaccard similarity for candidate pairs over the two docs'
-    * shingle arrays: shingles are distinct per doc, so |A∩B| =
-    * `size(array_intersect(sa, sb))` and |A∪B| = |A|+|B|−|A∩B| are the
-    * counts the oracle's shingle-level join + group-by (DedupQueries)
-    * gives, without a shuffle at token grain.
+    * shingle sets: each referenced doc is shingled once into its
+    * [[shingleSet]] (distinct shingles, sorted, one `binary`), and each
+    * pair's |A∩B| is one merge of the two ([[jaccard]]); |A∪B| =
+    * |A|+|B|−|A∩B|. Those are the counts the oracle's shingle-level
+    * join + group-by (DedupQueries) gives, without a shuffle at token
+    * grain, and the quotient is the same double.
     */
   def jaccardVerify(docs: DataFrame, candidates: DataFrame,
       textCol: String = "text", idCol: String = "doc_id",
@@ -385,24 +554,19 @@ object TextDedup {
       .unionByName(candidates.select(col("b_id").as(idCol)))
       .distinct()
     // Persisted: read once per pair side; released by sealResult. Null
-    // text shingles to the empty set: size(null) is -1 or null by ANSI.
+    // text shingles to the empty set.
+    val set = udf((t: String) => shingleSet(t, shingleK))
     val sh = docs.join(refIds, Seq(idCol), "left_semi")
-      .select(col(idCol), coalesce(shingles(col(textCol), shingleK),
-        array().cast("array<string>")).as("sh"))
+      .select(col(idCol), set(col(textCol)).as("sh"))
       .persist(Disk)
-    val inter = size(array_intersect(col("sa"), col("sb")))
+    val jac = udf((a: Array[Byte], b: Array[Byte]) => jaccard(a, b))
     sealResult(
       candidates
         .join(sh.select(col(idCol).as("a_id"), col("sh").as("sa")), "a_id")
         .join(sh.select(col(idCol).as("b_id"), col("sh").as("sb")), "b_id")
-        // |A∪B| is 0 only for two empty sets (short texts CAN reach here
-        // — identical two-token docs share a SimHash), where inter is 0
-        // too: greatest(…, 1) makes that 0/1 = 0, not an ANSI
-        // DIVIDE_BY_ZERO.
-        .select(col("a_id"), col("b_id"), (inter / greatest(
-          size(col("sa")) + size(col("sb")) - inter, lit(1))).as("jaccard"))
+        .select(col("a_id"), col("b_id"), jac(col("sa"), col("sb")).as("jaccard"))
         // A typed filter stays above the projection: a Column filter is
-        // pushed into the join condition with the intersection inlined,
+        // pushed into the join condition with the kernel inlined,
         // computed there and again in the projection.
         .filter((r: Row) => r.getDouble(2) >= minJaccard),
       sh)

@@ -5,8 +5,10 @@ import java.util.UUID
 import scala.collection.mutable
 
 import org.apache.spark.{ListenerBusDrain, SparkContext}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
-  SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** The Spark jobs and stages one call fired, for dev tools and specs.
   *
@@ -16,10 +18,19 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
   * tagged jobs and the stages they completed (jobs of other threads and
   * scopes are skipped; a nested scope's jobs are its own), and the bus
   * is drained once `f` returns, so every job `f` waited for has its end.
+  *
+  * A job that runs inside a SQL execution — adaptive and broadcast jobs
+  * too, whose stages are named after SQL's own threads — carries that
+  * execution's id and description: the action and the line of the
+  * caller's code that started it, e.g. `count at TextDedup.scala:153`.
   */
 object JobLog {
   final case class Job(id: Int, stageNames: Seq[String], tasks: Int,
-      start: Long, end: Long)
+      start: Long, end: Long, executionId: Option[Long],
+      description: Option[String]) {
+    /** The execution's description, else the last stage's name. */
+    def label: String = description.getOrElse(stageNames.last)
+  }
   /** `secs`: submission to completion, -1 if either is unknown. */
   final case class Stage(id: Int, name: String, secs: Double, tasks: Int,
       shuffleWrite: Long, inputBytes: Long)
@@ -43,12 +54,23 @@ object JobLog {
     val jobs = mutable.LinkedHashMap.empty[Int, Job]
     val stages = mutable.ArrayBuffer.empty[Stage]
     private val stageIds = mutable.HashSet.empty[Int]
+    // Every SQL execution started while the scope listens: the bus
+    // delivers an execution's start before the start of any of its jobs.
+    private val executions = mutable.HashMap.empty[Long, String]
 
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart =>
+        synchronized(executions(s.executionId) = s.description)
+      case _ =>
+    }
     override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
       val p = e.properties
       if (p != null && p.getProperty(Key) == tag) {
+        val exec = Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY))
+          .map(_.toLong)
         jobs(e.jobId) = Job(e.jobId, e.stageInfos.map(_.name),
-          e.stageInfos.map(_.numTasks).sum, e.time, 0L)
+          e.stageInfos.map(_.numTasks).sum, e.time, 0L, exec,
+          exec.flatMap(executions.get))
         stageIds ++= e.stageIds
       }
     }

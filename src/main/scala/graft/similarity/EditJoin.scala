@@ -90,8 +90,8 @@ object EditJoin {
     // Persisted: the self-join consumes the exploded frontier twice,
     // and Spark does not share common subplans across join inputs —
     // without the persist the base scan plus the Θ(len^maxDist)
-    // variant generation run once PER JOIN SIDE (the q35
-    // minHashCandidates idiom; released before return). The persisted
+    // variant generation run once PER JOIN SIDE (the q37
+    // simHashCandidates idiom; released before return). The persisted
     // frame is the narrow (id, str, 8-byte variant hash) projection,
     // not the variant strings.
     val exploded = base.select(col(idCol), col(strCol),

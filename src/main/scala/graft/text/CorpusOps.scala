@@ -518,10 +518,7 @@ object CorpusOps {
     * `sort_array(collect_list(struct))` orders them.
     *
     * Docs with a null id or null text are excluded (nothing to
-    * encode); an empty text is ONE empty token (family grain). For
-    * small vocabularies [[encodeTokensLit]] is the zero-shuffle
-    * per-row variant — same answer, plan-embedded map, streaming-safe
-    * unchanged.
+    * encode); an empty text is ONE empty token (family grain).
     */
   def encodeTokens(docs: DataFrame, vocab: DataFrame, idCol: String,
       textCol: String, unkId: Int): DataFrame = {
@@ -553,34 +550,6 @@ object CorpusOps {
       .select(col(idCol),
         transform(col("_ps"), p => p("_tid")).as("token_ids"),
         col("n_tokens"), col("n_unk"))
-  }
-
-  /** Per-row twin of [[encodeTokens]]: the vocabulary as a PLAN
-    * LITERAL map, the encode as a pure column program — zero shuffle,
-    * zero join, and therefore streaming-safe UNCHANGED (the same
-    * body runs on a streaming frame; gated in VocabEncodeSpec's
-    * MemoryStream test). Right when the vocab is driver-resident and
-    * small (the literal serializes with every task);
-    * [[encodeTokens]] is the scale path when it isn't. Emits
-    * bit-identical rows to the join variant — gated in
-    * VocabEncodeSpec.
-    */
-  def encodeTokensLit(docs: DataFrame, vocab: Map[String, Int],
-      idCol: String, textCol: String, unkId: Int): DataFrame = {
-    require(unkId >= 0, s"unkId $unkId")
-    val m = typedLit(vocab)
-    val ids = transform(split(col(textCol), " "),
-      t => coalesce(element_at(m, t), lit(unkId)).cast("int"))
-    // n_unk counts the LOOKUP MISS (same contract as the join
-    // variant): exact OOV rate even when `unkId` collides with a
-    // real vocab id.
-    val misses = size(filter(split(col(textCol), " "),
-      t => element_at(m, t).isNull)).cast("long")
-    docs
-      .where(col(idCol).isNotNull && col(textCol).isNotNull)
-      .select(col(idCol), ids.as("token_ids"),
-        size(split(col(textCol), " ")).cast("long").as("n_tokens"),
-        misses.as("n_unk"))
   }
 
   /** Top-`k` characteristic terms per document — TF-IDF-family

@@ -1,10 +1,28 @@
 package graft.ann
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
 class KnnSpec extends SparkSpec {
+
+  /** The random-hyperplane signature as a column expression, the
+    * reference for the fused `Knn.tableSignatures` UDF: `numPlanes`
+    * sign bits of v·plane packed into a long, each projection an
+    * expanded sum over literal plane weights. `get`, not `getItem`:
+    * under ANSI getItem throws on an out-of-range index, while get()
+    * returns null, the null poisons the sum, and the sign test falls to
+    * the 0 branch — bit 0 for every plane of a vector shorter than
+    * `dim`, as the DuckDB oracle (out-of-range list index → NULL) gives.
+    */
+  private def hyperplaneSignature(v: Column, numPlanes: Int, dim: Int): Column =
+    (0 until numPlanes).map { p =>
+      val proj = (0 until dim).map { d =>
+        get(v, lit(d)).cast("double") * lit(Knn.planeComponent(p, d))
+      }.reduce(_ + _)
+      when(proj >= 0, shiftleft(lit(1L), p)).otherwise(lit(0L))
+    }.reduce((a, b) => a.bitwiseOR(b))
 
   private def vectors = {
     import spark.implicits._
@@ -132,7 +150,7 @@ class KnnSpec extends SparkSpec {
           - lit(1000L)).cast("double") / lit(1000.0)).cast("float")): _*)
         .as("embedding"))
     val buckets = vecs
-      .select(Knn.hyperplaneSignature(col("embedding"), planesN, dim)
+      .select(hyperplaneSignature(col("embedding"), planesN, dim)
         .as("sig"))
       .groupBy("sig").count()
       .agg(max("count").as("maxb"), sum(col("count") * col("count"))
@@ -274,7 +292,7 @@ class KnnSpec extends SparkSpec {
       .toMap
     // Expression path on the same frame.
     val exprSigs = vs.select(col("vec_id"),
-        Knn.hyperplaneSignature(col("embedding"), 4, 3).as("sig"))
+        hyperplaneSignature(col("embedding"), 4, 3).as("sig"))
       .collect().map(r => r.getAs[Long]("vec_id") ->
         (if (r.isNullAt(1)) 0L else r.getAs[Long]("sig"))).toMap
     assert(udfSigs(1L) == 0L, s"short vector must sign to 0: $udfSigs")

@@ -31,15 +31,22 @@ class RandomizedDedupDifferentialSpec extends SparkSpec {
 
   private val M = TextDedup.MinHashMod
 
+  // U+0085, U+2028 and U+2029 are line terminators outside `\s`: the
+  // tokenizer keeps them inside tokens, except a final one after a
+  // separator, which the trim regex merges into the token before it.
   private val words = Seq("the", "cat", "sat", "on", "a", "mat", "字符",
-    "ünïcode", "🚀", "x" * 40, "end", "of", "line")
-  private val seps = Seq(" ", "  ", "\t", " \n ", "   ")
+    "ünïcode", "🚀", "x" * 40, "end", "of", "line", "ß", "€uro",
+    "a\u0085b", "\u2028", "é\u2029")
+  private val seps = Seq(" ", "  ", "\t", " \n ", "   ", "\r", "\r\n",
+    " \u0085", "\u2028 ", " \u2029")
 
   /** Hostile random corpus: ~1/10 null text, ~1/10 empty or
     * whitespace-only, ~1/8 exact duplicate of an earlier doc, ~1/8
     * near-duplicate (earlier doc + one appended token), a recurring
-    * identical two-token doc, multi-whitespace separators, ~2% null
-    * ids, ids spread over negative and huge values.
+    * identical two-token doc, multi-whitespace and `\r` separators,
+    * multi-byte tokens next to them, U+0085/U+2028/U+2029 inside, before
+    * and after tokens, ~2% null ids, ids spread over negative and huge
+    * values.
     */
   private def corpus(seed: Long, n: Int): DataFrame = {
     val r = new scala.util.Random(seed)
@@ -330,5 +337,91 @@ class RandomizedDedupDifferentialSpec extends SparkSpec {
     assert(runAll(docs.coalesce(1)) == base)
     assert(runAll(docs.repartition(17)) == base)
     assert(runAll(docs.repartitionByRange(13, col("text"))) == base)
+  }
+
+  /** The String kernels the byte kernels replaced, kept as their
+    * reference: distinct space-joined k-gram Strings in a
+    * LinkedHashSet, one `getBytes` + md5 per shingle.
+    */
+  private def refShingles(t: String, k: Int): java.util.LinkedHashSet[String] = {
+    val toks = TextDedup.tokenize(t)
+    val seen = new java.util.LinkedHashSet[String]
+    (0 to toks.length - k).foreach(i => seen.add(toks.slice(i, i + k).mkString(" ")))
+    seen
+  }
+
+  private def refSignature(t: String, k: Int, numHashes: Int): Array[Long] =
+    if (TextDedup.tokenize(t).length < k) null
+    else {
+      val md = java.security.MessageDigest.getInstance("MD5")
+      val mins = Array.fill(numHashes)(Long.MaxValue)
+      refShingles(t, k).forEach { s =>
+        val b = md.digest(s.getBytes("UTF-8"))
+        val u = (b.take(8).foldLeft(0L)((v, x) => (v << 8) | (x & 0xffL)) >>> 4) % M
+        (0 until numHashes).foreach { h =>
+          mins(h) = math.min(mins(h), (u * TextDedup.mixA(h) + TextDedup.mixB(h)) % M)
+        }
+      }
+      mins
+    }
+
+  private def refJaccard(a: String, b: String, k: Int): Double = {
+    val (sa, sb) = (refShingles(a, k), refShingles(b, k))
+    val inter = sa.stream().filter(sb.contains(_)).count()
+    inter.toDouble / math.max(sa.size + sb.size - inter, 1L)
+  }
+
+  test("byte MinHash and Jaccard kernels equal the String/LinkedHashSet " +
+      "reference on seeded random texts") {
+    // Code points, not chars: a Spark string never reaches a UDF with
+    // an unpaired surrogate (its UTF-8 decoder maps one to U+FFFD).
+    val alphabet = Seq("a", "b", "c", "ab", " ", " ", "\t", "\n", "\r",
+      "\u000B", "\f", "\u0085", "\u2028", "\u2029", "é", "字", "🚀", "\u00A0")
+    val r = new scala.util.Random(20261019L)
+    def text(): String =
+      Seq.fill(r.nextInt(24))(alphabet(r.nextInt(alphabet.size))).mkString
+    val as = (0 until 6).map(TextDedup.mixA).toArray
+    val bs = (0 until 6).map(TextDedup.mixB).toArray
+    (0 until 20000).foreach { i =>
+      val (a, b) = (text(), text())
+      val k = 1 + i % 3
+      val got = TextDedup.signature(a, k, as, bs)
+      val want = refSignature(a, k, 6)
+      assert(java.util.Arrays.equals(got, want),
+        s"signature of ${a.map(_.toInt)} at k=$k")
+      // The set is the reference's shingles, sorted by their bytes.
+      val set = new String(TextDedup.shingleSet(a, k), "UTF-8")
+      val wantSet = refShingles(a, k).toArray(new Array[String](0))
+        .sortBy(_.getBytes("UTF-8"))(new Ordering[Array[Byte]] {
+          def compare(x: Array[Byte], y: Array[Byte]): Int =
+            java.util.Arrays.compareUnsigned(x, y)
+        })
+      assert(set == wantSet.mkString("\n"), s"shingleSet of ${a.map(_.toInt)}")
+      // A near copy of `a` as the second text in one pair of three, so
+      // the intersections are not all empty.
+      val b2 = if (i % 3 == 0) a + alphabet(r.nextInt(alphabet.size)) + b else b
+      assert(TextDedup.jaccard(TextDedup.shingleSet(a, k),
+        TextDedup.shingleSet(b2, k)) == refJaccard(a, b2, k),
+        s"jaccard of ${a.map(_.toInt)} and ${b2.map(_.toInt)} at k=$k")
+    }
+  }
+
+  test("a bucket of 300 identical docs gives all C(300, 2) candidate " +
+      "pairs, as the bucket self-join does") {
+    val docs = (0L until 300L).map(i => (i * 7L - 1000L, "the same three tokens"))
+      .toDF("doc_id", "text")
+    docs.createOrReplaceTempView("ddocs")
+    val got = TextDedup.minHashCandidates(docs, "text", "doc_id",
+      shingleK = 3, numHashes = 12, bands = 4)
+    assert(got.count() == 300L * 299L / 2)
+    check("minHashCandidates (one hot bucket)", 0L, got,
+      spark.sql(s"""
+        WITH ${sigCtes(3, 12)},
+        ${bandedCte(12, 4)}
+        SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
+        FROM banded a JOIN banded b
+          ON a.band = b.band AND a.bucket = b.bucket
+        WHERE a.doc_id < b.doc_id"""))
+    got.unpersist()
   }
 }

@@ -45,6 +45,18 @@ class JobLogSpec extends SparkSpec {
     assert(scope.result == 100L)
     assert(scope.jobs.exists(j => j.stageNames.size == 1 && j.tasks == 3),
       scope.jobs.mkString("; "))
+    // Every job of the action, the broadcast's too, carries the one SQL
+    // execution and its description, which names this file's line.
+    assert(scope.jobs.map(_.executionId).distinct.size == 1 &&
+      scope.jobs.forall(_.executionId.nonEmpty), scope.jobs.mkString("; "))
+    assert(scope.jobs.forall(_.label.startsWith("count at JobLogSpec.scala:")),
+      scope.jobs.map(_.label).mkString("; "))
+  }
+
+  test("a job outside any SQL execution is labelled by its last stage") {
+    val scope = JobLog.scoped(spark.sparkContext)(oneJob())
+    val Seq(j) = scope.jobs
+    assert(j.executionId.isEmpty && j.label == j.stageNames.last, j.toString)
   }
 
   test("a scope that only builds a frame reports zero jobs") {

@@ -2,16 +2,13 @@ package graft.text
 
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
 /** q69 `buildVocab` / `encodeTokens`: hand-computed vocabulary with
-  * count ties and OOV, join-path vs literal-path bit equality on the
-  * fixture, the plan shapes (broadcast lookup, text never shuffled,
-  * TakeOrdered top-V, zero-exchange literal variant), and the literal
-  * variant running unchanged on a streaming frame.
+  * count ties and OOV, and the plan shapes (broadcast lookup, text
+  * never shuffled, TakeOrdered top-V).
   */
 class VocabEncodeSpec extends SparkSpec {
 
@@ -59,8 +56,7 @@ class VocabEncodeSpec extends SparkSpec {
     // n_unk counts the lookup MISS, not `tid == unkId`: a caller who
     // breaks the "unkId is an id no real token holds" convention
     // (unkId = 0 collides with token 'a' here) still gets the exact
-    // OOV rate — only token_ids becomes ambiguous — and the literal
-    // variant agrees bit-for-bit.
+    // OOV rate — only token_ids becomes ambiguous.
     val collide = CorpusOps.encodeTokens(docs, vocab, "doc_id", "text",
         unkId = 0)
       .orderBy("doc_id")
@@ -73,15 +69,6 @@ class VocabEncodeSpec extends SparkSpec {
       (1L, "1,0,0,2", 4L, 0L),
       (2L, "0,1,1,0", 4L, 1L),
       (3L, "0", 1L, 1L)), collide.toString)
-    val collideLit = CorpusOps.encodeTokensLit(docs,
-        Map("a" -> 0, "b" -> 1, "c" -> 2), "doc_id", "text", unkId = 0)
-      .orderBy("doc_id")
-      .select(col("doc_id"),
-        array_join(col("token_ids").cast("array<string>"), ",")
-          .as("ids"),
-        col("n_tokens"), col("n_unk"))
-      .as[(Long, String, Long, Long)].collect().toSeq
-    assert(collideLit == collide)
     intercept[IllegalArgumentException] {
       CorpusOps.buildVocab(docs, "text", 0)
     }
@@ -95,38 +82,8 @@ class VocabEncodeSpec extends SparkSpec {
     ()
   }
 
-  test("encodeTokensLit emits bit-identical rows to the join variant " +
-      "on the fixture, and the fixture genuinely exercises OOV") {
-    import spark.implicits._
-    val docs = graft.Tables.load(spark, sf0001, "documents")
-    val vocab = CorpusOps.buildVocab(docs, "text", 16)
-    val joinRows = CorpusOps.encodeTokens(docs, vocab, "doc_id",
-        "text", unkId = 16)
-      .select(col("doc_id"),
-        array_join(col("token_ids").cast("array<string>"), ",")
-          .as("ids"),
-        col("n_tokens"), col("n_unk"))
-      .as[(Long, String, Long, Long)].collect().toSet
-    val vmap = vocab.select("token", "token_id")
-      .as[(String, Int)].collect().toMap
-    val litRows = CorpusOps.encodeTokensLit(docs, vmap, "doc_id",
-        "text", unkId = 16)
-      .select(col("doc_id"),
-        array_join(col("token_ids").cast("array<string>"), ",")
-          .as("ids"),
-        col("n_tokens"), col("n_unk"))
-      .as[(Long, String, Long, Long)].collect().toSet
-    assert(joinRows == litRows)
-    assert(joinRows.nonEmpty)
-    val unk = joinRows.toSeq.map(_._4).sum
-    val tot = joinRows.toSeq.map(_._3).sum
-    assert(unk > 0 && unk < tot,
-      s"fixture should exercise BOTH vocab hits and OOV: $unk/$tot")
-  }
-
-  test("plans: encode looks up via ONE broadcast hash join and never " +
-      "shuffles text or tokens, vocab's top-V is TakeOrdered (no " +
-      "global sort), and the literal variant plans ZERO exchanges") {
+  test("plans: one broadcast lookup, text never shuffled, TakeOrdered " +
+      "top-V") {
     val docs = graft.Tables.load(spark, sf0001, "documents")
     val vocab = CorpusOps.buildVocab(docs, "text", 16)
     assert(vocab.queryExecution.executedPlan.toString
@@ -150,37 +107,5 @@ class VocabEncodeSpec extends SparkSpec {
           c.name == "text" || c.name == "_tok"),
           s"text/token strings are being SHUFFLED:\n$ps")
       }
-
-    val lit = CorpusOps.encodeTokensLit(docs,
-      Map("scan" -> 0, "join" -> 1), "doc_id", "text", unkId = 16)
-    lit.queryExecution.toRdd.count()
-    val lps = planNodes(lit.queryExecution.executedPlan)
-    assert(!lps.exists(_.isInstanceOf[ShuffleExchangeExec]) &&
-      !lit.queryExecution.executedPlan.toString.contains("Join"),
-      "the literal variant must be a pure per-row program")
-  }
-
-  test("encodeTokensLit runs UNCHANGED on a streaming frame") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Long, String)]
-    val out = CorpusOps.encodeTokensLit(
-      input.toDF().toDF("doc_id", "text"),
-      Map("a" -> 0, "b" -> 1, "c" -> 2), "doc_id", "text", unkId = 3)
-    val q = out.writeStream.format("memory").queryName("enc_out")
-      .outputMode("append").start()
-    try {
-      input.addData((1L, "b a a c"), (2L, "a b b d"))
-      q.processAllAvailable()
-      val rows = spark.table("enc_out")
-        .select(col("doc_id"),
-          array_join(col("token_ids").cast("array<string>"), ",")
-            .as("ids"),
-          col("n_tokens"), col("n_unk"))
-        .as[(Long, String, Long, Long)].collect().toSet
-      assert(rows == Set(
-        (1L, "1,0,0,2", 4L, 0L),
-        (2L, "0,1,1,3", 4L, 1L)), rows.toString)
-    } finally q.stop()
   }
 }
