@@ -28,10 +28,11 @@ object TextDedup {
 
   private val Disk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
-  /** The ONE tokenizer shared by every fused UDF in this file, with the
-    * same output as the codegen'd `TextAnalysis.tokens` (trim on
-    * `^\s+|\s+$`, split on `\s+`) — batch/streaming/oracle parity of
-    * the whole signature family hangs on that equality.
+  /** The tokenizer of every fused UDF in this file — as Strings here,
+    * as UTF-8 byte slices in [[Tokens]] — with the same output as the
+    * codegen'd `TextAnalysis.tokens` (trim on `^\s+|\s+$`, split on
+    * `\s+`): batch/streaming/oracle parity of the whole signature family
+    * hangs on that equality.
     *
     * It is a char scan, not the regexes: the tokens are the maximal runs
     * of characters outside Java's default `\s` (`[ \t\n\x0B\f\r]`),
@@ -111,28 +112,6 @@ object TextDedup {
     if (trimmed.isEmpty) Array.empty else WsRe.split(trimmed)
   }
 
-  /** Distinct space-joined k-grams in first-occurrence order, the
-    * String shingles of [[shingles]]; the byte kernels cut the same
-    * k-grams from [[Tokens]].
-    */
-  private def distinctShingles(toks: Array[String], k: Int)
-      : java.util.LinkedHashSet[String] = {
-    val seen = new java.util.LinkedHashSet[String]
-    var i = 0
-    while (i <= toks.length - k) {
-      val sb = new java.lang.StringBuilder
-      var j = 0
-      while (j < k) {
-        if (j > 0) sb.append(' ')
-        sb.append(toks(i + j))
-        j += 1
-      }
-      seen.add(sb.toString)
-      i += 1
-    }
-    seen
-  }
-
   /** Per-thread MD5 instance: MessageDigest is neither thread-safe nor
     * serializable, and `getInstance` per ROW is a provider lookup in
     * the hottest loops this file has. ThreadLocal on the object gives
@@ -148,8 +127,7 @@ object TextDedup {
     * [[minHashSignature]] and [[jaccardVerify]]: the text is encoded once
     * and its tokens are compacted in place, one `' '` apart, so shingle
     * `i` of `k` tokens is the slice `bytes(start(i) until shingleEnd(i, k))`
-    * — byte for byte the UTF-8 of the String shingle `distinctShingles`
-    * builds. Scanning bytes for the ASCII `\s` gives the same tokens as
+    * — byte for byte the UTF-8 of the tokens joined by `' '`. Scanning bytes for the ASCII `\s` gives the same tokens as
     * scanning chars: those bytes never occur inside a multi-byte UTF-8
     * sequence, and a surrogate pair never straddles a separator. A text
     * holding a regex-only terminator is first re-joined from
@@ -347,28 +325,31 @@ object TextDedup {
     * shingle, measured 8.8 s to shingle 5,000 sf0.1 docs vs ~0.3 s
     * fused. A projection boundary doesn't help — CollapseProject
     * re-inlines it. Output is bit-identical to the old expression: the
-    * tokens of TextAnalysis.tokens (by the char scan of [[tokenize]],
-    * which falls back to the same trim/split regexes for the one case
-    * where a scan would differ), space-joined k-grams, first-occurrence
-    * dedup (array_distinct), null text → null, fewer than k tokens →
-    * empty.
+    * tokens of TextAnalysis.tokens (the [[Tokens]] scan, which falls back
+    * to the same trim/split regexes for the one case where a scan would
+    * differ), space-joined k-grams — the byte slices the MinHash and
+    * Jaccard kernels hash and compare, decoded — first-occurrence dedup
+    * (array_distinct), null text → null, fewer than k tokens → empty.
     */
   def shingles(text: Column, k: Int): Column = {
     val f = udf { (t: String) =>
       if (t == null) null
       else {
-        val toks = tokenize(t)
-        if (toks.length < k) Array.empty[String]
-        else {
-          val seen = distinctShingles(toks, k)
-          val out = new Array[String](seen.size)
-          seen.toArray(out)
-          out
+        val tk = TokensLocal.get().load(t)
+        val seen = new java.util.LinkedHashSet[String]
+        var i = 0
+        while (i <= tk.n - k) {
+          val s = tk.start(i)
+          seen.add(new String(tk.bytes, s, tk.shingleEnd(i, k) - s,
+            java.nio.charset.StandardCharsets.UTF_8))
+          i += 1
         }
+        seen.toArray(new Array[String](seen.size))
       }
     }
     f(text)
   }
+
 
   /** MinHash modulus and affine mixing constants: ONE md5 per shingle
     * yields a 60-bit base hash `u`; the k "permutations" are
