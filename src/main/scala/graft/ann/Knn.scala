@@ -229,8 +229,9 @@ object Knn {
       // A vector SHORTER than the pinned dim signs to 0 on every plane
       // — matching the DuckDB oracle (and KnnSpec's expression form),
       // where the out-of-range element is NULL, the whole projection
-      // sum goes NULL, and the sign test falls to the 0 branch. Signing the prefix instead would bucket the engine
-      // differently from the 'bit-exact by construction' oracle forms.
+      // sum goes NULL, and the sign test falls to the 0 branch. Signing
+      // the prefix instead would bucket the engine differently from the
+      // 'bit-exact by construction' oracle forms.
       if (v.length < dim) new Array[Long](nt)
       else {
         val out = new Array[Long](nt)

@@ -127,9 +127,10 @@ object TextDedup {
     * [[minHashSignature]] and [[jaccardVerify]]: the text is encoded once
     * and its tokens are compacted in place, one `' '` apart, so shingle
     * `i` of `k` tokens is the slice `bytes(start(i) until shingleEnd(i, k))`
-    * — byte for byte the UTF-8 of the tokens joined by `' '`. Scanning bytes for the ASCII `\s` gives the same tokens as
-    * scanning chars: those bytes never occur inside a multi-byte UTF-8
-    * sequence, and a surrogate pair never straddles a separator. A text
+    * — byte for byte the UTF-8 of the tokens joined by `' '`. Scanning
+    * bytes for the ASCII `\s` gives the same tokens as scanning chars:
+    * those bytes never occur inside a multi-byte UTF-8 sequence, and a
+    * surrogate pair never straddles a separator. A text
     * holding a regex-only terminator is first re-joined from
     * [[regexTokens]] (whose tokens hold no ASCII `\s`), so the scan cuts
     * it there. One instance per task thread ([[TokensLocal]]); `load`
@@ -186,7 +187,10 @@ object TextDedup {
     def shingleSet(k: Int): Array[Byte] = {
       val m = n - k + 1
       if (m <= 0) return Array.emptyByteArray
-      if (order.length < m) { order = new Array[Int](m); tmp = new Array[Int](m) }
+      if (order.length < m) {
+        order = new Array[Int](m)
+        tmp = new Array[Int](m)
+      }
       var i = 0
       while (i < m) { order(i) = i; i += 1 }
       sortShingles(k, 0, m)
@@ -248,7 +252,8 @@ object TextDedup {
     * of [[jaccardVerify]].
     */
   private[dedup] def shingleSet(t: String, k: Int): Array[Byte] =
-    if (t == null) Array.emptyByteArray else TokensLocal.get().load(t).shingleSet(k)
+    if (t == null) Array.emptyByteArray
+    else TokensLocal.get().load(t).shingleSet(k)
 
   /** |A∩B| / max(|A∪B|, 1) of two [[shingleSet]]s, by one merge over
     * the two sorted byte strings: the set sizes are their shingle
@@ -545,7 +550,8 @@ object TextDedup {
       candidates
         .join(sh.select(col(idCol).as("a_id"), col("sh").as("sa")), "a_id")
         .join(sh.select(col(idCol).as("b_id"), col("sh").as("sb")), "b_id")
-        .select(col("a_id"), col("b_id"), jac(col("sa"), col("sb")).as("jaccard"))
+        .select(col("a_id"), col("b_id"),
+          jac(col("sa"), col("sb")).as("jaccard"))
         // A typed filter stays above the projection: a Column filter is
         // pushed into the join condition with the kernel inlined,
         // computed there and again in the projection.

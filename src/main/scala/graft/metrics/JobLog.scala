@@ -22,7 +22,7 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
   * A job that runs inside a SQL execution — adaptive and broadcast jobs
   * too, whose stages are named after SQL's own threads — carries that
   * execution's id and description: the action and the line of the
-  * caller's code that started it, e.g. `count at TextDedup.scala:153`.
+  * caller's code that started it, as `count at <file>.scala:<line>`.
   */
 object JobLog {
   final case class Job(id: Int, stageNames: Seq[String], tasks: Int,

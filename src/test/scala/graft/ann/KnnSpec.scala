@@ -16,7 +16,8 @@ class KnnSpec extends SparkSpec {
     * the 0 branch — bit 0 for every plane of a vector shorter than
     * `dim`, as the DuckDB oracle (out-of-range list index → NULL) gives.
     */
-  private def hyperplaneSignature(v: Column, numPlanes: Int, dim: Int): Column =
+  private def hyperplaneSignature(v: Column, numPlanes: Int,
+      dim: Int): Column =
     (0 until numPlanes).map { p =>
       val proj = (0 until dim).map { d =>
         get(v, lit(d)).cast("double") * lit(Knn.planeComponent(p, d))

@@ -343,10 +343,12 @@ class RandomizedDedupDifferentialSpec extends SparkSpec {
     * reference: distinct space-joined k-gram Strings in a
     * LinkedHashSet, one `getBytes` + md5 per shingle.
     */
-  private def refShingles(t: String, k: Int): java.util.LinkedHashSet[String] = {
+  private def refShingles(t: String,
+      k: Int): java.util.LinkedHashSet[String] = {
     val toks = TextDedup.tokenize(t)
     val seen = new java.util.LinkedHashSet[String]
-    (0 to toks.length - k).foreach(i => seen.add(toks.slice(i, i + k).mkString(" ")))
+    (0 to toks.length - k)
+      .foreach(i => seen.add(toks.slice(i, i + k).mkString(" ")))
     seen
   }
 
@@ -357,9 +359,11 @@ class RandomizedDedupDifferentialSpec extends SparkSpec {
       val mins = Array.fill(numHashes)(Long.MaxValue)
       refShingles(t, k).forEach { s =>
         val b = md.digest(s.getBytes("UTF-8"))
-        val u = (b.take(8).foldLeft(0L)((v, x) => (v << 8) | (x & 0xffL)) >>> 4) % M
+        val u = (b.take(8).foldLeft(0L)((v, x) => (v << 8) | (x & 0xffL))
+          >>> 4) % M
         (0 until numHashes).foreach { h =>
-          mins(h) = math.min(mins(h), (u * TextDedup.mixA(h) + TextDedup.mixB(h)) % M)
+          mins(h) = math.min(mins(h),
+            (u * TextDedup.mixA(h) + TextDedup.mixB(h)) % M)
         }
       }
       mins
@@ -376,7 +380,8 @@ class RandomizedDedupDifferentialSpec extends SparkSpec {
     // Code points, not chars: a Spark string never reaches a UDF with
     // an unpaired surrogate (its UTF-8 decoder maps one to U+FFFD).
     val alphabet = Seq("a", "b", "c", "ab", " ", " ", "\t", "\n", "\r",
-      "\u000B", "\f", "\u0085", "\u2028", "\u2029", "é", "字", "🚀", "\u00A0")
+      "\u000B", "\f", "\u0085", "\u2028", "\u2029", "é", "字", "🚀",
+      "\u00A0")
     val r = new scala.util.Random(20261019L)
     def text(): String =
       Seq.fill(r.nextInt(24))(alphabet(r.nextInt(alphabet.size))).mkString
@@ -396,10 +401,12 @@ class RandomizedDedupDifferentialSpec extends SparkSpec {
           def compare(x: Array[Byte], y: Array[Byte]): Int =
             java.util.Arrays.compareUnsigned(x, y)
         })
-      assert(set == wantSet.mkString("\n"), s"shingleSet of ${a.map(_.toInt)}")
+      assert(set == wantSet.mkString("\n"),
+        s"shingleSet of ${a.map(_.toInt)}")
       // A near copy of `a` as the second text in one pair of three, so
       // the intersections are not all empty.
-      val b2 = if (i % 3 == 0) a + alphabet(r.nextInt(alphabet.size)) + b else b
+      val b2 =
+        if (i % 3 == 0) a + alphabet(r.nextInt(alphabet.size)) + b else b
       assert(TextDedup.jaccard(TextDedup.shingleSet(a, k),
         TextDedup.shingleSet(b2, k)) == refJaccard(a, b2, k),
         s"jaccard of ${a.map(_.toInt)} and ${b2.map(_.toInt)} at k=$k")
@@ -408,7 +415,8 @@ class RandomizedDedupDifferentialSpec extends SparkSpec {
 
   test("a bucket of 300 identical docs gives all C(300, 2) candidate " +
       "pairs, as the bucket self-join does") {
-    val docs = (0L until 300L).map(i => (i * 7L - 1000L, "the same three tokens"))
+    val docs = (0L until 300L)
+      .map(i => (i * 7L - 1000L, "the same three tokens"))
       .toDF("doc_id", "text")
     docs.createOrReplaceTempView("ddocs")
     val got = TextDedup.minHashCandidates(docs, "text", "doc_id",
