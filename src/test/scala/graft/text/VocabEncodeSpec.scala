@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** q69 `buildVocab` / `encodeTokens`: hand-computed vocabulary with
-  * count ties and OOV, and the plan shapes (broadcast lookup, text
-  * never shuffled, TakeOrdered top-V).
+  * count ties and OOV, and on the fixture both lookup paths and the plan
+  * shapes (broadcast lookup, text never shuffled, TakeOrdered top-V).
   */
 class VocabEncodeSpec extends SparkSpec {
 
@@ -93,6 +93,11 @@ class VocabEncodeSpec extends SparkSpec {
     val enc = CorpusOps.encodeTokens(docs, vocab, "doc_id", "text",
       unkId = 16)
     enc.queryExecution.toRdd.count()
+    // The fixture must exercise both the lookup hit and the OOV path.
+    val counts = enc.agg(sum("n_unk"), sum("n_tokens")).head()
+    val (unk, tot) = (counts.getLong(0), counts.getLong(1))
+    assert(unk > 0 && unk < tot,
+      s"fixture should exercise BOTH vocab hits and OOV: $unk/$tot")
     val plan = enc.queryExecution.executedPlan
     val ps = plan.toString
     assert(!ps.contains("CartesianProduct") &&
