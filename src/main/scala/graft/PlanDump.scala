@@ -13,9 +13,10 @@ import graft.pipeline.PhaseLog
   * output rows, and the classes Spark compiled for the query (its
   * generated-code cache misses: the queries of one launch share that
   * 100-class cache, so a later query can recompile an earlier one's) —
-  * then each Spark job (labelled by its SQL execution's description,
-  * the action and graft source line that started it) and the slowest
-  * stages, so the expensive jobs inside a multi-action query are
+  * with its stages' executor CPU seconds (`cpu_s`), then each Spark job
+  * (labelled by its SQL execution's description, the action and graft
+  * source line that started it) and the slowest stages, so the
+  * expensive jobs inside a multi-action query are
   * attributable.
   * Wall-clock on this host swings 3-20x with ambient hypervisor steal,
   * so plan shape + shuffle volume are the signals optimization
@@ -62,6 +63,7 @@ object PlanDump {
         f"stages=${stages.size}%3d " +
         f"shuffleMB=${stages.map(_.shuffleWrite).sum / 1e6}%9.2f " +
         f"inputMB=${stages.map(_.inputBytes).sum / 1e6}%8.2f secs=$secs%7.2f " +
+        f"cpu_s=${stages.map(_.cpuSecs).sum}%6.2f " +
         f"compiles=${PhaseLog.compiles - c0}%4d")
       jobs.foreach { j =>
         println(f"[job] ${j.id}%4d ${(j.end - j.start) / 1e3}%8.3f s " +

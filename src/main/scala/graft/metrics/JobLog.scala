@@ -31,9 +31,10 @@ object JobLog {
     /** The execution's description, else the last stage's name. */
     def label: String = description.getOrElse(stageNames.last)
   }
-  /** `secs`: submission to completion, -1 if either is unknown. */
+  /** `secs`: submission to completion, -1 if either is unknown;
+    * `cpuSecs`: the CPU time its tasks spent on executors. */
   final case class Stage(id: Int, name: String, secs: Double, tasks: Int,
-      shuffleWrite: Long, inputBytes: Long)
+      shuffleWrite: Long, inputBytes: Long, cpuSecs: Double)
   final case class Scope[T](result: T, jobs: Seq[Job], stages: Seq[Stage])
 
   private val Key = "graft.jobLog.scope"
@@ -84,7 +85,8 @@ object JobLog {
         si.completionTime.zip(si.submissionTime)
           .fold(-1.0) { case (c, s) => (c - s) / 1e3 },
         si.numTasks, si.taskMetrics.shuffleWriteMetrics.bytesWritten,
-        si.taskMetrics.inputMetrics.bytesRead)
+        si.taskMetrics.inputMetrics.bytesRead,
+        si.taskMetrics.executorCpuTime / 1e9)
     }
   }
 }

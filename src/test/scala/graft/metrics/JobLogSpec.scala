@@ -79,6 +79,8 @@ class JobLogSpec extends SparkSpec {
       assert(scope.jobs.forall(j => j.end > 0 && j.end >= j.start),
         scope.jobs.toString)
       assert(scope.stages.exists(_.shuffleWrite > 0), scope.stages.toString)
+      assert(scope.stages.forall(_.cpuSecs >= 0) &&
+        scope.stages.exists(_.cpuSecs > 0), scope.stages.toString)
     }
   }
 
@@ -93,11 +95,12 @@ class JobLogSpec extends SparkSpec {
     val sc = spark.sparkContext
     sc.addSparkListener(slow)
     try {
+      // Two actions, so at least two jobs whatever the planner does.
       val scope = JobLog.scoped(sc) {
-        spark.range(0, 5000, 1, 4).selectExpr("id % 5 AS k")
-          .groupBy("k").count().collect()
+        val df = spark.range(0, 5000, 1, 4).selectExpr("id % 5 AS k")
+        (df.count(), df.groupBy("k").count().collect())
       }
-      assert(scope.result.length == 5)
+      assert(scope.result._1 == 5000L && scope.result._2.length == 5)
       assert(scope.jobs.size >= 2, scope.jobs.toString)
       assert(scope.jobs.forall(j => j.end > 0 && j.end >= j.start),
         scope.jobs.toString)
