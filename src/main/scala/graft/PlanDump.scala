@@ -76,7 +76,7 @@ object PlanDump {
       // multi-stage job's wall-clock actually goes.
       stages.filter(_.secs >= 0.3).sortBy(-_.secs).take(20).foreach { s =>
         println(f"[stage] ${s.id}%4d ${s.secs}%8.3f s " +
-          f"tasks=${s.tasks}%4d  ${s.name.take(70)}")
+          f"cpu_s=${s.cpuSecs}%6.2f tasks=${s.tasks}%4d  ${s.name.take(70)}")
       }
     }
     spark.stop()

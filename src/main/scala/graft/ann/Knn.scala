@@ -19,8 +19,10 @@ import graft.functions.GraftFunctions.cosineSim
   *  - LSH-bucketed (random-hyperplane signatures): dot products only
   *    within matching sign-buckets. The hyperplanes are deterministic
   *    (seeded hash arithmetic, no RNG state) so results are reproducible
-  *    across runs and engines. This is the 100 TB path: candidate
-  *    generation is an equi-join on a compact key.
+  *    across runs and engines. This is the 100 TB path: candidates
+  *    meet on a compact key — queries join the corpus on it (`lshTopK`),
+  *    and a corpus's own pairs come from the id lists of its buckets
+  *    (`lshSimilarPairs`, the `RelationalOps` bucket → pairs kernel).
   */
 object Knn {
 
@@ -133,7 +135,7 @@ object Knn {
     * 4 (the recall-tuned small-corpus setting) and capped at 24 (16M
     * buckets — beyond that the signature join key stops paying for
     * itself before petabyte-scale corpora). This is what bounds the
-    * bucket self-join: per table, candidate work is Σ over buckets of
+    * bucket pairs: per table, candidate work is Σ over buckets of
     * |bucket|² ≈ n · targetBucket — LINEAR in n for a fixed target —
     * whereas any fixed plane count degenerates to (n / 2^planes)² =
     * quadratic once n outgrows it.
@@ -218,7 +220,7 @@ object Knn {
     // The sig is a packed long and the plan math assumes independent
     // bits: numPlanes = 64 would wrap (1L << 64 == 1L) and silently
     // alias two planes into one bit; <= 0 would collapse every vector
-    // into signature 0 and turn the bucket self-join quadratic. The
+    // into signature 0 and turn the bucket pairs quadratic. The
     // derived path caps at 24, so only PINNED callers (exactly the
     // ones with no other safety net, e.g. streaming) can hit this.
     require(np >= 1 && np <= 63, s"numPlanes $np not in [1, 63]")
@@ -297,7 +299,7 @@ object Knn {
     * [[derivePlanes]] — so expected bucket population stays ≈
     * `targetBucketSize` and per-table candidate generation stays ≈
     * n · targetBucketSize, linear in n. A FIXED plane count is only safe
-    * while n ≲ targetBucket · 2^planes; past that the bucket self-join
+    * while n ≲ targetBucket · 2^planes; past that the bucket join
     * tends toward (n / 2^planes)², which is why the default derives.
     *
     * Recall: per-plane sign agreement p = 1 − θ/π, per-table collision
@@ -325,8 +327,6 @@ object Knn {
       idCol: String = "vec_id",
       vecCol: String = "embedding",
       targetBucketSize: Long = 4096L,
-      targetRecall: Double = 0.95,
-      recallSim: Double = 0.5, // similarity floor the recall target is at
       knownCount: Long = 0L, // >0: skip the corpus.count() pre-action
       knownDim: Int = 0): DataFrame = { // >0: skip the head() dim probe
     // With planes, tables and dim all pinned (or known) this runs ZERO
@@ -335,7 +335,7 @@ object Knn {
     val np = effectivePlanes(numPlanes,
       if (knownCount > 0) knownCount else corpus.count(), targetBucketSize)
     val nt = if (numTables > 0) numTables
-      else deriveTables(np, targetRecall, recallSim)
+      else deriveTables(np)
     val dim = if (knownDim > 0) knownDim else probeDim(corpus, vecCol)
     // Surface the chosen parameterization in the bench notes (like
     // cc_kernel): a fixture change that shifts the derivation becomes
@@ -402,8 +402,9 @@ object Knn {
     * so a given (corpus, parameters) always yields the same pair set —
     * which is what lets q52 share q48's exactness oracle.
     *
-    * Plan shape matches lshTopK: the bucket self-join carries
-    * (table, sig, id) only; vectors are re-attached to the DISTINCT
+    * The buckets' id lists and their pairs are the
+    * [[graft.ops.RelationalOps.bucketLists]] → `listPairs` kernel over
+    * (table, sig, id) rows; vectors are re-attached to the DISTINCT
     * surviving id pairs for the verify, so the wide embedding payload
     * crosses the wire once per candidate, not once per bucket collision.
     */
@@ -415,7 +416,6 @@ object Knn {
       idCol: String = "vec_id",
       vecCol: String = "embedding",
       targetBucketSize: Long = 4096L,
-      targetRecall: Double = 0.95,
       knownCount: Long = 0L, // >0: skip the vectors.count() pre-action
       knownDim: Int = 0): DataFrame = { // >0: skip the head() dim probe
     val np = effectivePlanes(numPlanes,
@@ -423,27 +423,16 @@ object Knn {
     // Pairs are verified at `threshold`, so that IS the recall floor the
     // table count must serve.
     val nt = if (numTables > 0) numTables
-      else deriveTables(np, targetRecall, simThreshold = threshold)
+      else deriveTables(np, simThreshold = threshold)
     val dim = if (knownDim > 0) knownDim else probeDim(vectors, vecCol)
     graft.pipeline.PhaseLog.note("lsh_params.pairs",
       s"planes=$np (${if (numPlanes > 0) "pinned" else "derived"}), " +
         s"tables=$nt (${if (numTables > 0) "pinned" else "derived"})")
-    // Widened (graft.ops.Parallelism): on a narrow fixture scan the
-    // bucket self-join otherwise degenerates to a broadcast join whose
-    // probe + distinct partial aggregation run as ONE task over the
-    // scan's single partition (measured 6-18 s single-task jobs at
-    // sf0.1); at scale widen is a no-op. The widening exchange is also
-    // shared by both join sides (canonicalized → ReusedExchange), so
-    // the signature-UDF pipeline executes once, not twice. No persist
-    // needed for that reuse.
-    val sigs = graft.ops.Parallelism.widen(
-      tableSignatures(vectors, idCol, vecCol, np, nt, dim))
-    val cand = sigs.select(col("table"), col("sig"), col("id").as("a_id"))
-      .join(sigs.select(col("table"), col("sig"), col("id").as("b_id")),
-        Seq("table", "sig"))
-      .where(col("a_id") < col("b_id"))
-      .select("a_id", "b_id")
-      .distinct()
+    val ops = graft.ops.RelationalOps
+    val cand = ops.listPairs(ops.bucketLists(
+        tableSignatures(vectors, idCol, vecCol, np, nt, dim),
+        Seq("table", "sig"), "id"))
+      .select(col("l_id").as("a_id"), col("r_id").as("b_id"))
     val withVecs = cand
       .join(vectors.select(col(idCol).as("a_id"), col(vecCol).as("va")),
         "a_id")

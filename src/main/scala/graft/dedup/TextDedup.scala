@@ -1,7 +1,6 @@
 package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Document-scale deduplication operators for training-data pipelines
@@ -9,20 +8,22 @@ import org.apache.spark.sql.functions._
   * reference's exact pre-merge at pgdedupe/run.py:91-99 is the pattern all
   * of these generalize).
   *
-  * The corpus-wide steps are pure column expressions + equi-joins (scale
-  * by shuffle); the per-document signature computations (shingles,
-  * MinHash, SimHash) are fused primitive-loop UDFs — each op's scaladoc
-  * records why that beats the expression form it replaced.
+  * The corpus-wide steps are pure column expressions, bucket lists and
+  * equi-joins (scale by shuffle); the per-document signature
+  * computations (shingles, MinHash, SimHash) are fused primitive-loop
+  * UDFs — each op's scaladoc records why that beats the expression form
+  * it replaced.
   *
   * Persist lifecycle: `jaccardVerify` and `simHashCandidates` each cache
   * an internal frontier that their plan reads twice (the shingle sets,
   * the fingerprints); `minHashCandidates` reads its signatures once, into
-  * the bucket lists, and caches none. A frontier is materialized,
-  * consumed, and UNPERSISTED before the function returns — no internal
-  * block outlives the call. What the caller of any of the three receives
-  * is the (small) result frame, persisted MEMORY_AND_DISK so downstream
-  * actions don't recompute the whole pipeline; call `.unpersist()` on it
-  * when done (one handle releases everything).
+  * the bucket lists of the `RelationalOps` kernel, and caches none. A
+  * frontier is materialized, consumed, and UNPERSISTED before the
+  * function returns — no internal block outlives the call. What the
+  * caller of any of the three receives is the (small) result frame,
+  * persisted MEMORY_AND_DISK so downstream actions don't recompute the
+  * whole pipeline; call `.unpersist()` on it when done (one handle
+  * releases everything).
   */
 object TextDedup {
 
@@ -491,14 +492,13 @@ object TextDedup {
 
   /** MinHash-LSH candidate pairs: band the signature (bands × rowsPerBand
     * = numHashes), list the ids of each (band, bucket) that holds two or
-    * more, emit every ordered id pair of a list once
-    * ([[graft.ops.RelationalOps.listPairs]]: one shuffle for the lists,
-    * one distinct for the pairs, no join, no cached frontier). The
-    * classic shingle→minhash→band→bucket pipeline; the bucket aggregate
-    * is on a high-cardinality key, so it scales linearly with data. A
-    * bucket's whole fan-out — C(n, 2) pairs for n docs in it — lands in
-    * the one task that holds its list, as it did in the bucket self-join
-    * this replaced.
+    * more, emit every ordered id pair of a list once — the
+    * [[graft.ops.RelationalOps.bucketLists]] → `listPairs` kernel: one
+    * shuffle for the lists, one distinct for the pairs, no join, no
+    * cached frontier. The classic shingle→minhash→band→bucket pipeline;
+    * the bucket aggregate is on a high-cardinality key, so it scales
+    * linearly with data. A bucket's whole fan-out — C(n, 2) pairs for n
+    * docs in it — lands in the one task that holds its list.
     */
   def minHashCandidates(docs: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", shingleK: Int = 3, numHashes: Int = 12,
@@ -509,14 +509,8 @@ object TextDedup {
     // single-task; no-op at scale.
     val sigs = minHashSignature(graft.ops.Parallelism.widen(docs),
       textCol, idCol, shingleK, numHashes)
-    // Most buckets hold one doc. A window count drops them before
-    // collect_list, whose per-bucket buffers cost more task CPU than the
-    // window's sort when every bucket reaches them; the aggregate then
-    // reuses the window's partitioning, so both share one shuffle.
-    val sized = bandBuckets(sigs, idCol, numHashes, bands).select(col("*"),
-      count(lit(1)).over(Window.partitionBy("band", "bucket")).as("n"))
-    val buckets = sized.where(col("n") > 1)
-      .groupBy("band", "bucket").agg(collect_list(idCol).as("ids"))
+    val buckets = graft.ops.RelationalOps.bucketLists(
+      bandBuckets(sigs, idCol, numHashes, bands), Seq("band", "bucket"), idCol)
     sealResult(graft.ops.RelationalOps.listPairs(buckets)
       .select(col("l_id").as("a_id"), col("r_id").as("b_id")))
   }
@@ -659,6 +653,11 @@ object TextDedup {
     * guaranteed recall. More chunks (higher maxHamming) means narrower
     * chunk keys and so more candidate collisions — the usual
     * recall/cost trade, made explicit instead of silently capped.
+    *
+    * The one batch generator not on the `RelationalOps` bucket → pairs
+    * kernel: a chunk's candidate pairs come from a self-join, which
+    * adaptive execution broadcasts at the sizes measured (q37, q75), and
+    * the kernel's lists cost more task CPU than that join's probe.
     */
   def simHashCandidates(fingerprints: DataFrame, idCol: String = "doc_id",
       maxHamming: Int = 3): DataFrame = {
@@ -681,18 +680,13 @@ object TextDedup {
     val fp = if (callerCached) fingerprints else fingerprints.persist(Disk)
     // The full fingerprint RIDES THROUGH the chunk join (8 fixed bytes
     // per side) instead of being re-attached by two extra join shuffles
-    // afterwards — the opposite call from the embedding LSH path, whose
-    // wide vectors must NOT travel through the bucket join. ha/hb are
-    // functions of the ids, so distinct over (a_id, b_id, ha, hb) has
-    // the cardinality of (a_id, b_id). Widened (graft.ops.Parallelism):
-    // on a narrow fixture scan the chunk self-join otherwise runs its
-    // probe + distinct partial aggregation as ONE task; at scale widen
-    // is a no-op and the join's own exchanges (with AQE skew split —
-    // the documented hot-chunk story) are untouched.
-    val banded = graft.ops.Parallelism.widen(
-      fp.select(col(idCol), col("simhash"),
-        posexplode(hammingChunkKeys(col("simhash"), maxHamming))
-          .as(Seq("chunk", "ckey"))))
+    // afterwards. ha/hb are functions of the ids, so distinct over
+    // (a_id, b_id, ha, hb) has the cardinality of (a_id, b_id). The
+    // probe side keeps the fingerprints' partitioning, which q37 and
+    // q75 widen at their source.
+    val banded = fp.select(col(idCol), col("simhash"),
+      posexplode(hammingChunkKeys(col("simhash"), maxHamming))
+        .as(Seq("chunk", "ckey")))
     val l = banded.select(col("chunk"), col("ckey"),
       col(idCol).as("a_id"), col("simhash").as("ha"))
     val r = banded.select(col("chunk"), col("ckey"),

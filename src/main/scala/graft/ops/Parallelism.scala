@@ -2,31 +2,24 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 
-/** Input-parallelism floor for candidate-generation self-joins.
+/** Input-parallelism floor for expensive per-row passes.
   *
-  * A tiny parquet fixture scans as ONE partition, and every downstream
-  * bucket self-join then degenerates: AQE converts the join to
-  * broadcast (both sides are small), the probe + the distinct's partial
-  * aggregation run on the STREAM side's partitioning — the scan's one
-  * partition — and a single task pays the whole candidate fan-out
-  * (measured 3-18 s single-task jobs at sf0.1 for q52/q37-shaped
-  * joins). Re-keying the join input with `repartition(cols)` does not
-  * fix it (AQE coalesces keyed repartitions back down by BYTES, which
-  * are tiny before an exploding join — observed 2 tasks — and a
-  * REPARTITION_BY_COL exchange under the join additionally disables
-  * AQE's skew-join splitting at scale).
+  * A tiny parquet fixture scans as ONE partition, so a costly per-row
+  * UDF over it (the MinHash and SimHash signatures, image dHash) runs as
+  * a single task. Re-keying the frame with `repartition(cols)` does not
+  * fix it: AQE coalesces keyed repartitions back down by BYTES, which
+  * are tiny before the UDF.
   *
   * The fix that is a no-op at scale: when the frame's physical
   * partitioning is NARROWER than the session's default parallelism,
   * round-robin it up with a PINNED partition count
   * (`repartition(defaultParallelism)`) — pinned counts are never
-  * AQE-coalesced, so the broadcast-join probe side stays parallel
-  * locally, while the join above keeps inserting its own
-  * ENSURE_REQUIREMENTS exchanges at scale (skew split and partition
-  * coalescing both stay live). On a real cluster the scan already has
+  * AQE-coalesced. On a real cluster the scan already has
   * ≥ parallelism partitions, so no repartition node is added and the
   * plan is byte-identical to the unwidened one. `defaultParallelism`
   * is the session's cluster-derived core count, not a local constant.
+  * The bucket lists downstream spread themselves
+  * (`RelationalOps.bucketLists`).
   */
 object Parallelism {
 

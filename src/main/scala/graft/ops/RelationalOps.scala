@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{ArrayType, LongType, StructType}
 
 /** The reference's relational pipeline stages as pure DataFrame => DataFrame
   * functions (ref: SURVEY.md §2 / pgdedupe/run.py). Each stage is
@@ -101,27 +101,80 @@ object RelationalOps {
     * `(block_id, ids)`: every non-null block key covering
     * 2..`maxBlockSize` records (singleton blocks admit no comparison,
     * larger ones are dropped, A2, ref pgdedupe/run.py:265-275), with its
-    * records' ids. `block_id` is the key itself: the reference numbers
-    * its blocks only to compare them, and the keys compare in the same
-    * order. One aggregate; building fires no Spark job.
+    * records' ids — the [[bucketLists]] of the blocking map. `block_id`
+    * is the key itself: the reference numbers its blocks only to
+    * compare them, and the keys compare in the same order. Building
+    * fires no Spark job.
     */
   def blockLists(blockingMap: DataFrame, maxBlockSize: Long): DataFrame =
-    blockingMap.where(col("block_key").isNotNull)
-      .groupBy(col("block_key").as("block_id"))
-      .agg(collect_list("_unique_id").as("ids"))
-      .where(size(col("ids")) > 1 && size(col("ids")) <= maxBlockSize)
+    bucketLists(blockingMap, Seq("block_key"), "_unique_id",
+      maxSize = maxBlockSize).withColumnRenamed("block_key", "block_id")
 
-  /** Every pair of records that shares a block of [[blockLists]], once,
-    * as `(l_id, r_id)` with `l_id < r_id` (J8 + D6, ref
-    * pgdedupe/run.py:293-319): each block lists its ordered pairs, and
-    * one aggregate drops the repeats of a pair that shares several
-    * blocks. No join.
+  /** The lists half of the one bucket → pairs kernel behind every batch
+    * candidate generator (the pipeline's blocks, MinHash bands, SimHash
+    * chunks, embedding-LSH buckets, edit-distance variants): for
+    * `(key…, id, payload…)` rows, each bucket key covering
+    * 2..`maxSize` items as `(key…, ids)`, the items sorted (by id
+    * first). An item is the bare `id`, or `struct(id, payload…)` when a
+    * payload rides along to the pairs (a fingerprint, a string). Rows
+    * with a null key or a null id are dropped: neither can meet another
+    * row in an equi-join.
+    *
+    * The rows are repartitioned by the key into
+    * `spark.sql.shuffle.partitions` tasks before the aggregate, which
+    * reuses that partitioning. Adaptive execution does not coalesce a
+    * repartition by number, so the lists, and [[listPairs]]' fan-out
+    * over them, stay spread over that many tasks; a bare aggregate's
+    * small output is coalesced to one task. A bucket's whole fan-out,
+    * C(n, 2) pairs for n items, lands in the one task that holds its
+    * list. Building fires no Spark job.
     */
-  def listPairs(blocks: DataFrame): DataFrame =
-    blocks.select(explode(col("ids")).as("l_id"), col("ids"))
-      .select(col("l_id"),
-        explode(filter(col("ids"), _ > col("l_id"))).as("r_id"))
+  def bucketLists(rows: DataFrame, keys: Seq[String], id: String,
+      payload: Seq[String] = Nil,
+      maxSize: Long = Long.MaxValue): DataFrame = {
+    val item = if (payload.isEmpty) col(id)
+      else struct(col(id).as("id") +: payload.map(col): _*)
+    val n = rows.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    rows.where((id +: keys).map(col(_).isNotNull).reduce(_ && _))
+      .repartition(n, keys.map(col): _*)
+      .groupBy(keys.map(col): _*)
+      .agg(sort_array(collect_list(item)).as("ids"))
+      .where(size(col("ids")) > 1 && size(col("ids")) <= maxSize)
+  }
+
+  /** The pairs half of the kernel: every pair of items that shares a
+    * list of [[bucketLists]] (or [[blockLists]]), once, as
+    * `(l_id, r_id)` with `l_id < r_id` (J8 + D6, ref
+    * pgdedupe/run.py:293-319) — with each payload field `f` of the
+    * lower-id item as `l_f` and of the other as `r_f`. Each item of a
+    * list pairs with every item after it, which the sort makes the
+    * pair's higher id; only ids are compared, pairs of equal ids are
+    * dropped, and one aggregate drops the repeats of a pair that shares
+    * several lists (or repeats in one). No join, and no higher-order
+    * function: `posexplode`, `sequence` and `element_at` are codegen'd.
+    * Payloads ride along, so an id listed with two different payloads
+    * pairs once per payload.
+    */
+  def listPairs(lists: DataFrame): DataFrame = {
+    val payload = lists.schema("ids").dataType match {
+      case ArrayType(s: StructType, _) => s.fieldNames.toSeq.filter(_ != "id")
+      case _ => Nil
+    }
+    def idOf(item: Column) = if (payload.isEmpty) item else item("id")
+    def side(p: String, item: Column) = idOf(item).as(s"${p}_id") +:
+      payload.map(f => item(f).as(s"${p}_$f"))
+    val (x, y) = (col("x"), col("y"))
+    // 1-based positions p + 2 .. size of the items after x: `sequence`
+    // would count down past the last item, so that one is dropped.
+    lists.select(posexplode(col("ids")).as(Seq("p", "x")), col("ids"))
+      .where(col("p") + 1 < size(col("ids")))
+      .select(x, col("ids"),
+        explode(sequence(col("p") + 2, size(col("ids")))).as("q"))
+      .select(x, element_at(col("ids"), col("q")).as("y"))
+      .where(idOf(x) < idOf(y))
+      .select(side("l", x) ++ side("r", y): _*)
       .distinct()
+  }
 
   /** Kolb's redundant-free blocking frame (A2 + A3, ref
     * pgdedupe/run.py:265-303) as `(block_id, _unique_id, block_ids)`: the

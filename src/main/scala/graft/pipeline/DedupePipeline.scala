@@ -95,7 +95,7 @@ object DedupePipeline {
   }
 
   /** create_blocking (ref run.py:187-321): the blocking map, its blocks
-    * ([[RelationalOps.blockLists]], the one persisted blocking frame) and
+    * ([[RelationalOps.blockLists]], a lazy frame that nothing pins) and
     * the blocks' record rows `(block_id, _unique_id)`, which nothing in
     * the pipeline reads (the benchmark's traced run sizes blocks by
     * them). Building fires no Spark job.

@@ -230,7 +230,7 @@ object IncrementalDedup {
 
   /** Streaming embedding near-dup candidates — the hyperplane-bucket
     * analog of `minhashCandidateStream` and the incremental analog of
-    * the batch `Knn.lshSimilarPairs` candidate join (q52's scale path):
+    * the batch `Knn.lshSimilarPairs` bucket lists (q52's scale path):
     * arriving vectors are signatured by the SAME fused plane UDF
     * (`Knn.tableSignatures`, one shared definition), then paired against
     * per-(table, signature) keyed state under the same bucket cap.
@@ -259,7 +259,7 @@ object IncrementalDedup {
   /** Streaming edit-distance candidates — the deletion-neighborhood
     * analog of [[minhashCandidateStream]] and the incremental twin of
     * the batch [[graft.similarity.EditJoin.editDistancePairs]]
-    * candidate join (q65): arriving records explode into their
+    * variant lists (q65): arriving records explode into their
     * ≤`maxDist`-deletion variants through the SAME codegen'd
     * `delete_neighborhood` expression (one shared definition, same
     * codepoint alphabet, same loud length guard), then pair against

@@ -125,13 +125,15 @@ class PlanSpec extends SparkSpec {
   }
 
   test("candidate generation is equi-join bucketed — never cartesian") {
-    // The dedup/ANN family's scale story is bucketed equi-joins; a
-    // CartesianProduct appearing in any of these means a join key was
-    // lost (e.g. a renamed column silently turning an equi-join into a
-    // cross join).
+    // The dedup/ANN family's scale story is buckets: equi-joins on a
+    // bucket key, or the id lists of RelationalOps' bucket → pairs
+    // kernel. A CartesianProduct appearing in any of these means a key
+    // was lost (e.g. a renamed column silently turning an equi-join into
+    // a cross join).
     Seq("q32_candidate_pairs", "q35_minhash_candidates",
       "q37_simhash_pairs", "q39_kolb_pairs", "q45_knn_lsh",
-      "q12_exact_match_edges").foreach { q =>
+      "q52_embedding_neardup_lsh", "q65_edit_distance_join",
+      "q75_image_neardup", "q12_exact_match_edges").foreach { q =>
       val p = finalPlan(q)
       assert(!p.contains("CartesianProduct"),
         s"$q plans a cartesian product:\n$p")

@@ -431,5 +431,27 @@ class RandomizedDedupDifferentialSpec extends SparkSpec {
           ON a.band = b.band AND a.bucket = b.bucket
         WHERE a.doc_id < b.doc_id"""))
     got.unpersist()
+    // The other candidate generators, each fed 300 equal inputs: one
+    // hot bucket per chunk, table or variant, and all C(300, 2) pairs,
+    // as the self-join of the 300 ids gives them.
+    val allPairs = spark.sql("""SELECT a.doc_id AS a_id, b.doc_id AS b_id
+      FROM ddocs a JOIN ddocs b ON a.doc_id < b.doc_id""")
+    val fps = docs.select(col("doc_id"), lit(0x0abcdef012345L).as("simhash"))
+    val sim = TextDedup.simHashCandidates(fps, maxHamming = 3)
+    check("simHashCandidates (300 equal fingerprints)", 0L, sim,
+      allPairs.withColumn("hamming", lit(0L)))
+    sim.unpersist()
+    val vecs = docs.select(col("doc_id").as("vec_id"),
+      array(lit(0.5f), lit(-0.25f), lit(1.0f), lit(0.125f)).as("embedding"))
+    val lsh = graft.ann.Knn.lshSimilarPairs(vecs, threshold = 0.9,
+      numPlanes = 4, numTables = 3, knownDim = 4)
+    assert(lsh.where(col("cosine") < 0.9999).isEmpty)
+    check("lshSimilarPairs (300 equal vectors)", 0L,
+      lsh.select("a_id", "b_id"), allPairs)
+    val edit = graft.similarity.EditJoin.editDistancePairs(
+      docs.withColumn("s", lit("same name")), "doc_id", "s", maxDist = 1)
+    check("editDistancePairs (300 equal strings)", 0L, edit,
+      allPairs.select(col("a_id").as("id1"), col("b_id").as("id2"),
+        lit(0L).as("dist")))
   }
 }

@@ -74,6 +74,61 @@ class RelationalOpsSpec extends SparkSpec {
     }
   }
 
+  test("bucket → pairs kernel: null ids never pair, no pair has equal " +
+      "ids, and the pairs equal the bucket self-join's distinct") {
+    import spark.implicits._
+    // The self-join the kernel replaced, as SQL: `a_id < b_id` never
+    // pairs a null id, nor an id with itself.
+    def selfJoin(rows: org.apache.spark.sql.DataFrame, payload: Boolean) = {
+      rows.createOrReplaceTempView("kernel_rows")
+      val cols =
+        if (payload) "a.id AS l_id, a.s AS l_s, b.id AS r_id, b.s AS r_s"
+        else "a.id AS l_id, b.id AS r_id"
+      spark.sql(s"""SELECT DISTINCT $cols
+        FROM kernel_rows a JOIN kernel_rows b
+          ON a.k = b.k AND a.id < b.id""")
+    }
+    def check(name: String, rows: org.apache.spark.sql.DataFrame,
+        payload: Boolean): Seq[org.apache.spark.sql.Row] = {
+      val lists = RelationalOps.bucketLists(rows, Seq("k"), "id",
+        if (payload) Seq("s") else Nil)
+      val got = RelationalOps.listPairs(lists).collect().toSeq
+      assert(got.forall(r => !r.isNullAt(r.fieldIndex("l_id")) &&
+        !r.isNullAt(r.fieldIndex("r_id")) &&
+        r.getAs[Long]("l_id") < r.getAs[Long]("r_id")), s"$name: $got")
+      assert(got.size == got.distinct.size, s"$name repeats a pair: $got")
+      val want = selfJoin(rows, payload).collect().toSeq
+      assert(got.map(_.toString).sorted == want.map(_.toString).sorted,
+        s"$name")
+      got
+    }
+    val nullId = Seq[(String, Option[Long], String)](("k", Some(1L), "a"),
+      ("k", None, "b"), ("k", Some(2L), "c"), ("j", None, "d"),
+      ("j", Some(3L), "e")).toDF("k", "id", "s")
+    assert(check("null id", nullId, payload = false).map(r =>
+      (r.getLong(0), r.getLong(1))) == Seq((1L, 2L)))
+    assert(check("null id, payload", nullId, payload = true).size == 1)
+    val dupRows = Seq(("k", 1L, "a"), ("k", 1L, "a"), ("k", 2L, "b"),
+      ("k", 2L, "b"), ("j", 2L, "b"), ("j", 1L, "a")).toDF("k", "id", "s")
+    assert(check("duplicate rows", dupRows, payload = false).size == 1)
+    assert(check("duplicate rows, payload", dupRows, payload = true)
+      .size == 1)
+    // One id with two payloads pairs once per payload, never with itself.
+    val twoPayloads = Seq(("k", 1L, "a"), ("k", 1L, "b"), ("k", 2L, "c"))
+      .toDF("k", "id", "s")
+    assert(check("two payloads", twoPayloads, payload = true)
+      .map(_.toString).sorted == Seq("[1,a,2,c]", "[1,b,2,c]"))
+    // A hot key's rows arrive from six input partitions; its list pairs
+    // all C(300, 2) ids, ids shuffled within the list's source order.
+    val hot = spark.range(0, 300, 1, 6)
+      .select(lit("hot").as("k"), ((col("id") * 7) % 300).as("id"),
+        col("id").cast("string").as("s"))
+    assert(hot.rdd.getNumPartitions == 6)
+    assert(check("hot list", hot, payload = false).size == 300 * 299 / 2)
+    assert(check("hot list, payload", hot, payload = true).size ==
+      300 * 299 / 2)
+  }
+
   test("applyClusters defaults singletons to self with score 1.0") {
     val eu = RelationalOps.exactDedup(entries, Seq("name", "city"), "id")
     val em = spark.createDataFrame(Seq((1L, 1L, 0.9)))

@@ -129,8 +129,7 @@ class EditJoinSpec extends SparkSpec {
   }
 
   test("plan: delete_neighborhood + thresholded levenshtein are " +
-      "codegen'd expressions (no ScalaUDF), one equi-join on the " +
-      "variant hash, no CartesianProduct") {
+      "codegen'd expressions (no ScalaUDF), no join, no CartesianProduct") {
     val docs = Seq((1L, "alpha"), (2L, "alphb"), (3L, "gamma"))
       .toDF("id", "s")
     val out = EditJoin.editDistancePairs(docs, "id", "s", 1)
@@ -141,55 +140,37 @@ class EditJoinSpec extends SparkSpec {
     assert(!ps.contains("ScalaUDF"), ps)
     assert(!ps.contains("CartesianProduct") && !ps.contains("BroadcastNestedLoop"),
       s"edit join must not plan a cross join:\n$ps")
-    // ONE execution of the explode subtree: the self-join's two sides
-    // must read the SAME cached relation (an InMemoryRelation
-    // materializes once), not two live executions of the Θ(len^k)
-    // variant generation. The result itself is also cached, so the
-    // join lives in the result scan's cached plan.
-    def deepNodes(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[org.apache.spark.sql.execution.SparkPlan] =
-      planNodes(p).flatMap {
-        case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
-          s +: deepNodes(s.relation.cachedPlan)
-        case other => Seq(other)
-      }
-    // The frontier relation is the one whose cached plan DIRECTLY
-    // contains the explode (GenerateExec); the cached result's plan
-    // merely references the frontier scans.
-    val frontierScans = deepNodes(out.queryExecution.executedPlan)
-      .collect {
-        case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-          if planNodes(s.relation.cachedPlan).exists(
-            _.isInstanceOf[org.apache.spark.sql.execution.GenerateExec])
-          => s.relation
-      }
-    assert(frontierScans.size == 2,
-      s"want the exploded frontier read twice from cache, got ${
-        frontierScans.size}:\n$ps")
-    // The per-side projections re-alias the relation's OUTPUT, but
-    // both must share the one CachedRDDBuilder — the thing that
-    // materializes (executes the explode) exactly once.
-    assert(frontierScans(0).cacheBuilder eq frontierScans(1).cacheBuilder,
-      "the two join sides cache DIFFERENT builders — the explode " +
-        "subtree would run twice")
+    // Candidates come from the variant lists (RelationalOps' bucket →
+    // pairs kernel): no join, and ONE execution of the explode subtree.
+    val nodes = planNodes(out.queryExecution.executedPlan)
+    assert(!nodes.exists(_.isInstanceOf[
+      org.apache.spark.sql.execution.joins.BaseJoinExec]),
+      s"edit join plans a join:\n$ps")
+    assert(nodes.count {
+      case g: org.apache.spark.sql.execution.GenerateExec =>
+        g.generator.toString.contains("delete_neighborhood")
+      case _ => false
+    } == 1,
+      s"the variant generation runs more than once:\n$ps")
     // SQL registry form resolves too.
     val viaSql = spark.sql(
       "SELECT delete_neighborhood('ab', 1, 16) AS v").head().getSeq[String](0)
     assert(viaSql.toSet == Set("ab", "b", "a"))
   }
 
-  test("eager = false runs ZERO jobs at call time and answers " +
-      "identically to the eager path") {
+  test("a call runs zero jobs and leaves nothing persisted") {
     val df = Seq((1L, "smith"), (2L, "smyth"), (3L, "jones"),
       (4L, "jone"), (5L, "unrelated value")).toDF("id", "s")
-    val (lazyResult, jobs) = withJobs(
-      EditJoin.editDistancePairs(df, "id", "s", maxDist = 1, eager = false))
-    assert(jobs.isEmpty, s"lazy call ran jobs at call time: $jobs")
-    // The lazy frame is a plan, not a materialized handle.
-    assert(lazyResult.storageLevel ==
+    val rdds0 = spark.sparkContext.getPersistentRDDs.keySet
+    val (result, jobs) = withJobs(
+      EditJoin.editDistancePairs(df, "id", "s", maxDist = 1))
+    assert(jobs.isEmpty, s"the call ran jobs: $jobs")
+    // The result is a plan, not a materialized handle, and no frontier
+    // is cached behind it, before or after an action.
+    assert(result.storageLevel ==
       org.apache.spark.storage.StorageLevel.NONE)
-    val got = lazyResult.as[(Long, Long, Long)].collect().toSet
+    val got = result.as[(Long, Long, Long)].collect().toSet
     assert(got == Set((1L, 2L, 1L), (3L, 4L, 1L)), got.toString)
-    assert(got == pairs(df, 1))
+    assert(spark.sparkContext.getPersistentRDDs.keySet == rdds0)
   }
 }
