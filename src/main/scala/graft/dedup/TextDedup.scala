@@ -1,6 +1,7 @@
 package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Document-scale deduplication operators for training-data pipelines
@@ -509,8 +510,14 @@ object TextDedup {
     // single-task; no-op at scale.
     val sigs = minHashSignature(graft.ops.Parallelism.widen(docs),
       textCol, idCol, shingleK, numHashes)
+    // Most buckets hold one doc. A window count drops them before
+    // collect_list, whose per-bucket buffers cost more task CPU than the
+    // window's sort when every bucket reaches them; the lists' aggregate
+    // then reuses the window's partitioning, so both share one shuffle.
+    val sized = bandBuckets(sigs, idCol, numHashes, bands).select(col("*"),
+      count(lit(1)).over(Window.partitionBy("band", "bucket")).as("n"))
     val buckets = graft.ops.RelationalOps.bucketLists(
-      bandBuckets(sigs, idCol, numHashes, bands), Seq("band", "bucket"), idCol)
+      sized.where(col("n") > 1), Seq("band", "bucket"), idCol)
     sealResult(graft.ops.RelationalOps.listPairs(buckets)
       .select(col("l_id").as("a_id"), col("r_id").as("b_id")))
   }

@@ -6,9 +6,11 @@ import org.apache.spark.sql.DataFrame
   *
   * A tiny parquet fixture scans as ONE partition, so a costly per-row
   * UDF over it (the MinHash and SimHash signatures, image dHash) runs as
-  * a single task. Re-keying the frame with `repartition(cols)` does not
-  * fix it: AQE coalesces keyed repartitions back down by BYTES, which
-  * are tiny before the UDF.
+  * a single task, and so does the probe side of a broadcast join
+  * downstream (SimHash's chunk self-join, with the fan-out of its
+  * candidate pairs). Re-keying the frame with `repartition(cols)` does
+  * not fix it: AQE coalesces keyed repartitions back down by BYTES,
+  * which are tiny before the UDF.
   *
   * The fix that is a no-op at scale: when the frame's physical
   * partitioning is NARROWER than the session's default parallelism,
@@ -18,8 +20,6 @@ import org.apache.spark.sql.DataFrame
   * ≥ parallelism partitions, so no repartition node is added and the
   * plan is byte-identical to the unwidened one. `defaultParallelism`
   * is the session's cluster-derived core count, not a local constant.
-  * The bucket lists downstream spread themselves
-  * (`RelationalOps.bucketLists`).
   */
 object Parallelism {
 

@@ -110,35 +110,25 @@ object RelationalOps {
     bucketLists(blockingMap, Seq("block_key"), "_unique_id",
       maxSize = maxBlockSize).withColumnRenamed("block_key", "block_id")
 
-  /** The lists half of the one bucket → pairs kernel behind every batch
-    * candidate generator (the pipeline's blocks, MinHash bands, SimHash
-    * chunks, embedding-LSH buckets, edit-distance variants): for
+  /** The lists half of the one bucket → pairs kernel behind the batch
+    * candidate generators (the pipeline's blocks, MinHash bands,
+    * embedding-LSH buckets, edit-distance variants): for
     * `(key…, id, payload…)` rows, each bucket key covering
-    * 2..`maxSize` items as `(key…, ids)`, the items sorted (by id
-    * first). An item is the bare `id`, or `struct(id, payload…)` when a
-    * payload rides along to the pairs (a fingerprint, a string). Rows
-    * with a null key or a null id are dropped: neither can meet another
-    * row in an equi-join.
-    *
-    * The rows are repartitioned by the key into
-    * `spark.sql.shuffle.partitions` tasks before the aggregate, which
-    * reuses that partitioning. Adaptive execution does not coalesce a
-    * repartition by number, so the lists, and [[listPairs]]' fan-out
-    * over them, stay spread over that many tasks; a bare aggregate's
-    * small output is coalesced to one task. A bucket's whole fan-out,
-    * C(n, 2) pairs for n items, lands in the one task that holds its
-    * list. Building fires no Spark job.
+    * 2..`maxSize` rows as `(key…, ids)`. An item is the bare `id`, or
+    * `struct(id, payload…)` when a payload rides along to the pairs (a
+    * string). Rows with a null key or a null id are dropped: neither can
+    * meet another row in an equi-join. One aggregate, on the key;
+    * building fires no Spark job. A bucket's whole fan-out, C(n, 2)
+    * pairs for n items, lands in the one task that holds its list.
     */
   def bucketLists(rows: DataFrame, keys: Seq[String], id: String,
       payload: Seq[String] = Nil,
       maxSize: Long = Long.MaxValue): DataFrame = {
     val item = if (payload.isEmpty) col(id)
       else struct(col(id).as("id") +: payload.map(col): _*)
-    val n = rows.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     rows.where((id +: keys).map(col(_).isNotNull).reduce(_ && _))
-      .repartition(n, keys.map(col): _*)
       .groupBy(keys.map(col): _*)
-      .agg(sort_array(collect_list(item)).as("ids"))
+      .agg(collect_list(item).as("ids"))
       .where(size(col("ids")) > 1 && size(col("ids")) <= maxSize)
   }
 
@@ -147,13 +137,11 @@ object RelationalOps {
     * `(l_id, r_id)` with `l_id < r_id` (J8 + D6, ref
     * pgdedupe/run.py:293-319) — with each payload field `f` of the
     * lower-id item as `l_f` and of the other as `r_f`. Each item of a
-    * list pairs with every item after it, which the sort makes the
-    * pair's higher id; only ids are compared, pairs of equal ids are
-    * dropped, and one aggregate drops the repeats of a pair that shares
-    * several lists (or repeats in one). No join, and no higher-order
-    * function: `posexplode`, `sequence` and `element_at` are codegen'd.
-    * Payloads ride along, so an id listed with two different payloads
-    * pairs once per payload.
+    * list pairs with the items of higher id in it; only ids are
+    * compared, so equal ids never pair, and one aggregate drops the
+    * repeats of a pair that shares several lists (or repeats in one).
+    * No join. Payloads ride along, so an id listed with two different
+    * payloads pairs once per payload.
     */
   def listPairs(lists: DataFrame): DataFrame = {
     val payload = lists.schema("ids").dataType match {
@@ -163,15 +151,10 @@ object RelationalOps {
     def idOf(item: Column) = if (payload.isEmpty) item else item("id")
     def side(p: String, item: Column) = idOf(item).as(s"${p}_id") +:
       payload.map(f => item(f).as(s"${p}_$f"))
-    val (x, y) = (col("x"), col("y"))
-    // 1-based positions p + 2 .. size of the items after x: `sequence`
-    // would count down past the last item, so that one is dropped.
-    lists.select(posexplode(col("ids")).as(Seq("p", "x")), col("ids"))
-      .where(col("p") + 1 < size(col("ids")))
-      .select(x, col("ids"),
-        explode(sequence(col("p") + 2, size(col("ids")))).as("q"))
-      .select(x, element_at(col("ids"), col("q")).as("y"))
-      .where(idOf(x) < idOf(y))
+    // The items take their output names, so bare ids need no projection.
+    val (x, y) = (col("l_id"), col("r_id"))
+    lists.select(explode(col("ids")).as("l_id"), col("ids"))
+      .select(x, explode(filter(col("ids"), idOf(_) > idOf(x))).as("r_id"))
       .select(side("l", x) ++ side("r", y): _*)
       .distinct()
   }
