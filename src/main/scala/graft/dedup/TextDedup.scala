@@ -660,11 +660,9 @@ object TextDedup {
     * guaranteed recall. More chunks (higher maxHamming) means narrower
     * chunk keys and so more candidate collisions — the usual
     * recall/cost trade, made explicit instead of silently capped.
-    *
-    * The one batch generator not on the `RelationalOps` bucket → pairs
-    * kernel: a chunk's candidate pairs come from a self-join, which
-    * adaptive execution broadcasts at the sizes measured (q37, q75), and
-    * the kernel's lists cost more task CPU than that join's probe.
+    * It stays on this self-join, not the `RelationalOps` bucket → pairs
+    * kernel: at q37's and q75's sizes the kernel's lists cost more task
+    * CPU than the broadcast join's probe.
     */
   def simHashCandidates(fingerprints: DataFrame, idCol: String = "doc_id",
       maxHamming: Int = 3): DataFrame = {
@@ -687,13 +685,18 @@ object TextDedup {
     val fp = if (callerCached) fingerprints else fingerprints.persist(Disk)
     // The full fingerprint RIDES THROUGH the chunk join (8 fixed bytes
     // per side) instead of being re-attached by two extra join shuffles
-    // afterwards. ha/hb are functions of the ids, so distinct over
-    // (a_id, b_id, ha, hb) has the cardinality of (a_id, b_id). The
-    // probe side keeps the fingerprints' partitioning, which q37 and
-    // q75 widen at their source.
-    val banded = fp.select(col(idCol), col("simhash"),
-      posexplode(hammingChunkKeys(col("simhash"), maxHamming))
-        .as(Seq("chunk", "ckey")))
+    // afterwards — the opposite call from the embedding LSH path, whose
+    // wide vectors must NOT travel through the bucket join. ha/hb are
+    // functions of the ids, so distinct over (a_id, b_id, ha, hb) has
+    // the cardinality of (a_id, b_id). Widened (graft.ops.Parallelism):
+    // on a narrow fixture scan the chunk self-join otherwise runs its
+    // probe + distinct partial aggregation as ONE task; at scale widen
+    // is a no-op and the join's own exchanges (with AQE skew split —
+    // the documented hot-chunk story) are untouched.
+    val banded = graft.ops.Parallelism.widen(
+      fp.select(col(idCol), col("simhash"),
+        posexplode(hammingChunkKeys(col("simhash"), maxHamming))
+          .as(Seq("chunk", "ckey"))))
     val l = banded.select(col("chunk"), col("ckey"),
       col(idCol).as("a_id"), col("simhash").as("ha"))
     val r = banded.select(col("chunk"), col("ckey"),
