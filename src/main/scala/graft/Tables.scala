@@ -80,16 +80,15 @@ object Tables {
     }
   }
 
-  /** The reader's default `nullValue`: a string NO real field can be
-    * (a lone U+0000) so a quoted `""` survives as an empty string
-    * instead of folding into null (see [[loadCsv]]'s fidelity notes). The
-    * one collision left: an EXTERNAL file whose field legitimately
-    * contains the single-NUL string reads as null — an external-ingest
-    * caller whose data could hold that (or whose producer writes a
-    * different null token, e.g. `\\N` or `NULL`) overrides
-    * [[loadCsv]]'s `nullValue` with the producer's actual token.
+  /** [[loadCsv]]'s `nullValue`: a string NO real field can be (a lone
+    * U+0000) so a quoted `""` survives as an empty string instead of
+    * folding into null (see [[loadCsv]]'s fidelity notes). The one
+    * collision left: an EXTERNAL file whose field legitimately contains
+    * the single-NUL string reads as null. [[sinkCsv]]'s files never
+    * hold a null token; a producer that writes one (`\\N`, `NULL`) is
+    * read with Spark's CSV reader and that token as its `nullValue`.
     */
-  val CsvNullSentinel: String = "\u0000"
+  private val CsvNullSentinel: String = "\u0000"
 
   /** CSV bulk ingest (S3 — the Spark stand-in for the reference's COPY
     * surface, pgdedupe/run.py:234-245): header CSV with an EXPLICIT
@@ -125,11 +124,10 @@ object Tables {
     */
   def loadCsv(spark: SparkSession, path: String,
       schema: StructType,
-      multiLine: Boolean = false,
-      nullValue: String = CsvNullSentinel): DataFrame =
+      multiLine: Boolean = false): DataFrame =
     spark.read
       .option("header", "true")
-      .option("nullValue", nullValue)
+      .option("nullValue", CsvNullSentinel)
       .option("multiLine", multiLine.toString)
       .schema(schema)
       .csv(path)

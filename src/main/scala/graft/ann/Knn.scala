@@ -12,10 +12,11 @@ import graft.functions.GraftFunctions.cosineSim
   * Two paths:
   *  - brute-force cosine top-k (the exactness baseline): a join + window,
   *    O(Q·N) dot products via the native codegen'd `cosine_sim`
-  *    expression (bit-identical to the `cosine` HOF form and the legacy
-  *    `cosineUdf`; the zip_with / aggregate HOFs are CodegenFallback and
-  *    the UDF boxes both arrays per row, so the expression is strictly
-  *    faster). Correct at any scale, quadratic cost — the oracle.
+  *    expression (bit-identical to the [[dot]] / [[l2Norm]] HOF form and
+  *    to a primitive-loop UDF, FunctionsSpec's references; the zip_with /
+  *    aggregate HOFs are CodegenFallback and the UDF boxes both arrays
+  *    per row, so the expression is strictly faster). Correct at any
+  *    scale, quadratic cost — the oracle.
   *  - LSH-bucketed (random-hyperplane signatures): dot products only
   *    within matching sign-buckets. The hyperplanes are deterministic
   *    (seeded hash arithmetic, no RNG state) so results are reproducible
@@ -34,38 +35,6 @@ object Knn {
   def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
       lit(0.0d), (acc, x) => acc + x)
-
-  def cosine(a: Column, b: Column): Column =
-    dot(a, b) / (l2Norm(a) * l2Norm(b))
-
-  /** Primitive-loop cosine over two float vectors. SUPERSEDED in the hot
-    * paths by the native codegen'd [[graft.functions.CosineSimilarity]]
-    * (`cosineSim`): the UDF still deserializes both sides into
-    * `Seq[Float]` per row and breaks whole-stage codegen at the call,
-    * which the expression avoids by reading `ArrayData` in place inside
-    * the generated loop. Retained as the independent reference
-    * implementation for the three-way bit-equality gate in
-    * FunctionsSpec (HOF `cosine` ≡ `cosineUdf` ≡ `cosine_sim`).
-    */
-  val cosineUdf: org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf { (a: Seq[Float], b: Seq[Float]) =>
-      // Length mismatch → NULL, like the other two forms (`cosine`'s
-      // zip_with pads with null; `cosine_sim` checks explicitly): a
-      // silent prefix-cosine would let a truncated vector masquerade
-      // as a perfect match of anything sharing its prefix.
-      if (a.length != b.length) null.asInstanceOf[java.lang.Double]
-      else {
-        val n = a.length
-        var d = 0.0d; var na = 0.0d; var nb = 0.0d
-        var i = 0
-        while (i < n) {
-          val x = a(i).toDouble; val y = b(i).toDouble
-          d += x * y; na += x * x; nb += y * y
-          i += 1
-        }
-        java.lang.Double.valueOf(d / (math.sqrt(na) * math.sqrt(nb)))
-      }
-    }
 
   /** Brute-force cosine top-k: for each query row, the k nearest corpus
     * rows by cosine similarity (excluding self-matches by id).
@@ -158,6 +127,9 @@ object Knn {
   def collisionProb(sim: Double): Double =
     1.0 - math.acos(math.max(-1.0, math.min(1.0, sim))) / math.Pi
 
+  /** [[deriveTables]]' cap on the derived table count. */
+  private val MaxTables = 128
+
   /** The recall side of the LSH parameterization: tables needed so the
     * overall collision probability 1 − (1 − p^planes)^tables reaches
     * `targetRecall` for pairs at cosine `simThreshold`, with
@@ -167,7 +139,7 @@ object Knn {
     * cost — deriving BOTH keeps the contract (bounded buckets AND
     * target recall) as n grows.
     *
-    * Capped at `maxTables` with a loud warning: past ~20 derived planes
+    * Capped at [[MaxTables]] with a loud warning: past ~20 derived planes
     * the required table count explodes (at sim 0.5, 24 planes would need
     * ~38k tables) — no banding parameterization reaches that recall
     * cheaply, and the caller should pin planes AND tables for the
@@ -177,8 +149,7 @@ object Knn {
   def deriveTables(
       planes: Int,
       targetRecall: Double = 0.95,
-      simThreshold: Double = 0.5,
-      maxTables: Int = 128): Int = {
+      simThreshold: Double = 0.5): Int = {
     require(targetRecall > 0.0 && targetRecall < 1.0,
       s"targetRecall must be in (0,1), got $targetRecall")
     val perTable = math.pow(collisionProb(simThreshold), planes)
@@ -193,20 +164,20 @@ object Knn {
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
         s"deriveTables: per-table collision probability is 0 at " +
           s"cosine $simThreshold over $planes planes — no table count " +
-          s"reaches recall $targetRecall; capping at $maxTables. Use " +
+          s"reaches recall $targetRecall; capping at $MaxTables. Use " +
           "the brute-force path for threshold -1 workloads.")
-      maxTables
+      MaxTables
     } else {
       val t = math.ceil(
         math.log1p(-targetRecall) / math.log1p(-perTable)).toInt
-      if (t > maxTables)
+      if (t > MaxTables)
         org.slf4j.LoggerFactory.getLogger(getClass).warn(
           f"deriveTables: recall $targetRecall at cosine $simThreshold " +
-            f"over $planes planes needs $t tables — capped at $maxTables " +
-            f"(achieved recall ≈ ${1.0 - math.pow(1.0 - perTable, maxTables)}%.3f). " +
+            f"over $planes planes needs $t tables — capped at $MaxTables " +
+            f"(achieved recall ≈ ${1.0 - math.pow(1.0 - perTable, MaxTables)}%.3f). " +
             "Pin numPlanes AND numTables for this workload's true " +
             "similarity floor.")
-      math.min(maxTables, math.max(1, t))
+      math.min(MaxTables, math.max(1, t))
     }
   }
 

@@ -219,7 +219,7 @@ object PredicateLearner {
   /** Which candidates cover each labeled match pair: boolean matrix
     * [match pair][candidate]. `overCap(i)(k)` marks candidate i's keys
     * whose block exceeds the block-size cap. Blocking DROPS those blocks
-    * (`RelationalOps.kolbBlocks`), so a match pair reachable only through
+    * (`RelationalOps.blockLists`), so a match pair reachable only through
     * one is NOT covered — crediting it made a degenerate predicate (one
     * giant all-rows block: zero surviving cost, "full" coverage) the
     * greedy pick, silently producing zero candidate pairs at apply time.

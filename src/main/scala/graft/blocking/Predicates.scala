@@ -173,16 +173,6 @@ final case class TfIdfCanopy(field: String, threshold: Double)
 
 object TfIdfCanopy {
 
-  /** TF-IDF cosine similarities `(a_value, b_value, cos)` over the
-    * distinct values — threshold-INDEPENDENT, so candidates at several
-    * thresholds on the same field share one fit (the learner's candidate
-    * pool has two; re-running the token idf/self-join pipeline per
-    * threshold doubled the fitting cost for identical intermediates).
-    */
-  def sims(values: DataFrame, maxDfRatio: Double): DataFrame =
-    simsTagged(values.select(lit("_").as("f"), col("value")), maxDfRatio)
-      .drop("f")
-
   /** Field-tagged variant over `(f, value)` rows: every aggregate and
     * join carries the tag, so ONE pipeline (one set of shuffle stages)
     * fits every canopy field at once — per-field fits paid the fixed

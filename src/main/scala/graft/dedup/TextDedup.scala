@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   *
   * The corpus-wide steps are pure column expressions, bucket lists and
   * equi-joins (scale by shuffle); the per-document signature
-  * computations (shingles, MinHash, SimHash) are fused primitive-loop
+  * computations (shingle sets, MinHash, SimHash) are fused primitive-loop
   * UDFs — each op's scaladoc records why that beats the expression form
   * it replaced.
   *
@@ -24,7 +24,10 @@ import org.apache.spark.sql.functions._
   * caller of any of the three receives is the (small) result frame,
   * persisted MEMORY_AND_DISK so downstream actions don't recompute the
   * whole pipeline; call `.unpersist()` on it when done (one handle
-  * releases everything).
+  * releases everything). A caller that returns a PROJECTION of a sealed
+  * result seals that projection in turn ([[sealResult]] with the sealed
+  * frames as its frontiers): unpersisting a projection frees nothing,
+  * so its own caller's release would leak the frames under it.
   */
 object TextDedup {
 
@@ -288,9 +291,12 @@ object TextDedup {
     * then release the frontiers. The returned frame is the ONLY block
     * left pinned, and it is the caller's handle.
     */
-  private def sealResult(result: DataFrame, frontiers: DataFrame*): DataFrame = {
+  private[graft] def sealResult(result: DataFrame,
+      frontiers: DataFrame*): DataFrame = {
     val out = result.persist(Disk)
-    out.count() // materialize now, while the frontiers are cached
+    // Materialize now, while the frontiers are cached: one job, where
+    // `Dataset.count` runs its final aggregate as a second one.
+    graft.ops.countRows(out)
     frontiers.foreach(_.unpersist(false))
     out
   }
@@ -323,40 +329,6 @@ object TextDedup {
         lit(1L).as("dup_count"), array(col(idCol)).as("member_ids"))
     hashed.unionByName(nulls)
   }
-
-  /** k-shingles, fused into one primitive-loop UDF. The pure-expression
-    * form — transform(sequence(...)) over tokens(text) — re-evaluates
-    * the NESTED tokenization subtree once per lambda element when the
-    * interpreted HOF runs (HOFs are CodegenFallback, and the subtree is
-    * inlined into the lambda, not bound): one re-tokenization per
-    * shingle, measured 8.8 s to shingle 5,000 sf0.1 docs vs ~0.3 s
-    * fused. A projection boundary doesn't help — CollapseProject
-    * re-inlines it. Output is bit-identical to the old expression: the
-    * tokens of TextAnalysis.tokens (the [[Tokens]] scan, which falls back
-    * to the same trim/split regexes for the one case where a scan would
-    * differ), space-joined k-grams — the byte slices the MinHash and
-    * Jaccard kernels hash and compare, decoded — first-occurrence dedup
-    * (array_distinct), null text → null, fewer than k tokens → empty.
-    */
-  def shingles(text: Column, k: Int): Column = {
-    val f = udf { (t: String) =>
-      if (t == null) null
-      else {
-        val tk = TokensLocal.get().load(t)
-        val seen = new java.util.LinkedHashSet[String]
-        var i = 0
-        while (i <= tk.n - k) {
-          val s = tk.start(i)
-          seen.add(new String(tk.bytes, s, tk.shingleEnd(i, k) - s,
-            java.nio.charset.StandardCharsets.UTF_8))
-          i += 1
-        }
-        seen.toArray(new Array[String](seen.size))
-      }
-    }
-    f(text)
-  }
-
 
   /** MinHash modulus and affine mixing constants: ONE md5 per shingle
     * yields a 60-bit base hash `u`; the k "permutations" are

@@ -7,8 +7,8 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Native codegen'd cosine similarity over two `array<float>` columns —
-  * the tier above `Knn.cosineUdf` in the extension preference order
-  * (native `Expression` > Scala UDF): the UDF deserializes both sides
+  * the tier above a Scala UDF in the extension preference order
+  * (native `Expression` > Scala UDF): a UDF deserializes both sides
   * into `Seq[Float]` per row and breaks the enclosing whole-stage-codegen
   * span at every call; this expression reads the unsafe `ArrayData`
   * buffers in place inside the generated loop, so the candidate-verify
@@ -17,12 +17,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   *
   * Arithmetic contract (oracle-hash-critical): ascending-index summation
   * of `x*y`, `x*x`, `y*y` over EQUAL-length arrays, then
-  * `dot / (sqrt(na) * sqrt(nb))` — bit-identical to both `Knn.cosine`
-  * (the Column-expression form) and `Knn.cosineUdf`, so swapping call
-  * sites cannot move a single ULP — on null-element-free equal-length
-  * inputs, the only inputs the contract covers. A LENGTH MISMATCH
-  * yields NULL in all three forms (the `zip_with` form pads with null
-  * naturally; the UDF and this expression check explicitly): a
+  * `dot / (sqrt(na) * sqrt(nb))` — bit-identical to both the Column-
+  * expression form `Knn.dot / (Knn.l2Norm · Knn.l2Norm)` and a
+  * primitive-loop UDF (FunctionsSpec keeps both as its references), so
+  * swapping call sites cannot move a single ULP — on null-element-free
+  * equal-length inputs, the only inputs the contract covers. A LENGTH
+  * MISMATCH yields NULL in all three forms (the `zip_with` form pads
+  * with null naturally; the UDF and this expression check explicitly): a
   * truncated/corrupt vector has no defined similarity, and a silent
   * prefix-cosine would let it masquerade as a perfect match of any
   * vector sharing its prefix. A NULL ELEMENT yields NULL too (checked

@@ -122,7 +122,7 @@ object BloomFilterCache {
   * [[BloomFilterCache]] instance per executor JVM.
   */
 object ShardedBloomCache {
-  val DefaultMaxBytes: Long = 512L * 1024 * 1024
+  private val DefaultMaxBytes: Long = 512L * 1024 * 1024
   lazy val instance: BloomFilterCache = new BloomFilterCache(
     sys.props.get("graft.bloomCache.maxBytes").map(_.toLong)
       .getOrElse(DefaultMaxBytes))

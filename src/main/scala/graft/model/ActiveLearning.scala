@@ -103,6 +103,9 @@ object ActiveLearning {
           StructField("label", DoubleType, nullable = false)))
   }
 
+  /** [[run]]'s cap on labeling rounds. */
+  private val MaxRounds = 50
+
   /** Run the loop.
     *
     * @param candidates pair pool: `l_id`/`r_id` plus `l_<field>` /
@@ -123,11 +126,9 @@ object ActiveLearning {
       labelOracle: DataFrame => DataFrame,
       seed: DataFrame,
       batchSize: Int = 10,
-      labelBudget: Int = 100,
-      maxRounds: Int = 50): Result = {
+      labelBudget: Int = 100): Result = {
     require(batchSize > 0, s"batchSize $batchSize")
     require(labelBudget > 0, s"labelBudget $labelBudget")
-    require(maxRounds > 0, s"maxRounds $maxRounds")
     val spark = candidates.sparkSession
 
     val keep = Seq("l_id", "r_id") ++
@@ -166,7 +167,7 @@ object ActiveLearning {
         rounds :+= RoundLog(round, labeledRows.length, hash)
         if (prevHash.contains(hash)) stoppedBy = Some("fixpoint")
         else if (labeledRows.length >= labelBudget) stoppedBy = Some("budget")
-        else if (round >= maxRounds) stoppedBy = Some("rounds")
+        else if (round >= MaxRounds) stoppedBy = Some("rounds")
         else {
           prevHash = Some(hash)
           // Exclude every pair already SURFACED to the oracle (labeled

@@ -111,16 +111,16 @@ object Training {
 
   private val MaxLabeledPairs = 100000L
 
+  /** [[train]]'s L2 strength on the weights (bias unregularized),
+    * matching the rlr default's shape, and its Newton iteration cap. */
+  private val Alpha = 1.0
+  private val MaxIter = 50
+
   /** Fit an L2-regularized logistic regression on the labeled pairs'
     * comparator features (IRLS/Newton — deterministic: zero init, fixed
-    * iteration cap, no sampling). `alpha` is the L2 strength on the
-    * weights (bias unregularized), matching the rlr default's shape.
+    * iteration cap, no sampling).
     */
-  def train(
-      cfg: DedupeConfig,
-      labeledPairs: DataFrame,
-      alpha: Double = 1.0,
-      maxIter: Int = 50): LogisticModel = {
+  def train(cfg: DedupeConfig, labeledPairs: DataFrame): LogisticModel = {
     val names = Comparators.featureNames(cfg)
     // Labeled pairs are human-labeled, so hundreds at most; the feature
     // matrix is collected to the driver for the IRLS solve. Guard loudly
@@ -145,7 +145,7 @@ object Training {
     val w = new Array[Double](d + 1)
     var iter = 0
     var converged = false
-    while (iter < maxIter && !converged) {
+    while (iter < MaxIter && !converged) {
       val g = new Array[Double](d + 1)
       val h = Array.ofDim[Double](d + 1, d + 1)
       var i = 0
@@ -174,7 +174,7 @@ object Training {
         i += 1
       }
       var j = 1
-      while (j <= d) { g(j) += alpha * w(j); h(j)(j) += alpha; j += 1 }
+      while (j <= d) { g(j) += Alpha * w(j); h(j)(j) += Alpha; j += 1 }
       val step = solve(h, g)
       var maxStep = 0.0
       j = 0

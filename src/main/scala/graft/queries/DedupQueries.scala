@@ -28,11 +28,6 @@ object DedupQueries {
   val NumHashes = 12
   val Bands = 4
 
-  /** DuckDB CTE chain `toks, sh, sig, banded, cand` mirroring
-    * TextDedup.shingles → minHashSignature → minHashCandidates with the
-    * parameters above — generated so the Spark program and the oracle
-    * can never drift.
-    */
   /** SQL for the affine MinHash mix h_i(u) = (a_i·u + b_i) mod M —
     * constants inlined from TextDedup so the Spark program and the
     * oracle share one definition. */
@@ -46,6 +41,11 @@ object DedupQueries {
     s"CAST(('0x' || substring(md5(s), 1, 15)) AS BIGINT) % " +
       s"${TextDedup.MinHashMod}"
 
+  /** DuckDB CTE chain `toks, sh, sig, banded, cand` mirroring
+    * TextDedup.minHashSignature → minHashCandidates (shingles of
+    * `ShingleK` tokens, distinct per doc) with the parameters above —
+    * generated so the Spark program and the oracle can never drift.
+    */
   private def minhashCtes: String = {
     val rpb = NumHashes / Bands
     val hashes = (0 until NumHashes).map(mixSql).mkString(", ")
@@ -287,10 +287,12 @@ object DedupQueries {
         val docs = Tables.load(s, dir, "documents")
         val cands = TextDedup.minHashCandidates(docs, "text", "doc_id",
           shingleK = ShingleK, numHashes = NumHashes, bands = Bands)
-        TextDedup.jaccardVerify(docs, cands, "text", "doc_id",
-            shingleK = 1, minJaccard = 0.5)
-          .select(col("a_id"), col("b_id"),
-            round(col("jaccard"), 6).as("jaccard"))
+        val verified = TextDedup.jaccardVerify(docs, cands, "text",
+          "doc_id", shingleK = 1, minJaccard = 0.5)
+        // The rounded projection is the caller's handle, so it is sealed
+        // and the two sealed frames under it are released.
+        TextDedup.sealResult(verified.select(col("a_id"), col("b_id"),
+          round(col("jaccard"), 6).as("jaccard")), verified, cands)
       },
       Some(s"""WITH ${jaccardVerifiedCtes(0.5)}
         SELECT a_id, b_id, round(jaccard, 6) AS jaccard FROM verified""")),
@@ -321,13 +323,19 @@ object DedupQueries {
       "q38_dedup_canonical",
       (s, dir) => {
         val docs = Tables.load(s, dir, "documents")
-        val verified = TextDedup.jaccardVerify(docs,
-          TextDedup.minHashCandidates(docs, "text", "doc_id",
-            shingleK = ShingleK, numHashes = NumHashes, bands = Bands),
-          "text", "doc_id", shingleK = 1, minJaccard = 0.9)
-        TextDedup.keepCanonical(
+        val cands = TextDedup.minHashCandidates(docs, "text", "doc_id",
+          shingleK = ShingleK, numHashes = NumHashes, bands = Bands)
+        val verified = TextDedup.jaccardVerify(docs, cands, "text",
+          "doc_id", shingleK = 1, minJaccard = 0.9)
+        val kept = TextDedup.keepCanonical(
             verified.select("a_id", "b_id"), docs, "doc_id")
           .select("doc_id", "canonical_id", "is_canonical")
+        // The components are read by now: a local relation below the CC
+        // cap, checkpoints above it. The result reads neither sealed
+        // frame again, so both are released here.
+        verified.unpersist(false)
+        cands.unpersist(false)
+        kept
       },
       Some(s"""WITH RECURSIVE ${jaccardVerifiedCtes(0.9)},
         edges AS (

@@ -5,8 +5,8 @@ package graft.similarity
   * This is the pairwise string comparator the reference's ML core applies to
   * every candidate pair of String-typed fields (ref: pgdedupe/run.py:50-58
   * assembles String variables; the pinned dedupe==1.6.13 scores them with
-  * the public `affinegap` package's normalizedAffineGapDistance). Weights
-  * default to that package's published defaults: match=1, mismatch=11,
+  * the public `affinegap` package's normalizedAffineGapDistance), at
+  * that package's published default weights: match=1, mismatch=11,
   * gap-open=10, gap-extend=7 (on a 0..n penalty scale where lower = more
   * similar), normalized by the summed string lengths.
   *
@@ -17,10 +17,10 @@ package graft.similarity
   */
 object AffineGap {
 
-  val MatchWeight = 1.0
-  val MismatchWeight = 11.0
-  val GapOpenWeight = 10.0
-  val GapExtendWeight = 7.0
+  final val MatchWeight = 1.0
+  final val MismatchWeight = 11.0
+  final val GapOpenWeight = 10.0
+  final val GapExtendWeight = 7.0
 
   // Per-thread scratch rows: the DP is called tens of millions of times
   // per scoring pass, and six fresh arrays per call is pure GC pressure.
@@ -30,20 +30,16 @@ object AffineGap {
       Array.fill(6)(new Array[Double](64))
   }
 
-  /** Raw (unnormalized) affine-gap alignment penalty. */
-  def distance(
-      a0: String,
-      b0: String,
-      matchW: Double = MatchWeight,
-      mismatchW: Double = MismatchWeight,
-      openW: Double = GapOpenWeight,
-      extendW: Double = GapExtendWeight): Double = {
+  /** Raw (unnormalized) affine-gap alignment penalty at the weights
+    * above. */
+  def distance(a0: String, b0: String): Double = {
     // Ensure b is the shorter string so rolling rows are minimal.
     val (a, b) = if (a0.length >= b0.length) (a0, b0) else (b0, a0)
     val n = a.length
     val m = b.length
-    if (m == 0) return if (n == 0) 0.0 else openW + extendW * n
-    if (a == b) return matchW * n // identical: n matches, no gaps
+    if (m == 0)
+      return if (n == 0) 0.0 else GapOpenWeight + GapExtendWeight * n
+    if (a == b) return MatchWeight * n // identical: n matches, no gaps
 
     val inf = Double.MaxValue / 4
     var rows = scratch.get()
@@ -66,26 +62,28 @@ object AffineGap {
     while (j <= m) {
       prevM(j) = inf
       prevX(j) = inf
-      prevY(j) = openW + extendW * j
+      prevY(j) = GapOpenWeight + GapExtendWeight * j
       j += 1
     }
 
     var i = 1
     while (i <= n) {
       curM(0) = inf
-      curX(0) = openW + extendW * i
+      curX(0) = GapOpenWeight + GapExtendWeight * i
       curY(0) = inf
       val ac = a.charAt(i - 1)
       j = 1
       while (j <= m) {
-        val subst = if (ac == b.charAt(j - 1)) matchW else mismatchW
+        val subst = if (ac == b.charAt(j - 1)) MatchWeight else MismatchWeight
         val diagBest =
           math.min(prevM(j - 1), math.min(prevX(j - 1), prevY(j - 1)))
         curM(j) = diagBest + subst
-        val upBest = math.min(prevM(j) + openW, prevX(j))
-        curX(j) = math.min(upBest, prevY(j) + openW) + extendW
-        val leftBest = math.min(curM(j - 1) + openW, curY(j - 1))
-        curY(j) = math.min(leftBest, curX(j - 1) + openW) + extendW
+        val upBest = math.min(prevM(j) + GapOpenWeight, prevX(j))
+        curX(j) =
+          math.min(upBest, prevY(j) + GapOpenWeight) + GapExtendWeight
+        val leftBest = math.min(curM(j - 1) + GapOpenWeight, curY(j - 1))
+        curY(j) =
+          math.min(leftBest, curX(j - 1) + GapOpenWeight) + GapExtendWeight
         j += 1
       }
       // Reference SWAP, not arraycopy: copying 3·(m+1) doubles per

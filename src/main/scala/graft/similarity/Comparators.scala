@@ -88,13 +88,10 @@ object Comparators {
   }
 
   /** Feature columns over a pair-DataFrame with l_/r_ prefixed fields. */
-  def featureColumns(
-      cfg: DedupeConfig,
-      lprefix: String = "l_",
-      rprefix: String = "r_"): Seq[(String, Column)] = {
+  def featureColumns(cfg: DedupeConfig): Seq[(String, Column)] = {
     requireDistinctVars(cfg)
-    def lc(f: String) = col(s"$lprefix$f")
-    def rc(f: String) = col(s"$rprefix$f")
+    def lc(f: String) = col(s"l_$f")
+    def rc(f: String) = col(s"r_$f")
     val byVar: Map[String, FieldSpec] = cfg.fields.map(f => f.varName -> f).toMap
     val base = cfg.fields.map { f =>
       s"d_${f.varName}" -> fieldDistance(f, lc(f.field), rc(f.field))

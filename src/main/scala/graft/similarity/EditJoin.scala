@@ -1,6 +1,6 @@
 package graft.similarity
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Exact edit-distance similarity self-join — the record-linkage
@@ -60,7 +60,6 @@ object EditJoin {
         "is O(len^maxDist))")
     require(maxFieldLen > 0, s"maxFieldLen $maxFieldLen")
     require(idCol != strCol, s"idCol and strCol are both '$idCol'")
-    val d = "_graft_ed_d"
     // The kernel names the id `id` and each payload `l_<f>`/`r_<f>`, so
     // both columns take fixed names first.
     val variants = df.select(col(idCol).as("id"), col(strCol).as("s"))
@@ -73,9 +72,11 @@ object EditJoin {
     // candidate the verify rejects; it can never drop a true pair.
     val ops = graft.ops.RelationalOps
     ops.listPairs(ops.bucketLists(variants, Seq("vh"), "id", Seq("s")))
-      .withColumn(d, levenshtein(col("l_s"), col("r_s"), maxDist))
-      .where(col(d) >= 0)
       .select(col("l_id").as("id1"), col("r_id").as("id2"),
-        col(d).cast("long").as("dist"))
+        levenshtein(col("l_s"), col("r_s"), maxDist).cast("long").as("dist"))
+      // A typed filter stays above the projection: a Column filter is
+      // pushed below the pair distinct, and the distance is computed
+      // there and again in the projection.
+      .filter((r: Row) => r.getLong(2) >= 0)
   }
 }

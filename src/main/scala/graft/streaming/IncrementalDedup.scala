@@ -192,8 +192,9 @@ object IncrementalDedup {
   final case class CandidatePair(a_id: Long, b_id: Long)
 
   /** Streaming MinHash-LSH near-dup candidates — the incremental analog
-    * of the batch `TextDedup.minHashCandidates` (q35): as documents
-    * arrive, signature + band them with the SAME fused UDF and band
+    * of the batch `TextDedup.minHashCandidates` (q35), at q35's
+    * parameters (`DedupQueries.ShingleK`, `NumHashes`, `Bands`): as
+    * documents arrive, signature + band them with the SAME fused UDF and band
     * expression (`TextDedup.bandBuckets`, one shared definition), then
     * key state by `(band, bucket)` and emit each new document's id
     * paired with every id already seen in that bucket (plus same-batch
@@ -214,14 +215,14 @@ object IncrementalDedup {
     */
   def minhashCandidateStream(
       docs: DataFrame, textCol: String = "text", idCol: String = "doc_id",
-      shingleK: Int = 3, numHashes: Int = 12, bands: Int = 4,
       maxBucketState: Int = 1000, stateTtl: Option[String] = None)(
       implicit spark: SparkSession): DataFrame = {
     requireIntegralId(docs, idCol)
+    import graft.queries.DedupQueries.{Bands, NumHashes, ShingleK}
     val sigs = graft.dedup.TextDedup.minHashSignature(
-      docs, textCol, idCol, shingleK, numHashes)
+      docs, textCol, idCol, ShingleK, NumHashes)
     pairStream(
-      graft.dedup.TextDedup.bandBuckets(sigs, idCol, numHashes, bands)
+      graft.dedup.TextDedup.bandBuckets(sigs, idCol, NumHashes, Bands)
         .select(concat_ws("|", col("band"), col("bucket")).as("bucket_key"),
           col(idCol).cast("long").as("doc_id"))
         .where(col("doc_id").isNotNull),

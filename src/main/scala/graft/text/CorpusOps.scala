@@ -275,7 +275,8 @@ object CorpusOps {
   }
 
   /** Deterministic train/val/test assignment: a salted MD5 of the doc
-    * key drives a 0–99 bucket, cut at `trainPct` / `trainPct+valPct`.
+    * key drives a 0–99 bucket, cut 80/10/10 (train below 80, val below
+    * 90, test from 90).
     * Pure per-row codegen (zero shuffle), reproducible across runs,
     * machines, and engines — re-running the split on a grown corpus
     * never reassigns an existing document (the property that keeps
@@ -283,16 +284,12 @@ object CorpusOps {
     * salt is the ONLY way to reshuffle, and that is the point).
     * Returns `(idCol, bucket BIGINT, split STRING)`.
     */
-  def splitAssign(
-      docs: DataFrame, idCol: String, salt: String, trainPct: Int = 80,
-      valPct: Int = 10): DataFrame = {
-    require(trainPct > 0 && valPct >= 0 && trainPct + valPct < 100,
-      s"splits $trainPct/$valPct")
+  def splitAssign(docs: DataFrame, idCol: String, salt: String): DataFrame = {
     val bucket = hashKey(idCol, salt, 8) % 100
     docs.select(col(idCol), bucket.as("bucket"))
       .select(col(idCol), col("bucket"),
-        when(col("bucket") < trainPct, "train")
-          .when(col("bucket") < trainPct + valPct, "val")
+        when(col("bucket") < 80, "train")
+          .when(col("bucket") < 90, "val")
           .otherwise("test").as("split"))
   }
 
@@ -966,7 +963,8 @@ object CorpusOps {
     // expression references the token array 2 + 2·chunks times per row
     // (sequence bound, slice + least per element), and with the split
     // inlined each reference re-split the text — the interpreted-HOF
-    // re-evaluation trap documented on TextDedup.shingles. Because the
+    // re-evaluation trap (a CodegenFallback HOF evaluates a subtree
+    // inlined into its lambda once per element). Because the
     // alias is non-cheap and multiply-referenced, CollapseProject keeps
     // the boundary, so `_graft_toks` materializes once per row
     // (verified in the q63 plan: split appears in its own Project).
@@ -989,45 +987,30 @@ object CorpusOps {
         col("col.chunk_text"), col("col.n_tokens"))
   }
 
-  /** Saturation check for [[dedupAgainst]]'s Bloom (pure, so the spec
-    * can pin the threshold without capturing stderr): Some(warning)
-    * when the realized fpp — `expectedFpp()` computed from the built
-    * filter's bit density — materially (2×: far past sizing noise)
-    * exceeds the requested one, i.e. `expectedItems` undersized the
-    * actual history and the prefilter is degrading toward
-    * pass-through.
+  /** Saturation check for the Bloom prefilters of [[dedupAgainst]] (its
+    * driver-built filter is one shard, bucket 0) and
+    * [[dedupAgainstPartitioned]] (one per bucket); pure, so the spec can
+    * pin the threshold without capturing stderr. Some(warning) when any
+    * shard's realized fpp — `expectedFpp()` computed from the built
+    * filter's bit density — exceeds 2× the request (far past sizing
+    * noise): `sizing` (the option and its value) undersized the actual
+    * history and the prefilter is degrading toward pass-through. The
+    * warning names the WORST bucket and counts the shards past the
+    * threshold: an undersized build rarely saturates just one shard, and
+    * the count says whether the sizing or the hash spread is at fault.
     */
-  private[text] def bloomSaturationWarning(
-      realizedFpp: Double, requestedFpp: Double,
-      expectedItems: Long): Option[String] =
-    if (realizedFpp > requestedFpp * 2.0)
-      Some(f"WARN dedupAgainst: Bloom saturated — realized fpp " +
-        f"$realizedFpp%.4f vs requested $requestedFpp%.4f; " +
-        s"expectedItems $expectedItems undersizes the history " +
-        "(prefilter degrades toward pass-through; raise expectedItems)")
-    else None
-
-  /** [[bloomSaturationWarning]]'s sharded twin (pure, spec-pinnable):
-    * Some(warning) when any shard's realized fpp exceeds 2× the
-    * request, naming the WORST bucket and counting how many shards are
-    * past the threshold — undersized `expectedItemsPerBucket` rarely
-    * saturates just one shard, and the count says whether the sizing
-    * or the hash spread is at fault.
-    */
-  private[text] def shardSaturationWarning(
-      perBucket: Seq[(Long, Double)], requestedFpp: Double,
-      expectedItemsPerBucket: Long): Option[String] = {
-    val over = perBucket.filter(_._2 > requestedFpp * 2.0)
+  private[text] def saturationWarning(op: String,
+      realized: Seq[(Long, Double)], requestedFpp: Double,
+      sizing: String): Option[String] = {
+    val over = realized.filter(_._2 > requestedFpp * 2.0)
     if (over.isEmpty) None
     else {
       val (worstBucket, worstFpp) = over.maxBy(_._2)
-      Some(f"WARN dedupAgainstPartitioned: ${over.size} of " +
-        f"${perBucket.size} Bloom shards saturated — worst bucket " +
-        f"$worstBucket realized fpp $worstFpp%.4f vs requested " +
-        f"$requestedFpp%.4f; expectedItemsPerBucket " +
-        s"$expectedItemsPerBucket undersizes the history (prefilter " +
-        "degrades toward pass-through; raise expectedItemsPerBucket " +
-        "or nBuckets)")
+      Some(f"WARN $op: ${over.size} of ${realized.size} Bloom shards " +
+        f"saturated — worst bucket $worstBucket realized fpp " +
+        f"$worstFpp%.4f vs requested $requestedFpp%.4f; $sizing " +
+        "undersizes the history (prefilter degrades toward " +
+        "pass-through; raise it)")
     }
   }
 
@@ -1175,8 +1158,8 @@ object CorpusOps {
     // batch. expectedFpp() is computed from the realized bit density,
     // so it surfaces exactly that saturation — warn loudly (2× the
     // request is far past sizing noise) instead of degrading quietly.
-    bloomSaturationWarning(bloom.expectedFpp(), fpp, expectedItems)
-      .foreach(Console.err.println)
+    saturationWarning("dedupAgainst", Seq(0L -> bloom.expectedFpp()), fpp,
+      s"expectedItems $expectedItems").foreach(Console.err.println)
     // Codegen'd membership test (graft.functions.BloomMightContain) —
     // replaced the last hot-path Scala UDF: the filter bits ride the
     // per-stage task binary (broadcast once per stage, the same wire
@@ -1344,7 +1327,8 @@ object CorpusOps {
             .readFrom(bytes).expectedFpp())
         }
         .collect().toSeq
-      shardSaturationWarning(realized, fpp, expectedItemsPerBucket)
+      saturationWarning("dedupAgainstPartitioned", realized, fpp,
+        s"expectedItemsPerBucket $expectedItemsPerBucket")
         .foreach(Console.err.println)
     } finally {
       shards.unpersist(blocking = false)

@@ -4,8 +4,9 @@ package graft
   * make these plans survive a 100× scale-up are checked here, not just
   * eyeballed via PlanDump — filter pushdown and column pruning at the
   * parquet scan, broadcast joins for dimension tables, map-side partial
-  * aggregation, whole-stage codegen on the hot paths, and NO cartesian
-  * product anywhere except the two declared brute-force exactness oracles.
+  * aggregation, whole-stage codegen on the hot paths, NO cartesian
+  * product anywhere except the two declared brute-force exactness oracles,
+  * and no cached block left behind once a caller releases the frame.
   */
 class PlanSpec extends SparkSpec {
 
@@ -319,6 +320,27 @@ class PlanSpec extends SparkSpec {
         .queryExecution.optimizedPlan.toString
       assert(!p.contains("collect_list"),
         s"$q keeps the block_ids window it never reads:\n$p")
+    }
+  }
+
+  test("the dedup and ANN queries leave nothing cached once the caller " +
+      "unpersists the returned frame, as Bench does") {
+    // Earlier tests here build some of these queries and never release
+    // them; start from an empty cache.
+    spark.catalog.clearCache()
+    val sc = spark.sparkContext
+    val cache = spark.sharedState.cacheManager
+    val rdds0 = sc.getPersistentRDDs.keySet
+    Seq("q34_minhash_signature", "q35_minhash_candidates",
+      "q36_jaccard_verify", "q37_simhash_pairs", "q38_dedup_canonical",
+      "q52_embedding_neardup_lsh", "q65_edit_distance_join",
+      "q75_image_neardup").foreach { q =>
+      val df = SparkEntry.queries(q)(spark, sf0001)
+      df.count()
+      df.unpersist(false)
+      val left = sc.getPersistentRDDs.keySet -- rdds0
+      assert(left.isEmpty, s"$q leaves persisted RDDs $left")
+      assert(cache.isEmpty, s"$q leaves a CacheManager entry")
     }
   }
 }

@@ -25,6 +25,10 @@ class KnnSpec extends SparkSpec {
       when(proj >= 0, shiftleft(lit(1L), p)).otherwise(lit(0L))
     }.reduce((a, b) => a.bitwiseOR(b))
 
+  /** Cosine as the HOF Column form, the brute-force reference. */
+  private def cosine(a: Column, b: Column): Column =
+    Knn.dot(a, b) / (Knn.l2Norm(a) * Knn.l2Norm(b))
+
   private def vectors = {
     import spark.implicits._
     // Three tight groups along axes + one diagonal outlier.
@@ -212,7 +216,7 @@ class KnnSpec extends SparkSpec {
     val r = emb.select(col("vec_id").as("b_id"), col("embedding").as("vb"))
     val brutePairs = l.crossJoin(r)
       .where(col("a_id") < col("b_id"))
-      .where(Knn.cosine(col("va"), col("vb")) >= 0.44)
+      .where(cosine(col("va"), col("vb")) >= 0.44)
       .select("a_id", "b_id")
     val lshPairs = Knn.lshSimilarPairs(emb, threshold = 0.44,
         numPlanes = 4, numTables = 48)

@@ -14,6 +14,7 @@ import graft.SparkSpec
   * cosine exactly 1.
   */
 class TfIdfCanopySpec extends SparkSpec {
+  import TfIdfCanopySpec.sims
 
   // Mixed shapes on purpose: shared rare token ("smith"), a stop-word
   // candidate ("the" in 3/6 values = exactly the 0.5 ratio bound),
@@ -54,7 +55,7 @@ class TfIdfCanopySpec extends SparkSpec {
 
   test("simsTagged matches brute-force cosine off-diagonal, exact 1 on it") {
     import spark.implicits._
-    val got = TfIdfCanopy.sims(values.toDF("value"), maxDfRatio = 0.5)
+    val got = sims(values.toDF("value"), maxDfRatio = 0.5)
       .collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getDouble(2))
       .toMap
@@ -110,7 +111,7 @@ class TfIdfCanopySpec extends SparkSpec {
         val (bs, cs) = local(a)
         bs.indices.map(j => (vs(a), vs(bs(j))) -> cs(j))
       }.toMap
-      val sparkSims = TfIdfCanopy.sims(vs.toDF("value"), 0.5).collect()
+      val sparkSims = sims(vs.toDF("value"), 0.5).collect()
         .map(r => (r.getString(0), r.getString(1)) -> r.getDouble(2)).toMap
       Seq(sparkSims, bruteCos(0.5, vs)).foreach { want =>
         val offDiag = want.keySet.filter { case (a, b) => a != b }
@@ -144,6 +145,12 @@ class TfIdfCanopySpec extends SparkSpec {
 
 object TfIdfCanopySpec {
 
+  /** One field's sims `(a_value, b_value, cos)`: the shared fit over a
+    * single constant tag, with the tag dropped. */
+  private def sims(values: DataFrame, maxDfRatio: Double): DataFrame =
+    TfIdfCanopy.simsTagged(values.select(lit("_").as("f"), col("value")),
+      maxDfRatio).drop("f")
+
   /** The per-predicate canopy fit `Blocker.blockingMap`'s shared fit
     * replaced, kept as the specs' reference: fit the index over the
     * distinct field values (single non-null string column named
@@ -151,7 +158,7 @@ object TfIdfCanopySpec {
     * namespaced block keys of that value at `p`'s threshold.
     */
   def keysByValue(p: TfIdfCanopy, values: DataFrame): DataFrame =
-    TfIdfCanopy.sims(values, p.maxDfRatio).where(col("cos") >= p.threshold)
+    sims(values, p.maxDfRatio).where(col("cos") >= p.threshold)
       .groupBy(col("a_value").as("value"))
       .agg(sort_array(collect_set(
         concat_ws(":", lit(p.id), md5(col("b_value"))))).as("keys"))

@@ -2,8 +2,7 @@ package graft.functions
 
 import graft.SparkSpec
 import graft.ann.Knn
-import org.apache.spark.sql.AnalysisException
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{AnalysisException, Column, Row}
 import org.apache.spark.sql.functions._
 
 /** Gates the native cosine_sim Catalyst expression (CosineSimilarity) and
@@ -17,6 +16,26 @@ import org.apache.spark.sql.functions._
   */
 class FunctionsSpec extends SparkSpec {
 
+  /** The HOF Column form: `zip_with`/`aggregate` sums over the two
+    * arrays. */
+  private def cosine(a: Column, b: Column): Column =
+    Knn.dot(a, b) / (Knn.l2Norm(a) * Knn.l2Norm(b))
+
+  /** The primitive-loop UDF form, NULL on a length mismatch. */
+  private val cosineUdf = udf { (a: Seq[Float], b: Seq[Float]) =>
+    if (a.length != b.length) null.asInstanceOf[java.lang.Double]
+    else {
+      var d = 0.0d; var na = 0.0d; var nb = 0.0d
+      var i = 0
+      while (i < a.length) {
+        val x = a(i).toDouble; val y = b(i).toDouble
+        d += x * y; na += x * x; nb += y * y
+        i += 1
+      }
+      java.lang.Double.valueOf(d / (math.sqrt(na) * math.sqrt(nb)))
+    }
+  }
+
   private def randomVecs(n: Int, dim: Int, seed: Long) = {
     val rnd = new scala.util.Random(seed)
     import spark.implicits._
@@ -29,8 +48,8 @@ class FunctionsSpec extends SparkSpec {
   test("cosine_sim is bit-identical to the HOF form and the UDF") {
     val df = randomVecs(500, 64, seed = 11L)
       .withColumn("e_expr", GraftFunctions.cosineSim(col("a"), col("b")))
-      .withColumn("e_hof", Knn.cosine(col("a"), col("b")))
-      .withColumn("e_udf", Knn.cosineUdf(col("a"), col("b")))
+      .withColumn("e_hof", cosine(col("a"), col("b")))
+      .withColumn("e_udf", cosineUdf(col("a"), col("b")))
     val rows = df.select("e_expr", "e_hof", "e_udf").collect()
     assert(rows.length === 500)
     rows.foreach { case Row(e: Double, h: Double, u: Double) =>
@@ -120,8 +139,8 @@ class FunctionsSpec extends SparkSpec {
       (Array(3f, 4f), Array(3f, 4f))).toDF("a", "b")
     val got = df.select(
       GraftFunctions.cosineSim(col("a"), col("b")).as("expr"),
-      graft.ann.Knn.cosine(col("a"), col("b")).as("hof"),
-      graft.ann.Knn.cosineUdf(col("a"), col("b")).as("udf")).collect()
+      cosine(col("a"), col("b")).as("hof"),
+      cosineUdf(col("a"), col("b")).as("udf")).collect()
     (0 until 3).foreach { c =>
       assert(got(0).isNullAt(c), s"mismatched lengths: column $c not null")
       assert(math.abs(got(1).getDouble(c) - 1.0) < 1e-9,

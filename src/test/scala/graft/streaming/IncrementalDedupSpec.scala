@@ -479,7 +479,8 @@ class IncrementalDedupSpec extends SparkSpec {
     // parquet file drops, minhashCandidateStream emits band-collision
     // candidates incrementally, a stream-static join + Jaccard filter
     // runs the SAME verify as the batch path (shingleK=1, >= 0.9 —
-    // q38's parameters; shingle arrays are distinct-by-construction, so
+    // q38's parameters; a doc's unigram shingles are its distinct
+    // TextAnalysis tokens, TokenizerDifferentialSpec's equality, so
     // size(array_intersect)/(na+nb-inter) is exactly jaccardVerify's
     // set arithmetic), and the exactly-once sink lands each verified
     // edge once despite a redelivered file drop. Canonicalization is
@@ -489,7 +490,7 @@ class IncrementalDedupSpec extends SparkSpec {
     val docs = graft.Tables.load(spark, sf0001, "documents")
       .select(col("doc_id").cast("long").as("doc_id"), col("text"))
     val sh = docs.select(col("doc_id"),
-      graft.dedup.TextDedup.shingles(col("text"), 1).as("sh"))
+      array_distinct(graft.text.TextAnalysis.tokens(col("text"))).as("sh"))
     val srcDir = java.nio.file.Files
       .createTempDirectory("graft_e2e_src").resolve("docs").toString
     val outDir = java.nio.file.Files

@@ -119,7 +119,7 @@ class CorpusOpsSpec extends SparkSpec {
 
   test("splitAssign is a stable salted partition honoring the cut points") {
     val docs = (0L until 2000L).toDF("doc_id")
-    val out = CorpusOps.splitAssign(docs, "doc_id", "s1", 80, 10)
+    val out = CorpusOps.splitAssign(docs, "doc_id", "s1")
       .select("doc_id", "bucket", "split")
       .as[(Long, Long, String)].collect()
     assert(out.forall { case (_, b, s) =>
@@ -129,12 +129,12 @@ class CorpusOpsSpec extends SparkSpec {
     // Accretion safety: the same doc keeps its split when the corpus
     // grows (assignment depends only on salt + id).
     val again = CorpusOps.splitAssign(
-        (0L until 4000L).toDF("doc_id"), "doc_id", "s1", 80, 10)
+        (0L until 4000L).toDF("doc_id"), "doc_id", "s1")
       .where(col("doc_id") < 2000).select("doc_id", "split")
       .as[(Long, String)].collect().toMap
     assert(out.forall { case (id, _, s) => again(id) == s })
     // The salt is the only reshuffle lever.
-    val other = CorpusOps.splitAssign(docs, "doc_id", "s2", 80, 10)
+    val other = CorpusOps.splitAssign(docs, "doc_id", "s2")
       .select("doc_id", "split").as[(Long, String)].collect().toMap
     assert(out.exists { case (id, _, s) => other(id) != s })
     // Buckets are roughly uniform (md5 on 2000 ids: each pct bucket
@@ -454,10 +454,14 @@ class CorpusOpsSpec extends SparkSpec {
 
   test("dedupAgainst warns when expectedItems undersizes the history " +
       "(Bloom saturation is loud, not a silent pass-through)") {
-    // The decision is pure — pin the 2× threshold directly.
-    assert(CorpusOps.bloomSaturationWarning(0.021, 0.01, 10L).isDefined)
-    assert(CorpusOps.bloomSaturationWarning(0.019, 0.01, 10L).isEmpty)
-    assert(CorpusOps.bloomSaturationWarning(0.01, 0.01, 10L).isEmpty)
+    // The decision is pure — pin the 2× threshold directly. The
+    // driver-built filter is one shard.
+    def warning(realizedFpp: Double, expectedItems: Long) =
+      CorpusOps.saturationWarning("dedupAgainst", Seq(0L -> realizedFpp),
+        0.01, s"expectedItems $expectedItems")
+    assert(warning(0.021, 10L).isDefined)
+    assert(warning(0.019, 10L).isEmpty)
+    assert(warning(0.01, 10L).isEmpty)
     // And a genuinely undersized build trips it end-to-end: 500 docs
     // into a Bloom sized for 5 saturates the bits far past 2× fpp.
     val docs = graft.Tables.load(spark, sf0001, "documents")
@@ -465,8 +469,7 @@ class CorpusOpsSpec extends SparkSpec {
     val bloom = docs
       .select(xxhash64(col("text")).as("_h"))
       .stat.bloomFilter("_h", 5L, 0.01)
-    assert(CorpusOps.bloomSaturationWarning(
-      bloom.expectedFpp(), 0.01, 5L).isDefined,
+    assert(warning(bloom.expectedFpp(), 5L).isDefined,
       s"realized fpp ${bloom.expectedFpp()} should exceed 2x requested")
   }
 

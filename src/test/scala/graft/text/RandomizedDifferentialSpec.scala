@@ -70,7 +70,7 @@ class RandomizedDifferentialSpec extends SparkSpec {
 
       // splitAssign twin: the salted-md5 bucket arithmetic, restated.
       check("splitAssign", seed,
-        CorpusOps.splitAssign(docs, "doc_id", "fz", 80, 10),
+        CorpusOps.splitAssign(docs, "doc_id", "fz"),
         spark.sql("""
           WITH h AS (SELECT doc_id,
               conv(substring(md5(concat('fz:', cast(doc_id AS string))),
@@ -443,7 +443,7 @@ class RandomizedDifferentialSpec extends SparkSpec {
     def canon(df: DataFrame): Seq[Seq[Any]] =
       df.collect().map(_.toSeq).toSeq.sortBy(_.toString())
     def runAll(d: DataFrame): Seq[Seq[Seq[Any]]] = Seq(
-      canon(CorpusOps.splitAssign(d, "doc_id", "pz", 80, 10)),
+      canon(CorpusOps.splitAssign(d, "doc_id", "pz")),
       canon(CorpusOps.domainCap(d, "doc_id", "source", 5, "pc")),
       canon(CorpusOps.packShards(d, "doc_id",
         size(split(col("text"), " ")), budget = 50L)),

@@ -305,13 +305,14 @@ class ShardedBloomSpec extends SparkSpec {
       s"well-sized shards must stay quiet, got: '$quiet'")
     // Pure helper: threshold is strictly 2x, worst bucket named,
     // over-count reported.
-    assert(CorpusOps.shardSaturationWarning(
-      Seq((0L, 0.019), (1L, 0.02)), 0.01, 10L).isEmpty)
-    val w = CorpusOps.shardSaturationWarning(
-      Seq((0L, 0.021), (1L, 0.5), (2L, 0.01)), 0.01, 10L)
+    def warning(realized: Seq[(Long, Double)]) =
+      CorpusOps.saturationWarning("dedupAgainstPartitioned", realized,
+        0.01, "expectedItemsPerBucket 10")
+    assert(warning(Seq((0L, 0.019), (1L, 0.02))).isEmpty)
+    val w = warning(Seq((0L, 0.021), (1L, 0.5), (2L, 0.01)))
     assert(w.isDefined && w.get.contains("worst bucket 1") &&
       w.get.contains("2 of 3"), w.toString)
-    assert(CorpusOps.shardSaturationWarning(Seq.empty, 0.01, 10L).isEmpty)
+    assert(warning(Seq.empty).isEmpty)
   }
 
   test("sharded probe survives the SHUFFLED join path (broadcast " +
