@@ -341,6 +341,13 @@ object TextDedup {
     */
   val MinHashMod: Long = 2147483647L
 
+  /** The MinHash-LSH parameters of q35/q36/q38, their oracles and the
+    * streaming candidate op: 3-word shingles, 12 hash functions,
+    * 4 bands × 3 rows. [[minHashCandidates]] defaults to them. */
+  val ShingleK = 3
+  val NumHashes = 12
+  val Bands = 4
+
   def mixA(i: Int): Long = hashConst(s"minhash-a-$i", MinHashMod - 1) + 1
   def mixB(i: Int): Long = hashConst(s"minhash-b-$i", MinHashMod)
 
@@ -474,8 +481,8 @@ object TextDedup {
     * docs in it — lands in the one task that holds its list.
     */
   def minHashCandidates(docs: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id", shingleK: Int = 3, numHashes: Int = 12,
-      bands: Int = 4): DataFrame = {
+      idCol: String = "doc_id", shingleK: Int = ShingleK,
+      numHashes: Int = NumHashes, bands: Int = Bands): DataFrame = {
     // Widened at the SOURCE (batch op only — a stream has no scan-
     // partitioning problem): the shingle+md5 signature UDF is the
     // expensive per-row pass, and a narrow fixture scan would run it

@@ -22,11 +22,11 @@ object DedupQueries {
     */
   val MaxDf = 120L
 
-  /** MinHash-LSH parameters shared by q35/q36/q38 and their oracles:
-    * 3-word shingles, 12 hash functions, 4 bands × 3 rows. */
-  val ShingleK = 3
-  val NumHashes = 12
-  val Bands = 4
+  /** MinHash-LSH parameters shared by q35/q36/q38 and their oracles
+    * (`TextDedup`'s, one definition). */
+  val ShingleK = TextDedup.ShingleK
+  val NumHashes = TextDedup.NumHashes
+  val Bands = TextDedup.Bands
 
   /** SQL for the affine MinHash mix h_i(u) = (a_i·u + b_i) mod M —
     * constants inlined from TextDedup so the Spark program and the

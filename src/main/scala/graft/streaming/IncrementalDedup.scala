@@ -193,7 +193,7 @@ object IncrementalDedup {
 
   /** Streaming MinHash-LSH near-dup candidates — the incremental analog
     * of the batch `TextDedup.minHashCandidates` (q35), at q35's
-    * parameters (`DedupQueries.ShingleK`, `NumHashes`, `Bands`): as
+    * parameters (`TextDedup.ShingleK`, `NumHashes`, `Bands`): as
     * documents arrive, signature + band them with the SAME fused UDF and band
     * expression (`TextDedup.bandBuckets`, one shared definition), then
     * key state by `(band, bucket)` and emit each new document's id
@@ -218,7 +218,7 @@ object IncrementalDedup {
       maxBucketState: Int = 1000, stateTtl: Option[String] = None)(
       implicit spark: SparkSession): DataFrame = {
     requireIntegralId(docs, idCol)
-    import graft.queries.DedupQueries.{Bands, NumHashes, ShingleK}
+    import graft.dedup.TextDedup.{Bands, NumHashes, ShingleK}
     val sigs = graft.dedup.TextDedup.minHashSignature(
       docs, textCol, idCol, ShingleK, NumHashes)
     pairStream(

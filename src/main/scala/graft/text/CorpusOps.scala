@@ -994,23 +994,26 @@ object CorpusOps {
     * shard's realized fpp — `expectedFpp()` computed from the built
     * filter's bit density — exceeds 2× the request (far past sizing
     * noise): `sizing` (the option and its value) undersized the actual
-    * history and the prefilter is degrading toward pass-through. The
-    * warning names the WORST bucket and counts the shards past the
-    * threshold: an undersized build rarely saturates just one shard, and
-    * the count says whether the sizing or the hash spread is at fault.
+    * history and the prefilter is degrading toward pass-through; `fix`
+    * says which options to raise. Over several shards the warning names
+    * the WORST bucket and counts the shards past the threshold: an
+    * undersized build rarely saturates just one shard, and the count
+    * says whether the sizing or the hash spread is at fault.
     */
   private[text] def saturationWarning(op: String,
       realized: Seq[(Long, Double)], requestedFpp: Double,
-      sizing: String): Option[String] = {
+      sizing: String, fix: String): Option[String] = {
     val over = realized.filter(_._2 > requestedFpp * 2.0)
     if (over.isEmpty) None
     else {
       val (worstBucket, worstFpp) = over.maxBy(_._2)
-      Some(f"WARN $op: ${over.size} of ${realized.size} Bloom shards " +
-        f"saturated — worst bucket $worstBucket realized fpp " +
-        f"$worstFpp%.4f vs requested $requestedFpp%.4f; $sizing " +
-        "undersizes the history (prefilter degrades toward " +
-        "pass-through; raise it)")
+      val where =
+        if (realized.size == 1) "Bloom saturated —"
+        else s"${over.size} of ${realized.size} Bloom shards saturated " +
+          s"— worst bucket $worstBucket"
+      Some(f"WARN $op: $where realized fpp $worstFpp%.4f vs requested " +
+        f"$requestedFpp%.4f; $sizing undersizes the history (prefilter " +
+        s"degrades toward pass-through; $fix)")
     }
   }
 
@@ -1159,7 +1162,8 @@ object CorpusOps {
     // so it surfaces exactly that saturation — warn loudly (2× the
     // request is far past sizing noise) instead of degrading quietly.
     saturationWarning("dedupAgainst", Seq(0L -> bloom.expectedFpp()), fpp,
-      s"expectedItems $expectedItems").foreach(Console.err.println)
+      s"expectedItems $expectedItems", "raise expectedItems")
+      .foreach(Console.err.println)
     // Codegen'd membership test (graft.functions.BloomMightContain) —
     // replaced the last hot-path Scala UDF: the filter bits ride the
     // per-stage task binary (broadcast once per stage, the same wire
@@ -1328,7 +1332,8 @@ object CorpusOps {
         }
         .collect().toSeq
       saturationWarning("dedupAgainstPartitioned", realized, fpp,
-        s"expectedItemsPerBucket $expectedItemsPerBucket")
+        s"expectedItemsPerBucket $expectedItemsPerBucket",
+        "raise expectedItemsPerBucket or nBuckets")
         .foreach(Console.err.println)
     } finally {
       shards.unpersist(blocking = false)

@@ -458,8 +458,11 @@ class CorpusOpsSpec extends SparkSpec {
     // driver-built filter is one shard.
     def warning(realizedFpp: Double, expectedItems: Long) =
       CorpusOps.saturationWarning("dedupAgainst", Seq(0L -> realizedFpp),
-        0.01, s"expectedItems $expectedItems")
-    assert(warning(0.021, 10L).isDefined)
+        0.01, s"expectedItems $expectedItems", "raise expectedItems")
+    val w = warning(0.021, 10L)
+    // One filter: no shard or bucket clause, and the fix names the option.
+    assert(w.exists(t => t.contains("raise expectedItems") &&
+      !t.contains("shard") && !t.contains("bucket")), w.toString)
     assert(warning(0.019, 10L).isEmpty)
     assert(warning(0.01, 10L).isEmpty)
     // And a genuinely undersized build trips it end-to-end: 500 docs

@@ -307,11 +307,12 @@ class ShardedBloomSpec extends SparkSpec {
     // over-count reported.
     def warning(realized: Seq[(Long, Double)]) =
       CorpusOps.saturationWarning("dedupAgainstPartitioned", realized,
-        0.01, "expectedItemsPerBucket 10")
+        0.01, "expectedItemsPerBucket 10",
+        "raise expectedItemsPerBucket or nBuckets")
     assert(warning(Seq((0L, 0.019), (1L, 0.02))).isEmpty)
     val w = warning(Seq((0L, 0.021), (1L, 0.5), (2L, 0.01)))
     assert(w.isDefined && w.get.contains("worst bucket 1") &&
-      w.get.contains("2 of 3"), w.toString)
+      w.get.contains("2 of 3") && w.get.contains("nBuckets"), w.toString)
     assert(warning(Seq.empty).isEmpty)
   }
 
