@@ -1,11 +1,9 @@
 package graft.blocking
 
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.config.DedupeConfig
 import graft.ops.{collectRows, countRows}
@@ -21,14 +19,15 @@ import graft.pipeline.PhaseLog.timed
   * Scale Up Record Linkage").
   *
   * Like the reference, which learns from a 75,000-record sample held in
-  * a driver-side dict (pgdedupe/run.py:138-150), learning counts the
-  * records, reads one seeded sample of at most [[SampleSize]] of them
-  * and reads the labeled match pairs, one Spark job each; everything
-  * else runs on the driver over a per-(field, value) table:
-  *  - column-predicate keys are evaluated once per distinct value with
-  *    the exact `ColumnPredicate.keys` Column expressions the blocker
-  *    runs (over a local frame, which Spark evaluates without a job), so
-  *    learned coverage can never drift from applied blocking;
+  * a driver-side dict (pgdedupe/run.py:138-150), learning reads one
+  * seeded sample of at most [[SampleSize]] of the records and the
+  * labeled match pairs, one Spark job each (none for pairs held on the
+  * driver), plus a count of the records unless the caller passes it;
+  * everything else runs on the driver over a per-(field, value) table:
+  *  - column-predicate keys come from calling each candidate's
+  *    `ColumnPredicate.rawKeys`, the one definition the blocker applies
+  *    too, once per distinct value, so learned coverage can never drift
+  *    from applied blocking;
   *  - canopy keys come from [[TfIdfCanopy.localSims]], the driver twin
   *    of the blocker's distributed fit, over sample values ∪ match-pair
   *    values (the reference indexes training records too);
@@ -94,40 +93,43 @@ object PredicateLearner {
     def scale: Double = if (n == 0) 1.0 else total.toDouble / n
   }
 
-  /** Reads the record count, the sample and the match pairs (a Spark
-    * job each, none for pairs held on the driver) and keys every value.
-    * The sample is the `sampleSize` rows with the lowest seeded hash of
-    * `orderCols` (a second seeded hash breaks ties, so two rows tie only
-    * if both 64-bit hashes collide), so it does not depend on
-    * partitioning. The driver sorts and cuts the rows it receives. Above
-    * `sampleSize` = n records only rows whose hash lies in the lowest
-    * (n + 8√n)/N of its range reach the driver, which bounds what it
-    * receives at any N. The passing count has mean n + 8√n and a
-    * standard deviation near √n, so it falls short of n only some 8
-    * deviations below its mean (the sample would then just be smaller).
+  /** Reads the sample and the match pairs (a Spark job each, none for
+    * pairs held on the driver) and keys every value; `total` is the
+    * number of `records`. The sample is the `sampleSize` rows with the
+    * lowest seeded hash of `orderCols` (a second seeded hash breaks
+    * ties, so two rows tie only if both 64-bit hashes collide), so it
+    * does not depend on partitioning. The driver sorts and cuts the rows
+    * it receives. Above `sampleSize` = n records only rows whose hash
+    * lies in the lowest (n + 8√n)/N of its range reach the driver, which
+    * bounds what it receives at any N. The passing count has mean
+    * n + 8√n and a standard deviation near √n, so it falls short of n
+    * only some 8 deviations below its mean (the sample would then just
+    * be smaller). The steps note their seconds as `learn_read`,
+    * `learn_keys` and `learn_canopy`.
     */
   private def table(
       records: DataFrame,
       matches: DataFrame,
       cands: Seq[Predicate],
       orderCols: Seq[String],
+      total: Long,
       sampleSize: Int): Table = {
-    val spark = records.sparkSession
     val fieldNames = cands.map(_.field).distinct
-    val total = countRows(records)
-    def hash(seed: Int) = xxhash64(lit(seed) +: orderCols.map(col): _*)
-    val frac = (sampleSize + 8 * math.sqrt(sampleSize)) / total
-    val kept =
-      if (frac >= 1) records
-      else records.where(hash(SampleSeed) <=
-        (Long.MinValue.toDouble + frac * math.pow(2, 64)).toLong)
-    val nf = fieldNames.length
-    val sample = collectRows(kept.select(fieldNames.map(f =>
-        col(f).cast("string")) :+ hash(SampleSeed) :+ hash(SampleSeed + 1)
-        : _*))
-      .sortBy(r => (r.getLong(nf), r.getLong(nf + 1))).take(sampleSize)
-    val pairRows = collectRows(matches.select(fieldNames.flatMap(f =>
-      Seq(col(s"l_$f"), col(s"r_$f")).map(_.cast("string"))): _*))
+    val (sample, pairRows) = timed("learn_read") {
+      def hash(seed: Int) = xxhash64(lit(seed) +: orderCols.map(col): _*)
+      val frac = (sampleSize + 8 * math.sqrt(sampleSize)) / total
+      val kept =
+        if (frac >= 1) records
+        else records.where(hash(SampleSeed) <=
+          (Long.MinValue.toDouble + frac * math.pow(2, 64)).toLong)
+      val nf = fieldNames.length
+      (collectRows(kept.select(fieldNames.map(f =>
+          col(f).cast("string")) :+ hash(SampleSeed) :+ hash(SampleSeed + 1)
+          : _*))
+        .sortBy(r => (r.getLong(nf), r.getLong(nf + 1))).take(sampleSize),
+        collectRows(matches.select(fieldNames.flatMap(f =>
+          Seq(col(s"l_$f"), col(s"r_$f")).map(_.cast("string"))): _*)))
+    }
 
     val fields = fieldNames.zipWithIndex.map { case (f, j) =>
       val index = mutable.HashMap.empty[String, Int]
@@ -148,56 +150,40 @@ object PredicateLearner {
 
     val keys = new Array[Array[Array[Int]]](cands.length)
     val nKeys = new Array[Int](cands.length)
-    // Column candidates: one local frame, row v holding value v of every
-    // field (null past a field's last value), every candidate a column
-    // of one projection over its field. Spark folds the projection over
-    // the local rows while optimizing, so no job runs and no class is
-    // compiled. String keys are interned to ids.
-    val colCands = cands.zipWithIndex.collect {
-      case (p: ColumnPredicate, i) => (p, i)
-    }
-    if (colCands.nonEmpty) {
-      val colFields = colCands.map(_._1.field).distinct
-      val depth = colFields.map(fields(_).values.length).max
-      val evaluated = collectRows(spark.createDataFrame(
-          (0 until depth).map(v => Row.fromSeq(colFields.map { f =>
-            fields(f).values.lift(v).orNull
-          })).asJava,
-          StructType(colFields.map(StructField(_, StringType))))
-        .select(colCands.map { case (p, _) => p.keys(col(p.field)) }: _*))
-      colCands.zipWithIndex.foreach { case ((p, i), c) =>
+    // Column candidates: each distinct value's raw keys, interned to
+    // ids in first-seen order.
+    timed("learn_keys")(cands.zipWithIndex.foreach {
+      case (p: ColumnPredicate, i) =>
         val ids = mutable.HashMap.empty[String, Int]
-        keys(i) = evaluated.iterator.take(fields(p.field).values.length)
-          .map(r =>
-            if (r.isNullAt(c)) Array.emptyIntArray
-            else r.getSeq[String](c)
-              .map(k => ids.getOrElseUpdate(k, ids.size)).toArray)
-          .toArray
+        keys(i) = fields(p.field).values.map(v =>
+          p.rawKeys(v).map(k => ids.getOrElseUpdate(k, ids.size))).toArray
         nKeys(i) = ids.size
-      }
-    }
+      case _ =>
+    })
     // Canopy candidates: one fit per (field, ratio) over the field's
     // non-empty values (the blocker's fit excludes ""); a key is the
     // index of the canopy center.
-    cands.zipWithIndex.collect { case (p: TfIdfCanopy, i) => (p, i) }
-      .groupBy { case (p, _) => (p.field, p.maxDfRatio) }
-      .foreach { case ((f, ratio), ps) =>
-        val values = fields(f).values
-        val fit = values.indices.filter(v => values(v).nonEmpty)
-        val sims = TfIdfCanopy.localSims(fit.map(values), ratio,
-          ps.map(_._1.threshold).min)
-        ps.foreach { case (p, i) =>
-          val k = Array.fill(values.length)(Array.emptyIntArray)
-          fit.indices.foreach { a =>
-            val (bs, cs) = sims(a)
-            k(fit(a)) = bs.indices.collect {
-              case j if cs(j) >= p.threshold => fit(bs(j))
-            }.toArray
+    timed("learn_canopy") {
+      cands.zipWithIndex.collect { case (p: TfIdfCanopy, i) => (p, i) }
+        .groupBy { case (p, _) => (p.field, p.maxDfRatio) }
+        .foreach { case ((f, ratio), ps) =>
+          val values = fields(f).values
+          val fit = values.indices.filter(v => values(v).nonEmpty)
+          val sims = TfIdfCanopy.localSims(fit.map(values), ratio,
+            ps.map(_._1.threshold).min)
+          ps.foreach { case (p, i) =>
+            val k = Array.fill(values.length)(Array.emptyIntArray)
+            fit.indices.foreach { a =>
+              val (bs, cs) = sims(a)
+              k(fit(a)) = bs.indices.collect {
+                case j if cs(j) >= p.threshold => fit(bs(j))
+              }.toArray
+            }
+            keys(i) = k
+            nKeys(i) = values.length
           }
-          keys(i) = k
-          nKeys(i) = values.length
         }
-      }
+    }
     Table(fields, keys, nKeys, pairRows.length, sample.length, total)
   }
 
@@ -243,26 +229,27 @@ object PredicateLearner {
       cands: Seq[Predicate],
       records: DataFrame): Array[Array[Boolean]] = {
     val t = table(records, matchPairs, cands, cands.map(_.field).distinct,
-      SampleSize)
+      countRows(records), SampleSize)
     coverage(t, cands, t.nKeys.map(new Array[Boolean](_)))
   }
 
   /** The candidates, each one's estimated comparison cost, and which
     * labeled match pairs it covers through blocks under the cap
     * ([match pair][candidate]), from a sample of at most `sampleSize`
-    * of the unique `records` (keyed by `_unique_id`, as preprocessing
-    * leaves them).
+    * of the `recordCount` unique `records` (keyed by `_unique_id`, as
+    * preprocessing leaves them).
     */
   private[blocking] def scored(
       records: DataFrame,
       matchPairs: DataFrame,
       cfg: DedupeConfig,
+      recordCount: Long,
       sampleSize: Int)
       : (Seq[Predicate], Array[Double], Array[Array[Boolean]]) = {
     val cands = candidates(cfg)
     val t = timed("learn_fit")(table(records,
       matchPairs.where(col("label") === 1.0), cands, Seq("_unique_id"),
-      sampleSize))
+      recordCount, sampleSize))
     PhaseLog.note("learn_sample",
       if (t.total > t.n) s"${t.n} of ${t.total} (seed $SampleSeed)"
       else s"all (${t.n} records)")
@@ -292,14 +279,26 @@ object PredicateLearner {
       records: DataFrame,
       matchPairs: DataFrame,
       cfg: DedupeConfig): Seq[Predicate] =
-    learn(records, matchPairs, cfg, SampleSize)
+    learn(records, matchPairs, cfg, countRows(records))
+
+  /** [[learn]] given the number of `records`, which a caller that has
+    * counted them passes instead of a count job (the pipeline counts its
+    * unique records when it pins them). */
+  def learn(
+      records: DataFrame,
+      matchPairs: DataFrame,
+      cfg: DedupeConfig,
+      recordCount: Long): Seq[Predicate] =
+    learn(records, matchPairs, cfg, recordCount, SampleSize)
 
   private[blocking] def learn(
       records: DataFrame,
       matchPairs: DataFrame,
       cfg: DedupeConfig,
+      recordCount: Long,
       sampleSize: Int): Seq[Predicate] = {
-    val (cands, cost, cover) = scored(records, matchPairs, cfg, sampleSize)
+    val (cands, cost, cover) =
+      scored(records, matchPairs, cfg, recordCount, sampleSize)
     val nMatches = cover.length
     if (nMatches == 0) return Nil
     val target = math.ceil(cfg.recall * nMatches).toLong

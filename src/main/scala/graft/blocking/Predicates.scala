@@ -1,9 +1,13 @@
 package graft.blocking
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import scala.collection.mutable
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.api.java.UDF1
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StringType}
 
 /** Blocking predicate algebra (ref: SURVEY.md D5).
   *
@@ -12,26 +16,71 @@ import org.apache.spark.sql.functions._
   * keys are namespaced `"<id>:<raw>"` so keys from different predicates
   * never collide (dedupe does the same with predicate-tuple keys).
   *
-  * All simple predicates are pure column expressions (codegen'd, no UDF):
-  * at 100 TB the blocking pass is a single projection + explode over the
-  * scan, so keeping it inside whole-stage codegen matters.
+  * A simple predicate's keys have one definition, a Scala function of
+  * the field's string form ([[ColumnPredicate.rawKeys]]). The learner
+  * calls it on each sampled value; the blocker applies every simple
+  * predicate of a run through one UDF ([[ColumnPredicate.keys]]) inside
+  * the scan's projection + explode. The Column-expression forms these
+  * replaced (kept as PredicatesSpec's differential reference) never ran
+  * compiled either: Spark 4.1's `transform` and `filter` (ArrayTransform,
+  * ArrayFilter) are CodegenFallback, so every key was interpreted.
   */
 sealed trait Predicate {
   def id: String
   def field: String
 }
 
-/** Predicates whose keys are a pure function of the single field value —
-  * evaluated as one codegen'd column expression, no corpus state.
+/** Predicates whose keys are a pure function of the single field value,
+  * no corpus state. `rawKeys` follows Spark's string semantics, which
+  * the blocker's earlier Column forms had: lengths and substrings count
+  * code points, tokens are the non-empty pieces of Java's `\s+` split,
+  * and sorting is Spark's string order (UTF-8 bytes, i.e. code points).
   */
 sealed trait ColumnPredicate extends Predicate {
-  /** Array of raw key strings for this record (empty/null-safe). */
-  def rawKeys(c: Column): Column
-  /** Namespaced keys. */
-  def keys(c: Column): Column =
-    transform(rawKeys(c), k => concat_ws(":", lit(id), k))
+  /** The raw keys of one value in its string form (a non-string field
+    * is cast to string first): distinct, in first-seen order, none for
+    * null. */
+  def rawKeys(v: String): Array[String]
 }
 
+object ColumnPredicate {
+
+  private[blocking] val NoKeys = Array.empty[String]
+  private val Whitespace = java.util.regex.Pattern.compile("\\s+")
+
+  /** The non-empty tokens of `split(v, "\\s+")`, in order. */
+  private[blocking] def tokens(v: String): Array[String] =
+    Whitespace.split(v).filter(_.nonEmpty)
+
+  /** Spark's string order: UTF-8 bytes compared unsigned, which is
+    * code-point order (`String.compareTo` orders UTF-16 units instead). */
+  private[blocking] val SparkOrder: Ordering[String] =
+    Ordering.fromLessThan((a, b) => java.util.Arrays.compareUnsigned(
+      a.getBytes(UTF_8), b.getBytes(UTF_8)) < 0)
+
+  /** Every predicate's namespaced keys `"<id>:<raw>"` of one record, as
+    * one array column, distinct in first-seen order: one UDF over the
+    * predicates' fields cast to string. A Java UDF converts its input
+    * and output with Spark's interpreted converters, so it adds no
+    * generated class beyond the projection it sits in. */
+  def keys(ps: Seq[ColumnPredicate]): Column = {
+    val fields = ps.map(_.field).distinct
+    val at = ps.map(p => fields.indexOf(p.field)).toArray
+    val preds = ps.toArray
+    val f: UDF1[scala.collection.Seq[String], Array[String]] = vs => {
+      val out = mutable.LinkedHashSet.empty[String]
+      var i = 0
+      while (i < preds.length) {
+        val id = preds(i).id
+        preds(i).rawKeys(vs(at(i))).foreach(k => out += s"$id:$k")
+        i += 1
+      }
+      out.toArray
+    }
+    udf(f, ArrayType(StringType))(
+      array(fields.map(col(_).cast("string")): _*))
+  }
+}
 /** Predicates whose keys depend on a fitted corpus index (dedupe's
   * "index predicates", built from `SELECT DISTINCT field` at
   * pgdedupe/run.py:213-222). Keys come from a join against the fitted
@@ -70,32 +119,26 @@ object Predicate {
 /** Whole-field equality block (dedupe's wholeFieldPredicate). */
 final case class WholeField(field: String) extends ColumnPredicate {
   val id = s"whole:$field"
-  // Compare the CASTED string to "": WholeField is the candidate the
-  // learner generates for every non-String ftype, and under ANSI (the
-  // Spark 4 default) `numericCol === ""` would constant-fold
-  // Cast("", numeric) and abort; numeric→string never fails, and for
-  // string columns the cast is a no-op.
-  def rawKeys(c: Column): Column = {
-    val s = c.cast("string")
-    when(c.isNull || s === "", array().cast("array<string>"))
-      .otherwise(array(s))
-  }
+  // The string form: WholeField is the candidate the learner generates
+  // for every non-String ftype, and numeric→string never fails.
+  def rawKeys(v: String): Array[String] =
+    if (v == null || v.isEmpty) ColumnPredicate.NoKeys else Array(v)
 }
 
 /** One block per whitespace token (dedupe's tokenFieldPredicate). */
 final case class TokenField(field: String) extends ColumnPredicate {
   val id = s"token:$field"
-  def rawKeys(c: Column): Column =
-    when(c.isNull, array().cast("array<string>"))
-      .otherwise(array_distinct(filter(split(c, "\\s+"), t => t =!= "")))
+  def rawKeys(v: String): Array[String] =
+    if (v == null) ColumnPredicate.NoKeys
+    else ColumnPredicate.tokens(v).distinct
 }
 
 /** First N characters (dedupe's firstNCharsPredicate family). */
 final case class FirstChars(field: String, n: Int) extends ColumnPredicate {
   val id = s"first$n:$field"
-  def rawKeys(c: Column): Column =
-    when(c.isNull || length(c) < n, array().cast("array<string>"))
-      .otherwise(array(substring(c, 1, n)))
+  def rawKeys(v: String): Array[String] =
+    if (v == null || v.codePointCount(0, v.length) < n) ColumnPredicate.NoKeys
+    else Array(v.substring(0, v.offsetByCodePoints(0, n)))
 }
 
 /** First whitespace token (dedupe's firstTokenPredicate). */
@@ -104,22 +147,21 @@ final case class FirstToken(field: String) extends ColumnPredicate {
   // First NON-EMPTY token: on a leading-whitespace value, split's first
   // element is "" — emitting it funneled every such record into one
   // shared spurious block (quadratic pairs on dirty data). TokenField
-  // filters empty tokens from the same split; mirror it here.
-  def rawKeys(c: Column): Column = {
-    val toks = filter(split(c, "\\s+"), t => t =!= "")
-    when(c.isNull || size(toks) === 0, array().cast("array<string>"))
-      .otherwise(slice(toks, 1, 1))
-  }
+  // drops empty tokens from the same split; mirror it here.
+  def rawKeys(v: String): Array[String] =
+    if (v == null) ColumnPredicate.NoKeys
+    else ColumnPredicate.tokens(v).take(1)
 }
 
 /** Character n-grams (dedupe's ngramsTokens / commonNGramsPredicate). */
 final case class NGrams(field: String, n: Int) extends ColumnPredicate {
   val id = s"ngram$n:$field"
-  def rawKeys(c: Column): Column =
-    when(c.isNull || length(c) < n, array().cast("array<string>"))
-      .otherwise(array_distinct(
-        transform(sequence(lit(1), length(c) - (n - 1)),
-          i => c.substr(i, lit(n)))))
+  def rawKeys(v: String): Array[String] =
+    if (v == null) ColumnPredicate.NoKeys
+    else {
+      val cps = v.codePoints().toArray
+      (0 to cps.length - n).map(new String(cps, _, n)).distinct.toArray
+    }
 }
 
 /** Digits-only normalization block (dedupe's commonIntegerPredicate-ish:
@@ -127,11 +169,13 @@ final case class NGrams(field: String, n: Int) extends ColumnPredicate {
   */
 final case class DigitsOnly(field: String) extends ColumnPredicate {
   val id = s"digits:$field"
-  def rawKeys(c: Column): Column = {
-    val d = regexp_replace(c, "[^0-9]", "")
-    when(c.isNull || d === "", array().cast("array<string>"))
-      .otherwise(array(d))
-  }
+  // ASCII digits only, as `regexp_replace(v, "[^0-9]", "")`.
+  def rawKeys(v: String): Array[String] =
+    if (v == null) ColumnPredicate.NoKeys
+    else {
+      val d = v.filter(c => c >= '0' && c <= '9')
+      if (d.isEmpty) ColumnPredicate.NoKeys else Array(d)
+    }
 }
 
 /** Sorted-token fingerprint: order-insensitive whole-value key
@@ -139,10 +183,12 @@ final case class DigitsOnly(field: String) extends ColumnPredicate {
   */
 final case class SortedTokens(field: String) extends ColumnPredicate {
   val id = s"sorted:$field"
-  def rawKeys(c: Column): Column =
-    when(c.isNull || c === "", array().cast("array<string>"))
-      .otherwise(array(concat_ws(" ",
-        sort_array(array_distinct(filter(split(c, "\\s+"), t => t =!= ""))))))
+  // Only "" keys to nothing: an all-whitespace value has no token and
+  // keys to the empty fingerprint "".
+  def rawKeys(v: String): Array[String] =
+    if (v == null || v.isEmpty) ColumnPredicate.NoKeys
+    else Array(ColumnPredicate.tokens(v).distinct
+      .sorted(ColumnPredicate.SparkOrder).mkString(" "))
 }
 
 /** TF-IDF canopy index predicate (dedupe's TfidfTextCanopyPredicate; the
@@ -321,25 +367,28 @@ object TfIdfCanopy {
 
 object Blocker {
 
-  /** Build the blocking map: one `(block_key, _unique_id)` row per
-    * (record, predicate key) (ref: blocking_map at pgdedupe/run.py:210-245,
-    * there via a Python generator + CSV COPY round-trip). Column
-    * predicates stay a single codegen'd projection + explode; index
-    * predicates each contribute a fitted value→keys join over the
-    * field's DISTINCT values (ref run.py:213-222), unioned in.
+  /** Build the blocking map: one `(block_key, _unique_id, payload…)`
+    * row per (record, predicate key) (ref: blocking_map at
+    * pgdedupe/run.py:210-245, there via a Python generator + CSV COPY
+    * round-trip), each `payload` column evaluated over `records` and
+    * carried along, so a consumer of the blocks needs no join back to
+    * the records. Column predicates stay a single projection + explode
+    * over one UDF ([[ColumnPredicate.keys]]); index predicates each
+    * contribute a fitted value→keys join over the field's DISTINCT values
+    * (ref run.py:213-222), unioned in.
     */
   def blockingMap(
       records: DataFrame,
       predicates: Seq[Predicate],
-      idCol: String = "_unique_id"): DataFrame = {
+      idCol: String = "_unique_id",
+      payload: Seq[Column] = Nil): DataFrame = {
     val colPreds = predicates.collect { case p: ColumnPredicate => p }
     val idxPreds = predicates.collect { case p: IndexPredicate => p }
+    val carried = col(idCol) +: payload
     val parts = Seq.newBuilder[DataFrame]
-    if (colPreds.nonEmpty) {
-      val allKeys = flatten(array(colPreds.map(p => p.keys(col(p.field))): _*))
-      parts += records
-        .select(explode(array_distinct(allKeys)).as("block_key"), col(idCol))
-    }
+    if (colPreds.nonEmpty)
+      parts += records.select(
+        explode(ColumnPredicate.keys(colPreds)).as("block_key") +: carried: _*)
     // Canopy predicates share ONE threshold-independent sims fit per
     // (maxDfRatio) group — a per-predicate fit (the specs keep it as
     // their reference, `TfIdfCanopySpec.keysByValue`) re-ran the
@@ -360,15 +409,15 @@ object Blocker {
     canopies.groupBy(_.maxDfRatio).foreach { case (ratio, ps) =>
       val spark = records.sparkSession
       val fields = ps.map(_.field).distinct
-      def tagged(extra: Seq[org.apache.spark.sql.Column]) = records
+      def tagged(extra: Seq[Column]) = records
         .select(explode(array(fields.map(f =>
             // Cast to string so mixed-type canopy fields unify under
             // one array element type (canopy tokenization is
             // string-based regardless).
             struct(lit(f).as("f"), col(f).cast("string").as("value"))): _*))
           .as("fv") +: extra: _*)
-        .select(col("fv.f").as("f") +: col("fv.value").as("value")
-          +: extra: _*)
+        .select(col("fv.f").as("f"), col("fv.value").as("value"), col("*"))
+        .drop("fv")
         .where(col("value").isNotNull && col("value") =!= "")
       val sims = TfIdfCanopy.simsTagged(tagged(Seq.empty).distinct(), ratio)
       val spec = broadcast(spark.createDataFrame(
@@ -378,9 +427,10 @@ object Blocker {
         .groupBy(col("f"), col("a_value").as("value"))
         .agg(sort_array(collect_set(
           concat_ws(":", col("pid"), md5(col("b_value"))))).as("keys"))
-      parts += tagged(Seq(col(idCol)))
-        .join(keyRows, Seq("f", "value"))
-        .select(explode(col("keys")).as("block_key"), col(idCol))
+      val tag = tagged(carried)
+      parts += tag.join(keyRows, Seq("f", "value"))
+        .select(explode(col("keys")).as("block_key") +:
+          tag.columns.drop(2).map(col): _*)
     }
     // IndexPredicate is sealed with TfIdfCanopy as its only kind, and
     // the canopy branch above handles those with ONE shared fit. A new
@@ -410,8 +460,8 @@ object Blocker {
       field: String,
       maxDf: Long,
       idCol: String = "_unique_id"): DataFrame = {
-    val p = TokenField(field)
-    val keyed = records.select(explode(p.keys(col(field))).as("block_key"),
+    val keyed = records.select(
+      explode(ColumnPredicate.keys(Seq(TokenField(field)))).as("block_key"),
       col(idCol))
     val admissible = keyed.groupBy("block_key").count()
       .where(col("count") >= 2 && col("count") <= maxDf)

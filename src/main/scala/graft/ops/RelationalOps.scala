@@ -97,18 +97,19 @@ object RelationalOps {
       .select("block_key", "block_id")
   }
 
-  /** The blocks of a blocking map `(block_key, _unique_id)` as
-    * `(block_id, ids)`: every non-null block key covering
+  /** The blocks of a blocking map `(block_key, _unique_id, payload…)`
+    * as `(block_id, ids)`: every non-null block key covering
     * 2..`maxBlockSize` records (singleton blocks admit no comparison,
     * larger ones are dropped, A2, ref pgdedupe/run.py:265-275), with its
-    * records' ids — the [[bucketLists]] of the blocking map. `block_id`
+    * records' items — the [[bucketLists]] of the blocking map. `block_id`
     * is the key itself: the reference numbers its blocks only to
     * compare them, and the keys compare in the same order. Building
     * fires no Spark job.
     */
-  def blockLists(blockingMap: DataFrame, maxBlockSize: Long): DataFrame =
-    bucketLists(blockingMap, Seq("block_key"), "_unique_id",
-      maxSize = maxBlockSize).withColumnRenamed("block_key", "block_id")
+  def blockLists(blockingMap: DataFrame, maxBlockSize: Long,
+      payload: Seq[String] = Nil): DataFrame =
+    bucketLists(blockingMap, Seq("block_key"), "_unique_id", payload,
+      maxBlockSize).withColumnRenamed("block_key", "block_id")
 
   /** The lists half of the one bucket → pairs kernel behind the batch
     * candidate generators (the pipeline's blocks, MinHash bands,

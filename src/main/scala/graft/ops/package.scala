@@ -2,6 +2,7 @@ package graft
 
 import scala.collection.mutable.ArrayBuffer
 
+import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
@@ -30,19 +31,13 @@ package object ops {
         val sc = rdd.sparkContext
         // ⌈(cap + 1) / P⌉ without overflowing at cap = Long.MaxValue.
         val share = cap / math.max(rdd.getNumPartitions, 1) + 1
-        val parts = sc.runJob(rdd, (it: Iterator[InternalRow]) => {
-          val buf = ArrayBuffer.empty[InternalRow]
-          var n = 0L
-          it.foreach { row => n += 1; if (n <= share) buf += row.copy() }
-          (n, if (n <= share) buf.toArray else null)
-        })
+        val parts = sc.runJob(rdd, new RowsUpTo(share))
         if (parts.iterator.map(_._1).sum > cap) None
         else {
           val skewed = parts.indices.filter(parts(_)._2 == null)
           if (skewed.nonEmpty)
-            sc.runJob(rdd, (it: Iterator[InternalRow]) =>
-                it.map(_.copy()).toArray, skewed).zip(skewed)
-              .foreach { case (rows, i) => parts(i) = (parts(i)._1, rows) }
+            sc.runJob(rdd, new RowsUpTo(Long.MaxValue), skewed).zip(skewed)
+              .foreach { case (p, i) => parts(i) = p }
           Some(toRows(df, parts.flatMap(_._2)))
         }
       }
@@ -66,7 +61,24 @@ package object ops {
     * job under adaptive execution, and compiles both aggregate stages.
     * On a persisted frame it materializes the whole cache all the same. */
   def countRows(df: DataFrame): Long =
-    asAction(df.select(), "count")(_.count())
+    asAction(df.select(), "count")(rdd => rdd.sparkContext
+      .runJob(rdd, new RowsUpTo(0L)).iterator.map(_._1).sum)
+
+  /** A task's row count, with its rows (copied) if it holds at most
+    * `share` of them, else null. A named class, not a lambda: Spark's
+    * closure cleaner re-reads a lambda's enclosing class files with ASM
+    * on every job, and passes a named serializable class by unread. */
+  private final class RowsUpTo(share: Long)
+      extends ((TaskContext, Iterator[InternalRow]) =>
+        (Long, Array[InternalRow])) with Serializable {
+    def apply(ctx: TaskContext, it: Iterator[InternalRow])
+        : (Long, Array[InternalRow]) = {
+      val buf = ArrayBuffer.empty[InternalRow]
+      var n = 0L
+      it.foreach { row => n += 1; if (n <= share) buf += row.copy() }
+      (n, if (n <= share) buf.toArray else null)
+    }
+  }
 
   /** `df.collect()` as external rows converted on the driver
     * ([[toRows]]): the same plan and jobs as `collect` (none for a local

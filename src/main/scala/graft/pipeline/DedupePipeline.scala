@@ -70,7 +70,15 @@ object DedupePipeline {
     */
   def trainOrLoad(
       entriesUnique: DataFrame,
-      cfg: DedupeConfig): (LogisticModel, Seq[Predicate]) = {
+      cfg: DedupeConfig): (LogisticModel, Seq[Predicate]) =
+    trainOrLoad(entriesUnique, cfg, countRows(entriesUnique))
+
+  /** [[trainOrLoad]] given the number of unique records, which only
+    * learning reads. */
+  private def trainOrLoad(
+      entriesUnique: DataFrame,
+      cfg: DedupeConfig,
+      recordCount: => Long): (LogisticModel, Seq[Predicate]) = {
     def exists(p: Option[String]): Option[String] =
       p.filter(f => java.nio.file.Files.exists(java.nio.file.Paths.get(f)))
     if (cfg.useSavedModel && exists(cfg.settingsFile).isDefined) {
@@ -84,7 +92,7 @@ object DedupePipeline {
           entriesUnique.sparkSession, tf, cfg)
         val model = PhaseLog.timed("train_model")(Training.train(cfg, labeled))
         val learned = PhaseLog.timed("train_predicates")(
-          PredicateLearner.learn(entriesUnique, labeled, cfg))
+          PredicateLearner.learn(entriesUnique, labeled, cfg, recordCount))
         val predicates =
           if (learned.nonEmpty) learned else defaultPredicates(cfg)
         cfg.settingsFile.foreach(sf => Settings(model, predicates).save(sf))
@@ -94,25 +102,32 @@ object DedupePipeline {
     }
   }
 
-  /** create_blocking (ref run.py:187-321): the blocking map, its blocks
-    * ([[RelationalOps.blockLists]], a lazy frame that nothing pins) and
-    * the blocks' record rows `(block_id, _unique_id)`, which nothing in
-    * the pipeline reads (the benchmark's traced run sizes blocks by
-    * them). Building fires no Spark job.
+  /** create_blocking (ref run.py:187-321): the blocking map
+    * `(block_key, _unique_id)`, its blocks ([[RelationalOps.blockLists]]
+    * with each record's dedup fields as the struct `rec` beside its id,
+    * a lazy frame that nothing pins) and the blocks' record rows
+    * `(block_id, _unique_id)`, which nothing in the pipeline reads (the
+    * benchmark's traced run sizes blocks by them). The records ride the
+    * blocking map into the lists, so scoring joins nothing back. Building
+    * fires no Spark job.
     */
   def block(
       entriesUnique: DataFrame,
       cfg: DedupeConfig,
       predicates: Seq[Predicate]): (DataFrame, DataFrame, DataFrame) = {
-    val bm = Blocker.blockingMap(entriesUnique, predicates)
-    val blocks = RelationalOps.blockLists(bm, cfg.maxBlockSize.toLong)
-    (bm, blocks,
-      blocks.select(col("block_id"), explode(col("ids")).as("_unique_id")))
+    val bm = Blocker.blockingMap(entriesUnique, predicates,
+      payload = Seq(struct(cfg.columns.map(col): _*).as("rec")))
+    val blocks =
+      RelationalOps.blockLists(bm, cfg.maxBlockSize.toLong, Seq("rec"))
+    (bm.select("block_key", "_unique_id"), blocks,
+      blocks.select(col("block_id"), explode(col("ids.id")).as("_unique_id")))
   }
 
   /** cluster phase part 1 (ref run.py:362-379): the candidate pairs of
-    * [[block]]'s blocks ([[RelationalOps.listPairs]]) with record
-    * payloads re-attached (J3) and model scores (D1+D2+D7).
+    * [[block]]'s blocks ([[RelationalOps.listPairs]]), `(l_id, r_id)`,
+    * and the pairs scored by the model (D1+D2+D7) from the records the
+    * blocks carry (J3), joining nothing. `entriesUnique` is unread: the
+    * blocks were built from it.
     */
   def scorePairs(
       entriesUnique: DataFrame,
@@ -120,18 +135,11 @@ object DedupePipeline {
       cfg: DedupeConfig,
       model: LogisticModel): (DataFrame, DataFrame) = {
     val pairs = RelationalOps.listPairs(blocks)
-    val lrec = entriesUnique.select(col("_unique_id").as("l_id"),
-      struct(cfg.columns.map(col): _*).as("l_rec"))
-    val rrec = entriesUnique.select(col("_unique_id").as("r_id"),
-      struct(cfg.columns.map(col): _*).as("r_rec"))
-    val withRecs = pairs
-      .join(lrec, "l_id")
-      .join(rrec, "r_id")
-      .select(Seq(col("l_id"), col("r_id")) ++
+    val scored = model.scorePairs(cfg, pairs.select(
+      Seq(col("l_id"), col("r_id")) ++
         cfg.columns.map(c => col(s"l_rec.$c").as(s"l_$c")) ++
-        cfg.columns.map(c => col(s"r_rec.$c").as(s"r_$c")): _*)
-    val scored = model.scorePairs(cfg, withRecs)
-    (pairs, scored)
+        cfg.columns.map(c => col(s"r_rec.$c").as(s"r_$c")): _*))
+    (pairs.select("l_id", "r_id"), scored)
   }
 
   /** cluster phase part 2 + write_results (ref run.py:383-425). */
@@ -284,12 +292,11 @@ object DedupePipeline {
     // Built INSIDE the timed block: preprocess's denseIds seam runs its
     // zipWithIndex jobs eagerly at DataFrame-build time, and timing only
     // the count under-reported the phase by those jobs' wall-clock.
-    val eu = timed("preprocess") {
+    val (eu, nUnique) = timed("preprocess") {
       val e = pin(preprocess(src, cfg))
-      countRows(e)
-      e
+      (e, countRows(e))
     }
-    lazy val trained = trainOrLoad(eu, cfg)
+    lazy val trained = trainOrLoad(eu, cfg, nUnique)
     // ONE timed block for both: with modelOpt supplied but
     // predicatesOpt absent, the predicate getOrElse is what forces the
     // lazy trainOrLoad — timing only the model lookup attributed the

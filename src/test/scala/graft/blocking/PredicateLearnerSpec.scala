@@ -150,6 +150,29 @@ class PredicateLearnerSpec extends SparkSpec {
     }
   }
 
+  test("learn given the record count fires one job: the sample") {
+    import spark.implicits._
+    // The records persisted and materialized, as the pipeline hands them
+    // over with their count; the match pairs held on the driver, which
+    // are read without a job.
+    val records = Seq(
+      (1L, "alice anderson", "nyc"), (2L, "alice andersen", "nyc"),
+      (3L, "bob brown", "sf"), (4L, "bob browne", "sf"))
+      .toDF("_unique_id", "name", "city").repartition(3).persist()
+    val labeled = Seq(
+      ("alice anderson", "nyc", "alice andersen", "nyc", 1.0),
+      ("bob brown", "sf", "bob browne", "sf", 1.0))
+      .toDF("l_name", "l_city", "r_name", "r_city", "label")
+    try {
+      val n = records.count()
+      val (learned, jobs) =
+        withJobs(PredicateLearner.learn(records, labeled, cfg, n))
+      assert(learned == PredicateLearner.learn(records, labeled, cfg))
+      assert(jobs.size == 1, s"learn ran ${jobs.size} jobs: " +
+        jobs.mkString("; "))
+    } finally records.unpersist(false)
+  }
+
   test("a sampled learn is deterministic, partition-independent and " +
       "still drops over-cap blocks") {
     import spark.implicits._
@@ -163,12 +186,14 @@ class PredicateLearnerSpec extends SparkSpec {
     }.toDF("l_name", "l_city", "r_name", "r_city", "label")
     val capped = cfg.copy(maxBlockSize = 100)
     graft.pipeline.PhaseLog.drainNotes()
-    val a = PredicateLearner.learn(records, labeled, capped, 200).map(_.id)
+    val a = PredicateLearner.learn(records, labeled, capped, 300L, 200)
+      .map(_.id)
     assert(graft.pipeline.PhaseLog.drainNotes().get("learn_sample") ==
       Some("200 of 300 (seed 0)"))
-    val b = PredicateLearner.learn(records, labeled, capped, 200).map(_.id)
+    val b = PredicateLearner.learn(records, labeled, capped, 300L, 200)
+      .map(_.id)
     val c = PredicateLearner.learn(records.repartition(7), labeled, capped,
-      200).map(_.id)
+      300L, 200).map(_.id)
     assert(a.nonEmpty, "sampled learner found no usable predicate")
     assert(a == b && a == c, s"picks moved: $a / $b / $c")
     assert(!a.contains("first2:name"),
@@ -180,7 +205,7 @@ class PredicateLearnerSpec extends SparkSpec {
       (s"zz$i", "x", s"zz${i}q", "y", 1.0)
     }.toDF("l_name", "l_city", "r_name", "r_city", "label")
     val (cands, cost, cover) =
-      PredicateLearner.scored(records, allPairs, capped, 2)
+      PredicateLearner.scored(records, allPairs, capped, 300L, 2)
     assert(graft.pipeline.PhaseLog.drainNotes().get("learn_sample") ==
       Some("2 of 300 (seed 0)"))
     val digits = cands.indexWhere(_.id == "digits:name")

@@ -84,6 +84,22 @@ class DedupePipelineSpec extends SparkSpec {
     assert(jobs.isEmpty, s"block() fired jobs while building: $jobs")
   }
 
+  test("scoring reads the records the blocks carry: no join back to " +
+      "entriesUnique") {
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    val eu = DedupePipeline.preprocess(
+      FakePersons.population(spark, 100, seed = 31L), cfg)
+    val (_, blocks, _) =
+      DedupePipeline.block(eu, cfg, DedupePipeline.defaultPredicates(cfg))
+    val (_, scored) = DedupePipeline.scorePairs(eu, blocks, cfg,
+      graft.model.LogisticModel.default(cfg))
+    val joins = scored.queryExecution.optimizedPlan.collect {
+      case j: Join => j
+    }
+    assert(joins.isEmpty, s"the scoring plan joins: ${joins.mkString("; ")}")
+    assert(scored.count() > 0)
+  }
+
   test("run() records its five phase wall-clocks in PhaseLog") {
     import graft.queries.PipelineQueries
     PhaseLog.drain()
