@@ -273,23 +273,17 @@ object PredicateLearner {
   /** Greedy weighted set cover: repeatedly pick the candidate with the
     * best (newly covered pairs) / (comparison cost) ratio until coverage
     * ≥ recall × |matches| or no candidate adds coverage. Deterministic:
-    * ties break to the lower candidate index.
+    * ties break to the lower candidate index. `recordCount`, the number
+    * of `records`, spares a caller that has counted them (the pipeline
+    * does when it pins them) the count job.
     */
   def learn(
       records: DataFrame,
       matchPairs: DataFrame,
-      cfg: DedupeConfig): Seq[Predicate] =
-    learn(records, matchPairs, cfg, countRows(records))
-
-  /** [[learn]] given the number of `records`, which a caller that has
-    * counted them passes instead of a count job (the pipeline counts its
-    * unique records when it pins them). */
-  def learn(
-      records: DataFrame,
-      matchPairs: DataFrame,
       cfg: DedupeConfig,
-      recordCount: Long): Seq[Predicate] =
-    learn(records, matchPairs, cfg, recordCount, SampleSize)
+      recordCount: Option[Long] = None): Seq[Predicate] =
+    learn(records, matchPairs, cfg,
+      recordCount.getOrElse(countRows(records)), SampleSize)
 
   private[blocking] def learn(
       records: DataFrame,

@@ -66,19 +66,13 @@ object DedupePipeline {
     * Precedence mirrors the reference: a saved settings file when
     * `use_saved_model` (run.py:126-129); else fit from the labeled
     * training file and persist settings (run.py:156-181); else the
-    * static default model + predicate shapes.
+    * static default model + predicate shapes. `recordCount`, the number
+    * of unique records if the caller has counted them, goes to learning.
     */
   def trainOrLoad(
       entriesUnique: DataFrame,
-      cfg: DedupeConfig): (LogisticModel, Seq[Predicate]) =
-    trainOrLoad(entriesUnique, cfg, countRows(entriesUnique))
-
-  /** [[trainOrLoad]] given the number of unique records, which only
-    * learning reads. */
-  private def trainOrLoad(
-      entriesUnique: DataFrame,
       cfg: DedupeConfig,
-      recordCount: => Long): (LogisticModel, Seq[Predicate]) = {
+      recordCount: Option[Long] = None): (LogisticModel, Seq[Predicate]) = {
     def exists(p: Option[String]): Option[String] =
       p.filter(f => java.nio.file.Files.exists(java.nio.file.Paths.get(f)))
     if (cfg.useSavedModel && exists(cfg.settingsFile).isDefined) {
@@ -296,7 +290,7 @@ object DedupePipeline {
       val e = pin(preprocess(src, cfg))
       (e, countRows(e))
     }
-    lazy val trained = trainOrLoad(eu, cfg, nUnique)
+    lazy val trained = trainOrLoad(eu, cfg, Some(nUnique))
     // ONE timed block for both: with modelOpt supplied but
     // predicatesOpt absent, the predicate getOrElse is what forces the
     // lazy trainOrLoad — timing only the model lookup attributed the

@@ -166,7 +166,7 @@ class PredicateLearnerSpec extends SparkSpec {
     try {
       val n = records.count()
       val (learned, jobs) =
-        withJobs(PredicateLearner.learn(records, labeled, cfg, n))
+        withJobs(PredicateLearner.learn(records, labeled, cfg, Some(n)))
       assert(learned == PredicateLearner.learn(records, labeled, cfg))
       assert(jobs.size == 1, s"learn ran ${jobs.size} jobs: " +
         jobs.mkString("; "))
