@@ -65,22 +65,16 @@ object ColumnPredicate {
     * generated class beyond the projection it sits in. */
   def keys(ps: Seq[ColumnPredicate]): Column = {
     val fields = ps.map(_.field).distinct
-    val at = ps.map(p => fields.indexOf(p.field)).toArray
     val preds = ps.toArray
-    val f: UDF1[scala.collection.Seq[String], Array[String]] = vs => {
-      val out = mutable.LinkedHashSet.empty[String]
-      var i = 0
-      while (i < preds.length) {
-        val id = preds(i).id
-        preds(i).rawKeys(vs(at(i))).foreach(k => out += s"$id:$k")
-        i += 1
-      }
-      out.toArray
-    }
+    val at = preds.map(p => fields.indexOf(p.field))
+    val f: UDF1[scala.collection.Seq[String], Array[String]] = vs =>
+      preds.indices.flatMap(i => preds(i).rawKeys(vs(at(i)))
+        .map(k => s"${preds(i).id}:$k")).distinct.toArray
     udf(f, ArrayType(StringType))(
       array(fields.map(col(_).cast("string")): _*))
   }
 }
+
 /** Predicates whose keys depend on a fitted corpus index (dedupe's
   * "index predicates", built from `SELECT DISTINCT field` at
   * pgdedupe/run.py:213-222). Keys come from a join against the fitted

@@ -25,19 +25,19 @@ class PredicatesSpec extends SparkSpec {
 
   /** Whitespace Java's `\s` matches (tab, U+000B, newline, space), a
     * no-break space it does not, ASCII and non-ASCII letters, digits, a
-    * supplementary code point, and U+E000 and U+FFFD, which sort before
-    * a surrogate pair in UTF-16 order but after it in code-point order.
+    * supplementary code point, and U+E000 and U+FFFD, which sort after
+    * a surrogate pair in UTF-16 order but before it in code-point order.
     */
   private val alphabet: IndexedSeq[String] = IndexedSeq(" ", " ", "\t",
-    "\u000B", "\n", " ", "a", "b", "c", "é", "字", "0", "7",
-    "9", "-", "🚀", "", "�")
+    "\u000B", "\n", "\u00A0", "a", "b", "c", "\u00E9", "\u5B57", "0", "7",
+    "9", "-", "\uD83D\uDE80", "\uE000", "\uFFFD")
 
   /** Seeded values: null, empty, whitespace-only, leading and trailing
     * whitespace, repeated tokens, and random draws from the alphabet. */
   private def values(seed: Long, n: Int): Seq[String] = {
     val r = new scala.util.Random(seed)
     Seq(null, "", " ", "\t", "\u000B", " \t\u000B\n", " ab", "ab ", " a b ",
-      "ab ab", "🚀", "a🚀b", " 🚀",
+      "ab ab", "\uD83D\uDE80", "a\uD83D\uDE80b", "\uE000 \uD83D\uDE80",
       "123-45-6789", "x") ++ Seq.fill(n) {
       Seq.fill(r.nextInt(14))(alphabet(r.nextInt(alphabet.size))).mkString
     }
@@ -72,8 +72,8 @@ class PredicatesSpec extends SparkSpec {
     }
     assert(SortedTokens("v").rawKeys("").isEmpty)
     // Code-point order, not UTF-16 order.
-    assert(SortedTokens("v").rawKeys("🚀 ").toSeq ==
-      Seq(" 🚀"))
+    assert(SortedTokens("v").rawKeys("\uD83D\uDE80 \uE000").toSeq ==
+      Seq("\uE000 \uD83D\uDE80"))
   }
 
   test("WholeField keys a numeric field's string cast") {
